@@ -15,36 +15,7 @@ object Bench {
       } catch { case _: Throwable => ("-1", "-1", "-1") }
     val (load1T0, load5T0, load15T0) = loadavg3()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config(graft.sources.Tables.NanosFlag, "true")
-        // small scan splits: the test corpora are single parquet files, and
-        // pure-map queries otherwise run at input-split parallelism (1 core)
-        .config("spark.sql.files.maxPartitionBytes", "4m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // Status-store retention is pure driver overhead in a headless
-        // sweep: even with the UI off, the app/SQL status listeners
-        // retain the last 1000 executions (each holding the FULL plan
-        // description string — 1000+-line plans here) plus 1000 jobs /
-        // 1000 stages / 100k tasks in driver heap. Across a 318-query ×
-        // 3-run sweep that is ~950 live plan graphs competing with
-        // execution memory and listener-bus throughput (the measured
-        // "in-sweep backlog" that inflated late queries 2-7× vs
-        // isolation). Keep a post-mortem handful; a long-lived
-        // production driver wants the same bound for the same reason.
-        .config("spark.sql.ui.retainedExecutions", "8")
-        .config("spark.ui.retainedJobs", "100")
-        .config("spark.ui.retainedStages", "200")
-        .config("spark.ui.retainedTasks", "2000")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = newSession()
+    var spark = Session.local()
     // A failed query reports -1, not its elapsed time, and is excluded
     // from the total — a broken query must be visible, not averaged away.
     // Each query is timed as the min of N runs (default 2): the first run
@@ -76,7 +47,7 @@ object Bench {
         spark.stop()
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
-        spark = newSession()
+        spark = Session.local()
         sinceRecycle = 0
       }
       sinceRecycle += 1

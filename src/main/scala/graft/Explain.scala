@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: prints the formatted physical plan of one query (or
   * all) so broadcast/shuffle/pushdown decisions are reviewable per round.
   *
@@ -11,17 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val only = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config(graft.sources.Tables.NanosFlag, "true")
-      // small scan splits: the test corpora are single parquet files, and
-      // pure-map queries otherwise run at input-split parallelism (1 core)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val names = only.map(Seq(_)).getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     names.foreach { name =>
       println(s"\n===== $name =====")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators._
+import graft.oracle.DuckSql
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
@@ -11,334 +12,26 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.q1Pricing(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing"    -> (Analytics.q1Pricing _),
-    "q3_revenue"    -> (Analytics.q3Revenue _),
-    "q5_region"     -> (Analytics.q5Region _),
-    "top_customers" -> (Analytics.topCustomers _),
-    "q14_promo"     -> (Analytics.q14Promo _),
-    "q18_large_orders" -> (Analytics.q18LargeOrders _),
-    "q4_priority"   -> (Analytics.q4Priority _),
-    "q22_idle_rich" -> (Analytics.q22IdleRich _),
-    "q7_volume"     -> (Analytics.q7Volume _),
-    "q8_share"      -> (Analytics.q8Share _),
-    "q17_small_qty" -> (Analytics.q17SmallQty _),
-    "q21_blame"     -> (Analytics.q21Blame _),
-    "q19_disjunct"  -> (Analytics.q19Disjunct _),
-    "q16_supplier_cnt" -> (Analytics.q16SupplierCnt _),
-    "q6_forecast"   -> (Analytics.q6Forecast _),
-    "q10_returns"   -> (Analytics.q10Returns _),
-    "q13_custdist"  -> (Analytics.q13Custdist _),
-    "q15_top_supplier" -> (Analytics.q15TopSupplier _),
-    "q9_profit"     -> (Analytics.q9Profit _),
-    "q12_shipmode"  -> (Analytics.q12Shipmode _),
-    "lang_confusion" -> (TextAnalysis.langConfusion _),
-    "copurchase"    -> (Analytics.copurchase _),
-    "revenue_trend" -> (Analytics.revenueTrend _),
-    "revenue_rollup" -> (Analytics.revenueRollup _),
-    "rfm_segments"  -> (Analytics.rfmSegments _),
-    "kb_ingest"         -> (Similarity.kbIngest _),
-    "embedding_norms"   -> (Similarity.embeddingNorms _),
-    "dim_variance"      -> (Similarity.dimVariance _),
-    "pca_power"         -> (Similarity.pcaPower _),
-    "pca_project"       -> (Similarity.pcaProject _),
-    "bq_topk"           -> (Similarity.bqTopk _),
-    "bq_recall"         -> (Similarity.bqRecall _),
-    "matryoshka_recall" -> (Similarity.matryoshkaRecall _),
-    "mrl_rerank"        -> (Similarity.mrlRerank _),
-    "bq_rerank"         -> (Similarity.bqRerank _),
-    "bq_bit_balance"        -> (Similarity.bqBitBalance _),
-    "bq_rethreshold"        -> (Similarity.bqRethreshold _),
-    "bq_rethreshold_recall" -> (Similarity.bqRethresholdRecall _),
-    "ann_graph"    -> (Similarity.annGraph _),
-    "graph_recall" -> (Similarity.graphRecall _),
-    "beam_curve"   -> (Similarity.beamCurve _),
-    "graph_degree" -> (Similarity.graphDegree _),
-    "rounds_pick"  -> (Similarity.roundsPick _),
-    "append_recall" -> (Similarity.appendRecall _),
-    "append_churn"  -> (Similarity.appendChurn _),
-    "embedding_drift"   -> (Similarity.embeddingDrift _),
-    "kb_consistency"    -> (Similarity.kbConsistency _),
-    "sim_topk"          -> (Similarity.simTopk _),
-    "knn_join"          -> (Similarity.knnJoin _),
-    "neardup_embedding" -> (Similarity.nearDupEmbedding _),
-    "ann_ivf"           -> (Similarity.annIvf _),
-    "lsh_ann"           -> (Similarity.lshAnn _),
-    "clean_text"           -> (TextOps.cleanTextQ _),
-    "template_classify"    -> (TextOps.templateClassify _),
-    "topic_detect"         -> (TextOps.topicDetect _),
-    "safety_screen"        -> (TextOps.safetyScreen _),
-    "effectiveness"        -> (TextOps.effectiveness _),
-    "template_effect"      -> (TextOps.templateEffect _),
-    "training_examples"    -> (TextOps.trainingExamples _),
-    "lemma_tokens"         -> (TextOps.lemmaTokens _),
-    "category_info"        -> (TextOps.categoryInfo _),
-    "response_clean"       -> (TextOps.responseClean _),
-    "conversation_history" -> (Interactions.conversationHistory _),
-    "conversation_context" -> (Interactions.conversationContext _),
-    "interaction_history"  -> (Interactions.interactionHistory _),
-    "topic_interactions"   -> (Interactions.topicInteractions _),
-    "high_quality"         -> (Interactions.highQuality _),
-    "high_quality_topic"   -> (Interactions.highQualityTopic _),
-    "effectiveness_trend"  -> (Interactions.effectivenessTrend _),
-    "lang_id"         -> (TextAnalysis.langId _),
-    "quality_score"   -> (TextAnalysis.qualityScore _),
-    "token_count"     -> (TextAnalysis.tokenCount _),
-    "doc_fingerprint" -> (TextAnalysis.docFingerprint _),
-    "winnow_overlap"  -> (TextAnalysis.winnowOverlap _),
-    "pii_scrub"        -> (TextAnalysis.piiScrub _),
-    "repetition_score" -> (TextAnalysis.repetitionScore _),
-    "char_entropy" -> (TextAnalysis.charEntropy _),
-    "toxicity_screen"  -> (TextAnalysis.toxicityScreen _),
-    "dedup_exact"   -> (Dedup.dedupExact _),
-    "dedup_minhash" -> (Dedup.dedupMinhash _),
-    "jaccard_hist" -> (Dedup.jaccardHist _),
-    "cluster_size_hist" -> (Dedup.clusterSizeHist _),
-    "dedup_simhash" -> (Dedup.dedupSimhash _),
-    "dedup_ngram"   -> (Dedup.dedupNgram _),
-    "dedup_clusters" -> (Dedup.dedupClusters _),
-    "dedup_keep_best" -> (Dedup.dedupKeepBest _),
-    "lsh_curve" -> (Dedup.lshCurve _),
-    "dup_tokens" -> (Dedup.dupTokens _),
-    "dedup_substring" -> (Dedup.dedupSubstring _),
-    "span_hotspots" -> (Dedup.spanHotspots _),
-    "semdedup"        -> (Similarity.semDedup _),
-    "cluster_stats"   -> (Dedup.clusterStats _),
-    "source_overlap"  -> (Dedup.sourceOverlap _),
-    "sessionize" -> (Sessions.sessionize _),
-    "window_agg" -> (Sessions.windowAgg _),
-    "asof_join"  -> (Sessions.asofJoin _),
-    "scd2_build" -> (Sessions.scd2Build _),
-    "scd2_lookup" -> (Sessions.scd2Lookup _),
-    "interval_join" -> (Sessions.intervalJoin _),
-    "funnel" -> (Sessions.funnel _),
-    "cohort_retention" -> (Sessions.cohortRetention _),
-    "cohort_ltv" -> (Sessions.cohortLtv _),
-    "active_users" -> (Sessions.activeUsers _),
-    "session_stats" -> (Sessions.sessionStats _),
-    "session_entropy" -> (Sessions.sessionEntropy _),
-    "conversion_latency" -> (Sessions.conversionLatency _),
-    "session_gaps" -> (Sessions.sessionGaps _),
-    "temporal_decay" -> (Sessions.temporalDecay _),
-    "user_overlap" -> (Sessions.userOverlap _),
-    "weekly_profile" -> (Sessions.weeklyProfile _),
-    "seasonal_strength" -> (Sessions.seasonalStrength _),
-    "dow_anomalies" -> (Sessions.dowAnomalies _),
-    "cusum_shift" -> (Sessions.cusumShift _),
-    "conversion_lift" -> (Sessions.conversionLift _),
-    "km_retention" -> (Sessions.kmRetention _),
-    "nelson_aalen" -> (Sessions.nelsonAalen _),
-    "logrank_test" -> (Sessions.logrankTest _),
-    "cuped_lift" -> (Sessions.cupedLift _),
-    "ks_drift" -> (Sessions.ksDrift _),
-    "drift_gate" -> (Sessions.driftGate _),
-    "fdr_bh" -> (Sessions.fdrBh _),
-    "mann_whitney" -> (Sessions.mannWhitney _),
-    "bootstrap_ci" -> (Sessions.bootstrapCi _),
-    "attribution" -> (Sessions.attribution _),
-    "bradley_terry" -> (Sessions.bradleyTerry _),
-    "markov_stationary" -> (Sessions.markovStationary _),
-    "srm_check" -> (Sessions.srmCheck _),
-    "ab_power" -> (Sessions.abPower _),
-    "ewma_chart" -> (Sessions.ewmaChart _),
-    "forecast_baseline" -> (Sessions.forecastBaseline _),
-    "ses_backtest" -> (Sessions.sesBacktest _),
-    "markov_order" -> (Sessions.markovOrder _),
-    "overdispersion" -> (Sessions.overdispersion _),
-    "session_length_hist" -> (Sessions.sessionLengthHist _),
-    "langid_f1" -> (TextAnalysis.langidF1 _),
-    "media_dedup" -> (Multimodal.mediaDedup _),
-    "frame_dedup" -> (Multimodal.frameDedup _),
-    "cdc_dedup" -> (Multimodal.cdcDedup _),
-    "phash_dedup" -> (Multimodal.phashDedup _),
-    "media_shard" -> (Multimodal.mediaShard _),
-    "banding_curve" -> (Dedup.bandingCurve _),
-    "banding_pick" -> (Dedup.bandingPick _),
-    "band_store_stats" -> (Dedup.bandStoreStats _),
-    "dedup_delta" -> (Dedup.dedupDelta _),
-    "arrival_report" -> (Curation.arrivalReport _),
-    "store_coverage" -> (Curation.storeCoverage _),
-    "arrival_funnel" -> (Curation.arrivalFunnel _),
-    "event_transitions" -> (Sessions.eventTransitions _),
-    "event_paths" -> (Sessions.eventPaths _),
-    "key_skew" -> (Analytics.keySkew _),
-    "event_anomalies" -> (Sessions.eventAnomalies _),
-    "approx_distinct" -> (Sessions.approxDistinct _),
-    "heavy_hitters" -> (Sessions.heavyHitters _),
-    "tenant_usage" -> (Tenancy.tenantUsage _),
-    "event_pivot" -> (Sessions.eventPivot _),
-    "multimodal_meta" -> (Multimodal.multimodalMeta _),
-    "embed_text" -> (Embedder.embedTextComponents _),
-    "ann_ivf_kmeans" -> (Similarity.annIvfKmeans _),
-    "ann_recall" -> (Similarity.annRecall _),
-    "nprobe_curve" -> (Similarity.nprobeCurve _),
-    "semdedup_recall" -> (Similarity.semdedupRecall _),
-    "hubness" -> (Similarity.hubness _),
-    "ivf_cell_stats" -> (Similarity.ivfCellStats _),
-    "ivf_rebalance" -> (Similarity.ivfRebalance _),
-    "rebalance_recall" -> (Similarity.rebalanceRecall _),
-    "probe_cost_quantiles" -> (Similarity.probeCostQuantiles _),
-    "ann_miss_audit" -> (Similarity.annMissAudit _),
-    "cell_outliers" -> (Similarity.cellOutliers _),
-    "nprobe_pick" -> (Similarity.nprobePick _),
-    "rebalance_churn" -> (Similarity.rebalanceChurn _),
-    "quality_by_length" -> (CorpusStats.qualityByLength _),
-    "decontam_sweep" -> (Curation.decontamSweep _),
-    "mix_sensitivity" -> (CorpusStats.mixSensitivity _),
-    "index_recall" -> (Similarity.indexRecall _),
-    "ann_pq"         -> (Similarity.annPq _),
-    "pq_distortion"  -> (Similarity.pqDistortion _),
-    "sq_distortion"  -> (Similarity.sqDistortion _),
-    "sq_recall"      -> (Similarity.sqRecall _),
-    "ann_sq"         -> (Similarity.annSq _),
-    "pq_refresh"          -> (Similarity.pqRefresh _),
-    "pq_refresh_recall"   -> (Similarity.pqRefreshRecall _),
-    "sq_refit"            -> (Similarity.sqRefit _),
-    "sq_refit_distortion" -> (Similarity.sqRefitDistortion _),
-    "sq_refit_recall"     -> (Similarity.sqRefitRecall _),
-    "ann_ivfpq"      -> (Similarity.annIvfPq _),
-    "media_frames" -> (Multimodal.mediaFrames _),
-    "decontaminate"     -> (Curation.decontaminate _),
-    "contamination_report" -> (Curation.contaminationReport _),
-    "bloom_decontaminate" -> (Curation.bloomDecontaminate _),
-    "stratified_sample" -> (Curation.stratifiedSample _),
-    "pack_sequences"    -> (Curation.packSequences _),
-    "pack_stats"        -> (Curation.packStats _),
-    "shuffle_assign"    -> (Curation.shuffleAssign _),
-    "export_manifest"   -> (Curation.exportManifest _),
-    "quality_filter"    -> (Curation.qualityFilter _),
-    "curate_corpus"     -> (Curation.curateCorpus _),
-    "curation_funnel"   -> (Curation.curationFunnel _),
-    "classifier_examples" -> (Curation.classifierExamples _),
-    "classifier_train" -> (Curation.classifierTrain _),
-    "classifier_apply" -> (Curation.classifierApply _),
-    "data_split" -> (Curation.dataSplit _),
-    "sft_export" -> (Curation.sftExport _),
-    "split_leakage" -> (Curation.splitLeakage _),
-    "cell_purity" -> (Similarity.cellPurity _),
-    "gate_eval" -> (Curation.gateEval _),
-    "bm25_topk"       -> (Retrieval.bm25Topk _),
-    "ql_topk"         -> (Retrieval.qlTopk _),
-    "tfidf_vectors"   -> (Retrieval.tfidfVectors _),
-    "hybrid_retrieve" -> (Retrieval.hybridRetrieve _),
-    "ndcg_eval" -> (Retrieval.ndcgEval _),
-    "late_interaction" -> (Retrieval.lateInteraction _),
-    "late_interaction_ann" -> (Retrieval.lateInteractionAnn _),
-    "li_pool_recall" -> (Retrieval.liPoolRecall _),
-    "arm_overlap" -> (Retrieval.armOverlap _),
-    "sparse_knn" -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
-      Retrieval.sparseKnn(s, d)),
-    "impact_recall" -> (Retrieval.impactRecall _),
-    "prf_expand" -> (Retrieval.prfExpand _),
-    "ir_metrics" -> (Retrieval.irMetrics _),
-    "rank_corr" -> (Retrieval.rankCorr _),
-    "fusion_sweep" -> (Retrieval.fusionSweep _),
-    "silhouette" -> (Similarity.silhouette _),
-    "bitext_mine" -> (Similarity.bitextMine _),
-    "clf_calibration" -> (Curation.clfCalibration _),
-    "brier_score" -> (Curation.brierScore _),
-    "pr_curve" -> (Curation.prCurve _),
-    "threshold_pick" -> (Curation.thresholdPick _),
-    "clf_ks" -> (Curation.clfKs _),
-    "k_anonymity" -> (Tenancy.kAnonymity _),
-    "l_diversity" -> (Tenancy.lDiversity _),
-    "t_closeness" -> (Tenancy.tCloseness _),
-    "label_prop" -> (Graph.labelProp _),
-    "centered_shift" -> (Similarity.centeredShift _),
-    "gate_overlap" -> (Curation.gateOverlap _),
-    "dp_release" -> (Tenancy.dpRelease _),
-    "mix_temperature" -> (CorpusStats.mixTemperature _),
-    "epoch_plan" -> (CorpusStats.epochPlan _),
-    "quality_psi" -> (CorpusStats.qualityPsi _),
-    "label_queue" -> (Curation.labelQueue _),
-    "robust_stats" -> (Sessions.robustStats _),
-    "forget_user" -> (Tenancy.forgetUser _),
-    "chunk_docs"      -> (Retrieval.chunkDocs _),
-    "ngram_stats"        -> (CorpusStats.ngramStats _),
-    "cooccur_pmi"        -> (CorpusStats.cooccurPmi _),
-    "domain_mix"         -> (CorpusStats.domainMix _),
-    "apply_mix"          -> (CorpusStats.applyMix _),
-    "quality_thresholds" -> (CorpusStats.qualityThresholds _),
-    "hist_quantiles" -> (CorpusStats.histQuantiles _),
-    "zipf_fit" -> (CorpusStats.zipfFit _),
-    "token_entropy" -> (CorpusStats.tokenEntropy _),
-    "vocab_growth" -> (CorpusStats.vocabGrowth _),
-    "heaps_law" -> (CorpusStats.heapsLaw _),
-    "length_hist" -> (CorpusStats.lengthHist _),
-    "q11_important_stock" -> (Analytics.q11ImportantStock _),
-    "q20_excess_stock" -> (Analytics.q20ExcessStock _),
-    "corpus_card" -> (CorpusStats.corpusCard _),
-    "source_card" -> (CorpusStats.sourceCard _),
-    "source_divergence" -> (CorpusStats.sourceDivergence _),
-    "tokenizer_fertility" -> (CorpusStats.tokenizerFertility _),
-    "oov_rate" -> (CorpusStats.oovRate _),
-    "vocab_coverage" -> (CorpusStats.vocabCoverage _),
-    "coverage_pick" -> (CorpusStats.coveragePick _),
-    "source_lang_assoc" -> (CorpusStats.sourceLangAssoc _),
-    "token_gini" -> (CorpusStats.tokenGini _),
-    "hill_tail" -> (CorpusStats.hillTail _),
-    "perplexity_score" -> (CorpusStats.perplexityScore _),
-    "ccnet_buckets" -> (CorpusStats.ccnetBuckets _),
-    "signal_corr" -> (CorpusStats.signalCorr _),
-    "signal_mi" -> (CorpusStats.signalMi _),
-    "perplexity_ood" -> (CorpusStats.perplexityOod _),
-    "perplexity_backoff" -> (CorpusStats.perplexityBackoff _),
-    "dsir_weights" -> (CorpusStats.dsirWeights _),
-    "dsir_select" -> (CorpusStats.dsirSelect _),
-    "bpe_pairs"    -> (CorpusStats.bpePairs _),
-    "bpe_vocab"    -> (CorpusStats.bpeVocab _),
-    "bpe_encode"   -> (CorpusStats.bpeEncode _),
-    "readability"  -> (TextAnalysis.readability _),
-    "pagerank"     -> (Graph.pagerank _),
-    "graph_stats"  -> (Graph.graphStats _),
-    "copurchase_clusters" -> (Graph.copurchaseClusters _),
-    "dedup_recall" -> (Dedup.dedupRecall _),
-    "capture_recapture" -> (Dedup.captureRecapture _),
-    "containment_dup" -> (Dedup.containmentDup _),
-    "fuzzy_match" -> (Dedup.fuzzyMatch _),
-    "fuzzy_clusters" -> (Dedup.fuzzyClusters _),
-    "minhash_error" -> (Dedup.minhashError _),
-    "k_core" -> (Graph.kCore _),
-    "assortativity" -> (Graph.assortativity _),
-    "local_clustering" -> (Graph.localClustering _),
-    "jaccard_links" -> (Graph.jaccardLinks _),
-    "ship_latency" -> (Analytics.shipLatency _),
-    "pareto_front" -> (Analytics.paretoFront _),
-    "theil_sen" -> (Analytics.theilSen _),
-    "revenue_concentration" -> (Analytics.revenueConcentration _),
-    "gini_revenue" -> (Analytics.giniRevenue _),
-    "lorenz_curve" -> (Analytics.lorenzCurve _),
-    "acf_revenue" -> (Analytics.acfRevenue _),
-    "changepoint" -> (Analytics.changepoint _),
-    "benford_check" -> (Analytics.benfordCheck _),
-    "discount_elasticity" -> (Analytics.discountElasticity _),
-    "curriculum_order" -> (Curation.curriculumOrder _),
-    "bottomk_sample" -> (Curation.bottomkSample _),
-    "sample_audit" -> (Curation.sampleAudit _),
-    "burstiness" -> (CorpusStats.burstiness _),
-    "hapax_ratio" -> (CorpusStats.hapaxRatio _),
-    "good_turing" -> (CorpusStats.goodTuring _),
-    "chi2_terms" -> (CorpusStats.chi2Terms _),
-    "ngram_diversity" -> (CorpusStats.ngramDiversity _),
-    "signal_auc" -> (CorpusStats.signalAuc _),
-    "corpus_cube" -> (CorpusStats.corpusCube _),
-    "cluster_terms" -> (Retrieval.clusterTerms _),
-    "topic_coverage" -> (Retrieval.topicCoverage _),
-    "mmr_rerank" -> (Similarity.mmrRerank _),
-    "mmr_pool_recall" -> (Similarity.mmrPoolRecall _),
-    "rag_context" -> (Similarity.ragContext _),
-    "hard_negatives" -> (Similarity.hardNegatives _),
-    "ann_filtered" -> (Similarity.annFiltered _),
-    "filtered_recall" -> (Similarity.filteredRecall _),
-    "cheapest_supplier" -> (Analytics.cheapestSupplier _),
-  )
+  type Builder = (SparkSession, String) => DataFrame
 
-  /** DuckDB oracle SQL per query key (same parquet tables, same column
-    * names/order semantics — see SURVEY.md §6).
+  /** One graft query: its plan builder and the DuckDB oracle
+    * SQL (same parquet tables, same column names/order semantics — see
+    * SURVEY.md §6) the gate hash-compares it against.
     */
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing" ->
+  final case class Query(name: String, build: Builder, oracleSql: String)
+
+  private implicit class Named(private val e: (String, Builder))
+      extends AnyVal {
+    def oracle(sql: String): Query = Query(e._1, e._2, sql)
+  }
+
+  /** One entry per implemented operator from SURVEY.md §2, each written
+    * `name -> (Module.fn _) oracle sql`: perfbench/run.py reads a
+    * query's operator module from that shape. Names must be unique —
+    * the map views below would silently keep only the last duplicate.
+    */
+  val registry: Seq[Query] = Seq(
+    "q1_pricing" -> (Analytics.q1Pricing _) oracle
       """SELECT l_returnflag, l_linestatus,
         |  round(CAST(sum(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE), 2) AS sum_qty,
         |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE), 2) AS sum_base_price,
@@ -349,7 +42,7 @@ object SparkEntry {
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         |GROUP BY l_returnflag, l_linestatus
         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_revenue" ->
+    "q3_revenue" -> (Analytics.q3Revenue _) oracle
       """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
         |  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE), 2) AS revenue
         |FROM lineitem
@@ -360,7 +53,7 @@ object SparkEntry {
         |  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
         |GROUP BY l_orderkey, o_orderdate
         |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q5_region" ->
+    "q5_region" -> (Analytics.q5Region _) oracle
       """SELECT n_name,
         |  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE), 2) AS revenue
         |FROM lineitem
@@ -372,7 +65,14 @@ object SparkEntry {
         |WHERE r_name = 'ASIA'
         |GROUP BY n_name
         |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q14_promo" ->
+    "top_customers" -> (Analytics.topCustomers _) oracle
+      """SELECT c_mktsegment, rank::INT AS rank, c_custkey, round(bal, 2) AS c_acctbal FROM (
+        |  SELECT c_mktsegment, c_custkey, c_acctbal AS bal,
+        |    row_number() OVER (PARTITION BY c_mktsegment
+        |                       ORDER BY c_acctbal DESC, c_custkey) AS rank
+        |  FROM customer) WHERE rank <= 3
+        |ORDER BY c_mktsegment, rank""".stripMargin,
+    "q14_promo" -> (Analytics.q14Promo _) oracle
       """WITH u AS (SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
         |  CAST(floor(l_extendedprice*(1-l_discount) * 10000 + 0.5) AS BIGINT) AS ru,
         |  CASE WHEN p_type = 'ECONOMY'
@@ -386,7 +86,7 @@ object SparkEntry {
         |  floor(tu::DOUBLE / 100 + 0.5) / 100 AS total_revenue,
         |  floor(pu::DOUBLE / tu::DOUBLE * 100 * 10000 + 0.5) / 10000 AS promo_pct
         |FROM s ORDER BY ship_month""".stripMargin,
-    "q18_large_orders" ->
+    "q18_large_orders" -> (Analytics.q18LargeOrders _) oracle
       s"""WITH big AS (SELECT l_orderkey,
         |  round(CAST(sum(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE), 2) AS total_qty
         |  FROM lineitem GROUP BY l_orderkey
@@ -399,7 +99,7 @@ object SparkEntry {
         |JOIN customer ON o_custkey = c_custkey
         |ORDER BY o_totalprice DESC, o_orderkey
         |LIMIT ${graft.operators.Analytics.Q18TopN}""".stripMargin,
-    "q4_priority" ->
+    "q4_priority" -> (Analytics.q4Priority _) oracle
       s"""SELECT o_orderpriority, count(*)::BIGINT AS order_count
         |FROM orders
         |WHERE o_orderdate >= DATE '${graft.operators.Analytics.Q4Start}'
@@ -407,7 +107,7 @@ object SparkEntry {
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q22_idle_rich" ->
+    "q22_idle_rich" -> (Analytics.q22IdleRich _) oracle
       s"""WITH thr AS (SELECT sum(CAST(c_acctbal AS DECIMAL(28,6)))::DOUBLE
         |               / count(*) AS thr
         |             FROM customer WHERE c_acctbal > 0)
@@ -420,35 +120,7 @@ object SparkEntry {
         |                  WHERE o_custkey = c_custkey
         |                    AND o_orderdate >= DATE '${graft.operators.Analytics.Q22Cutoff}')
         |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-    "q9_profit" ->
-      s"""SELECT n_name AS nation, year(o_orderdate)::INT AS o_year,
-        |  floor(sum(CAST(floor(l_extendedprice*(1-l_discount) * 10000 + 0.5)
-        |              AS BIGINT)
-        |          - CAST(floor(p_retailprice*${graft.operators.Analytics.Q9CostFrac} * 10000 + 0.5)
-        |              AS BIGINT)
-        |            * CAST(floor(l_quantity + 0.5) AS BIGINT)
-        |        )::DOUBLE / 100 + 0.5) / 100 AS profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%${graft.operators.Analytics.Q9PartToken}%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-    "q12_shipmode" ->
-      s"""SELECT l_linestatus AS ship_mode,
-        |  sum(CASE WHEN o_orderpriority IN
-        |    (${graft.operators.Analytics.Q12HighPriorities.map("'" + _ + "'").mkString(", ")})
-        |    THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
-        |  sum(CASE WHEN o_orderpriority IN
-        |    (${graft.operators.Analytics.Q12HighPriorities.map("'" + _ + "'").mkString(", ")})
-        |    THEN 0 ELSE 1 END)::BIGINT AS low_line_count
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= DATE '${graft.operators.Analytics.Q12Start}'
-        |  AND l_shipdate < DATE '${graft.operators.Analytics.Q12End}'
-        |GROUP BY 1 ORDER BY ship_mode""".stripMargin,
-    "q7_volume" ->
+    "q7_volume" -> (Analytics.q7Volume _) oracle
       s"""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  year(l_shipdate)::INT AS l_year,
         |  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE), 2) AS revenue
@@ -465,7 +137,7 @@ object SparkEntry {
         |  AND l_shipdate >= DATE '${graft.operators.Analytics.Q7Start}'
         |  AND l_shipdate <= DATE '${graft.operators.Analytics.Q7End}'
         |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q8_share" ->
+    "q8_share" -> (Analytics.q8Share _) oracle
       s"""WITH u AS (
         |  SELECT year(o_orderdate)::INT AS o_year,
         |    CAST(floor(l_extendedprice*(1-l_discount) * 10000 + 0.5) AS BIGINT) AS vu,
@@ -489,7 +161,7 @@ object SparkEntry {
         |  floor(vus::DOUBLE / 100 + 0.5) / 100 AS total_revenue,
         |  floor(nus::DOUBLE / vus::DOUBLE * 10000 + 0.5) / 10000 AS mkt_share
         |FROM s ORDER BY o_year""".stripMargin,
-    "q17_small_qty" ->
+    "q17_small_qty" -> (Analytics.q17SmallQty _) oracle
       s"""WITH lp AS (SELECT l_partkey, l_quantity::BIGINT AS q, l_extendedprice
         |  FROM lineitem JOIN part ON l_partkey = p_partkey
         |  WHERE p_brand = '${graft.operators.Analytics.Q17Brand}'),
@@ -499,74 +171,7 @@ object SparkEntry {
         |             / 7 * 100 + 0.5) / 100 AS avg_yearly
         |FROM lp JOIN st USING (l_partkey)
         |WHERE 5 * q * cnt < sq""".stripMargin,
-    "q19_disjunct" ->
-      s"""SELECT
-        |  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE), 2) AS revenue,
-        |  count(*)::BIGINT AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE ${graft.operators.Analytics.Q19Bands.map {
-          case (b, szLo, szHi, qLo, qHi) =>
-            s"(p_brand = '$b' AND p_size BETWEEN $szLo AND $szHi" +
-              s" AND l_quantity BETWEEN $qLo AND $qHi)"
-        }.mkString("\n   OR ")}""".stripMargin,
-    "q6_forecast" ->
-      s"""SELECT floor(sum(CAST(floor(l_extendedprice*l_discount * 10000 + 0.5)
-        |                    AS BIGINT))::DOUBLE / 100 + 0.5) / 100 AS revenue,
-        |  count(*)::BIGINT AS n_lines
-        |FROM lineitem
-        |WHERE l_shipdate >= DATE '${graft.operators.Analytics.Q6Start}'
-        |  AND l_shipdate < DATE '${graft.operators.Analytics.Q6End}'
-        |  AND l_discount BETWEEN ${graft.operators.Analytics.Q6DiscLo}
-        |                     AND ${graft.operators.Analytics.Q6DiscHi}
-        |  AND l_quantity < ${graft.operators.Analytics.Q6MaxQty}""".stripMargin,
-    "q10_returns" ->
-      s"""SELECT c_custkey, c_name,
-        |  floor(c_acctbal*100 + 0.5)/100 AS c_acctbal, n_name,
-        |  floor(sum(CAST(floor(l_extendedprice*(1-l_discount) * 10000 + 0.5)
-        |            AS BIGINT))::DOUBLE / 100 + 0.5) / 100 AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= DATE '${graft.operators.Analytics.Q10Start}'
-        |  AND o_orderdate < DATE '${graft.operators.Analytics.Q10End}'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT ${graft.operators.Analytics.Q10TopN}""".stripMargin,
-    "q13_custdist" ->
-      s"""SELECT c_count, count(*)::BIGINT AS custdist FROM (
-        |  SELECT c_custkey, count(o_orderkey)::BIGINT AS c_count
-        |  FROM customer LEFT OUTER JOIN (
-        |    SELECT o_orderkey, o_custkey FROM orders
-        |    WHERE o_orderpriority <> '${graft.operators.Analytics.Q13ExcludedPriority}')
-        |    ON c_custkey = o_custkey
-        |  GROUP BY c_custkey)
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q15_top_supplier" ->
-      s"""WITH rev AS (
-        |  SELECT l_suppkey,
-        |    floor(sum(CAST(floor(l_extendedprice*(1-l_discount) * 10000 + 0.5)
-        |              AS BIGINT))::DOUBLE / 100 + 0.5) / 100 AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= DATE '${graft.operators.Analytics.Q15Start}'
-        |    AND l_shipdate < DATE '${graft.operators.Analytics.Q15End}'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "lang_confusion" -> graft.oracle.DuckSql.langConfusion,
-    "q16_supplier_cnt" ->
-      """WITH sp AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-        |ex AS (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |SELECT p_brand, (p_size // 10)::INT AS size_bucket,
-        |  count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
-        |FROM sp JOIN part ON l_partkey = p_partkey
-        |WHERE NOT EXISTS (SELECT 1 FROM ex WHERE s_suppkey = l_suppkey)
-        |GROUP BY p_brand, p_size // 10
-        |ORDER BY supplier_cnt DESC, p_brand, size_bucket""".stripMargin,
-    "q21_blame" ->
+    "q21_blame" -> (Analytics.q21Blame _) oracle
       s"""SELECT s_name, count(*)::BIGINT AS numwait
         |FROM lineitem l1
         |JOIN orders ON o_orderkey = l1.l_orderkey AND o_orderstatus = 'F'
@@ -581,29 +186,103 @@ object SparkEntry {
         |                    AND l3.l_returnflag = 'R')
         |GROUP BY s_name ORDER BY numwait DESC, s_name
         |LIMIT ${graft.operators.Analytics.Q21TopN}""".stripMargin,
-    "revenue_rollup" ->
-      s"""SELECT r_name, n_name,
-        |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE), 2)
-        |    AS revenue,
-        |  count(*)::BIGINT AS n_orders,
-        |  grouping_id(r_name, n_name)::INT AS lvl
-        |FROM orders
+    "q19_disjunct" -> (Analytics.q19Disjunct _) oracle
+      s"""SELECT
+        |  round(CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE), 2) AS revenue,
+        |  count(*)::BIGINT AS n_lines
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE ${graft.operators.Analytics.Q19Bands.map {
+          case (b, szLo, szHi, qLo, qHi) =>
+            s"(p_brand = '$b' AND p_size BETWEEN $szLo AND $szHi" +
+              s" AND l_quantity BETWEEN $qLo AND $qHi)"
+        }.mkString("\n   OR ")}""".stripMargin,
+    "q16_supplier_cnt" -> (Analytics.q16SupplierCnt _) oracle
+      """WITH sp AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+        |ex AS (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |SELECT p_brand, (p_size // 10)::INT AS size_bucket,
+        |  count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
+        |FROM sp JOIN part ON l_partkey = p_partkey
+        |WHERE NOT EXISTS (SELECT 1 FROM ex WHERE s_suppkey = l_suppkey)
+        |GROUP BY p_brand, p_size // 10
+        |ORDER BY supplier_cnt DESC, p_brand, size_bucket""".stripMargin,
+    "q6_forecast" -> (Analytics.q6Forecast _) oracle
+      s"""SELECT floor(sum(CAST(floor(l_extendedprice*l_discount * 10000 + 0.5)
+        |                    AS BIGINT))::DOUBLE / 100 + 0.5) / 100 AS revenue,
+        |  count(*)::BIGINT AS n_lines
+        |FROM lineitem
+        |WHERE l_shipdate >= DATE '${graft.operators.Analytics.Q6Start}'
+        |  AND l_shipdate < DATE '${graft.operators.Analytics.Q6End}'
+        |  AND l_discount BETWEEN ${graft.operators.Analytics.Q6DiscLo}
+        |                     AND ${graft.operators.Analytics.Q6DiscHi}
+        |  AND l_quantity < ${graft.operators.Analytics.Q6MaxQty}""".stripMargin,
+    "q10_returns" -> (Analytics.q10Returns _) oracle
+      s"""SELECT c_custkey, c_name,
+        |  floor(c_acctbal*100 + 0.5)/100 AS c_acctbal, n_name,
+        |  floor(sum(CAST(floor(l_extendedprice*(1-l_discount) * 10000 + 0.5)
+        |            AS BIGINT))::DOUBLE / 100 + 0.5) / 100 AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE o_orderdate >= DATE '${graft.operators.Analytics.RollupYear}-01-01'
-        |  AND o_orderdate < DATE '${graft.operators.Analytics.RollupYear + 1}-01-01'
-        |GROUP BY ROLLUP(r_name, n_name)""".stripMargin,
-    "revenue_trend" ->
-      """WITH d AS (SELECT (floor(epoch(l_shipdate))::BIGINT // 86400) AS day,
-        |  sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS drev
-        |  FROM lineitem GROUP BY 1)
-        |SELECT day, floor(drev::DOUBLE * 100 + 0.5) / 100 AS revenue,
-        |  floor((sum(drev) OVER w)::DOUBLE / (count(*) OVER w) * 100 + 0.5)
-        |    / 100 AS ma7
-        |FROM d
-        |WINDOW w AS (ORDER BY day RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "copurchase" ->
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= DATE '${graft.operators.Analytics.Q10Start}'
+        |  AND o_orderdate < DATE '${graft.operators.Analytics.Q10End}'
+        |GROUP BY c_custkey, c_name, c_acctbal, n_name
+        |ORDER BY revenue DESC, c_custkey
+        |LIMIT ${graft.operators.Analytics.Q10TopN}""".stripMargin,
+    "q13_custdist" -> (Analytics.q13Custdist _) oracle
+      s"""SELECT c_count, count(*)::BIGINT AS custdist FROM (
+        |  SELECT c_custkey, count(o_orderkey)::BIGINT AS c_count
+        |  FROM customer LEFT OUTER JOIN (
+        |    SELECT o_orderkey, o_custkey FROM orders
+        |    WHERE o_orderpriority <> '${graft.operators.Analytics.Q13ExcludedPriority}')
+        |    ON c_custkey = o_custkey
+        |  GROUP BY c_custkey)
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
+    "q15_top_supplier" -> (Analytics.q15TopSupplier _) oracle
+      s"""WITH rev AS (
+        |  SELECT l_suppkey,
+        |    floor(sum(CAST(floor(l_extendedprice*(1-l_discount) * 10000 + 0.5)
+        |              AS BIGINT))::DOUBLE / 100 + 0.5) / 100 AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= DATE '${graft.operators.Analytics.Q15Start}'
+        |    AND l_shipdate < DATE '${graft.operators.Analytics.Q15End}'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name, total_revenue
+        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
+        |ORDER BY s_suppkey""".stripMargin,
+    "q9_profit" -> (Analytics.q9Profit _) oracle
+      s"""SELECT n_name AS nation, year(o_orderdate)::INT AS o_year,
+        |  floor(sum(CAST(floor(l_extendedprice*(1-l_discount) * 10000 + 0.5)
+        |              AS BIGINT)
+        |          - CAST(floor(p_retailprice*${graft.operators.Analytics.Q9CostFrac} * 10000 + 0.5)
+        |              AS BIGINT)
+        |            * CAST(floor(l_quantity + 0.5) AS BIGINT)
+        |        )::DOUBLE / 100 + 0.5) / 100 AS profit
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |WHERE p_name LIKE '%${graft.operators.Analytics.Q9PartToken}%'
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
+    "q12_shipmode" -> (Analytics.q12Shipmode _) oracle
+      s"""SELECT l_linestatus AS ship_mode,
+        |  sum(CASE WHEN o_orderpriority IN
+        |    (${graft.operators.Analytics.Q12HighPriorities.map("'" + _ + "'").mkString(", ")})
+        |    THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
+        |  sum(CASE WHEN o_orderpriority IN
+        |    (${graft.operators.Analytics.Q12HighPriorities.map("'" + _ + "'").mkString(", ")})
+        |    THEN 0 ELSE 1 END)::BIGINT AS low_line_count
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |WHERE l_shipdate >= DATE '${graft.operators.Analytics.Q12Start}'
+        |  AND l_shipdate < DATE '${graft.operators.Analytics.Q12End}'
+        |GROUP BY 1 ORDER BY ship_mode""".stripMargin,
+    "lang_confusion" -> (TextAnalysis.langConfusion _) oracle
+      DuckSql.langConfusion,
+    "copurchase" -> (Analytics.copurchase _) oracle
       s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |c AS (SELECT l_orderkey, l_partkey FROM (
         |        SELECT l_orderkey, l_partkey,
@@ -624,27 +303,70 @@ object SparkEntry {
         |       JOIN n nb ON nb.l_partkey = part_b, t
         |ORDER BY support DESC, part_a, part_b
         |LIMIT ${graft.operators.Analytics.CopurchaseTopK}""".stripMargin,
-    "top_customers" ->
-      """SELECT c_mktsegment, rank::INT AS rank, c_custkey, round(bal, 2) AS c_acctbal FROM (
-        |  SELECT c_mktsegment, c_custkey, c_acctbal AS bal,
-        |    row_number() OVER (PARTITION BY c_mktsegment
-        |                       ORDER BY c_acctbal DESC, c_custkey) AS rank
-        |  FROM customer) WHERE rank <= 3
-        |ORDER BY c_mktsegment, rank""".stripMargin,
-    "kb_ingest" ->
+    "revenue_trend" -> (Analytics.revenueTrend _) oracle
+      """WITH d AS (SELECT (floor(epoch(l_shipdate))::BIGINT // 86400) AS day,
+        |  sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS drev
+        |  FROM lineitem GROUP BY 1)
+        |SELECT day, floor(drev::DOUBLE * 100 + 0.5) / 100 AS revenue,
+        |  floor((sum(drev) OVER w)::DOUBLE / (count(*) OVER w) * 100 + 0.5)
+        |    / 100 AS ma7
+        |FROM d
+        |WINDOW w AS (ORDER BY day RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin,
+    "revenue_rollup" -> (Analytics.revenueRollup _) oracle
+      s"""SELECT r_name, n_name,
+        |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE), 2)
+        |    AS revenue,
+        |  count(*)::BIGINT AS n_orders,
+        |  grouping_id(r_name, n_name)::INT AS lvl
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE o_orderdate >= DATE '${graft.operators.Analytics.RollupYear}-01-01'
+        |  AND o_orderdate < DATE '${graft.operators.Analytics.RollupYear + 1}-01-01'
+        |GROUP BY ROLLUP(r_name, n_name)""".stripMargin,
+    "rfm_segments" -> (Analytics.rfmSegments _) oracle DuckSql.rfmSegments,
+    "kb_ingest" -> (Similarity.kbIngest _) oracle
       """SELECT d.doc_id, d.lang, d.source, d.n_chars, e.label,
         |  len(e.embedding)::INT AS dim,
         |  round(sqrt(list_sum(list_transform(range(1,65),
         |    i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE))), 4) AS norm
         |FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
         |ORDER BY d.doc_id""".stripMargin,
-    "sim_topk" ->
+    "embedding_norms" -> (Similarity.embeddingNorms _) oracle
+      DuckSql.embeddingNorms,
+    "dim_variance" -> (Similarity.dimVariance _) oracle DuckSql.dimVariance,
+    "pca_power" -> (Similarity.pcaPower _) oracle DuckSql.pcaPower,
+    "pca_project" -> (Similarity.pcaProject _) oracle DuckSql.pcaProject,
+    "bq_topk" -> (Similarity.bqTopk _) oracle DuckSql.bqTopk,
+    "bq_recall" -> (Similarity.bqRecall _) oracle DuckSql.bqRecall,
+    "matryoshka_recall" -> (Similarity.matryoshkaRecall _) oracle
+      DuckSql.matryoshkaRecall,
+    "mrl_rerank" -> (Similarity.mrlRerank _) oracle DuckSql.mrlRerank,
+    "bq_rerank" -> (Similarity.bqRerank _) oracle DuckSql.bqRerank,
+    "bq_bit_balance" -> (Similarity.bqBitBalance _) oracle DuckSql.bqBitBalance,
+    "bq_rethreshold" -> (Similarity.bqRethreshold _) oracle
+      DuckSql.bqRethreshold,
+    "bq_rethreshold_recall" -> (Similarity.bqRethresholdRecall _) oracle
+      DuckSql.bqRethresholdRecall,
+    "ann_graph" -> (Similarity.annGraph _) oracle DuckSql.annGraph,
+    "graph_recall" -> (Similarity.graphRecall _) oracle DuckSql.graphRecall,
+    "beam_curve" -> (Similarity.beamCurve _) oracle DuckSql.beamCurve,
+    "graph_degree" -> (Similarity.graphDegree _) oracle DuckSql.graphDegree,
+    "rounds_pick" -> (Similarity.roundsPick _) oracle DuckSql.roundsPick,
+    "append_recall" -> (Similarity.appendRecall _) oracle DuckSql.appendRecall,
+    "append_churn" -> (Similarity.appendChurn _) oracle DuckSql.appendChurn,
+    "embedding_drift" -> (Similarity.embeddingDrift _) oracle
+      DuckSql.embeddingDrift,
+    "kb_consistency" -> (Similarity.kbConsistency _) oracle
+      DuckSql.kbConsistency,
+    "sim_topk" -> (Similarity.simTopk _) oracle
       """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
         |SELECT e.vec_id,
         |  round(list_cosine_similarity(e.embedding::DOUBLE[], q.qe::DOUBLE[]), 6) AS sim
         |FROM embeddings e, q WHERE e.vec_id <> 0
         |ORDER BY sim DESC, e.vec_id LIMIT 5""".stripMargin,
-    "knn_join" ->
+    "knn_join" -> (Similarity.knnJoin _) oracle
       """SELECT q_id, neighbor_id, round(s, 6) AS sim, rank::INT AS rank FROM (
         |  SELECT q.vec_id AS q_id, e.vec_id AS neighbor_id,
         |    list_cosine_similarity(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS s,
@@ -654,13 +376,13 @@ object SparkEntry {
         |  FROM embeddings e, embeddings q
         |  WHERE q.vec_id % 50 = 0 AND e.vec_id <> q.vec_id)
         |WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin,
-    "neardup_embedding" ->
+    "neardup_embedding" -> (Similarity.nearDupEmbedding _) oracle
       """SELECT a.label, a.vec_id AS id_a, b.vec_id AS id_b,
         |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS sim
         |FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
         |WHERE round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) >= 0.40
         |ORDER BY id_a, id_b""".stripMargin,
-    "ann_ivf" ->
+    "ann_ivf" -> (Similarity.annIvf _) oracle
       """WITH comp AS (
         |  SELECT label, i,
         |    CAST(floor(CAST(sum(CAST(floor(CAST(embedding[i] AS DOUBLE) * 10000000 + 0.5) AS BIGINT)) AS DOUBLE)
@@ -687,196 +409,263 @@ object SparkEntry {
         |    row_number() OVER (PARTITION BY q_id ORDER BY s DESC, neighbor_id) AS rank
         |  FROM cand) WHERE rank <= 3
         |ORDER BY q_id, rank""".stripMargin,
-    "lsh_ann" -> graft.oracle.DuckSql.lshAnn,
-    "clean_text"           -> graft.oracle.DuckSql.cleanText,
-    "template_classify"    -> graft.oracle.DuckSql.templateClassify,
-    "topic_detect"         -> graft.oracle.DuckSql.topicDetect,
-    "safety_screen"        -> graft.oracle.DuckSql.safetyScreen,
-    "effectiveness"        -> graft.oracle.DuckSql.effectiveness,
-    "training_examples"    -> graft.oracle.DuckSql.trainingExamples,
-    "lemma_tokens"         -> graft.oracle.DuckSql.lemmaTokens,
-    "category_info"        -> graft.oracle.DuckSql.categoryInfo,
-    "response_clean"       -> graft.oracle.DuckSql.responseClean,
-    "conversation_history" -> graft.oracle.DuckSql.conversationHistory,
-    "conversation_context" -> graft.oracle.DuckSql.conversationContext,
-    "interaction_history"  -> graft.oracle.DuckSql.interactionHistory,
-    "topic_interactions"   -> graft.oracle.DuckSql.topicInteractions,
-    "high_quality"         -> graft.oracle.DuckSql.highQuality,
-    "high_quality_topic"   -> graft.oracle.DuckSql.highQualityTopic,
-    "effectiveness_trend"  -> graft.oracle.DuckSql.effectivenessTrend,
-    "lang_id"         -> graft.oracle.DuckSql.langId,
-    "quality_score"   -> graft.oracle.DuckSql.qualityScore,
-    "token_count"     -> graft.oracle.DuckSql.tokenCount,
-    "doc_fingerprint" -> graft.oracle.DuckSql.docFingerprint,
-    "winnow_overlap"  -> graft.oracle.DuckSql.winnowOverlap,
-    "pii_scrub"        -> graft.oracle.DuckSql.piiScrub,
-    "repetition_score" -> graft.oracle.DuckSql.repetitionScore,
-    "char_entropy" -> graft.oracle.DuckSql.charEntropy,
-    "toxicity_screen"  -> graft.oracle.DuckSql.toxicityScreen,
-    "dedup_exact"   -> graft.oracle.DuckSql.dedupExact,
-    "dedup_minhash" -> graft.oracle.DuckSql.dedupMinhash,
-    "jaccard_hist" -> graft.oracle.DuckSql.jaccardHist,
-    "cluster_size_hist" -> graft.oracle.DuckSql.clusterSizeHist,
-    "dedup_simhash" -> graft.oracle.DuckSql.dedupSimhash,
-    "dedup_ngram"   -> graft.oracle.DuckSql.dedupNgram,
-    "dedup_clusters" -> graft.oracle.DuckSql.dedupClusters,
-    "dedup_substring" -> graft.oracle.DuckSql.dedupSubstring,
-    "span_hotspots" -> graft.oracle.DuckSql.spanHotspots,
-    "semdedup"        -> graft.oracle.DuckSql.semDedup,
-    "cluster_stats"   -> graft.oracle.DuckSql.clusterStats,
-    "source_overlap"  -> graft.oracle.DuckSql.sourceOverlap,
-    "sessionize" -> graft.oracle.DuckSql.sessionize,
-    "window_agg" -> graft.oracle.DuckSql.windowAgg,
-    "asof_join"  -> graft.oracle.DuckSql.asofJoin,
-    "scd2_build" -> graft.oracle.DuckSql.scd2Build,
-    "scd2_lookup" -> graft.oracle.DuckSql.scd2Lookup,
-    "interval_join" -> graft.oracle.DuckSql.intervalJoin,
-    "funnel" -> graft.oracle.DuckSql.funnel,
-    "cohort_retention" -> graft.oracle.DuckSql.cohortRetention,
-    "active_users" -> graft.oracle.DuckSql.activeUsers,
-    "session_stats" -> graft.oracle.DuckSql.sessionStats,
-    "session_entropy" -> graft.oracle.DuckSql.sessionEntropy,
-    "conversion_latency" -> graft.oracle.DuckSql.conversionLatency,
-    "session_gaps" -> graft.oracle.DuckSql.sessionGaps,
-    "temporal_decay" -> graft.oracle.DuckSql.temporalDecay,
-    "user_overlap" -> graft.oracle.DuckSql.userOverlap,
-    "weekly_profile" -> graft.oracle.DuckSql.weeklyProfile,
-    "seasonal_strength" -> graft.oracle.DuckSql.seasonalStrength,
-    "dow_anomalies" -> graft.oracle.DuckSql.dowAnomalies,
-    "cusum_shift" -> graft.oracle.DuckSql.cusumShift,
-    "conversion_lift" -> graft.oracle.DuckSql.conversionLift,
-    "km_retention" -> graft.oracle.DuckSql.kmRetention,
-    "nelson_aalen" -> graft.oracle.DuckSql.nelsonAalen,
-    "logrank_test" -> graft.oracle.DuckSql.logrankTest,
-    "cuped_lift" -> graft.oracle.DuckSql.cupedLift,
-    "ks_drift" -> graft.oracle.DuckSql.ksDrift,
-    "drift_gate" -> graft.oracle.DuckSql.driftGate,
-    "fdr_bh" -> graft.oracle.DuckSql.fdrBh,
-    "mann_whitney" -> graft.oracle.DuckSql.mannWhitney,
-    "bootstrap_ci" -> graft.oracle.DuckSql.bootstrapCi,
-    "attribution" -> graft.oracle.DuckSql.attribution,
-    "bradley_terry" -> graft.oracle.DuckSql.bradleyTerry,
-    "markov_stationary" -> graft.oracle.DuckSql.markovStationary,
-    "srm_check" -> graft.oracle.DuckSql.srmCheck,
-    "ab_power" -> graft.oracle.DuckSql.abPower,
-    "ewma_chart" -> graft.oracle.DuckSql.ewmaChart,
-    "forecast_baseline" -> graft.oracle.DuckSql.forecastBaseline,
-    "ses_backtest" -> graft.oracle.DuckSql.sesBacktest,
-    "markov_order" -> graft.oracle.DuckSql.markovOrder,
-    "overdispersion" -> graft.oracle.DuckSql.overdispersion,
-    "session_length_hist" -> graft.oracle.DuckSql.sessionLengthHist,
-    "langid_f1" -> graft.oracle.DuckSql.langidF1,
-    "media_dedup" -> graft.oracle.DuckSql.mediaDedup,
-    "frame_dedup" -> graft.oracle.DuckSql.frameDedup,
-    "cdc_dedup" -> graft.oracle.DuckSql.cdcDedup,
-    "phash_dedup" -> graft.oracle.DuckSql.phashDedup,
-    "media_shard" -> graft.oracle.DuckSql.mediaShard,
-    "banding_curve" -> graft.oracle.DuckSql.bandingCurve,
-    "banding_pick" -> graft.oracle.DuckSql.bandingPick,
-    "band_store_stats" -> graft.oracle.DuckSql.bandStoreStats,
-    "dedup_delta" -> graft.oracle.DuckSql.dedupDelta,
-    "arrival_report" -> graft.oracle.DuckSql.arrivalReport,
-    "store_coverage" -> graft.oracle.DuckSql.storeCoverage,
-    "arrival_funnel" -> graft.oracle.DuckSql.arrivalFunnel,
-    "event_transitions" -> graft.oracle.DuckSql.eventTransitions,
-    "event_paths" -> graft.oracle.DuckSql.eventPaths,
-    "key_skew" -> graft.oracle.DuckSql.keySkew,
-    "event_anomalies" -> graft.oracle.DuckSql.eventAnomalies,
-    "approx_distinct" -> graft.oracle.DuckSql.approxDistinct,
-    "heavy_hitters" -> graft.oracle.DuckSql.heavyHitters,
-    "tenant_usage" -> graft.oracle.DuckSql.tenantUsage,
-    "event_pivot" -> graft.oracle.DuckSql.eventPivot,
-    "rfm_segments" -> graft.oracle.DuckSql.rfmSegments,
-    "multimodal_meta" -> graft.oracle.DuckSql.multimodalMeta,
-    "embed_text" -> graft.oracle.DuckSql.embedText,
-    "ann_ivf_kmeans" -> graft.oracle.DuckSql.annIvfKmeans,
-    "ann_recall" -> graft.oracle.DuckSql.annRecall,
-    "nprobe_curve" -> graft.oracle.DuckSql.nprobeCurve,
-    "semdedup_recall" -> graft.oracle.DuckSql.semdedupRecall,
-    "hubness" -> graft.oracle.DuckSql.hubness,
-    "ivf_cell_stats" -> graft.oracle.DuckSql.ivfCellStats,
-    "ivf_rebalance" -> graft.oracle.DuckSql.ivfRebalance,
-    "rebalance_recall" -> graft.oracle.DuckSql.rebalanceRecall,
-    "probe_cost_quantiles" -> graft.oracle.DuckSql.probeCostQuantiles,
-    "ann_miss_audit" -> graft.oracle.DuckSql.annMissAudit,
-    "cell_outliers" -> graft.oracle.DuckSql.cellOutliers,
-    "nprobe_pick" -> graft.oracle.DuckSql.nprobePick,
-    "rebalance_churn" -> graft.oracle.DuckSql.rebalanceChurn,
-    "quality_by_length" -> graft.oracle.DuckSql.qualityByLength,
-    "decontam_sweep" -> graft.oracle.DuckSql.decontamSweep,
-    "mix_sensitivity" -> graft.oracle.DuckSql.mixSensitivity,
-    "index_recall" -> graft.oracle.DuckSql.indexRecall,
-    "ann_pq"         -> graft.oracle.DuckSql.annPq,
-    "pq_distortion"  -> graft.oracle.DuckSql.pqDistortion,
-    "sq_distortion"  -> graft.oracle.DuckSql.sqDistortion,
-    "sq_recall"      -> graft.oracle.DuckSql.sqRecall,
-    "ann_sq"         -> graft.oracle.DuckSql.annSq,
-    "pq_refresh"          -> graft.oracle.DuckSql.pqRefresh,
-    "pq_refresh_recall"   -> graft.oracle.DuckSql.pqRefreshRecall,
-    "sq_refit"            -> graft.oracle.DuckSql.sqRefit,
-    "sq_refit_distortion" -> graft.oracle.DuckSql.sqRefitDistortion,
-    "sq_refit_recall"     -> graft.oracle.DuckSql.sqRefitRecall,
-    "ann_ivfpq"      -> graft.oracle.DuckSql.annIvfPq,
-    "media_frames" -> graft.oracle.DuckSql.mediaFrames,
-    "decontaminate"     -> graft.oracle.DuckSql.decontaminate,
-    "contamination_report" -> graft.oracle.DuckSql.contaminationReport,
-    "bloom_decontaminate" -> graft.oracle.DuckSql.bloomDecontaminate,
-    "stratified_sample" -> graft.oracle.DuckSql.stratifiedSample,
-    "pack_sequences"    -> graft.oracle.DuckSql.packSequences,
-    "pack_stats"        -> graft.oracle.DuckSql.packStats,
-    "shuffle_assign"    -> graft.oracle.DuckSql.shuffleAssign,
-    "export_manifest"   -> graft.oracle.DuckSql.exportManifest,
-    "quality_filter"    -> graft.oracle.DuckSql.qualityFilter,
-    "curate_corpus"     -> graft.oracle.DuckSql.curateCorpus,
-    "curation_funnel"   -> graft.oracle.DuckSql.curationFunnel,
-    "bm25_topk"       -> graft.oracle.DuckSql.bm25Topk,
-    "ql_topk"         -> graft.oracle.DuckSql.qlTopk,
-    "tfidf_vectors"   -> graft.oracle.DuckSql.tfidfVectors,
-    "hybrid_retrieve" -> graft.oracle.DuckSql.hybridRetrieve,
-    "ndcg_eval" -> graft.oracle.DuckSql.ndcgEval,
-    "late_interaction" -> graft.oracle.DuckSql.lateInteraction,
-    "late_interaction_ann" -> graft.oracle.DuckSql.lateInteractionAnn,
-    "li_pool_recall" -> graft.oracle.DuckSql.liPoolRecall,
-    "arm_overlap" -> graft.oracle.DuckSql.armOverlap,
-    "sparse_knn" -> graft.oracle.DuckSql.sparseKnn,
-    "impact_recall" -> graft.oracle.DuckSql.impactRecall,
-    "prf_expand" -> graft.oracle.DuckSql.prfExpand,
-    "ir_metrics" -> graft.oracle.DuckSql.irMetrics,
-    "rank_corr" -> graft.oracle.DuckSql.rankCorr,
-    "fusion_sweep" -> graft.oracle.DuckSql.fusionSweep,
-    "silhouette" -> graft.oracle.DuckSql.silhouette,
-    "bitext_mine" -> graft.oracle.DuckSql.bitextMine,
-    "clf_calibration" -> graft.oracle.DuckSql.clfCalibration,
-    "brier_score" -> graft.oracle.DuckSql.brierScore,
-    "pr_curve" -> graft.oracle.DuckSql.prCurve,
-    "threshold_pick" -> graft.oracle.DuckSql.thresholdPick,
-    "clf_ks" -> graft.oracle.DuckSql.clfKs,
-    "k_anonymity" -> graft.oracle.DuckSql.kAnonymity,
-    "l_diversity" -> graft.oracle.DuckSql.lDiversity,
-    "t_closeness" -> graft.oracle.DuckSql.tCloseness,
-    "label_prop" -> graft.oracle.DuckSql.labelProp,
-    "centered_shift" -> graft.oracle.DuckSql.centeredShift,
-    "gate_overlap" -> graft.oracle.DuckSql.gateOverlap,
-    "dp_release" -> graft.oracle.DuckSql.dpRelease,
-    "mix_temperature" -> graft.oracle.DuckSql.mixTemperature,
-    "epoch_plan" -> graft.oracle.DuckSql.epochPlan,
-    "quality_psi" -> graft.oracle.DuckSql.qualityPsi,
-    "label_queue" -> graft.oracle.DuckSql.labelQueue,
-    "robust_stats" -> graft.oracle.DuckSql.robustStats,
-    "forget_user" -> graft.oracle.DuckSql.forgetUser,
-    "chunk_docs"      -> graft.oracle.DuckSql.chunkDocs,
-    "ngram_stats"        -> graft.oracle.DuckSql.ngramStats,
-    "cooccur_pmi"        -> graft.oracle.DuckSql.cooccurPmi,
-    "domain_mix"         -> graft.oracle.DuckSql.domainMix,
-    "apply_mix"          -> graft.oracle.DuckSql.applyMix,
-    "quality_thresholds" -> graft.oracle.DuckSql.qualityThresholds,
-    "hist_quantiles" -> graft.oracle.DuckSql.histQuantiles,
-    "zipf_fit" -> graft.oracle.DuckSql.zipfFit,
-    "token_entropy" -> graft.oracle.DuckSql.tokenEntropy,
-    "vocab_growth" -> graft.oracle.DuckSql.vocabGrowth,
-    "heaps_law" -> graft.oracle.DuckSql.heapsLaw,
-    "length_hist" -> graft.oracle.DuckSql.lengthHist,
-    "q11_important_stock" ->
+    "lsh_ann" -> (Similarity.lshAnn _) oracle DuckSql.lshAnn,
+    "clean_text" -> (TextOps.cleanTextQ _) oracle DuckSql.cleanText,
+    "template_classify" -> (TextOps.templateClassify _) oracle
+      DuckSql.templateClassify,
+    "topic_detect" -> (TextOps.topicDetect _) oracle DuckSql.topicDetect,
+    "safety_screen" -> (TextOps.safetyScreen _) oracle DuckSql.safetyScreen,
+    "effectiveness" -> (TextOps.effectiveness _) oracle DuckSql.effectiveness,
+    "template_effect" -> (TextOps.templateEffect _) oracle
+      DuckSql.templateEffect,
+    "training_examples" -> (TextOps.trainingExamples _) oracle
+      DuckSql.trainingExamples,
+    "lemma_tokens" -> (TextOps.lemmaTokens _) oracle DuckSql.lemmaTokens,
+    "category_info" -> (TextOps.categoryInfo _) oracle DuckSql.categoryInfo,
+    "response_clean" -> (TextOps.responseClean _) oracle DuckSql.responseClean,
+    "conversation_history" -> (Interactions.conversationHistory _) oracle
+      DuckSql.conversationHistory,
+    "conversation_context" -> (Interactions.conversationContext _) oracle
+      DuckSql.conversationContext,
+    "interaction_history" -> (Interactions.interactionHistory _) oracle
+      DuckSql.interactionHistory,
+    "topic_interactions" -> (Interactions.topicInteractions _) oracle
+      DuckSql.topicInteractions,
+    "high_quality" -> (Interactions.highQuality _) oracle DuckSql.highQuality,
+    "high_quality_topic" -> (Interactions.highQualityTopic _) oracle
+      DuckSql.highQualityTopic,
+    "effectiveness_trend" -> (Interactions.effectivenessTrend _) oracle
+      DuckSql.effectivenessTrend,
+    "lang_id" -> (TextAnalysis.langId _) oracle DuckSql.langId,
+    "quality_score" -> (TextAnalysis.qualityScore _) oracle
+      DuckSql.qualityScore,
+    "token_count" -> (TextAnalysis.tokenCount _) oracle DuckSql.tokenCount,
+    "doc_fingerprint" -> (TextAnalysis.docFingerprint _) oracle
+      DuckSql.docFingerprint,
+    "winnow_overlap" -> (TextAnalysis.winnowOverlap _) oracle
+      DuckSql.winnowOverlap,
+    "pii_scrub" -> (TextAnalysis.piiScrub _) oracle DuckSql.piiScrub,
+    "repetition_score" -> (TextAnalysis.repetitionScore _) oracle
+      DuckSql.repetitionScore,
+    "char_entropy" -> (TextAnalysis.charEntropy _) oracle DuckSql.charEntropy,
+    "toxicity_screen" -> (TextAnalysis.toxicityScreen _) oracle
+      DuckSql.toxicityScreen,
+    "dedup_exact" -> (Dedup.dedupExact _) oracle DuckSql.dedupExact,
+    "dedup_minhash" -> (Dedup.dedupMinhash _) oracle DuckSql.dedupMinhash,
+    "jaccard_hist" -> (Dedup.jaccardHist _) oracle DuckSql.jaccardHist,
+    "cluster_size_hist" -> (Dedup.clusterSizeHist _) oracle
+      DuckSql.clusterSizeHist,
+    "dedup_simhash" -> (Dedup.dedupSimhash _) oracle DuckSql.dedupSimhash,
+    "dedup_ngram" -> (Dedup.dedupNgram _) oracle DuckSql.dedupNgram,
+    "dedup_clusters" -> (Dedup.dedupClusters _) oracle DuckSql.dedupClusters,
+    "dedup_keep_best" -> (Dedup.dedupKeepBest _) oracle DuckSql.dedupKeepBest,
+    "lsh_curve" -> (Dedup.lshCurve _) oracle DuckSql.lshCurve,
+    "dup_tokens" -> (Dedup.dupTokens _) oracle DuckSql.dupTokens,
+    "dedup_substring" -> (Dedup.dedupSubstring _) oracle DuckSql.dedupSubstring,
+    "span_hotspots" -> (Dedup.spanHotspots _) oracle DuckSql.spanHotspots,
+    "semdedup" -> (Similarity.semDedup _) oracle DuckSql.semDedup,
+    "cluster_stats" -> (Dedup.clusterStats _) oracle DuckSql.clusterStats,
+    "source_overlap" -> (Dedup.sourceOverlap _) oracle DuckSql.sourceOverlap,
+    "sessionize" -> (Sessions.sessionize _) oracle DuckSql.sessionize,
+    "window_agg" -> (Sessions.windowAgg _) oracle DuckSql.windowAgg,
+    "asof_join" -> (Sessions.asofJoin _) oracle DuckSql.asofJoin,
+    "scd2_build" -> (Sessions.scd2Build _) oracle DuckSql.scd2Build,
+    "scd2_lookup" -> (Sessions.scd2Lookup _) oracle DuckSql.scd2Lookup,
+    "interval_join" -> (Sessions.intervalJoin _) oracle DuckSql.intervalJoin,
+    "funnel" -> (Sessions.funnel _) oracle DuckSql.funnel,
+    "cohort_retention" -> (Sessions.cohortRetention _) oracle
+      DuckSql.cohortRetention,
+    "cohort_ltv" -> (Sessions.cohortLtv _) oracle DuckSql.cohortLtv,
+    "active_users" -> (Sessions.activeUsers _) oracle DuckSql.activeUsers,
+    "session_stats" -> (Sessions.sessionStats _) oracle DuckSql.sessionStats,
+    "session_entropy" -> (Sessions.sessionEntropy _) oracle
+      DuckSql.sessionEntropy,
+    "conversion_latency" -> (Sessions.conversionLatency _) oracle
+      DuckSql.conversionLatency,
+    "session_gaps" -> (Sessions.sessionGaps _) oracle DuckSql.sessionGaps,
+    "temporal_decay" -> (Sessions.temporalDecay _) oracle DuckSql.temporalDecay,
+    "user_overlap" -> (Sessions.userOverlap _) oracle DuckSql.userOverlap,
+    "weekly_profile" -> (Sessions.weeklyProfile _) oracle DuckSql.weeklyProfile,
+    "seasonal_strength" -> (Sessions.seasonalStrength _) oracle
+      DuckSql.seasonalStrength,
+    "dow_anomalies" -> (Sessions.dowAnomalies _) oracle DuckSql.dowAnomalies,
+    "cusum_shift" -> (Sessions.cusumShift _) oracle DuckSql.cusumShift,
+    "conversion_lift" -> (Sessions.conversionLift _) oracle
+      DuckSql.conversionLift,
+    "km_retention" -> (Sessions.kmRetention _) oracle DuckSql.kmRetention,
+    "nelson_aalen" -> (Sessions.nelsonAalen _) oracle DuckSql.nelsonAalen,
+    "logrank_test" -> (Sessions.logrankTest _) oracle DuckSql.logrankTest,
+    "cuped_lift" -> (Sessions.cupedLift _) oracle DuckSql.cupedLift,
+    "ks_drift" -> (Sessions.ksDrift _) oracle DuckSql.ksDrift,
+    "drift_gate" -> (Sessions.driftGate _) oracle DuckSql.driftGate,
+    "fdr_bh" -> (Sessions.fdrBh _) oracle DuckSql.fdrBh,
+    "mann_whitney" -> (Sessions.mannWhitney _) oracle DuckSql.mannWhitney,
+    "bootstrap_ci" -> (Sessions.bootstrapCi _) oracle DuckSql.bootstrapCi,
+    "attribution" -> (Sessions.attribution _) oracle DuckSql.attribution,
+    "bradley_terry" -> (Sessions.bradleyTerry _) oracle DuckSql.bradleyTerry,
+    "markov_stationary" -> (Sessions.markovStationary _) oracle
+      DuckSql.markovStationary,
+    "srm_check" -> (Sessions.srmCheck _) oracle DuckSql.srmCheck,
+    "ab_power" -> (Sessions.abPower _) oracle DuckSql.abPower,
+    "ewma_chart" -> (Sessions.ewmaChart _) oracle DuckSql.ewmaChart,
+    "forecast_baseline" -> (Sessions.forecastBaseline _) oracle
+      DuckSql.forecastBaseline,
+    "ses_backtest" -> (Sessions.sesBacktest _) oracle DuckSql.sesBacktest,
+    "markov_order" -> (Sessions.markovOrder _) oracle DuckSql.markovOrder,
+    "overdispersion" -> (Sessions.overdispersion _) oracle
+      DuckSql.overdispersion,
+    "session_length_hist" -> (Sessions.sessionLengthHist _) oracle
+      DuckSql.sessionLengthHist,
+    "langid_f1" -> (TextAnalysis.langidF1 _) oracle DuckSql.langidF1,
+    "media_dedup" -> (Multimodal.mediaDedup _) oracle DuckSql.mediaDedup,
+    "frame_dedup" -> (Multimodal.frameDedup _) oracle DuckSql.frameDedup,
+    "cdc_dedup" -> (Multimodal.cdcDedup _) oracle DuckSql.cdcDedup,
+    "phash_dedup" -> (Multimodal.phashDedup _) oracle DuckSql.phashDedup,
+    "media_shard" -> (Multimodal.mediaShard _) oracle DuckSql.mediaShard,
+    "banding_curve" -> (Dedup.bandingCurve _) oracle DuckSql.bandingCurve,
+    "banding_pick" -> (Dedup.bandingPick _) oracle DuckSql.bandingPick,
+    "band_store_stats" -> (Dedup.bandStoreStats _) oracle
+      DuckSql.bandStoreStats,
+    "dedup_delta" -> (Dedup.dedupDelta _) oracle DuckSql.dedupDelta,
+    "arrival_report" -> (Curation.arrivalReport _) oracle DuckSql.arrivalReport,
+    "store_coverage" -> (Curation.storeCoverage _) oracle DuckSql.storeCoverage,
+    "arrival_funnel" -> (Curation.arrivalFunnel _) oracle DuckSql.arrivalFunnel,
+    "event_transitions" -> (Sessions.eventTransitions _) oracle
+      DuckSql.eventTransitions,
+    "event_paths" -> (Sessions.eventPaths _) oracle DuckSql.eventPaths,
+    "key_skew" -> (Analytics.keySkew _) oracle DuckSql.keySkew,
+    "event_anomalies" -> (Sessions.eventAnomalies _) oracle
+      DuckSql.eventAnomalies,
+    "approx_distinct" -> (Sessions.approxDistinct _) oracle
+      DuckSql.approxDistinct,
+    "heavy_hitters" -> (Sessions.heavyHitters _) oracle DuckSql.heavyHitters,
+    "tenant_usage" -> (Tenancy.tenantUsage _) oracle DuckSql.tenantUsage,
+    "event_pivot" -> (Sessions.eventPivot _) oracle DuckSql.eventPivot,
+    "multimodal_meta" -> (Multimodal.multimodalMeta _) oracle
+      DuckSql.multimodalMeta,
+    "embed_text" -> (Embedder.embedTextComponents _) oracle DuckSql.embedText,
+    "ann_ivf_kmeans" -> (Similarity.annIvfKmeans _) oracle DuckSql.annIvfKmeans,
+    "ann_recall" -> (Similarity.annRecall _) oracle DuckSql.annRecall,
+    "nprobe_curve" -> (Similarity.nprobeCurve _) oracle DuckSql.nprobeCurve,
+    "semdedup_recall" -> (Similarity.semdedupRecall _) oracle
+      DuckSql.semdedupRecall,
+    "hubness" -> (Similarity.hubness _) oracle DuckSql.hubness,
+    "ivf_cell_stats" -> (Similarity.ivfCellStats _) oracle DuckSql.ivfCellStats,
+    "ivf_rebalance" -> (Similarity.ivfRebalance _) oracle DuckSql.ivfRebalance,
+    "rebalance_recall" -> (Similarity.rebalanceRecall _) oracle
+      DuckSql.rebalanceRecall,
+    "probe_cost_quantiles" -> (Similarity.probeCostQuantiles _) oracle
+      DuckSql.probeCostQuantiles,
+    "ann_miss_audit" -> (Similarity.annMissAudit _) oracle DuckSql.annMissAudit,
+    "cell_outliers" -> (Similarity.cellOutliers _) oracle DuckSql.cellOutliers,
+    "nprobe_pick" -> (Similarity.nprobePick _) oracle DuckSql.nprobePick,
+    "rebalance_churn" -> (Similarity.rebalanceChurn _) oracle
+      DuckSql.rebalanceChurn,
+    "quality_by_length" -> (CorpusStats.qualityByLength _) oracle
+      DuckSql.qualityByLength,
+    "decontam_sweep" -> (Curation.decontamSweep _) oracle DuckSql.decontamSweep,
+    "mix_sensitivity" -> (CorpusStats.mixSensitivity _) oracle
+      DuckSql.mixSensitivity,
+    "index_recall" -> (Similarity.indexRecall _) oracle DuckSql.indexRecall,
+    "ann_pq" -> (Similarity.annPq _) oracle DuckSql.annPq,
+    "pq_distortion" -> (Similarity.pqDistortion _) oracle DuckSql.pqDistortion,
+    "sq_distortion" -> (Similarity.sqDistortion _) oracle DuckSql.sqDistortion,
+    "sq_recall" -> (Similarity.sqRecall _) oracle DuckSql.sqRecall,
+    "ann_sq" -> (Similarity.annSq _) oracle DuckSql.annSq,
+    "pq_refresh" -> (Similarity.pqRefresh _) oracle DuckSql.pqRefresh,
+    "pq_refresh_recall" -> (Similarity.pqRefreshRecall _) oracle
+      DuckSql.pqRefreshRecall,
+    "sq_refit" -> (Similarity.sqRefit _) oracle DuckSql.sqRefit,
+    "sq_refit_distortion" -> (Similarity.sqRefitDistortion _) oracle
+      DuckSql.sqRefitDistortion,
+    "sq_refit_recall" -> (Similarity.sqRefitRecall _) oracle
+      DuckSql.sqRefitRecall,
+    "ann_ivfpq" -> (Similarity.annIvfPq _) oracle DuckSql.annIvfPq,
+    "media_frames" -> (Multimodal.mediaFrames _) oracle DuckSql.mediaFrames,
+    "decontaminate" -> (Curation.decontaminate _) oracle DuckSql.decontaminate,
+    "contamination_report" -> (Curation.contaminationReport _) oracle
+      DuckSql.contaminationReport,
+    "bloom_decontaminate" -> (Curation.bloomDecontaminate _) oracle
+      DuckSql.bloomDecontaminate,
+    "stratified_sample" -> (Curation.stratifiedSample _) oracle
+      DuckSql.stratifiedSample,
+    "pack_sequences" -> (Curation.packSequences _) oracle DuckSql.packSequences,
+    "pack_stats" -> (Curation.packStats _) oracle DuckSql.packStats,
+    "shuffle_assign" -> (Curation.shuffleAssign _) oracle DuckSql.shuffleAssign,
+    "export_manifest" -> (Curation.exportManifest _) oracle
+      DuckSql.exportManifest,
+    "quality_filter" -> (Curation.qualityFilter _) oracle DuckSql.qualityFilter,
+    "curate_corpus" -> (Curation.curateCorpus _) oracle DuckSql.curateCorpus,
+    "curation_funnel" -> (Curation.curationFunnel _) oracle
+      DuckSql.curationFunnel,
+    "classifier_examples" -> (Curation.classifierExamples _) oracle
+      DuckSql.classifierExamples,
+    "classifier_train" -> (Curation.classifierTrain _) oracle
+      DuckSql.classifierTrain,
+    "classifier_apply" -> (Curation.classifierApply _) oracle
+      DuckSql.classifierApply,
+    "data_split" -> (Curation.dataSplit _) oracle DuckSql.dataSplit,
+    "sft_export" -> (Curation.sftExport _) oracle DuckSql.sftExport,
+    "split_leakage" -> (Curation.splitLeakage _) oracle DuckSql.splitLeakage,
+    "cell_purity" -> (Similarity.cellPurity _) oracle DuckSql.cellPurity,
+    "gate_eval" -> (Curation.gateEval _) oracle DuckSql.gateEval,
+    "bm25_topk" -> (Retrieval.bm25Topk _) oracle DuckSql.bm25Topk,
+    "ql_topk" -> (Retrieval.qlTopk _) oracle DuckSql.qlTopk,
+    "tfidf_vectors" -> (Retrieval.tfidfVectors _) oracle DuckSql.tfidfVectors,
+    "hybrid_retrieve" -> (Retrieval.hybridRetrieve _) oracle
+      DuckSql.hybridRetrieve,
+    "ndcg_eval" -> (Retrieval.ndcgEval _) oracle DuckSql.ndcgEval,
+    "late_interaction" -> (Retrieval.lateInteraction _) oracle
+      DuckSql.lateInteraction,
+    "late_interaction_ann" -> (Retrieval.lateInteractionAnn _) oracle
+      DuckSql.lateInteractionAnn,
+    "li_pool_recall" -> (Retrieval.liPoolRecall _) oracle DuckSql.liPoolRecall,
+    "arm_overlap" -> (Retrieval.armOverlap _) oracle DuckSql.armOverlap,
+    "sparse_knn" -> ((s: SparkSession, d: String) =>
+      Retrieval.sparseKnn(s, d)) oracle DuckSql.sparseKnn,
+    "impact_recall" -> (Retrieval.impactRecall _) oracle DuckSql.impactRecall,
+    "prf_expand" -> (Retrieval.prfExpand _) oracle DuckSql.prfExpand,
+    "ir_metrics" -> (Retrieval.irMetrics _) oracle DuckSql.irMetrics,
+    "rank_corr" -> (Retrieval.rankCorr _) oracle DuckSql.rankCorr,
+    "fusion_sweep" -> (Retrieval.fusionSweep _) oracle DuckSql.fusionSweep,
+    "silhouette" -> (Similarity.silhouette _) oracle DuckSql.silhouette,
+    "bitext_mine" -> (Similarity.bitextMine _) oracle DuckSql.bitextMine,
+    "clf_calibration" -> (Curation.clfCalibration _) oracle
+      DuckSql.clfCalibration,
+    "brier_score" -> (Curation.brierScore _) oracle DuckSql.brierScore,
+    "pr_curve" -> (Curation.prCurve _) oracle DuckSql.prCurve,
+    "threshold_pick" -> (Curation.thresholdPick _) oracle DuckSql.thresholdPick,
+    "clf_ks" -> (Curation.clfKs _) oracle DuckSql.clfKs,
+    "k_anonymity" -> (Tenancy.kAnonymity _) oracle DuckSql.kAnonymity,
+    "l_diversity" -> (Tenancy.lDiversity _) oracle DuckSql.lDiversity,
+    "t_closeness" -> (Tenancy.tCloseness _) oracle DuckSql.tCloseness,
+    "label_prop" -> (Graph.labelProp _) oracle DuckSql.labelProp,
+    "centered_shift" -> (Similarity.centeredShift _) oracle
+      DuckSql.centeredShift,
+    "gate_overlap" -> (Curation.gateOverlap _) oracle DuckSql.gateOverlap,
+    "dp_release" -> (Tenancy.dpRelease _) oracle DuckSql.dpRelease,
+    "mix_temperature" -> (CorpusStats.mixTemperature _) oracle
+      DuckSql.mixTemperature,
+    "epoch_plan" -> (CorpusStats.epochPlan _) oracle DuckSql.epochPlan,
+    "quality_psi" -> (CorpusStats.qualityPsi _) oracle DuckSql.qualityPsi,
+    "label_queue" -> (Curation.labelQueue _) oracle DuckSql.labelQueue,
+    "robust_stats" -> (Sessions.robustStats _) oracle DuckSql.robustStats,
+    "forget_user" -> (Tenancy.forgetUser _) oracle DuckSql.forgetUser,
+    "chunk_docs" -> (Retrieval.chunkDocs _) oracle DuckSql.chunkDocs,
+    "ngram_stats" -> (CorpusStats.ngramStats _) oracle DuckSql.ngramStats,
+    "cooccur_pmi" -> (CorpusStats.cooccurPmi _) oracle DuckSql.cooccurPmi,
+    "domain_mix" -> (CorpusStats.domainMix _) oracle DuckSql.domainMix,
+    "apply_mix" -> (CorpusStats.applyMix _) oracle DuckSql.applyMix,
+    "quality_thresholds" -> (CorpusStats.qualityThresholds _) oracle
+      DuckSql.qualityThresholds,
+    "hist_quantiles" -> (CorpusStats.histQuantiles _) oracle
+      DuckSql.histQuantiles,
+    "zipf_fit" -> (CorpusStats.zipfFit _) oracle DuckSql.zipfFit,
+    "token_entropy" -> (CorpusStats.tokenEntropy _) oracle DuckSql.tokenEntropy,
+    "vocab_growth" -> (CorpusStats.vocabGrowth _) oracle DuckSql.vocabGrowth,
+    "heaps_law" -> (CorpusStats.heapsLaw _) oracle DuckSql.heapsLaw,
+    "length_hist" -> (CorpusStats.lengthHist _) oracle DuckSql.lengthHist,
+    "q11_important_stock" -> (Analytics.q11ImportantStock _) oracle
       s"""WITH ns AS (SELECT s_suppkey FROM supplier
         |  JOIN nation ON s_nationkey = n_nationkey
         |  WHERE n_name = '${graft.operators.Analytics.Q11Nation}'),
@@ -890,7 +679,7 @@ object SparkEntry {
         |FROM g, t
         |WHERE vu * np > tot * ${graft.operators.Analytics.Q11MeanMult}
         |ORDER BY stock_value DESC, l_partkey""".stripMargin,
-    "q20_excess_stock" ->
+    "q20_excess_stock" -> (Analytics.q20ExcessStock _) oracle
       s"""WITH ps AS (SELECT l_partkey, l_suppkey,
         |  sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) AS sq
         |  FROM lineitem GROUP BY 1, 2),
@@ -903,103 +692,99 @@ object SparkEntry {
         |WHERE n_name = '${graft.operators.Analytics.Q20Nation}'
         |  AND EXISTS (SELECT 1 FROM dom WHERE l_suppkey = s_suppkey)
         |ORDER BY s_suppkey""".stripMargin,
-    "corpus_card" -> graft.oracle.DuckSql.corpusCard,
-    "source_card" -> graft.oracle.DuckSql.sourceCard,
-    "source_divergence" -> graft.oracle.DuckSql.sourceDivergence,
-    "tokenizer_fertility" -> graft.oracle.DuckSql.tokenizerFertility,
-    "oov_rate" -> graft.oracle.DuckSql.oovRate,
-    "vocab_coverage" -> graft.oracle.DuckSql.vocabCoverage,
-    "coverage_pick" -> graft.oracle.DuckSql.coveragePick,
-    "source_lang_assoc" -> graft.oracle.DuckSql.sourceLangAssoc,
-    "token_gini" -> graft.oracle.DuckSql.tokenGini,
-    "hill_tail" -> graft.oracle.DuckSql.hillTail,
-    "perplexity_score" -> graft.oracle.DuckSql.perplexityScore,
-    "ccnet_buckets" -> graft.oracle.DuckSql.ccnetBuckets,
-    "signal_corr" -> graft.oracle.DuckSql.signalCorr,
-    "signal_mi" -> graft.oracle.DuckSql.signalMi,
-    "classifier_examples" -> graft.oracle.DuckSql.classifierExamples,
-    "classifier_train" -> graft.oracle.DuckSql.classifierTrain,
-    "classifier_apply" -> graft.oracle.DuckSql.classifierApply,
-    "cohort_ltv" -> graft.oracle.DuckSql.cohortLtv,
-    "dedup_keep_best" -> graft.oracle.DuckSql.dedupKeepBest,
-    "lsh_curve" -> graft.oracle.DuckSql.lshCurve,
-    "data_split" -> graft.oracle.DuckSql.dataSplit,
-    "sft_export" -> graft.oracle.DuckSql.sftExport,
-    "split_leakage" -> graft.oracle.DuckSql.splitLeakage,
-    "cell_purity" -> graft.oracle.DuckSql.cellPurity,
-    "gate_eval" -> graft.oracle.DuckSql.gateEval,
-    "dup_tokens" -> graft.oracle.DuckSql.dupTokens,
-    "embedding_drift" -> graft.oracle.DuckSql.embeddingDrift,
-    "kb_consistency" -> graft.oracle.DuckSql.kbConsistency,
-    "template_effect" -> graft.oracle.DuckSql.templateEffect,
-    "embedding_norms" -> graft.oracle.DuckSql.embeddingNorms,
-    "dim_variance" -> graft.oracle.DuckSql.dimVariance,
-    "pca_power" -> graft.oracle.DuckSql.pcaPower,
-    "pca_project" -> graft.oracle.DuckSql.pcaProject,
-    "bq_topk" -> graft.oracle.DuckSql.bqTopk,
-    "bq_recall" -> graft.oracle.DuckSql.bqRecall,
-    "matryoshka_recall" -> graft.oracle.DuckSql.matryoshkaRecall,
-    "mrl_rerank" -> graft.oracle.DuckSql.mrlRerank,
-    "bq_rerank" -> graft.oracle.DuckSql.bqRerank,
-    "bq_bit_balance" -> graft.oracle.DuckSql.bqBitBalance,
-    "bq_rethreshold" -> graft.oracle.DuckSql.bqRethreshold,
-    "bq_rethreshold_recall" -> graft.oracle.DuckSql.bqRethresholdRecall,
-    "ann_graph" -> graft.oracle.DuckSql.annGraph,
-    "graph_recall" -> graft.oracle.DuckSql.graphRecall,
-    "beam_curve" -> graft.oracle.DuckSql.beamCurve,
-    "graph_degree" -> graft.oracle.DuckSql.graphDegree,
-    "rounds_pick" -> graft.oracle.DuckSql.roundsPick,
-    "append_recall" -> graft.oracle.DuckSql.appendRecall,
-    "append_churn" -> graft.oracle.DuckSql.appendChurn,
-    "perplexity_ood" -> graft.oracle.DuckSql.perplexityOod,
-    "perplexity_backoff" -> graft.oracle.DuckSql.perplexityBackoff,
-    "dsir_weights" -> graft.oracle.DuckSql.dsirWeights,
-    "dsir_select" -> graft.oracle.DuckSql.dsirSelect,
-    "bpe_pairs"    -> graft.oracle.DuckSql.bpePairs,
-    "bpe_vocab"    -> graft.oracle.DuckSql.bpeVocab,
-    "bpe_encode"   -> graft.oracle.DuckSql.bpeEncode,
-    "readability"  -> graft.oracle.DuckSql.readability,
-    "pagerank"     -> graft.oracle.DuckSql.pagerank,
-    "graph_stats"  -> graft.oracle.DuckSql.graphStats,
-    "copurchase_clusters" -> graft.oracle.DuckSql.copurchaseClusters,
-    "dedup_recall" -> graft.oracle.DuckSql.dedupRecall,
-    "capture_recapture" -> graft.oracle.DuckSql.captureRecapture,
-    "containment_dup" -> graft.oracle.DuckSql.containmentDup,
-    "fuzzy_match" -> graft.oracle.DuckSql.fuzzyMatch,
-    "fuzzy_clusters" -> graft.oracle.DuckSql.fuzzyClusters,
-    "minhash_error" -> graft.oracle.DuckSql.minhashError,
-    "k_core" -> graft.oracle.DuckSql.kCore,
-    "assortativity" -> graft.oracle.DuckSql.assortativity,
-    "local_clustering" -> graft.oracle.DuckSql.localClustering,
-    "jaccard_links" -> graft.oracle.DuckSql.jaccardLinks,
-    "ship_latency" -> graft.oracle.DuckSql.shipLatency,
-    "pareto_front" -> graft.oracle.DuckSql.paretoFront,
-    "theil_sen" -> graft.oracle.DuckSql.theilSen,
-    "revenue_concentration" -> graft.oracle.DuckSql.revenueConcentration,
-    "gini_revenue" -> graft.oracle.DuckSql.giniRevenue,
-    "lorenz_curve" -> graft.oracle.DuckSql.lorenzCurve,
-    "acf_revenue" -> graft.oracle.DuckSql.acfRevenue,
-    "changepoint" -> graft.oracle.DuckSql.changepoint,
-    "benford_check" -> graft.oracle.DuckSql.benfordCheck,
-    "discount_elasticity" -> graft.oracle.DuckSql.discountElasticity,
-    "curriculum_order" -> graft.oracle.DuckSql.curriculumOrder,
-    "bottomk_sample" -> graft.oracle.DuckSql.bottomkSample,
-    "sample_audit" -> graft.oracle.DuckSql.sampleAudit,
-    "burstiness" -> graft.oracle.DuckSql.burstiness,
-    "hapax_ratio" -> graft.oracle.DuckSql.hapaxRatio,
-    "good_turing" -> graft.oracle.DuckSql.goodTuring,
-    "chi2_terms" -> graft.oracle.DuckSql.chi2Terms,
-    "ngram_diversity" -> graft.oracle.DuckSql.ngramDiversity,
-    "signal_auc" -> graft.oracle.DuckSql.signalAuc,
-    "corpus_cube" -> graft.oracle.DuckSql.corpusCube,
-    "cluster_terms" -> graft.oracle.DuckSql.clusterTerms,
-    "topic_coverage" -> graft.oracle.DuckSql.topicCoverage,
-    "mmr_rerank" -> graft.oracle.DuckSql.mmrRerank,
-    "mmr_pool_recall" -> graft.oracle.DuckSql.mmrPoolRecall,
-    "rag_context" -> graft.oracle.DuckSql.ragContext,
-    "hard_negatives" -> graft.oracle.DuckSql.hardNegatives,
-    "ann_filtered" -> graft.oracle.DuckSql.annFiltered,
-    "filtered_recall" -> graft.oracle.DuckSql.filteredRecall,
-    "cheapest_supplier" -> graft.oracle.DuckSql.cheapestSupplier,
+    "corpus_card" -> (CorpusStats.corpusCard _) oracle DuckSql.corpusCard,
+    "source_card" -> (CorpusStats.sourceCard _) oracle DuckSql.sourceCard,
+    "source_divergence" -> (CorpusStats.sourceDivergence _) oracle
+      DuckSql.sourceDivergence,
+    "tokenizer_fertility" -> (CorpusStats.tokenizerFertility _) oracle
+      DuckSql.tokenizerFertility,
+    "oov_rate" -> (CorpusStats.oovRate _) oracle DuckSql.oovRate,
+    "vocab_coverage" -> (CorpusStats.vocabCoverage _) oracle
+      DuckSql.vocabCoverage,
+    "coverage_pick" -> (CorpusStats.coveragePick _) oracle DuckSql.coveragePick,
+    "source_lang_assoc" -> (CorpusStats.sourceLangAssoc _) oracle
+      DuckSql.sourceLangAssoc,
+    "token_gini" -> (CorpusStats.tokenGini _) oracle DuckSql.tokenGini,
+    "hill_tail" -> (CorpusStats.hillTail _) oracle DuckSql.hillTail,
+    "perplexity_score" -> (CorpusStats.perplexityScore _) oracle
+      DuckSql.perplexityScore,
+    "ccnet_buckets" -> (CorpusStats.ccnetBuckets _) oracle DuckSql.ccnetBuckets,
+    "signal_corr" -> (CorpusStats.signalCorr _) oracle DuckSql.signalCorr,
+    "signal_mi" -> (CorpusStats.signalMi _) oracle DuckSql.signalMi,
+    "perplexity_ood" -> (CorpusStats.perplexityOod _) oracle
+      DuckSql.perplexityOod,
+    "perplexity_backoff" -> (CorpusStats.perplexityBackoff _) oracle
+      DuckSql.perplexityBackoff,
+    "dsir_weights" -> (CorpusStats.dsirWeights _) oracle DuckSql.dsirWeights,
+    "dsir_select" -> (CorpusStats.dsirSelect _) oracle DuckSql.dsirSelect,
+    "bpe_pairs" -> (CorpusStats.bpePairs _) oracle DuckSql.bpePairs,
+    "bpe_vocab" -> (CorpusStats.bpeVocab _) oracle DuckSql.bpeVocab,
+    "bpe_encode" -> (CorpusStats.bpeEncode _) oracle DuckSql.bpeEncode,
+    "readability" -> (TextAnalysis.readability _) oracle DuckSql.readability,
+    "pagerank" -> (Graph.pagerank _) oracle DuckSql.pagerank,
+    "graph_stats" -> (Graph.graphStats _) oracle DuckSql.graphStats,
+    "copurchase_clusters" -> (Graph.copurchaseClusters _) oracle
+      DuckSql.copurchaseClusters,
+    "dedup_recall" -> (Dedup.dedupRecall _) oracle DuckSql.dedupRecall,
+    "capture_recapture" -> (Dedup.captureRecapture _) oracle
+      DuckSql.captureRecapture,
+    "containment_dup" -> (Dedup.containmentDup _) oracle DuckSql.containmentDup,
+    "fuzzy_match" -> (Dedup.fuzzyMatch _) oracle DuckSql.fuzzyMatch,
+    "fuzzy_clusters" -> (Dedup.fuzzyClusters _) oracle DuckSql.fuzzyClusters,
+    "minhash_error" -> (Dedup.minhashError _) oracle DuckSql.minhashError,
+    "k_core" -> (Graph.kCore _) oracle DuckSql.kCore,
+    "assortativity" -> (Graph.assortativity _) oracle DuckSql.assortativity,
+    "local_clustering" -> (Graph.localClustering _) oracle
+      DuckSql.localClustering,
+    "jaccard_links" -> (Graph.jaccardLinks _) oracle DuckSql.jaccardLinks,
+    "ship_latency" -> (Analytics.shipLatency _) oracle DuckSql.shipLatency,
+    "pareto_front" -> (Analytics.paretoFront _) oracle DuckSql.paretoFront,
+    "theil_sen" -> (Analytics.theilSen _) oracle DuckSql.theilSen,
+    "revenue_concentration" -> (Analytics.revenueConcentration _) oracle
+      DuckSql.revenueConcentration,
+    "gini_revenue" -> (Analytics.giniRevenue _) oracle DuckSql.giniRevenue,
+    "lorenz_curve" -> (Analytics.lorenzCurve _) oracle DuckSql.lorenzCurve,
+    "acf_revenue" -> (Analytics.acfRevenue _) oracle DuckSql.acfRevenue,
+    "changepoint" -> (Analytics.changepoint _) oracle DuckSql.changepoint,
+    "benford_check" -> (Analytics.benfordCheck _) oracle DuckSql.benfordCheck,
+    "discount_elasticity" -> (Analytics.discountElasticity _) oracle
+      DuckSql.discountElasticity,
+    "curriculum_order" -> (Curation.curriculumOrder _) oracle
+      DuckSql.curriculumOrder,
+    "bottomk_sample" -> (Curation.bottomkSample _) oracle DuckSql.bottomkSample,
+    "sample_audit" -> (Curation.sampleAudit _) oracle DuckSql.sampleAudit,
+    "burstiness" -> (CorpusStats.burstiness _) oracle DuckSql.burstiness,
+    "hapax_ratio" -> (CorpusStats.hapaxRatio _) oracle DuckSql.hapaxRatio,
+    "good_turing" -> (CorpusStats.goodTuring _) oracle DuckSql.goodTuring,
+    "chi2_terms" -> (CorpusStats.chi2Terms _) oracle DuckSql.chi2Terms,
+    "ngram_diversity" -> (CorpusStats.ngramDiversity _) oracle
+      DuckSql.ngramDiversity,
+    "signal_auc" -> (CorpusStats.signalAuc _) oracle DuckSql.signalAuc,
+    "corpus_cube" -> (CorpusStats.corpusCube _) oracle DuckSql.corpusCube,
+    "cluster_terms" -> (Retrieval.clusterTerms _) oracle DuckSql.clusterTerms,
+    "topic_coverage" -> (Retrieval.topicCoverage _) oracle
+      DuckSql.topicCoverage,
+    "mmr_rerank" -> (Similarity.mmrRerank _) oracle DuckSql.mmrRerank,
+    "mmr_pool_recall" -> (Similarity.mmrPoolRecall _) oracle
+      DuckSql.mmrPoolRecall,
+    "rag_context" -> (Similarity.ragContext _) oracle DuckSql.ragContext,
+    "hard_negatives" -> (Similarity.hardNegatives _) oracle
+      DuckSql.hardNegatives,
+    "ann_filtered" -> (Similarity.annFiltered _) oracle DuckSql.annFiltered,
+    "filtered_recall" -> (Similarity.filteredRecall _) oracle
+      DuckSql.filteredRecall,
+    "cheapest_supplier" -> (Analytics.cheapestSupplier _) oracle
+      DuckSql.cheapestSupplier,
   )
+  private val duplicates =
+    registry.map(_.name).diff(registry.map(_.name).distinct)
+  require(duplicates.isEmpty,
+    s"duplicate query names: ${duplicates.mkString(", ")}")
+
+  /** Name-keyed views of [[registry]]. */
+  val queries: Map[String, Builder] =
+    registry.map(q => q.name -> q.build).toMap
+
+  val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
 }

@@ -1,33 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(graft.sources.Tables.NanosFlag, "true")
-      // small scan splits: the test corpora are single parquet files, and
-      // pure-map queries otherwise run at input-split parallelism (1 core)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Same status-store retention bound as Bench: even with the UI
-      // off, the SQL/app status listeners retain the last 1000
-      // executions' full plan-description strings in driver heap — a
-      // 318-query dump accretes ~640 of them plus job/stage/task rows,
-      // competing with execution memory for the whole run (the r14
-      // bench A/B measured the bound at −18.6% of sweep total).
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the dump (dev loop); the
     // driver never sets it, so the gate always covers every query.

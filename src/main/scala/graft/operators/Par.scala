@@ -23,24 +23,30 @@ object Par {
   def build(fs: Seq[() => DataFrame]): Seq[DataFrame] = {
     if (fs.sizeIs <= 1) return fs.map(_())
     // Each branch runs under its own job group so the FIRST failure can
-    // cancel the siblings' in-flight Spark jobs instead of blocking on
-    // the slowest branch's full runtime; sibling errors (usually the
-    // cancellations that follow) ride along as suppressed.
+    // cancel the siblings' running jobs and refuse every job they submit
+    // afterwards, instead of blocking on the slowest branch's full
+    // runtime. A sibling's driver-side code still runs until its next
+    // job submission, and a nested Par.build inside a branch puts its
+    // jobs in groups of its own, which this cancel does not reach.
+    // Sibling errors (usually the cancellations that follow) ride along
+    // as suppressed.
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
     val base = s"graft-par-build-${java.util.UUID.randomUUID()}"
     val firstErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val results = new Array[Either[Throwable, DataFrame]](fs.size)
     val threads = fs.zipWithIndex.map { case (f, i) =>
       val t = new Thread(() => {
-        // group id only — the inherited thread-locals (job description
-        // from the bench, scheduler pool) stay as the caller set them
-        sc.setLocalProperty("spark.jobGroup.id", s"$base-$i")
         results(i) =
-          try Right(f())
-          catch { case e: Throwable =>
+          try {
+            // group id only — the inherited thread-locals (job
+            // description from the bench, scheduler pool) stay as the
+            // caller set them
+            sc.setLocalProperty("spark.jobGroup.id", s"$base-$i")
+            Right(f())
+          } catch { case e: Throwable =>
             if (firstErr.compareAndSet(null, e))
               fs.indices.filter(_ != i)
-                .foreach(j => sc.cancelJobGroup(s"$base-$j"))
+                .foreach(j => sc.cancelJobGroupAndFutureJobs(s"$base-$j"))
             Left(e)
           }
       }, s"graft-par-build-$i")
@@ -57,6 +63,10 @@ object Par {
       }
       throw err
     }
-    results.map(_.toOption.get).toSeq
+    results.toSeq.zipWithIndex.map {
+      case (Right(df), _) if df != null => df
+      case (_, i) => throw new IllegalStateException(
+        s"Par.build branch $i returned no DataFrame")
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,15 +28,7 @@ object AnnProbe {
     val k = if (args.length > 1) args(1).toInt else 8
     val nprobe = if (args.length > 2) args(2).toInt else 2
     val rotate = args.length > 3 && args(3) == "1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config(Tables.NanosFlag, "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val dir = if (dir0.startsWith("embed:")) {
       val src = dir0.stripPrefix("embed:")

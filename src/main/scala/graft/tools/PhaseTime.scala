@@ -1,9 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
-import graft.sources.Tables
 
 /** Splits a query's wall time into driver-side plan phases (analysis /
   * optimization / physical planning, from QueryExecution's tracker) vs
@@ -18,15 +15,7 @@ object PhaseTime {
     val dir = args(0)
     val only = if (args.length > 1) args(1).split(",").toSet
                else SparkEntry.queries.keySet
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config(Tables.NanosFlag, "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val runs = sys.env.getOrElse("PROBE_RUNS", "3").toInt.max(2)
     SparkEntry.queries.keys.filter(only).toSeq.sorted.foreach { name =>
       val rows = (1 to runs).map { _ =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -22,17 +21,11 @@ object SkewProbe {
     val hotPairs = if (args.length > 0) args(0).toInt else 200000
     val coldDocs = if (args.length > 1) args(1).toInt else 50000
     val salts = if (args.length > 2) args(2).toInt else 16
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE's own skew splitting would mask the effect being measured;
-      // at 100 TB it fires only for sort-merge joins with visible stats,
-      // and the point here is the explicit salting path.
-      .config("spark.sql.adaptive.skewJoin.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
+    // AQE's own skew splitting would mask the effect being measured;
+    // at 100 TB it fires only for sort-merge joins with visible stats,
+    // and the point here is the explicit salting path.
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
     import spark.implicits._
 
     // Shingle store: every doc owns 22 deterministic shingles; the hot

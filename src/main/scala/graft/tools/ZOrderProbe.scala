@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Sinks, Tables}
@@ -25,14 +24,7 @@ object ZOrderProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val nFiles = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config(Tables.NanosFlag, "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"), col("lang"), col("source"))

@@ -1,16 +1,16 @@
 package graft
 
 /** Registry invariants of the driver contract itself — drift here is
-  * silent at the gate (a query without an oracle entry degrades to a
-  * weaker rows-only check; an oracle without a query is dead SQL).
+  * silent at the gate (a duplicated name would shadow a query and its
+  * oracle without any compile error).
   */
 class SparkEntrySpec extends SparkSpecBase {
 
-  test("queries and oracleSql cover exactly the same keys") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o) === Set.empty, s"queries without oracle: ${q -- o}")
-    assert((o -- q) === Set.empty, s"oracles without query: ${o -- q}")
+  test("registry query names are unique, so the map views drop none") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.diff(names.distinct).isEmpty)
+    assert(SparkEntry.queries.size === names.size)
+    assert(SparkEntry.oracleSql.size === names.size)
   }
 
   test("flagship entry returns rows at sf0.001 (the driver smoke check)") {

@@ -25,7 +25,7 @@ trait SparkSpecBase extends AnyFunSuite
   /** The session is shared across every suite in the JVM; without this,
     * localCheckpoint blocks and unreclaimed broadcasts pile up across
     * ~100 tests and late suites run minutes-slow (same churn measured
-    * and fixed in Bench/Probe). Runs after each suite, between tests'
+    * and fixed in Bench). Runs after each suite, between tests'
     * own lineage: checkpointed frames are only consumed inside the test
     * that made them.
     */
@@ -93,13 +93,5 @@ trait SparkSpecBase extends AnyFunSuite
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .withExtensions(new graft.functions.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config(graft.sources.Tables.NanosFlag, "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Session.local(4)
 }
