@@ -1,19 +1,37 @@
 package graft
 
-/** Plan-audit helper: prints the formatted physical plan of one query (or
-  * all) so broadcast/shuffle/pushdown decisions are reviewable per round.
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.execution.ExplainMode
+
+/** Plan-audit helper: the formatted physical plan of each named query
+  * (or all), so broadcast/shuffle/pushdown decisions are reviewable per
+  * round. With an output dir it writes one `<query>.txt` per query there;
+  * without one it prints the plans.
   *
-  * Usage: runMain graft.Explain <sfDir> [queryName]
+  * Usage: runMain graft.Explain <sfDir> [q1,q2,...|all] [outDir]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
-    val only = if (args.length > 1) Some(args(1)) else None
+    val names = args.lift(1).filter(_ != "all")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+    val outDir = args.lift(2)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Session.local()
-    val names = only.map(Seq(_)).getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+    outDir.foreach(d => Files.createDirectories(Paths.get(d)))
     names.foreach { name =>
-      println(s"\n===== $name =====")
-      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      val text = s"\n===== $name =====\n" +
+        SparkEntry.queries(name)(spark, sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted"))
+      outDir match {
+        case Some(d) => Files.write(Paths.get(d, s"$name.txt"),
+          text.getBytes(StandardCharsets.UTF_8))
+        case None => println(text)
+      }
     }
     spark.stop()
   }

@@ -2243,19 +2243,34 @@ object Similarity {
     * vectors), and per-vector codes carrying the owning cell, partitioned
     * by cell on disk (= the inverted lists). k defaults to the oracle-
     * gated toy setting; tools.AnnProbe sweeps realistic cell counts.
+    *
+    * At the default k the coarse quantizer is the one the IVF-flat
+    * artifact already persisted (same init, k, iterations and
+    * arithmetic), so its centroids and cell assignment are read from
+    * there, not retrained: like [[buildKnnGraph]], the build takes the
+    * IVF-flat lists as the corpus.
     */
   def buildIvfPqIndex(spark: SparkSession, dir: String, path: String,
       k: Int = KMEANS_K, rotate: Boolean = false): Unit = {
-    val e = Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
-    val cInit = e.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cvec"))
-    val coarse = (1 to KMEANS_ITERS).foldLeft(cInit) { (c, _) =>
-      recompute(assign(e, c))
-    }.localCheckpoint(false)
     // cell assignment feeds residuals AND the codes' cell column
-    val cells = assign(e, coarse)
-      .select(col("vec_id"), col("embedding"), col("cid").as("ccell"))
-      .localCheckpoint(false)
+    val (coarse, cells) =
+      if (k == KMEANS_K) {
+        val idx = ivfFlatIndex(spark, dir)
+        (idx.coarse, idx.lists
+          .select(col("vec_id"), col("embedding"), col("ccell")))
+      } else {
+        val e = Tables.cpuPartition(Tables.embeddings(spark, dir),
+          col("vec_id"))
+        val cInit = e.filter(col("vec_id") < k)
+          .select(col("vec_id").cast("int").as("cid"),
+            col("embedding").as("cvec"))
+        val trained = (1 to KMEANS_ITERS).foldLeft(cInit) { (c, _) =>
+          recompute(assign(e, c))
+        }.localCheckpoint(false)
+        (trained, assign(e, trained)
+          .select(col("vec_id"), col("embedding"), col("cid").as("ccell"))
+          .localCheckpoint(false))
+      }
     val resid =
       if (rotate) opqRotatedDiff(col("embedding"), col("cvec"))
       else zip_with(col("embedding"), col("cvec"), (a, b) => a - b)
@@ -3692,7 +3707,7 @@ object Similarity {
     * appended-graph artifact's base arm (both sides delta-free).
     */
   private def knnEdges(idx: IvfFlatIndex, gvs: DataFrame,
-      members: DataFrame): DataFrame = {
+      members: DataFrame, pinned: Boolean = false): DataFrame = {
     val wP = Window.partitionBy(col("gv"))
       .orderBy(col("pcs").desc, col("cid"))
     val probes = gvs
@@ -3702,9 +3717,18 @@ object Similarity {
         cosineSim(col("ve"), col("cvec")).as("pcs"))
       .withColumn("pr", row_number().over(wP)).filter(col("pr") <= 2)
       .select(col("gv"), col("ve"), col("cid").as("pcid"))
+    // The join key has only KMEANS_K values, so AQE coalesces the
+    // byte-small join to one task that scores every candidate pair;
+    // `pinned` holds both sides at the shuffle parallelism. The full
+    // builds pin; the batch-sized append path stays unpinned (pinning it
+    // measured slower).
+    val (m, p) =
+      if (pinned) (Tables.cpuPartition(members, col("ccell")),
+        Tables.cpuPartition(probes, col("pcid")))
+      else (members, probes)
     val wK = Window.partitionBy(col("gv")).orderBy(col("s").desc, col("nv"))
-    val edges = members.hint("merge")
-      .join(probes.hint("merge"), col("ccell") === col("pcid"))
+    val edges = m.hint("merge")
+      .join(p.hint("merge"), col("ccell") === col("pcid"))
       .filter(col("vec_id") =!= col("gv"))
       .select(col("gv"), col("vec_id").as("nv"),
         cosineSim(col("embedding"), col("ve")).as("s"))
@@ -3720,7 +3744,7 @@ object Similarity {
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir),
       col("vec_id"))
     graft.sources.Sinks.writeSortedParquet(
-      knnEdges(idx, e, idx.lists), path, Seq("src"))
+      knnEdges(idx, e, idx.lists, pinned = true), path, Seq("src"))
   }
 
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
@@ -3754,7 +3778,7 @@ object Similarity {
     val base = e.filter(!Dedup.isDelta(col("vec_id")))
     val baseLists = idx.lists.filter(!Dedup.isDelta(col("vec_id")))
     graft.sources.Sinks.writeSortedParquet(
-      knnEdges(idx, base, baseLists), path, Seq("src"))
+      knnEdges(idx, base, baseLists, pinned = true), path, Seq("src"))
     appendKnnEdgesAt(spark, path,
       knnEdges(idx, e.filter(Dedup.isDelta(col("vec_id"))), idx.lists))
   }

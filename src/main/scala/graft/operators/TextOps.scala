@@ -4,10 +4,28 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.{CleanStep, CleanText, KeywordRules, TextFunctions}
 import graft.sources.Tables
 
-/** Text surface of the reference app, as pure `functions._` column
-  * compositions (whole-stage codegen, no UDFs):
+/** Text surface of the reference app. The plans are `functions._`
+  * compositions around two Catalyst kernels (graft.functions, no UDFs):
+  * [[graft.functions.CleanText]] runs the clean-text pipeline as one pass
+  * over the decoded string, and [[graft.functions.KeywordRules]] answers
+  * every keyword-rule question (first matching template, encoded topic
+  * argmax, category bitmask) with one Aho–Corasick pass over the bytes.
+  * Both are byte-identical to the `replace`/`regexp_replace`/`translate`
+  * fold over [[cleanSteps]] and the per-keyword `contains` chains they
+  * replace; the DuckDB oracle SQL is still generated from [[cleanSteps]]
+  * and RefVocab. Exactness rules the kernels keep:
+  *  - nulls: clean_text(null) is null; a null text matches no keyword
+  *    (template "Others", the default topic, category "Others");
+  *  - keywords match as byte substrings (`UTF8String.contains`), once per
+  *    listing, multi-word keywords included;
+  *  - entity replaces are sequential (`&amp;lt;` becomes `&lt;`), an
+  *    unterminated `<` survives the tag strip, the URL step is the same
+  *    `java.util.regex` pattern;
+  *  - the charset filter drops whole code points, `\s` is the six ASCII
+  *    whitespace chars, and the final trim strips only `' '`.
   *
   *  - clean_text        — /root/reference/utilities/text_utils.py:26-49 +
   *                        /root/reference/prompt_selector.py:62-76
@@ -29,28 +47,14 @@ import graft.sources.Tables
   *    string-SQL-building artifact, not text semantics, and is dropped.
   */
 object TextOps {
-
-  /** One step of the clean-text pipeline. Typed so each step runs as the
-    * CHEAPEST primitive that expresses it — `Lit` is a plain substring
-    * replace (intrinsified indexOf, no regex engine), `Tr` a char-for-
-    * char translate (one O(n) pass), `Re` a true regex — in BOTH engines
-    * (Spark replace/translate/regexp_replace = DuckDB same names). The
-    * all-regexp_replace formulation spent ~1ms/doc in java.util.regex;
-    * only 4 of the 13 steps actually need a regex. Patterns stay in the
-    * RE2 ∩ Java dialect.
-    */
-  sealed trait CleanStep
-  object CleanStep {
-    final case class Re(pat: String, rep: String) extends CleanStep
-    final case class Lit(from: String, to: String) extends CleanStep
-    final case class Tr(from: String, to: String) extends CleanStep
-  }
   import CleanStep._
 
   /** The clean-text steps, in reference order (html unescape, tag strip,
     * URL removal, unicode punctuation folding, charset filter,
-    * whitespace collapse). Shared with the DuckDB oracle generator so
-    * both engines run the semantically identical pipeline.
+    * whitespace collapse). The DuckDB oracle SQL is generated from this
+    * list, each step as its typed primitive; the Spark plans run it as
+    * the [[graft.functions.CleanText]] kernel, which declares the same
+    * list (checked below).
     */
   val cleanSteps: Seq[CleanStep] = Seq(
     Lit("&nbsp;", " "),
@@ -67,48 +71,34 @@ object TextOps {
     Re("[^a-zA-Z0-9\\s.,?!'\":-]", ""),
     Re("\\s+", " "))
 
-  /** The reference clean-text pipeline as one codegen'd column. */
-  def cleanText(c: Column): Column =
-    trim(cleanSteps.foldLeft(c) {
-      case (acc, Re(pat, rep)) => regexp_replace(acc, pat, rep)
-      case (acc, Lit(from, to)) => replace(acc, lit(from), lit(to))
-      case (acc, Tr(from, to)) => translate(acc, from, to)
-    })
+  require(CleanText.steps == cleanSteps,
+    "the CleanText kernel implements a different step list than " +
+      "TextOps.cleanSteps, from which the oracle SQL is generated")
 
-  /** True iff any keyword occurs as a substring (Python `kw in text`).
-    * Short-circuiting `contains` chain, not a regex alternation: the
-    * keywords are plain literals, and intrinsified indexOf is ~10x a
-    * java.util.regex scan over the same text.
-    */
-  private def anyKeyword(lc: Column, kws: Seq[String]): Column =
-    kws.map(lc.contains(_)).reduce(_ || _)
-
-  /** Number of keywords present as substrings (boolean per keyword, summed
-    * — prompt_selector.py:273 counts keywords, not occurrences).
-    */
-  private def keywordScore(lc: Column, kws: Seq[String]): Column =
-    kws.map(kw => when(lc.contains(kw), 1).otherwise(0))
-      .reduce(_ + _)
+  /** The reference clean-text pipeline as one kernel column. */
+  def cleanText(c: Column): Column = TextFunctions.cleanText(c)
 
   /** First-match-priority template over a lowercased clean text column:
     * primary keyword lists, then the category-info fallback stems
     * (RefVocab.templateRules — prompt_selector.py steps 1 and 3).
     */
-  def templateCol(lc: Column): Column =
-    RefVocab.templateRules.foldRight(lit(RefVocab.defaultTemplate)) {
-      case ((name, kws), fallback) =>
-        when(anyKeyword(lc, kws), lit(name)).otherwise(fallback)
-    }
+  def templateCol(lc: Column): Column = {
+    val names = array((RefVocab.templateRules.map(_._1) :+
+      RefVocab.defaultTemplate).map(lit): _*)
+    element_at(names, TextFunctions.keywordRules(lc,
+      RefVocab.templateRules.map(_._2), KeywordRules.FirstMatch) + 1)
+  }
 
-  /** Argmax-encoded topic score: score*100 + (99 - idx), so `greatest`
-    * picks the highest score and, among ties, the earliest taxonomy entry —
-    * exactly Python `max()` over insertion order. The same integer encoding
-    * runs in DuckDB, so both engines agree bit-for-bit.
+  /** Argmax-encoded topic score: score*100 + (99 - idx), where a score
+    * counts the keywords present as substrings (prompt_selector.py:273
+    * counts keywords, not occurrences), so the max picks the highest
+    * score and, among ties, the earliest taxonomy entry — exactly Python
+    * `max()` over insertion order. The same integer encoding runs in
+    * DuckDB, so both engines agree bit-for-bit.
     */
   def topicEncoded(lc: Column): Column =
-    greatest(RefVocab.taxonomy.zipWithIndex.map { case ((_, kws), i) =>
-      keywordScore(lc, kws) * 100 + (99 - i)
-    }: _*)
+    TextFunctions.keywordRules(lc, RefVocab.taxonomy.map(_._2),
+      KeywordRules.EncodedArgmax)
 
   def topicFromEncoded(best: Column): Column = {
     val names = array(RefVocab.taxonomy.map(t => lit(t._1)): _*)
@@ -144,9 +134,9 @@ object TextOps {
     Tables.cpuPartition(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       col("doc_id"))
-      .select(col("doc_id"),
-        cleanText(col("text")).as("clean"),
-        length(cleanText(col("text"))).cast("int").as("clean_chars"))
+      .select(col("doc_id"), cleanText(col("text")).as("clean"))
+      .select(col("doc_id"), col("clean"),
+        length(col("clean")).cast("int").as("clean_chars"))
 
   /** template_classify: keyword -> prompt template, first match wins. */
   def templateClassify(spark: SparkSession, dir: String): DataFrame =
@@ -205,7 +195,7 @@ object TextOps {
           .otherwise("appropriate").as("length_quality"),
         (floor(overlap * 10000 + 0.5) / 10000).as("term_overlap"),
         col("template"),
-        when(col("template") === "Question" && col("rl").contains("?"), "high")
+        when(col("template") === "Question" && instr(col("rl"), "?") > 0, "high")
           .when(col("template") === "Empathy and Validation" &&
             col("rl").rlike("(understand|feel|valid)"), "high")
           .otherwise("medium").as("template_adherence"))
@@ -260,8 +250,9 @@ object TextOps {
     * array ops: zero shuffles, scales embarrassingly.
     */
   def lemmaTokens(spark: SparkSession, dir: String): DataFrame = {
-    val stripPunct = (t: Column) =>
-      regexp_replace(t, "^[.,?!'\":-]+|[.,?!'\":-]+$", "")
+    // trims the same char set as the oracle's
+    // regexp_replace(t, '^[.,?!''":-]+|[.,?!''":-]+$', '')
+    val stripPunct = (t: Column) => btrim(t, lit(".,?!'\":-"))
     val toks = filter(
       transform(split(lower(cleanText(col("text"))), " "), stripPunct),
       t => t =!= "")
@@ -298,13 +289,13 @@ object TextOps {
     //     substitution. Exploding cheap index slots derived from the
     //     mask ATTRIBUTE and filtering on the GENERATED column keeps the
     //     per-element work at a few ALU ops.
+    //  3. The rule mask is its own projection, so the kernel runs once
+    //     per row while the default bit reads it twice.
     val n = RefVocab.categoryRules.size
-    val mask = RefVocab.categoryRules.zipWithIndex.map {
-      case ((_, kws, _), j) =>
-        when(anyKeyword(col("lc"), kws), lit(1 << j)).otherwise(lit(0))
-    }.reduce(_ bitwiseOR _)
-    val withDefault =
-      mask.bitwiseOR(when(mask === 0, lit(1 << n)).otherwise(lit(0)))
+    val mask = TextFunctions.keywordRules(col("lc"),
+      RefVocab.categoryRules.map(_._2), KeywordRules.Bitmask)
+    val withDefault = col("m0")
+      .bitwiseOR(when(col("m0") === 0, lit(1 << n)).otherwise(lit(0)))
     val slots = array((0 to n).map(j =>
       when(expr(s"(m >> $j) & 1") === 1, lit(j))
         .otherwise(lit(null))): _*)
@@ -315,6 +306,7 @@ object TextOps {
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       col("doc_id"))
       .select(col("doc_id"), lower(cleanText(col("text"))).as("lc"))
+      .select(col("doc_id"), mask.as("m0"))
       .select(col("doc_id"), withDefault.as("m"))
       .repartition(col("doc_id"))
       .select(col("doc_id"), explode(slots).as("i"))
@@ -379,7 +371,9 @@ object TextOps {
   def trainingExamples(spark: SparkSession, dir: String): DataFrame =
     lcClean(spark, dir)
       .withColumn("template", templateCol(col("lc")))
-      .withColumn("topic", topicFromEncoded(topicEncoded(col("lc"))))
+      // its own column: topicFromEncoded reads the code twice
+      .withColumn("best", topicEncoded(col("lc")))
+      .withColumn("topic", topicFromEncoded(col("best")))
       .select(col("doc_id"),
         concat(lit("You are a therapeutic AI assistant skilled in "),
           col("template"),

@@ -15,11 +15,11 @@ object DuckSql {
   /** SQL-escape a string for a single-quoted literal. */
   def sq(s: String): String = s.replace("'", "''")
 
-  /** The clean-text pipeline, each step as the same primitive the Spark
-    * plan uses (TextOps.CleanStep: literal replace / translate / regex).
+  /** The clean-text pipeline, each step as its typed primitive
+    * (CleanStep: literal replace / translate / regex).
     */
   def cleanSql(e: String): String = {
-    import TextOps.CleanStep._
+    import graft.functions.CleanStep._
     "trim(" + TextOps.cleanSteps.foldLeft(e) {
       case (acc, Re(pat, rep)) =>
         s"regexp_replace($acc, '${sq(pat)}', '${sq(rep)}', 'g')"
@@ -30,8 +30,9 @@ object DuckSql {
     } + ")"
   }
 
-  /** Substring-presence disjunction (mirrors TextOps.anyKeyword — the
-    * keywords are literals, so strpos equals the regex alternation).
+  /** Substring-presence disjunction (the Spark side answers it with
+    * graft.functions.KeywordRules — the keywords are literals, so strpos
+    * equals the regex alternation).
     */
   private def anyKwSql(lc: String, kws: Seq[String]): String =
     kws.map(k => s"strpos($lc, '${sq(k)}') > 0").mkString("(", " OR ", ")")

@@ -672,4 +672,39 @@ class PlanSpec extends SparkSpecBase {
     val p = planOf(graft.operators.Sessions.driftGate(spark, dir))
     assert(!p.contains("CartesianProduct"))
   }
+
+  test("text surface: the kernels replace every regex/replace/contains " +
+      "node, and each kernel runs once per row") {
+    import org.apache.spark.sql.catalyst.expressions.{Contains, Expression,
+      RegExpReplace, StringReplace}
+    import graft.functions.{CleanText, KeywordRules}
+    // query -> (CleanText, KeywordRules) evaluations in the plan;
+    // effectiveness cleans both sides of its pair self-join
+    val expected = Map(
+      "clean_text" -> (1, 0), "template_classify" -> (1, 1),
+      "topic_detect" -> (1, 1), "training_examples" -> (1, 2),
+      "effectiveness" -> (2, 1), "category_info" -> (1, 1),
+      "lemma_tokens" -> (1, 0))
+    expected.foreach { case (name, (nClean, nRules)) =>
+      val plan = physical(SparkEntry.queries(name)(spark, dir))
+      val perNode: Seq[Seq[Expression]] = plan.collect { case n =>
+        n.expressions.flatMap(_.collect { case e => e })
+      }
+      val banned = perNode.flatten.filter {
+        case _: RegExpReplace | _: StringReplace | _: Contains => true
+        case _ => false
+      }
+      assert(banned.isEmpty, s"$name still runs $banned:\n$plan")
+      val kernels = perNode.map(_.collect {
+        case k @ (_: CleanText | _: KeywordRules) => k.canonicalized
+      })
+      kernels.foreach(ks => assert(ks.distinct.size === ks.size,
+        s"$name evaluates a kernel twice in one operator:\n$plan"))
+      val all = kernels.flatten
+      assert(all.count(_.isInstanceOf[CleanText]) === nClean,
+        s"$name CleanText count:\n$plan")
+      assert(all.count(_.isInstanceOf[KeywordRules]) === nRules,
+        s"$name KeywordRules count:\n$plan")
+    }
+  }
 }
