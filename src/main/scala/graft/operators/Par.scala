@@ -26,10 +26,12 @@ object Par {
     // cancel the siblings' running jobs and refuse every job they submit
     // afterwards, instead of blocking on the slowest branch's full
     // runtime. A sibling's driver-side code still runs until its next
-    // job submission, and a nested Par.build inside a branch puts its
-    // jobs in groups of its own, which this cancel does not reach.
-    // Sibling errors (usually the cancellations that follow) ride along
-    // as suppressed.
+    // job submission. A nested Par.build inside a branch moves its jobs
+    // to groups of its own, so each branch also carries a job TAG: tags
+    // accumulate and child threads inherit them, and the cancel by tag
+    // reaches the nested branches' running jobs (not their future ones
+    // — the nested build's own fail-fast stops those). Sibling errors
+    // (usually the cancellations that follow) ride along as suppressed.
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
     val base = s"graft-par-build-${java.util.UUID.randomUUID()}"
     val firstErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
@@ -42,11 +44,14 @@ object Par {
             // description from the bench, scheduler pool) stay as the
             // caller set them
             sc.setLocalProperty("spark.jobGroup.id", s"$base-$i")
+            sc.addJobTag(s"$base-$i")
             Right(f())
           } catch { case e: Throwable =>
             if (firstErr.compareAndSet(null, e))
-              fs.indices.filter(_ != i)
-                .foreach(j => sc.cancelJobGroupAndFutureJobs(s"$base-$j"))
+              fs.indices.filter(_ != i).foreach { j =>
+                sc.cancelJobGroupAndFutureJobs(s"$base-$j")
+                sc.cancelJobsWithTag(s"$base-$j")
+              }
             Left(e)
           }
       }, s"graft-par-build-$i")

@@ -26,6 +26,24 @@ import graft.sources.Tables
   *    on cluster id, not a cross product);
   *  - LSH: deterministic random-hyperplane signatures; candidates share
   *    an 8-bit band, generated by a bucket-capped equi-join on (band, key).
+  *
+  * Every index family carries a standing recall audit (`*_recall`, the
+  * `*_curve` sweeps, the maintenance gates). They share one set of
+  * conventions, stated here and implemented once below:
+  *  - eval sample: the queries are the corpus vectors with
+  *    `vec_id % 100 == 0` ([[evalQueries]]) — recall is a statistical
+  *    gauge, never a full-corpus pass;
+  *  - persisted truth: the exact top-k of that sample is read from the
+  *    [[denseTruth]] artifact ([[truthSample]]), so every audit is a pure
+  *    consumer and the brute sweep is the run-1 build;
+  *  - the truth side is the authority: it LEFT-joins the probe's
+  *    (q_id, neighbor_id), so a query the probe misses entirely reads 0;
+  *  - per-query recall is n_matched / k for each sampled query
+  *    ([[recallPerQuery]]); micro recall, one row per arm, is
+  *    Σ n_matched / (n_queries · k) ([[recallMicro]]);
+  *  - every ratio is floored to 4dp as floor(x · 10⁴ + ½) / 10⁴ ([[r4]]),
+  *    the primitive the DuckDB oracle mirrors exactly (round() disagrees
+  *    with it at ties).
   */
 object Similarity {
 
@@ -107,11 +125,13 @@ object Similarity {
         val qid = graft.Params.long(spark, "ann.vector.qid", -1L)
         import spark.implicits._
         Seq((qid, vec.toSeq)).toDF("q_id", "qe")
-      case None =>
-        Tables.embeddings(spark, dir)
-          .filter(col("vec_id") % 100 === 0)
-          .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
+      case None => evalQueries(Tables.embeddings(spark, dir))
     }
+
+  /** The eval query frame (q_id, qe): the `% 100` sample of `e`. */
+  private def evalQueries(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
 
   def simTopk(spark: SparkSession, dir: String): DataFrame = {
     val k = graft.Params.int(spark, "sim_topk.k", 5)
@@ -209,6 +229,93 @@ object Similarity {
     spark.read.parquet(path)
   }
 
+  // --- the audit kernel (conventions in the object header) -------------
+
+  /** The exact top-k (q_id, neighbor_id, keep…) of the eval sample. */
+  private def truthSample(spark: SparkSession, dir: String, k: Int,
+      keep: String*): DataFrame =
+    denseTruth(spark, dir)
+      .filter(col("q_id") % 100 === 0 && col("rank_all") <= k)
+      .select((Seq("q_id", "neighbor_id") ++ keep).map(col): _*)
+
+  private def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
+
+  /** `truth` LEFT JOIN the broadcast probe answers: `an` is null on a
+    * truth edge the probe missed. `approx` carries (q_id, neighbor_id);
+    * the broadcast is bounded by the probe's own top-k per query.
+    */
+  private def truthJoin(truth: DataFrame, approx: DataFrame): DataFrame =
+    truth.join(broadcast(approx.select(col("q_id").as("aq"),
+        col("neighbor_id").as("an"))),
+      col("q_id") === col("aq") && col("neighbor_id") === col("an"), "left")
+
+  /** Per-query recall@k (q_id, n_matched, recall). `ownDen` divides by
+    * each query's truth-row count instead (kept as `n_exact`): a
+    * filtered truth can hold fewer than k rows.
+    */
+  private def recallPerQuery(truth: DataFrame, approx: DataFrame, k: Int,
+      ownDen: Boolean = false): DataFrame = {
+    val counts = Seq(col("q_id"), col("n_matched")) ++
+      (if (ownDen) Seq(col("n_exact")) else Nil)
+    val den = if (ownDen) col("n_exact") else lit(k)
+    truthJoin(truth, approx).groupBy(col("q_id"))
+      .agg(count(col("an")).as("n_matched"), count(lit(1)).as("n_exact"))
+      .select(counts :+
+        r4(col("n_matched").cast("double") / den).as("recall"): _*)
+  }
+
+  /** Micro recall@k of one arm: a 1-row (n_queries, n_matched, recall). */
+  private def recallMicro(truth: DataFrame, approx: DataFrame,
+      k: Int): DataFrame =
+    truthJoin(truth, approx)
+      .agg(countDistinct(col("q_id")).as("n_queries"),
+        count(col("an")).as("n_matched"))
+      .select(col("n_queries"), col("n_matched"),
+        r4(col("n_matched").cast("double") / (col("n_queries") * k))
+          .as("recall"))
+
+  /** Each query's top-k (q_id, neighbor_id) of a scored (q_id,
+    * neighbor_id, s) frame, ties to the smaller id.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("s").desc, col("neighbor_id"))))
+      .filter(col("rk") <= k)
+      .select(col("q_id"), col("neighbor_id"))
+
+  /** The 1-row 2dp mean of a per-query cost column. */
+  private def meanPerQuery(perQuery: DataFrame, c: String,
+      as: String): DataFrame =
+    perQuery.agg((floor(sum(col(c)).cast("double") / count(lit(1)) * 100
+      + 0.5) / 100).as(as))
+
+  /** Coarse routing: each query's `maxNp` nearest cells by centroid
+    * cosine, ties to the smaller cid, as (q_id, qe, cid, pcs, pr) with
+    * `pr` the cell's probe rank — an nprobe-np probe is `pr <= np`.
+    * `coarse` is the k-row centroid table and broadcasts.
+    */
+  private def probeCells(q: DataFrame, coarse: DataFrame,
+      maxNp: Int): DataFrame =
+    q.join(broadcast(coarse))
+      .select(col("q_id"), col("qe"), col("cid"),
+        cosineSim(col("qe"), col("cvec")).as("pcs"))
+      .withColumn("pr", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("pcs").desc, col("cid"))))
+      .filter(col("pr") <= maxNp)
+
+  /** Per-cell list sizes (ccell, csz) of an IVF-flat index. */
+  private def cellSizes(idx: IvfFlatIndex): DataFrame =
+    idx.lists.groupBy(col("ccell")).agg(count(lit(1)).as("csz"))
+
+  /** Per-query scan cost (q_id, scanned) of an nprobe-np probe: the
+    * summed sizes of the cells with `pr <= np`.
+    */
+  private def scanned(probes: DataFrame, sizes: DataFrame,
+      np: Int): DataFrame =
+    probes.filter(col("pr") <= np)
+      .join(broadcast(sizes), col("cid") === col("ccell"))
+      .groupBy(col("q_id")).agg(sum(col("csz")).as("scanned"))
+
   /** k-NN join: top-3 neighbors for every sampled query vector — a pure
     * consumer of the persisted exact-truth sweep ([[denseTruth]]; the
     * sweep itself is the run-1 build). The artifact stores the raw
@@ -272,8 +379,7 @@ object Similarity {
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val cents = labelCentroids(spark, dir)
-    val q = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
+    val q = evalQueries(e)
     val wProbe = Window.partitionBy(col("q_id"))
       .orderBy(col("cs").desc, col("clabel"))
     val probes = q.join(broadcast(cents.select(col("label").as("clabel"), col("centroid"))))
@@ -350,14 +456,7 @@ object Similarity {
     */
   def annIvfKmeansProbe(spark: SparkSession, dir: String,
       idx: IvfFlatIndex, nprobe: Int = 2): DataFrame = {
-    val q = probeQueries(spark, dir)
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcs").desc, col("cid"))
-    val probes = q.join(broadcast(idx.coarse))
-      .select(col("q_id"), col("qe"), col("cid"),
-        cosineSim(col("qe"), col("cvec")).as("pcs"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
+    val probes = probeCells(probeQueries(spark, dir), idx.coarse, nprobe)
       .select(col("q_id"), col("qe"), col("cid").as("pcid"))
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("neighbor_id"))
@@ -382,14 +481,7 @@ object Similarity {
     */
   private def probeCandidates(spark: SparkSession, dir: String,
       idx: IvfFlatIndex, maxNp: Int): DataFrame = {
-    val q = probeQueries(spark, dir)
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcs").desc, col("cid"))
-    val probes = q.join(broadcast(idx.coarse))
-      .select(col("q_id"), col("qe"), col("cid"),
-        cosineSim(col("qe"), col("cvec")).as("pcs"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= maxNp)
+    val probes = probeCells(probeQueries(spark, dir), idx.coarse, maxNp)
       .select(col("q_id"), col("qe"), col("cid").as("pcid"), col("pr"))
     idx.lists.join(broadcast(probes), col("ccell") === col("pcid"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -397,77 +489,33 @@ object Similarity {
         cosineSim(col("embedding"), col("qe")).as("s"), col("pr"))
   }
 
-  /** ann_recall: per-query recall@3 of the trained-IVF probe against the
-    * exact brute-force top-3 — the standing eval every deployed ANN
-    * index carries (FAISS benchmarks report exactly this curve). Joins
-    * two existing audited operators on (q_id, neighbor_id); the exact
-    * side is the authority (left join), so a query the probe fully
-    * misses still reports recall 0. Sampling the eval set (here: the
-    * probe's own %100 queries) is the scale posture — recall is a
-    * statistical gauge, never a full-corpus pass. Since r9 the exact
-    * side reads the persisted [[denseTruth]] artifact — the audit is a
-    * pure consumer; the brute sweep is the run-1 build.
+  /** ann_recall: per-query recall@3 of the trained-IVF probe — the
+    * standing eval every deployed ANN index carries (FAISS benchmarks
+    * report exactly this curve).
     */
-  def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-      .select(col("q_id"), col("neighbor_id"))
-    // broadcast: the probe arm is rank-window-bounded to ≤3 rows/query —
-    // strictly smaller than the broadcast(probes) frame inside the arm
-    // itself, so this adds no new scale envelope (the query sample is the
-    // fixed-size eval gauge; see buildDenseTruth's broadcast(q)). Without
-    // the hint the planner size-estimates the windowed subplan from its
-    // scan bytes and plans a two-exchange sort-merge join.
-    val approx = broadcast(annIvfKmeans(spark, dir)
-      .select(col("q_id").as("aq"), col("neighbor_id").as("an")))
-    exact.join(approx,
-        col("q_id") === col("aq") && col("neighbor_id") === col("an"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("an")).as("n_matched"))
-      .select(col("q_id"), col("n_matched"),
-        (floor(col("n_matched").cast("double") / 3 * 10000 + 0.5) / 10000)
-          .as("recall"))
-  }
+  def annRecall(spark: SparkSession, dir: String): DataFrame =
+    recallPerQuery(truthSample(spark, dir, 3), annIvfKmeans(spark, dir), 3)
 
-  /** index_recall: the index-quality LEADERBOARD — recall@3 of every ANN
-    * probe family (trained IVF, PQ-ADC, residual IVFPQ, hyperplane LSH)
-    * against the one exact brute-force top-3. One exact side, checked
-    * out once ([[org.apache.spark.sql.DataFrame.localCheckpoint]]) and
-    * reused by all four arms; each arm is [[annRecall]]'s left-join
-    * shape with a literal index_name. This is the standing acceptance
-    * query a 100 TB deployment runs after every index rebuild to decide
-    * which family serves which collection.
+  /** index_recall: the index-quality LEADERBOARD — per-query recall@3 of
+    * every ANN probe family (trained IVF, PQ-ADC, residual IVFPQ,
+    * hyperplane LSH) against the one exact truth, each arm tagged with a
+    * literal index_name. This is the standing acceptance query a 100 TB
+    * deployment runs after every index rebuild to decide which family
+    * serves which collection.
     */
   def indexRecall(spark: SparkSession, dir: String): DataFrame = {
-    // pure consumer of the persisted exact-truth artifact (r9): each of
-    // the four arms re-reads the tiny k-bounded parquet frame — no
-    // brute sweep, no checkpoint
-    val exact = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-      .select(col("q_id"), col("neighbor_id"))
-    def recallOf(name: String, approx: DataFrame): DataFrame = {
-      val a = approx.select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .groupBy(col("q_id"))
-        .agg(count(col("an")).as("n_matched"))
-        .select(lit(name).as("index_name"), col("q_id"), col("n_matched"),
-          (floor(col("n_matched").cast("double") / 3 * 10000 + 0.5) / 10000)
-            .as("recall"))
-    }
+    val exact = truthSample(spark, dir, 3)
     // the four family arms BUILD in parallel (Par.build, guide §2.6):
     // each arm materializes its own checkpoint chain against its own
     // persisted index — serially those waves queued back-to-back
-    val Seq(ivfA, pqA, ivfpqA, lshA) = Par.build(Seq(
+    val arms = Par.build(Seq(
       () => annIvfKmeans(spark, dir),
       () => annPq(spark, dir),
       () => annIvfPq(spark, dir),
       () => lshAnn(spark, dir)))
-    recallOf("ivf_kmeans", ivfA)
-      .unionByName(recallOf("pq", pqA))
-      .unionByName(recallOf("ivfpq", ivfpqA))
-      .unionByName(recallOf("lsh", lshA))
+    Seq("ivf_kmeans", "pq", "ivfpq", "lsh").zip(arms).map { case (name, a) =>
+      recallPerQuery(exact, a, 3).select(lit(name).as("index_name"), col("*"))
+    }.reduce(_ unionByName _)
   }
 
   /** The nprobe settings swept by [[nprobeCurve]] — single-sourced into
@@ -476,26 +524,14 @@ object Similarity {
   val NprobeSweep: Seq[Int] = Seq(1, 2, 4)
 
   /** nprobe_curve: the recall-vs-nprobe TUNING TABLE of the trained IVF
-    * index — mean recall@3 over the sampled query set for each nprobe
-    * in [[NprobeSweep]] (the FAISS `nprobe` sweep every deployed IVF
-    * index is tuned by: recall rises with probed cells, cost rises
-    * linearly; this table is where the operating point is chosen, and
-    * the `ann.nprobe` runtime param is how it is applied).
-    *
-    * Pure two-artifact consumer (r9): the exact side reads the
-    * persisted [[denseTruth]] sweep, every arm probes the persisted
-    * IVF-flat index — no training, no brute pass; each arm is the
-    * annRecall left-join shape aggregated to one row. Parity: matched
-    * counts are exact integers; mean recall = matched/(3·|queries|) in
-    * one 4dp-floored divide.
+    * index — micro recall@3 for each nprobe in [[NprobeSweep]] with the
+    * mean scanned vectors per query (the FAISS `nprobe` sweep every
+    * deployed IVF index is tuned by: recall rises with probed cells,
+    * cost rises linearly; this table is where the operating point is
+    * chosen, and the `ann.nprobe` runtime param is how it is applied).
     */
   def nprobeCurve(spark: SparkSession, dir: String): DataFrame = {
     val idx = ivfFlatIndex(spark, dir)
-    val q = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcs").desc, col("cid"))
     // r14: one scored candidate pass + one probe pass shared by all
     // arms (see probeCandidates) — each arm re-ranks the pr-filtered
     // slice, row-identical to the per-arm re-probe it replaces; the
@@ -504,43 +540,19 @@ object Similarity {
     // vectors per query = Σ probed cell sizes), the scored candidates
     // and the probe ranks share no frames
     val Seq(exact, sizes, cand, probes) = Par.build(Seq(
-      () => denseTruth(spark, dir)
-        .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-        .select(col("q_id"), col("neighbor_id"))
-        .localCheckpoint(false), // feeds every sweep arm
-      () => idx.lists.groupBy(col("ccell"))
-        .agg(count(lit(1)).as("csz")).localCheckpoint(false),
+      () => truthSample(spark, dir, 3).localCheckpoint(false),
+      () => cellSizes(idx).localCheckpoint(false),
       () => probeCandidates(spark, dir, idx, NprobeSweep.max)
         .localCheckpoint(false),
-      () => q.join(broadcast(idx.coarse))
-        .select(col("q_id"), col("cid"),
-          cosineSim(col("qe"), col("cvec")).as("pcs"))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= NprobeSweep.max)
-        .localCheckpoint(false)))
-    def arm(np: Int): DataFrame = {
-      val wRank = Window.partitionBy(col("q_id"))
-        .orderBy(col("s").desc, col("neighbor_id"))
-      val a = cand.filter(col("pr") <= np)
-        .withColumn("rank", row_number().over(wRank))
-        .filter(col("rank") <= 3)
-        .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      val rec = exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(count(lit(1)).as("n3"), count(col("an")).as("m"))
-      val cost = probes.filter(col("pr") <= np)
-        .join(broadcast(sizes), col("cid") === col("ccell"))
-        .groupBy(col("q_id")).agg(sum(col("csz")).as("scanned"))
-        .agg(sum(col("scanned")).as("tot"), count(lit(1)).as("nq"))
-      rec.crossJoin(cost)
-        .select(lit(np).as("nprobe"),
-          (col("n3") / 3).cast("long").as("n_queries"),
-          (floor(col("m").cast("double") / col("n3") * 10000 + 0.5)
-            / 10000).as("recall"),
-          (floor(col("tot").cast("double") / col("nq") * 100 + 0.5)
-            / 100).as("mean_scanned"))
-    }
+      () => probeCells(evalQueries(Tables.embeddings(spark, dir)),
+          idx.coarse, NprobeSweep.max)
+        .select(col("q_id"), col("cid"), col("pr")).localCheckpoint(false)))
+    def arm(np: Int): DataFrame =
+      recallMicro(exact, topK(cand.filter(col("pr") <= np), 3), 3)
+        .crossJoin(meanPerQuery(scanned(probes, sizes, np), "scanned",
+          "mean_scanned"))
+        .select(lit(np).as("nprobe"), col("n_queries"), col("recall"),
+          col("mean_scanned"))
     NprobeSweep.map(arm).reduce(_ unionByName _).orderBy(col("nprobe"))
   }
 
@@ -601,7 +613,6 @@ object Similarity {
     * posture — blocking recall is a statistical gauge.
     */
   def semdedupRecall(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val cells = ivfFlatIndex(spark, dir).lists
       .select(col("vec_id"), col("ccell"))
     val pairs = denseTruth(spark, dir)
@@ -642,8 +653,7 @@ object Similarity {
     * top-k — never a corpus pass.
     */
   def hubness(spark: SparkSession, dir: String): DataFrame = {
-    val deg = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= HubDepth)
+    val deg = truthSample(spark, dir, HubDepth)
       .groupBy(col("neighbor_id")).agg(count(lit(1)).as("n_lists"))
       .localCheckpoint(false) // feeds the 1-row total AND the top-k
     val tot = deg.agg(sum(col("n_lists")).as("t"))
@@ -651,8 +661,7 @@ object Similarity {
       .orderBy(col("n_lists").desc, col("neighbor_id"))
       .limit(HubTopK)
       .select(col("neighbor_id"), col("n_lists"),
-        (floor(col("n_lists").cast("double") / col("t") * 10000 + 0.5)
-          / 10000).as("share"))
+        r4(col("n_lists").cast("double") / col("t")).as("share"))
       .withColumn("rank", row_number().over(
         Window.orderBy(col("n_lists").desc, col("neighbor_id")))
         .cast("int"))
@@ -701,8 +710,7 @@ object Similarity {
       .groupBy(col("ccell"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("sil")).as("silsum"))
       .select(col("ccell"), col("n_vecs"),
-        (floor(col("silsum").cast("double") / col("n_vecs") * 10000 + 0.5)
-          / 10000).as("mean_sil"))
+        r4(col("silsum").cast("double") / col("n_vecs")).as("mean_sil"))
       .orderBy(col("ccell"))
   }
 
@@ -767,9 +775,8 @@ object Similarity {
       .filter((col("ax") + col("ay")) / lit(2.0) > 0)
       .select(col("x"), col("y"),
         (floor(col("s") * 1000000 + 0.5) / 1000000).as("cos"),
-        (floor((floor(col("s") * 1000000 + 0.5) / 1000000) /
-          ((col("ax") + col("ay")) / lit(2.0)) * 10000 + 0.5) / 10000)
-          .as("margin"))
+        r4((floor(col("s") * 1000000 + 0.5) / 1000000) /
+          ((col("ax") + col("ay")) / lit(2.0))).as("margin"))
     scored.orderBy(col("margin").desc, col("x"), col("y"))
       .limit(BitextTopN)
       .withColumn("rank", row_number().over(
@@ -799,11 +806,7 @@ object Similarity {
     * ≤[[DenseTruthDepth]] rows per query.
     */
   def centeredShift(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
-    val pool = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 &&
-        col("rank_all") <= DenseTruthDepth)
-      .select(col("q_id"), col("neighbor_id"), col("rank_all"))
+    val pool = truthSample(spark, dir, DenseTruthDepth, "rank_all")
       .localCheckpoint(false) // feeds member list, raw arm, centered arm
     // the 1-row corpus-mean array (dimension-ordered), mean6f floats
     val mu = Tables.cpuPartition(Tables.embeddings(spark, dir),
@@ -926,19 +929,6 @@ object Similarity {
       .orderBy(col("i"))
   }
 
-  /** sq_recall: recall@[[SqTopK]] of asymmetric SQ8 scoring against the
-    * persisted dense exact truth — queries keep their full-precision
-    * vectors, the corpus side is scored from its dequantized 8-bit
-    * reconstruction (the ADC convention applied to scalar codes; this
-    * is the acceptance number that licenses 4× smaller vector storage).
-    *
-    * Plan: the exact arm is a pure [[denseTruth]] artifact read; the
-    * approx arm is one map-shaped dequantize pass (a 1-row range-array
-    * broadcast, a per-element transform over attribute reads only — no
-    * upstream re-evaluation) and the sampled-query scoring sweep of the
-    * brute audits (1% query sample, k-bounded output). annRecall's
-    * left-join/count shape.
-    */
   /** The 1-row broadcastable SQ range table as two dimension-ordered
     * arrays — the whole "index" an SQ8 store ships beside its codes.
     */
@@ -959,31 +949,27 @@ object Similarity {
       sqDequant(c, element_at(col("mns"), i + 1),
         element_at(col("mxs"), i + 1)))
 
+  /** sq_recall: recall@[[SqTopK]] of asymmetric SQ8 scoring —
+    * queries keep their full-precision vectors, the corpus side is
+    * scored from its dequantized 8-bit reconstruction (the ADC
+    * convention applied to scalar codes; this is the acceptance number
+    * that licenses 4× smaller vector storage).
+    *
+    * Plan: the approx arm is one map-shaped dequantize pass (a 1-row
+    * range-array broadcast, a per-element transform over attribute
+    * reads only — no upstream re-evaluation) and the sampled-query
+    * scoring sweep of the brute audits (k-bounded output).
+    */
   def sqRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
     val dq = e.crossJoin(broadcast(sqRanges(spark, dir)))
       .select(col("vec_id"), sqDequantArr(col("embedding")).as("dvec"))
-    val qs = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val approx = dq.join(broadcast(qs))
+    val approx = dq.join(broadcast(evalQueries(e)))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id").as("aq"), col("vec_id").as("an"),
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
         round(cosineSim(col("dvec"), col("qe")), 6).as("s"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("aq")).orderBy(col("s").desc, col("an"))))
-      .filter(col("rank") <= SqTopK)
-    val exact = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= SqTopK)
-      .select(col("q_id"), col("neighbor_id"))
-    exact.join(broadcast(approx),
-        col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-        "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("an")).as("n_matched"))
-      .select(col("q_id"), col("n_matched"),
-        (floor(col("n_matched").cast("double") / SqTopK * 10000 + 0.5)
-          / 10000).as("recall"))
-      .orderBy(col("q_id"))
+    recallPerQuery(truthSample(spark, dir, SqTopK), topK(approx, SqTopK),
+      SqTopK).orderBy(col("q_id"))
   }
 
   /** ann_sq: the IVF + scalar-quantizer SERVING arm (FAISS
@@ -1001,14 +987,7 @@ object Similarity {
     */
   def annSq(spark: SparkSession, dir: String): DataFrame = {
     val idx = ivfFlatIndex(spark, dir)
-    val q = probeQueries(spark, dir)
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcs").desc, col("cid"))
-    val probes = q.join(broadcast(idx.coarse))
-      .select(col("q_id"), col("qe"), col("cid"),
-        cosineSim(col("qe"), col("cvec")).as("pcs"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= 2)
+    val probes = probeCells(probeQueries(spark, dir), idx.coarse, 2)
       .select(col("q_id"), col("qe"), col("cid").as("pcid"))
     val wRank = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("neighbor_id"))
@@ -1110,8 +1089,7 @@ object Similarity {
         col("mn").cast("double").as("mn"),
         col("mx").cast("double").as("mx"),
         col("lo"), col("hi"), col("n_clipped"),
-        (floor(col("n_clipped").cast("double") / col("n") * 10000 + 0.5)
-          / 10000).as("clip_share"))
+        r4(col("n_clipped").cast("double") / col("n")).as("clip_share"))
       .orderBy(col("i"))
   }
 
@@ -1178,10 +1156,9 @@ object Similarity {
     * vectors (each range table is a 1-row broadcast), ONE sampled-query
     * scoring sweep computes both cosines side by side, and both arms'
     * rank windows share a single exchange (same partitioning, two sort
-    * orders). Only the ≤2·k·|q| boundary survivors materialize; the
-    * exact arm is a pure dense-truth artifact read. Per arm the scored
-    * set, scores, and (score desc, id) row_number are expression-
-    * identical to the former per-arm sweeps.
+    * orders). Only the ≤2·k·|q| boundary survivors materialize. Per
+    * arm the scored set, scores, and (score desc, id) row_number are
+    * expression-identical to the former per-arm sweeps.
     */
   def sqRefitRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
@@ -1199,34 +1176,24 @@ object Similarity {
         transform(col("embedding"), (c, j) =>
           sqDequantClip(c, element_at(col("los"), j + 1),
             element_at(col("his"), j + 1))).as("dvr"))
-    val qs = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val exact = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= SqTopK)
-      .select(col("q_id"), col("neighbor_id"))
+    val exact = truthSample(spark, dir, SqTopK)
       .localCheckpoint(false) // feeds both arms
-    val wB = Window.partitionBy(col("aq")).orderBy(col("sb").desc, col("an"))
-    val wR = Window.partitionBy(col("aq")).orderBy(col("sr").desc, col("an"))
-    val ranked = dq2.join(broadcast(qs))
+    val wB = Window.partitionBy(col("q_id"))
+      .orderBy(col("sb").desc, col("neighbor_id"))
+    val wR = Window.partitionBy(col("q_id"))
+      .orderBy(col("sr").desc, col("neighbor_id"))
+    val ranked = dq2.join(broadcast(evalQueries(e)))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id").as("aq"), col("vec_id").as("an"),
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
         round(cosineSim(col("dvb"), col("qe")), 6).as("sb"),
         round(cosineSim(col("dvr"), col("qe")), 6).as("sr"))
       .withColumn("rb", row_number().over(wB))
       .withColumn("rr", row_number().over(wR))
       .filter(col("rb") <= SqTopK || col("rr") <= SqTopK)
       .localCheckpoint(false) // k-bounded survivors; feeds both arm reads
-    def arm(name: String, rk: Column): DataFrame = {
-      val approx = ranked.filter(rk <= SqTopK).select(col("aq"), col("an"))
-      exact.join(broadcast(approx),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-        .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * SqTopK) * 10000 + 0.5) / 10000).as("recall"))
-    }
+    def arm(name: String, rk: Column): DataFrame =
+      recallMicro(exact, ranked.filter(rk <= SqTopK), SqTopK)
+        .select(lit(name).as("arm"), col("*"))
     arm("base", col("rb")).unionByName(arm("refit", col("rr")))
       .orderBy(col("arm"))
   }
@@ -1254,8 +1221,8 @@ object Similarity {
       .select(col("ccell"), col("n_vectors"),
         (floor(col("n_vectors").cast("double") / col("total") * 1000000
           + 0.5) / 1000000).as("share"),
-        (floor(col("n_vectors").cast("double") * col("n_cells")
-          / col("total") * 10000 + 0.5) / 10000).as("skew"))
+        r4(col("n_vectors").cast("double") * col("n_cells") / col("total"))
+          .as("skew"))
       .withColumn("rank", row_number().over(
         Window.orderBy(col("n_vectors").desc, col("ccell"))))
   }
@@ -1370,62 +1337,34 @@ object Similarity {
         col("n_vectors"),
         (floor(col("n_vectors").cast("double") / col("total") * 1000000
           + 0.5) / 1000000).as("share"),
-        (floor(col("n_vectors").cast("double") * col("n_cells")
-          / col("total") * 10000 + 0.5) / 10000).as("skew"),
+        r4(col("n_vectors").cast("double") * col("n_cells") / col("total"))
+          .as("skew"),
         col("fcell").isNotNull.as("was_split"))
       .withColumn("rank", row_number().over(
         Window.orderBy(col("n_vectors").desc, col("cell"))))
       .orderBy(col("rank"))
   }
 
-  /** rebalance_recall: the rebalance ACCEPTANCE gate — recall@3 and
-    * mean scanned-vectors-per-query of the nprobe=2 trained-IVF probe
-    * over the base index vs the rebalanced one, against the persisted
-    * exact truth (nprobe_curve's row shape with an `arm` key). The
-    * decision read: the split must not cost recall beyond noise while
-    * mean_scanned drops (probes landing in a split cell now scan half
-    * the list) — the same go/no-go every FAISS re-train loop runs
-    * before swapping an index into serving.
-    *
-    * Plan: pure three-artifact consumer (dense truth + both indexes);
-    * each arm is annRecall's left join aggregated to one row plus
-    * nprobe_curve's cost side (k-bounded sizes broadcast).
+  /** rebalance_recall: the rebalance ACCEPTANCE gate — micro recall@3
+    * and mean scanned-vectors-per-query of the nprobe=2 trained-IVF
+    * probe over the base index vs the rebalanced one (nprobe_curve's
+    * row shape with an `arm` key). The decision read: the split must
+    * not cost recall beyond noise while mean_scanned drops (probes
+    * landing in a split cell now scan half the list) — the same
+    * go/no-go every FAISS re-train loop runs before swapping an index
+    * into serving.
     */
   def rebalanceRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-      .select(col("q_id"), col("neighbor_id"))
+    val exact = truthSample(spark, dir, 3)
       .localCheckpoint(false) // feeds both arms
-    val q = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    def arm(name: String, idx: IvfFlatIndex): DataFrame = {
-      val a = annIvfKmeansProbe(spark, dir, idx)
-        .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      val rec = exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(count(lit(1)).as("n3"), count(col("an")).as("m"))
-      val sizes = idx.lists.groupBy(col("ccell"))
-        .agg(count(lit(1)).as("csz"))
-      val wProbe = Window.partitionBy(col("q_id"))
-        .orderBy(col("pcs").desc, col("cid"))
-      val cost = q.join(broadcast(idx.coarse))
-        .select(col("q_id"), col("cid"),
-          cosineSim(col("qe"), col("cvec")).as("pcs"))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 2)
-        .join(broadcast(sizes), col("cid") === col("ccell"))
-        .groupBy(col("q_id")).agg(sum(col("csz")).as("scanned"))
-        .agg(sum(col("scanned")).as("tot"), count(lit(1)).as("nq"))
-      rec.crossJoin(cost)
-        .select(lit(name).as("arm"),
-          (col("n3") / 3).cast("long").as("n_queries"),
-          (floor(col("m").cast("double") / col("n3") * 10000 + 0.5)
-            / 10000).as("recall"),
-          (floor(col("tot").cast("double") / col("nq") * 100 + 0.5)
-            / 100).as("mean_scanned"))
-    }
+    val q = evalQueries(Tables.embeddings(spark, dir))
+    def arm(name: String, idx: IvfFlatIndex): DataFrame =
+      recallMicro(exact, annIvfKmeansProbe(spark, dir, idx), 3)
+        .crossJoin(meanPerQuery(
+          scanned(probeCells(q, idx.coarse, 2), cellSizes(idx), 2),
+          "scanned", "mean_scanned"))
+        .select(lit(name).as("arm"), col("n_queries"), col("recall"),
+          col("mean_scanned"))
     arm("base", ivfFlatIndex(spark, dir))
       .unionByName(arm("rebalanced", ivfRebalIndex(spark, dir)))
       .orderBy(col("arm"))
@@ -1447,25 +1386,13 @@ object Similarity {
     */
   def probeCostQuantiles(spark: SparkSession, dir: String): DataFrame = {
     val idx = ivfFlatIndex(spark, dir)
-    val sizes = idx.lists.groupBy(col("ccell"))
-      .agg(count(lit(1)).as("csz")).localCheckpoint(false) // feeds every arm
-    val q = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
+    val sizes = cellSizes(idx).localCheckpoint(false) // feeds every arm
+    val q = evalQueries(Tables.embeddings(spark, dir))
     def arm(np: Int): DataFrame = {
-      val wProbe = Window.partitionBy(col("q_id"))
-        .orderBy(col("pcs").desc, col("cid"))
-      val scanned = q.join(broadcast(idx.coarse))
-        .select(col("q_id"), col("cid"),
-          cosineSim(col("qe"), col("cvec")).as("pcs"))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= np)
-        .join(broadcast(sizes), col("cid") === col("ccell"))
-        .groupBy(col("q_id")).agg(sum(col("csz")).as("scanned"))
       def pick(num: Int, den: Int) =
         max(when(col("rn") === expr(s"(n - 1) * $num div $den") + 1,
           col("scanned")))
-      scanned
+      scanned(probeCells(q, idx.coarse, np), sizes, np)
         .withColumn("rn", row_number().over(
           Window.orderBy(col("scanned"), col("q_id"))))
         .withColumn("n", count(lit(1)).over(Window.partitionBy()))
@@ -1498,29 +1425,14 @@ object Similarity {
     * lists), and the 2-row-per-query probe set; one global agg.
     */
   def annMissAudit(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val idx = ivfFlatIndex(spark, dir)
-    val exact = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-      .select(col("q_id"), col("neighbor_id"))
-    val approx = annIvfKmeans(spark, dir)
-      .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-    val q = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("pq"), col("embedding").as("qe"))
-    val wProbe = Window.partitionBy(col("pq"))
-      .orderBy(col("pcs").desc, col("cid"))
-    val probes = q.join(broadcast(idx.coarse))
-      .select(col("pq"), col("cid"),
-        cosineSim(col("qe"), col("cvec")).as("pcs"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= 2)
-      .select(col("pq"), col("cid").as("pcid"))
+    val probes = probeCells(evalQueries(Tables.embeddings(spark, dir)),
+        idx.coarse, 2)
+      .select(col("q_id").as("pq"), col("cid").as("pcid"))
     val ncell = idx.lists
       .select(col("vec_id").as("nv"), col("ccell").as("ncell"))
-    exact
-      .join(approx, col("q_id") === col("aq") &&
-        col("neighbor_id") === col("an"), "left")
+    val k = 3 // the probe's depth
+    truthJoin(truthSample(spark, dir, k), annIvfKmeans(spark, dir))
       .join(ncell, col("neighbor_id") === col("nv"))
       .join(probes, col("q_id") === col("pq") &&
         col("ncell") === col("pcid"), "left")
@@ -1532,7 +1444,7 @@ object Similarity {
           .as("n_routing_miss"),
         sum(when(!col("hit") && col("cell_probed"), 1L).otherwise(0L))
           .as("n_ranking_miss"))
-      .select((col("n_edges") / 3).cast("long").as("n_queries"),
+      .select((col("n_edges") / k).cast("long").as("n_queries"),
         col("n_edges"), col("n_hit"), col("n_routing_miss"),
         col("n_ranking_miss"),
         r4(col("n_hit").cast("double") / col("n_edges")).as("hit_rate"),
@@ -1550,70 +1462,14 @@ object Similarity {
     * [[NprobeRecallTarget]] (fallback: the highest-recall arm), with
     * that arm's mean and p95 scan cost. This is the decision row the
     * two standing audits exist to produce: nprobe_curve shows the
-    * whole trade-off, probe_cost_quantiles the tail — this picks, so
-    * the `ann.nprobe` runtime param can be set from a query instead of
-    * a human reading two tables (the FAISS auto-tune loop).
-    *
-    * Plan: pure two-artifact consumer; each arm is one probe sweep +
-    * k-bounded joins; the pick is a rank window over |sweep| rows.
+    * whole trade-off, probe_cost_quantiles the tail — this picks from
+    * their join on nprobe, so the `ann.nprobe` runtime param can be set
+    * from a query instead of a human reading two tables (the FAISS
+    * auto-tune loop). The pick is a rank window over |sweep| rows.
     */
   def nprobePick(spark: SparkSession, dir: String): DataFrame = {
-    val idx = ivfFlatIndex(spark, dir)
-    val q = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val wProbeAll = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcs").desc, col("cid"))
-    // r14: one scored candidate pass + one probe pass shared by all
-    // arms (see probeCandidates) — each arm re-ranks the pr-filtered
-    // slice, row-identical to the per-arm re-probe it replaces; the
-    // four shared frames BUILD in parallel (Par.build, nprobeCurve's
-    // structure)
-    val Seq(exact, sizes, cand, probesAll) = Par.build(Seq(
-      () => denseTruth(spark, dir)
-        .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-        .select(col("q_id"), col("neighbor_id"))
-        .localCheckpoint(false), // feeds every sweep arm
-      () => idx.lists.groupBy(col("ccell"))
-        .agg(count(lit(1)).as("csz")).localCheckpoint(false),
-      () => probeCandidates(spark, dir, idx, NprobeSweep.max)
-        .localCheckpoint(false),
-      () => q.join(broadcast(idx.coarse))
-        .select(col("q_id"), col("cid"),
-          cosineSim(col("qe"), col("cvec")).as("pcs"))
-        .withColumn("pr", row_number().over(wProbeAll))
-        .filter(col("pr") <= NprobeSweep.max)
-        .localCheckpoint(false)))
-    def arm(np: Int): DataFrame = {
-      val wRank = Window.partitionBy(col("q_id"))
-        .orderBy(col("s").desc, col("neighbor_id"))
-      val a = cand.filter(col("pr") <= np)
-        .withColumn("rank", row_number().over(wRank))
-        .filter(col("rank") <= 3)
-        .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      val rec = exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(count(lit(1)).as("n3"), count(col("an")).as("m"))
-      val scanned = probesAll.filter(col("pr") <= np)
-        .join(broadcast(sizes), col("cid") === col("ccell"))
-        .groupBy(col("q_id")).agg(sum(col("csz")).as("scanned"))
-      val cost = scanned
-        .withColumn("rn", row_number().over(
-          Window.orderBy(col("scanned"), col("q_id"))))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy()))
-        .groupBy()
-        .agg(max(when(col("rn") === expr("(n - 1) * 19 div 20") + 1,
-          col("scanned"))).as("p95"),
-          (floor(sum(col("scanned")).cast("double") / max(col("n"))
-            * 100 + 0.5) / 100).as("mean_scanned"))
-      rec.crossJoin(cost)
-        .select(lit(np).as("nprobe"),
-          (floor(col("m").cast("double") / col("n3") * 10000 + 0.5)
-            / 10000).as("recall"),
-          col("mean_scanned"), col("p95").as("p95_scanned"))
-    }
-    val arms = NprobeSweep.map(arm).reduce(_ unionByName _)
+    val arms = nprobeCurve(spark, dir).join(probeCostQuantiles(spark, dir)
+      .select(col("nprobe"), col("p95_scanned")), "nprobe")
     val meets = col("recall") >= NprobeRecallTarget
     val wPick = Window.orderBy(
       when(meets, 0).otherwise(1),
@@ -1666,8 +1522,8 @@ object Similarity {
         sum(when(col("changed"), 1L).otherwise(0L)).as("n_changed"),
         sum(col("ju")).as("jus"))
       .select(col("n_queries"), col("n_changed"),
-        (floor(col("n_changed").cast("double") / col("n_queries")
-          * 10000 + 0.5) / 10000).as("change_rate"),
+        r4(col("n_changed").cast("double") / col("n_queries"))
+          .as("change_rate"),
         (floor(col("jus").cast("double") / col("n_queries") + 0.5)
           / 10000).as("mean_jaccard"))
   }
@@ -1748,8 +1604,7 @@ object Similarity {
     agg.join(top, "ccell")
       .select(col("ccell"), col("n_vecs"), col("n_labels"),
         col("top_label"),
-        (floor(col("top_c").cast("double") / col("n_vecs") * 10000 + 0.5)
-          / 10000).as("top_share"),
+        r4(col("top_c").cast("double") / col("n_vecs")).as("top_share"),
         rnd6(log(col("n_vecs").cast("double")) -
           col("clogc").cast("double") / col("n_vecs")).as("entropy"))
       .orderBy(col("ccell"))
@@ -2135,8 +1990,8 @@ object Similarity {
         col("fm").isNotNull.as("refreshed"),
         coalesce(col("mse_after_f"), col("mse_before")).as("mse_after"),
         coalesce(col("n_changed_f"), lit(0L)).as("n_changed"),
-        (floor(coalesce(col("n_changed_f"), lit(0L)).cast("double")
-          / col("n_vecs") * 10000 + 0.5) / 10000).as("churn"))
+        r4(coalesce(col("n_changed_f"), lit(0L)).cast("double")
+          / col("n_vecs")).as("churn"))
       .orderBy(col("m"))
   }
 
@@ -2153,9 +2008,7 @@ object Similarity {
     // back-fills the chain's idle cores
     var parts: (DataFrame, DataFrame, DataFrame, DataFrame) = null
     val Seq(exact, _) = Par.build(Seq(
-      () => denseTruth(spark, dir)
-        .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-        .select(col("q_id"), col("neighbor_id"))
+      () => truthSample(spark, dir, 3)
         .localCheckpoint(false), // feeds both arms
       () => {
         val sv = subVectors(
@@ -2179,18 +2032,9 @@ object Similarity {
     val codes2 = idx.codes
       .join(flag, col("m") === col("fm"), "left_anti")
       .unionByName(codesNew)
-    def arm(name: String, aIdx: PqIndex): DataFrame = {
-      val a = annPqProbe(spark, dir, aIdx)
-        .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-        .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * 3) * 10000 + 0.5) / 10000).as("recall"))
-    }
+    def arm(name: String, aIdx: PqIndex): DataFrame =
+      recallMicro(exact, annPqProbe(spark, dir, aIdx), 3)
+        .select(lit(name).as("arm"), col("*"))
     arm("base", idx).unionByName(arm("refreshed", PqIndex(cb2, codes2)))
       .orderBy(col("arm"))
   }
@@ -2321,16 +2165,9 @@ object Similarity {
   def annIvfPqProbe(spark: SparkSession, dir: String,
       idx: IvfPqIndex, nprobe: Int = 2): DataFrame = {
     val coarse = idx.coarse
-    val q = Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcs").desc, col("cid"))
-    val probes = q.join(broadcast(coarse))
-      .select(col("q_id"), col("qe"), col("cid"),
-        cosineSim(col("qe"), col("cvec")).as("pcs"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
-      .select(col("q_id"), col("qe"), col("cid").as("pcell"))
+    val probes =
+      probeCells(evalQueries(Tables.embeddings(spark, dir)), coarse, nprobe)
+        .select(col("q_id"), col("qe"), col("cid").as("pcell"))
     // per-(query, probed cell) residual -> subvector rows -> ADC table
     // (rotated exactly as the codes were encoded, per the index meta)
     val qresid =
@@ -2450,8 +2287,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("neighbor_id"))
       .distinct()
     val ne = e.select(col("vec_id").as("n_id"), col("embedding").as("ne"))
-    val qe = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id2"), col("embedding").as("qe"))
+    val qe = evalQueries(e).select(col("q_id").as("q_id2"), col("qe"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("neighbor_id"))
     candIds.join(ne, col("neighbor_id") === col("n_id"))
@@ -2482,8 +2318,7 @@ object Similarity {
     * A pure consumer of the persisted [[denseTruth]] artifact (r9).
     */
   def mmrPoolExact(spark: SparkSession, dir: String): DataFrame =
-    denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= MmrPool)
+    truthSample(spark, dir, MmrPool, "s")
       .select(col("q_id"), col("neighbor_id").as("doc_id"),
         round(col("s"), 6).as("simq"))
 
@@ -2511,14 +2346,7 @@ object Similarity {
     // the standing recall/latency knob of a serving IVF index (the
     // FAISS nprobe); default = the oracle-pinned 2
     val nprobe = graft.Params.int(spark, "ann.nprobe", 2)
-    val q = probeQueries(spark, dir)
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcs").desc, col("cid"))
-    val probes = q.join(broadcast(idx.coarse))
-      .select(col("q_id"), col("qe"), col("cid"),
-        cosineSim(col("qe"), col("cvec")).as("pcs"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
+    val probes = probeCells(probeQueries(spark, dir), idx.coarse, nprobe)
       .select(col("q_id"), col("qe"), col("cid").as("pcid"))
     val wPool = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("vec_id"))
@@ -2803,14 +2631,7 @@ object Similarity {
     val nprobe = graft.Params.int(spark, "ann.nprobe", 2)
     val lang = graft.Params.strDisableable(spark, "ann.filter.lang",
       FilteredLang)
-    val q = probeQueries(spark, dir)
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcs").desc, col("cid"))
-    val probes = q.join(broadcast(idx.coarse))
-      .select(col("q_id"), col("qe"), col("cid"),
-        cosineSim(col("qe"), col("cvec")).as("pcs"))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
+    val probes = probeCells(probeQueries(spark, dir), idx.coarse, nprobe)
       .select(col("q_id"), col("qe"), col("cid").as("pcid"))
     val keep = Tables.documents(spark, dir)
       .filter(lang.map(l => col("lang") === l).getOrElse(lit(true)))
@@ -2834,10 +2655,8 @@ object Similarity {
     * posture applied to [[annFiltered]]. Filtered search is where IVF
     * recall degrades first (a selective predicate can empty the probed
     * cells while matches live in unprobed ones), so this audit is what
-    * justifies the nprobe setting per predicate family. The exact arm
-    * is the authority (left join): a query whose filtered matches the
-    * probe missed entirely reports recall 0; queries with NO matching
-    * corpus doc at all drop from both arms (no denominator).
+    * justifies the nprobe setting per predicate family. Queries with NO
+    * matching corpus doc at all drop from both arms (no denominator).
     */
   def filteredRecall(spark: SparkSession, dir: String): DataFrame = {
     val lang = graft.Params.strDisableable(spark, "ann.filter.lang",
@@ -2845,53 +2664,28 @@ object Similarity {
     val keep = Tables.documents(spark, dir)
       .filter(lang.map(l => col("lang") === l).getOrElse(lit(true)))
       .select(col("doc_id").as("vec_id"))
-    val q = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val wK = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("vec_id"))
+    val q = evalQueries(Tables.embeddings(spark, dir))
     val exact = Tables.embeddings(spark, dir)
       .join(keep, Seq("vec_id"), "left_semi")
       .join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
+      .select(col("q_id"), col("vec_id").as("neighbor_id"),
         cosineSim(col("embedding"), col("qe")).as("s"))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= FilteredK)
-      .select(col("q_id"), col("vec_id"))
-    val approx = annFiltered(spark, dir)
-      .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
     // denominator = the exact arm's own row count, NOT the constant k:
     // a selective predicate can leave fewer than k true matches, and a
     // probe that returns all of them has earned recall 1.0
-    exact.join(broadcast(approx),
-        col("q_id") === col("aq") && col("vec_id") === col("an"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("an")).as("n_matched"), count(lit(1)).as("n_exact"))
-      .select(col("q_id"), col("n_matched"), col("n_exact"),
-        (floor(col("n_matched").cast("double") / col("n_exact")
-          * 10000 + 0.5) / 10000).as("recall"))
-      .orderBy(col("q_id"))
+    recallPerQuery(topK(exact, FilteredK), annFiltered(spark, dir),
+      FilteredK, ownDen = true).orderBy(col("q_id"))
   }
 
   /** mmr_pool_recall: recall@[[MmrPool]] of the IVF-probed candidate
     * pool against the exact brute-force pool — the [[annRecall]]
-    * posture applied to the diversification input. The exact side is
-    * the authority (left join), so a query the probe misses entirely
-    * still reports recall 0. This is the standing audit that justifies
-    * serving MMR from the index probe instead of a corpus scan.
+    * posture applied to the diversification input — the standing audit
+    * that justifies serving MMR from the index probe instead of a
+    * corpus scan.
     */
-  def mmrPoolRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = mmrPoolExact(spark, dir).select(col("q_id"), col("doc_id"))
-    val ivf = mmrPoolIvf(spark, dir)
-      .select(col("q_id").as("aq"), col("doc_id").as("ad"))
-    exact.join(broadcast(ivf),
-        col("q_id") === col("aq") && col("doc_id") === col("ad"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("ad")).as("n_matched"))
-      .select(col("q_id"), col("n_matched"),
-        (floor(col("n_matched").cast("double") / MmrPool * 10000 + 0.5)
-          / 10000).as("recall"))
-  }
+  def mmrPoolRecall(spark: SparkSession, dir: String): DataFrame =
+    recallPerQuery(truthSample(spark, dir, MmrPool), mmrPoolIvf(spark, dir)
+      .select(col("q_id"), col("doc_id").as("neighbor_id")), MmrPool)
 
   /** mmr_rerank: Maximal Marginal Relevance (Carbonell & Goldstein,
     * SIGIR 1998) — the diversification stage of the retrieval stack
@@ -3430,20 +3224,17 @@ object Similarity {
     * operating-point read-out a 100 TB BQ deployment tunes by (scan
     * cost is R float vectors per query instead of the corpus).
     *
-    * Pure consumer of the code and dense-truth artifacts; the scored
-    * candidate frame is shared once across the three depth arms.
+    * The scored candidate frame is shared once across the three depth
+    * arms.
     */
   def bqRerank(spark: SparkSession, dir: String): DataFrame = {
-    val exact = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-      .select(col("q_id"), col("neighbor_id"))
+    val exact = truthSample(spark, dir, BqK)
       .localCheckpoint(false) // feeds every depth arm
     val cands = hammingTopK(bqHams(spark, dir), BqRerankDepths.max)
       .select(col("q_id"), col("neighbor_id"),
         col("rank").as("hrank"))
     val e = Tables.embeddings(spark, dir)
-    val qe = broadcast(e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q2"), col("embedding").as("qe")))
+    val qe = broadcast(evalQueries(e).select(col("q_id").as("q2"), col("qe")))
     val scored = cands
       .join(e.select(col("vec_id").as("neighbor_id"), col("embedding")),
         Seq("neighbor_id"))
@@ -3451,22 +3242,9 @@ object Similarity {
       .select(col("q_id"), col("neighbor_id"), col("hrank"),
         cosineSim(col("embedding"), col("qe")).as("s"))
       .localCheckpoint(false) // one exact-score pass, three depth arms
-    def arm(r: Int): DataFrame = {
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("s").desc, col("neighbor_id"))
-      val a = scored.filter(col("hrank") <= r)
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= BqK)
-        .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(count(lit(1)).as("n3"), count(col("an")).as("m"))
-        .select(lit(r).as("rerank_depth"),
-          (col("n3") / 3).cast("long").as("n_queries"),
-          (floor(col("m").cast("double") / col("n3") * 10000 + 0.5)
-            / 10000).as("recall"))
-    }
+    def arm(r: Int): DataFrame =
+      recallMicro(exact, topK(scored.filter(col("hrank") <= r), BqK), BqK)
+        .select(lit(r).as("rerank_depth"), col("n_queries"), col("recall"))
     BqRerankDepths.map(arm).reduce(_ unionByName _)
       .orderBy(col("rerank_depth"))
   }
@@ -3475,24 +3253,10 @@ object Similarity {
     * dense exact truth — the accuracy price of 64-bit codes, read next
     * to index_recall's float-arm leaderboard (FAISS's standing BQ
     * question: is popcount recall good enough to gate the rerank?).
-    * Pure consumer of two artifacts.
     */
-  def bqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-      .select(col("q_id"), col("neighbor_id"))
-    val a = bqTopk(spark, dir)
-      .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-    exact.join(broadcast(a),
-        col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-        "left")
-      .groupBy(col("q_id"))
-      .agg(count(col("an")).as("n_matched"))
-      .select(col("q_id"), col("n_matched"),
-        (floor(col("n_matched").cast("double") / 3 * 10000 + 0.5) / 10000)
-          .as("recall"))
+  def bqRecall(spark: SparkSession, dir: String): DataFrame =
+    recallPerQuery(truthSample(spark, dir, BqK), bqTopk(spark, dir), BqK)
       .orderBy(col("q_id"))
-  }
 
   // --- BQ re-threshold (the binary quantizer's maintenance loop:
   //     audit → receipt → acceptance gate, mirroring sq_refit /
@@ -3519,7 +3283,6 @@ object Similarity {
     * partial agg.
     */
   def bqBitBalance(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     bqCodes(spark, dir)
       .select(col("vec_id"), col("lo"), col("hi"),
         posexplode(sequence(lit(0), lit(63))).as(Seq("p", "d")))
@@ -3586,7 +3349,6 @@ object Similarity {
     * threshold table, one |dims|-row partial agg.
     */
   def bqRethreshold(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("d"), floor(col("x").cast("double") * 1000000
@@ -3624,11 +3386,9 @@ object Similarity {
   def bqRethresholdRecall(spark: SparkSession, dir: String): DataFrame = {
     // the truth slice and the refit code table share no frames: BUILD
     // in parallel (Par.build) instead of queueing their waves
-    val Seq(exact, refitCodes) = Par.build(Seq(() =>
-      denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= BqK)
-      .select(col("q_id"), col("neighbor_id"))
-      .localCheckpoint(false), // feeds both arms
+    val Seq(exact, refitCodes) = Par.build(Seq(
+      () => truthSample(spark, dir, BqK)
+        .localCheckpoint(false), // feeds both arms
       () => Tables.cpuPartition(
         Tables.embeddings(spark, dir), col("vec_id"))
       .select(col("vec_id"), posexplode(col("embedding"))
@@ -3650,19 +3410,9 @@ object Similarity {
       // explode + threshold-table chain — including bqThresholds'
       // three corpus passes — re-ran per consumer
       .localCheckpoint(false)))
-    def arm(name: String, hams: DataFrame): DataFrame = {
-      val a = hammingTopK(hams, BqK)
-        .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-        .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * BqK) * 10000 + 0.5) / 10000)
-            .as("recall"))
-    }
+    def arm(name: String, hams: DataFrame): DataFrame =
+      recallMicro(exact, hammingTopK(hams, BqK), BqK)
+        .select(lit(name).as("arm"), col("*"))
     arm("base", bqHams(spark, dir))
       .unionByName(arm("refit", bqHamsOf(refitCodes)))
       .orderBy(col("arm"))
@@ -3708,15 +3458,9 @@ object Similarity {
     */
   private def knnEdges(idx: IvfFlatIndex, gvs: DataFrame,
       members: DataFrame, pinned: Boolean = false): DataFrame = {
-    val wP = Window.partitionBy(col("gv"))
-      .orderBy(col("pcs").desc, col("cid"))
-    val probes = gvs
-      .select(col("vec_id").as("gv"), col("embedding").as("ve"))
-      .crossJoin(broadcast(idx.coarse))
-      .select(col("gv"), col("ve"), col("cid"),
-        cosineSim(col("ve"), col("cvec")).as("pcs"))
-      .withColumn("pr", row_number().over(wP)).filter(col("pr") <= 2)
-      .select(col("gv"), col("ve"), col("cid").as("pcid"))
+    val probes = probeCells(gvs.select(col("vec_id").as("q_id"),
+        col("embedding").as("qe")), idx.coarse, 2)
+      .select(col("q_id").as("gv"), col("qe").as("ve"), col("cid").as("pcid"))
     // The join key has only KMEANS_K values, so AQE coalesces the
     // byte-small join to one task that scores every candidate pair;
     // `pinned` holds both sides at the shuffle parallelism. The full
@@ -3789,18 +3533,13 @@ object Similarity {
     spark.read.parquet(path)
   }
 
-  /** Top-3 of a beam walk over an arbitrary edge frame — shared by the
-    * two receipt arms.
+  /** Top-3 (q_id, neighbor_id) of a beam walk over an arbitrary edge
+    * frame — shared by the two receipt arms.
     */
   private def walkTop3(spark: SparkSession, dir: String,
-      g: DataFrame): DataFrame = {
-    val wQ = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("vec_id"))
-    graphWalkTrailOver(spark, dir, GraphRounds, g).last
-      .withColumn("rank", row_number().over(wQ))
-      .filter(col("rank") <= 3)
-      .select(col("q_id").as("aq"), col("vec_id").as("an"))
-  }
+      g: DataFrame): DataFrame =
+    topK(graphWalkTrailOver(spark, dir, GraphRounds, g).last
+      .withColumnRenamed("vec_id", "neighbor_id"), 3)
 
   /** append_recall: the graph-append STALENESS receipt — recall@3 vs
     * the persisted dense truth for BOTH the appended graph (base build
@@ -3816,26 +3555,17 @@ object Similarity {
     * checkpointed truth read; no corpus rescans.
     */
   def appendRecall(spark: SparkSession, dir: String): DataFrame = {
-    def arm(exact: DataFrame, name: String, a: DataFrame): DataFrame =
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-        .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * 3) * 10000 + 0.5) / 10000).as("recall"))
     // the truth read and the two walk arms BUILD in parallel
     // (Par.build): each walk's per-round checkpoint waves otherwise
     // queue back-to-back
-    val Seq(exact, appW, rebW) = graft.operators.Par.build(Seq(
-      () => denseTruth(spark, dir)
-        .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-        .select(col("q_id"), col("neighbor_id"))
+    val Seq(exact, appW, rebW) = Par.build(Seq(
+      () => truthSample(spark, dir, 3)
         .localCheckpoint(false), // feeds both arms
       () => walkTop3(spark, dir, appendedKnnGraph(spark, dir)),
       () => walkTop3(spark, dir, knnGraph(spark, dir))))
-    arm(exact, "appended", appW).unionByName(arm(exact, "rebuilt", rebW))
+    def arm(name: String, a: DataFrame): DataFrame =
+      recallMicro(exact, a, 3).select(lit(name).as("arm"), col("*"))
+    arm("appended", appW).unionByName(arm("rebuilt", rebW))
       .orderBy(col("arm"))
   }
 
@@ -3856,20 +3586,19 @@ object Similarity {
     * loop that acts on ivf_rebalance/sq_refit/bq_rethreshold.
     */
   def appendChurn(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val app = appendedKnnGraph(spark, dir)
     val edges = app.agg(count(lit(1)).as("n_edges"),
       sum(when(Dedup.isDelta(col("src")) || Dedup.isDelta(col("dst")),
         1L).otherwise(0L)).as("n_appended"))
     // the two walk arms BUILD in parallel (Par.build): each walk's
     // per-round checkpoint waves otherwise queue back-to-back
-    val Seq(aW, rW) = graft.operators.Par.build(Seq(
+    val Seq(aW, rW) = Par.build(Seq(
       () => walkTop3(spark, dir, app),
       () => walkTop3(spark, dir, knnGraph(spark, dir))))
-    val aT = aW
-      .select(col("aq").as("q"), col("an").as("n"), lit(true).as("ia"))
-    val rT = rW
-      .select(col("aq").as("q"), col("an").as("n"), lit(true).as("ir"))
+    val aT = aW.select(col("q_id").as("q"), col("neighbor_id").as("n"),
+      lit(true).as("ia"))
+    val rT = rW.select(col("q_id").as("q"), col("neighbor_id").as("n"),
+      lit(true).as("ir"))
     val ch = aT.join(rT, Seq("q", "n"), "full_outer")
       .groupBy(col("q"))
       .agg(max(when(col("ia").isNull || col("ir").isNull, 1L)
@@ -4002,6 +3731,8 @@ object Similarity {
       .localCheckpoint(false) // entry + every round rescore against it
     val wQ = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("vec_id"))
+    // routed inline, not through probeCells: this cross join is part
+    // of ann_graph's serving plan, which stays as it is
     val wP = Window.partitionBy(col("q_id"))
       .orderBy(col("pcs").desc, col("cid"))
     val p1 = q.crossJoin(broadcast(idx.coarse))
@@ -4055,31 +3786,22 @@ object Similarity {
     // stages back-fill the cores the walk's wave chain leaves idle
     var trail: Seq[DataFrame] = null
     val Seq(exact, _) = Par.build(Seq(
-      () => denseTruth(spark, dir)
-        .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-        .select(col("q_id"), col("neighbor_id"))
+      () => truthSample(spark, dir, 3)
         .localCheckpoint(false), // feeds every arm
       () => { trail = graphWalkTrail(spark, dir, GraphRounds); trail.last }))
     def arm(r: Int): DataFrame = {
-      val wQ = Window.partitionBy(col("q_id"))
-        .orderBy(col("s").desc, col("vec_id"))
-      val vis = trail(r - 1)
-      val a = vis.withColumn("rk", row_number().over(wQ))
-        .filter(col("rk") <= 3)
-        .select(col("q_id").as("aq"), col("vec_id").as("an"))
-      val rec = exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-      val cost = vis.groupBy(col("q_id")).agg(count(lit(1)).as("nv"))
-        .agg(sum(col("nv")).as("tv"), count(lit(1)).as("nq"))
-      rec.crossJoin(cost)
-        .select(lit(r).as("rounds"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * 3) * 10000 + 0.5) / 10000).as("recall"),
-          (floor(col("tv").cast("double") / col("nq") * 100 + 0.5) / 100)
-            .as("mean_visited"))
+      // both reads (recall top-3, visited count) come from ONE ranked
+      // frame: the last round is not checkpointed, and two differently
+      // pruned reads of it planned its union/groupBy subtree twice; from
+      // one frame the second read reuses the first one's exchange
+      val ranked = trail(r - 1).withColumnRenamed("vec_id", "neighbor_id")
+        .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
+          .orderBy(col("s").desc, col("neighbor_id"))))
+        .withColumn("nv", count(lit(1)).over(Window.partitionBy(col("q_id"))))
+      recallMicro(exact, ranked.filter(col("rk") <= 3), 3)
+        .crossJoin(meanPerQuery(ranked.filter(col("rk") === 1), "nv",
+          "mean_visited"))
+        .select(lit(r).as("rounds"), col("*"))
     }
     (1 to GraphRounds).map(arm).reduce(_ unionByName _)
       .orderBy(col("rounds"))
@@ -4123,7 +3845,6 @@ object Similarity {
     * Vamana's alpha-pruning does). Two partial aggs over the artifact.
     */
   def graphDegree(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val g = knnGraph(spark, dir)
       .groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(expr(
@@ -4147,27 +3868,16 @@ object Similarity {
     * recovered, priced in recall (the DiskANN acceptance read).
     */
   def graphRecall(spark: SparkSession, dir: String): DataFrame = {
-    def arm(exact: DataFrame, name: String, a: DataFrame): DataFrame =
-      exact.join(
-          broadcast(a.select(col("q_id").as("aq"), col("neighbor_id").as("an"))),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(countDistinct(col("q_id")).as("n_queries"),
-          count(col("an")).as("n_matched"))
-        .select(lit(name).as("arm"), col("n_queries"), col("n_matched"),
-          (floor(col("n_matched").cast("double") /
-            (col("n_queries") * 3) * 10000 + 0.5) / 10000).as("recall"))
     // the truth read, the walk arm's per-round checkpoint waves and the
     // probe arm all BUILD in parallel (Par.build)
-    val Seq(exact, gA, pA) = graft.operators.Par.build(Seq(
-      () => denseTruth(spark, dir)
-        .filter(col("q_id") % 100 === 0 && col("rank_all") <= 3)
-        .select(col("q_id"), col("neighbor_id"))
+    val Seq(exact, gA, pA) = Par.build(Seq(
+      () => truthSample(spark, dir, 3)
         .localCheckpoint(false), // feeds both arms
       () => annGraph(spark, dir),
       () => annIvfKmeansProbe(spark, dir, ivfFlatIndex(spark, dir), 1)))
-    arm(exact, "graph", gA).unionByName(arm(exact, "ivf_probe1", pA))
-      .orderBy(col("arm"))
+    def arm(name: String, a: DataFrame): DataFrame =
+      recallMicro(exact, a, 3).select(lit(name).as("arm"), col("*"))
+    arm("graph", gA).unionByName(arm("ivf_probe1", pA)).orderBy(col("arm"))
   }
 
   /** Matryoshka prefix dimensions audited by [[matryoshkaRecall]]
@@ -4196,8 +3906,7 @@ object Similarity {
     */
   def buildMrlTruth(spark: SparkSession, dir: String, path: String): Unit = {
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
-    val q = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
+    val q = evalQueries(e)
     val arms = MrlDims.map { d =>
       val w = Window.partitionBy(col("q_id"))
         .orderBy(col("s").desc, col("neighbor_id"))
@@ -4226,32 +3935,18 @@ object Similarity {
     * curve is the honest baseline an MRL fine-tune gets compared to.
     *
     * Scale shape: both sides are persisted-truth reads ([[denseTruth]]
-    * and the [[buildMrlTruth]] artifact); the audit is a k-bounded
-    * left join + |MrlDims|-row rollup.
+    * and the [[buildMrlTruth]] artifact); each prefix is one micro arm
+    * over a k-bounded truth join.
     */
   def matryoshkaRecall(spark: SparkSession, dir: String): DataFrame = {
     val path = mrlTruthPath(dir)
     ensureBuilt(path)(buildMrlTruth(spark, dir, path))
     val arm = spark.read.parquet(path)
       .filter(col("rank") <= BqK) // the artifact holds the full pool
-      .select(col("d").as("ad"), col("q_id").as("aq"),
-        col("neighbor_id").as("an"))
-    val exact = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= BqK)
-      .select(col("q_id"), col("neighbor_id"))
-    val dims = broadcast(spark.range(1)
-      .select(explode(array(MrlDims.map(lit): _*)).as("d")))
-    exact.crossJoin(dims)
-      .join(arm, col("d") === col("ad") && col("q_id") === col("aq") &&
-        col("neighbor_id") === col("an"), "left")
-      .groupBy(col("d"), col("q_id"))
-      .agg(count(col("an")).as("nm"))
-      .groupBy(col("d"))
-      .agg(count(lit(1)).as("n_queries"), sum(col("nm")).as("n_matched"))
-      .select(col("d"), col("n_queries"), col("n_matched"),
-        (floor(col("n_matched").cast("double") /
-          (col("n_queries") * BqK) * 10000 + 0.5) / 10000).as("recall"))
-      .orderBy(col("d"))
+    val exact = truthSample(spark, dir, BqK)
+    MrlDims.map(d => recallMicro(exact, arm.filter(col("d") === d), BqK)
+        .select(lit(d).as("d"), col("*")))
+      .reduce(_ unionByName _).orderBy(col("d"))
   }
 
   /** mrl_rerank: the two-stage MATRYOSHKA serving curve — route with
@@ -4269,9 +3964,7 @@ object Similarity {
     * bounded window + 1-row rollup.
     */
   def mrlRerank(spark: SparkSession, dir: String): DataFrame = {
-    val exact = denseTruth(spark, dir)
-      .filter(col("q_id") % 100 === 0 && col("rank_all") <= BqK)
-      .select(col("q_id"), col("neighbor_id"))
+    val exact = truthSample(spark, dir, BqK)
       .localCheckpoint(false) // feeds every depth arm
     val path = mrlTruthPath(dir)
     ensureBuilt(path)(buildMrlTruth(spark, dir, path))
@@ -4279,8 +3972,7 @@ object Similarity {
       .filter(col("d") === MrlServeDim)
       .select(col("q_id"), col("neighbor_id"), col("rank").as("prank"))
     val e = Tables.embeddings(spark, dir)
-    val qe = broadcast(e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q2"), col("embedding").as("qe")))
+    val qe = broadcast(evalQueries(e).select(col("q_id").as("q2"), col("qe")))
     val scored = cands
       .join(e.select(col("vec_id").as("neighbor_id"), col("embedding")),
         Seq("neighbor_id"))
@@ -4288,22 +3980,9 @@ object Similarity {
       .select(col("q_id"), col("neighbor_id"), col("prank"),
         cosineSim(col("embedding"), col("qe")).as("s"))
       .localCheckpoint(false) // one exact-score pass, three depth arms
-    def arm(r: Int): DataFrame = {
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("s").desc, col("neighbor_id"))
-      val a = scored.filter(col("prank") <= r)
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= BqK)
-        .select(col("q_id").as("aq"), col("neighbor_id").as("an"))
-      exact.join(broadcast(a),
-          col("q_id") === col("aq") && col("neighbor_id") === col("an"),
-          "left")
-        .agg(count(lit(1)).as("n3"), count(col("an")).as("m"))
-        .select(lit(r).as("rerank_depth"),
-          (col("n3") / 3).cast("long").as("n_queries"),
-          (floor(col("m").cast("double") / col("n3") * 10000 + 0.5)
-            / 10000).as("recall"))
-    }
+    def arm(r: Int): DataFrame =
+      recallMicro(exact, topK(scored.filter(col("prank") <= r), BqK), BqK)
+        .select(lit(r).as("rerank_depth"), col("n_queries"), col("recall"))
     BqRerankDepths.map(arm).reduce(_ unionByName _)
       .orderBy(col("rerank_depth"))
   }

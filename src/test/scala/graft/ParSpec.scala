@@ -38,4 +38,32 @@ class ParSpec extends SparkSpecBase {
     assert(!secondJobRan.get(), "the sibling's second job ran")
     assert(elapsed < slowSec / 2, s"Par.build took $elapsed s")
   }
+
+  test("a failing branch cancels the running jobs of a nested Par.build " +
+      "inside a sibling") {
+    val sc = spark.sparkContext
+    val boom = new IllegalStateException("outer branch 0 failed")
+    // 4 tasks of 2000 × 10 ms: ~20 s if nothing cancels it
+    val slowSec = 20.0
+    val failing: () => DataFrame = () => {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (sc.statusTracker.getActiveJobIds().isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      throw boom
+    }
+    // the slow job runs in a branch of a nested build, under that
+    // branch's own job group, out of reach of a cancel by outer group
+    val nested: () => DataFrame = () => Par.build(Seq(
+      () => {
+        sc.parallelize(1 to 8000, 4).map { x => Thread.sleep(10); x }.count()
+        spark.range(1).toDF()
+      },
+      () => spark.range(1).toDF())).head
+    val t0 = System.nanoTime()
+    val thrown =
+      intercept[IllegalStateException](Par.build(Seq(failing, nested)))
+    val elapsed = (System.nanoTime() - t0) / 1e9
+    assert(thrown eq boom)
+    assert(elapsed < slowSec / 2, s"Par.build took $elapsed s")
+  }
 }

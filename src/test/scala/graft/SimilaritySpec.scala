@@ -674,6 +674,13 @@ class SimilaritySpec extends SparkSpecBase {
       assert(m >= 0L && m <= 6L)
       assert(r === math.floor(m.toDouble / 6 * 1e4 + 0.5) / 1e4)
     }
+    // the base arm IS sq_recall aggregated — the gate prices the before
+    // side with the standing per-query audit's own number
+    val perQ = Similarity.sqRecall(spark, sqDir).collect()
+    val matched = perQ.map(_.getLong(1)).sum
+    assert(bq === perQ.length.toLong && bm === matched)
+    assert(br === math.floor(matched.toDouble / (3 * perQ.length) * 1e4
+      + 0.5) / 1e4)
     // base codes every in-range value to level 0 (the 1000-wide range
     // has 3.9-wide cells): all 199 candidates dequantize identically
     // and rank by id alone; the refit range resolves them
