@@ -2,13 +2,20 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-audit helper: the formatted physical plan of each named query
   * (or all), so broadcast/shuffle/pushdown decisions are reviewable per
   * round. With an output dir it writes one `<query>.txt` per query there;
-  * without one it prints the plans.
+  * without one it prints the plans. It then runs each query into the
+  * `noop` sink and writes the plan that ran as `<query>.final.txt` (or
+  * prints it): adaptive execution reuses exchanges and coalesces
+  * partitions only while it runs, so only that plan shows whether a
+  * subtree is computed once or twice.
   *
   * Written plans are diffable across builds: expression ids (`#123`),
   * exchange `plan_id=`s, lambda variable suffixes, checkpoint RDD ids
@@ -39,16 +46,34 @@ object Explain {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Session.local()
+    val ran = new LinkedBlockingQueue[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        ran.put(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    def formatted(qe: QueryExecution): String =
+      normalise(qe.explainString(ExplainMode.fromString("formatted")))
     outDir.foreach(d => Files.createDirectories(Paths.get(d)))
-    names.foreach { name =>
-      val text = s"\n===== $name =====\n" + normalise(
-        SparkEntry.queries(name)(spark, sfDir).queryExecution
-          .explainString(ExplainMode.fromString("formatted")))
+    def emit(file: String, title: String, plan: String): Unit = {
+      val text = s"\n===== $title =====\n" + plan
       outDir match {
-        case Some(d) => Files.write(Paths.get(d, s"$name.txt"),
+        case Some(d) => Files.write(Paths.get(d, file),
           text.getBytes(StandardCharsets.UTF_8))
         case None => println(text)
       }
+    }
+    names.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      emit(s"$name.txt", name, formatted(df.queryExecution))
+      ran.clear()
+      df.write.format("noop").mode("overwrite").save()
+      // the listener bus is asynchronous: wait for the sink write's event
+      val write = Iterator.continually(ran.poll(60, TimeUnit.SECONDS))
+        .find(qe => qe == null || qe.analyzed.isInstanceOf[V2WriteCommand])
+        .flatMap(Option(_))
+      emit(s"$name.final.txt", s"$name (executed)", write.fold(
+        "(no plan: the noop write reported no execution)")(formatted))
     }
     spark.stop()
   }

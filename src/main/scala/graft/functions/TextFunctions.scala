@@ -400,4 +400,8 @@ object TextFunctions {
   def keywordRules(c: Column, groups: Seq[Seq[String]],
       mode: KeywordRules.Mode): Column =
     toCol(KeywordRules(toExpr(c), groups, mode))
+
+  /** `get_json_object(c, '$.<key>')` through [[JsonField]]'s fast path. */
+  def jsonField(c: Column, key: String): Column =
+    toCol(JsonField(toExpr(c), key))
 }

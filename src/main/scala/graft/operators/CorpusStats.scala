@@ -76,7 +76,7 @@ object CorpusStats {
             length(col("text")).cast("long").as("text_len"),
             TextAnalysis.qualityScoreCol.as("quality")),
         path, Seq("doc_id")))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** quality_by_length's low-quality cut. Single-sourced to the oracle
@@ -620,7 +620,7 @@ object CorpusStats {
   def lmNll(spark: SparkSession, dir: String): DataFrame = {
     val path = lmNllPath(dir)
     IndexStore.ensureBuilt(path)(buildLmNll(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** Unpersisted twin: train on `docs`, score `docs` (hand-corpus specs). */
@@ -849,7 +849,7 @@ object CorpusStats {
   def bigramLm(spark: SparkSession, dir: String): DataFrame = {
     val path = lmIndexPath(dir)
     IndexStore.ensureBuilt(path)(buildBigramLm(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** Training domain for [[perplexityOod]]: the out-of-domain LM trains
@@ -896,7 +896,7 @@ object CorpusStats {
   def oodBigramLm(spark: SparkSession, dir: String): DataFrame = {
     val path = oodLmIndexPath(dir)
     IndexStore.ensureBuilt(path)(buildOodBigramLm(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** Stupid-backoff discount (Brants et al., EMNLP'07 "Large Language
@@ -972,7 +972,7 @@ object CorpusStats {
   def oodTrigramLm(spark: SparkSession, dir: String): DataFrame = {
     val path = oodTrigramLmIndexPath(dir)
     IndexStore.ensureBuilt(path)(buildOodTrigramLm(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** Score `docs` with stupid backoff against frozen trigram (`t3`) and
@@ -1349,7 +1349,7 @@ object CorpusStats {
   def dsirBuckets(spark: SparkSession, dir: String): DataFrame = {
     val path = dsirIndexPath(dir)
     IndexStore.ensureBuilt(path)(buildDsirBuckets(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   // ---- bpe_pairs: tokenizer-training pair statistics ------------------
@@ -1441,7 +1441,7 @@ object CorpusStats {
     IndexStore.ensureBuilt(path)(
       graft.sources.Sinks.writeSortedParquet(
         bpeVocabLive(spark, dir), path, Seq("merge")))
-    spark.read.parquet(path).orderBy(col("merge"))
+    Tables.read(spark, path).orderBy(col("merge"))
   }
 
   /** The live merge loop (the artifact build). */

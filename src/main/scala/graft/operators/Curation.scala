@@ -883,7 +883,7 @@ object Curation {
     IndexStore.ensureBuilt(path)(
       graft.sources.Sinks.writeSortedParquet(
         curateManifestPlan(spark, dir), path, Seq("doc_id")))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** The five-stage manifest PLAN — executed only inside the artifact
@@ -1369,7 +1369,7 @@ object Curation {
     * frozen weights serve anything).
     */
   def classifierTrain(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${clfWeights(spark, dir)}/rounds")
+    Tables.read(spark, s"${clfWeights(spark, dir)}/rounds")
       .select(col("round"), col("feature"),
         (col("wu").cast("double") / 1000000).as("weight"))
       .orderBy(col("round"), col("feature"))
@@ -1402,9 +1402,9 @@ object Curation {
     IndexStore.ensureBuilt(path)(
       graft.sources.Sinks.writeSortedParquet(
         classifierScoreOf(TextAnalysis.qualityScore(spark, dir),
-          spark.read.parquet(s"${clfWeights(spark, dir)}/final")),
+          Tables.read(spark, s"${clfWeights(spark, dir)}/final")),
         path, Seq("doc_id")))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** Frame-shaped scorer over a quality-signals frame and a frozen

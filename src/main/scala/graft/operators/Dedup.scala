@@ -456,7 +456,7 @@ object Dedup {
   def dedupPairs(spark: SparkSession, dir: String): DataFrame = {
     val path = pairsIndexPath(dir)
     IndexStore.ensureBuilt(path)(buildDedupPairs(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   // --- persisted band store: incremental (delta) dedup ------------------
@@ -532,7 +532,7 @@ object Dedup {
   def bandStore(spark: SparkSession, dir: String): DataFrame = {
     val path = bandStorePath(dir)
     IndexStore.ensureBuilt(path)(buildBandStore(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   def hashStorePath(dir: String): String =
@@ -553,7 +553,7 @@ object Dedup {
   def hashStore(spark: SparkSession, dir: String): DataFrame = {
     val path = hashStorePath(dir)
     IndexStore.ensureBuilt(path)(buildHashStore(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   // --- store absorption: the write half of the incremental loop -------
@@ -578,7 +578,7 @@ object Dedup {
     IndexStore.ensureBuilt(path)(buildBandStore(spark, dir, path))
     val fresh = minhashBandedFrom(shingleRowsOf(shard)).localCheckpoint()
     val ids = fresh.select(col("doc_id")).distinct()
-    val existing = spark.read.parquet(path)
+    val existing = Tables.read(spark, path)
       .join(broadcast(ids), Seq("doc_id"), "left_semi")
     fresh.join(existing, Seq("doc_id", "band", "key"), "left_anti")
       .sortWithinPartitions(col("band"), col("key"))
@@ -598,7 +598,7 @@ object Dedup {
     val batch = exactHashOf(shard)
       .groupBy(col("text_hash")).agg(min(col("doc_id")).as("canonical"))
       .localCheckpoint()
-    val known = spark.read.parquet(path)
+    val known = Tables.read(spark, path)
       .join(broadcast(batch.select(col("text_hash"))),
         Seq("text_hash"), "left_semi")
       .select(col("text_hash"))
@@ -670,7 +670,7 @@ object Dedup {
     IndexStore.ensureBuilt(path)(
       graft.sources.Sinks.writeSortedParquet(
         dedupDelta(spark, dir), path, Seq("id_a", "id_b")))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   def dedupDelta(spark: SparkSession, dir: String): DataFrame =
@@ -1259,7 +1259,7 @@ object Dedup {
   def exactPairs(spark: SparkSession, dir: String): DataFrame = {
     val path = exactPairsPath(dir)
     IndexStore.ensureBuilt(path)(buildExactPairs(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** dedup_recall: the LSH-quality audit — recall and precision of the

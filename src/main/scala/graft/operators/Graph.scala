@@ -91,7 +91,7 @@ object Graph {
   private def prunedPairs(spark: SparkSession, dir: String): DataFrame = {
     val path = edgesIndexPath(dir)
     IndexStore.ensureBuilt(path)(buildCopurchaseEdges(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   def pagerank(spark: SparkSession, dir: String): DataFrame = {

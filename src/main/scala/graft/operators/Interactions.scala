@@ -28,7 +28,16 @@ import graft.sources.Tables
   */
 object Interactions {
 
-  private def propsK = get_json_object(col("props"), "$.k").cast("int")
+  private def propsK =
+    graft.functions.TextFunctions.jsonField(col("props"), "k").cast("int")
+
+  /** `pred(k)` holding the `props` decode once. A filter on a derived
+    * column is pushed below the projection that derives it, with the
+    * derivation copied in once per reference; a one-element `exists`
+    * keeps a predicate of two derived columns to one decode.
+    */
+  private def ofK(pred: Column => Column): Column =
+    exists(array(propsK), pred)
 
   /** conversation_history: the last 5 interactions of every session
     * (limit is the reference's runtime arg database.py:68 — override
@@ -152,19 +161,22 @@ object Interactions {
     val minEff = Params.double(spark, "high_quality.min_effectiveness", 0.7)
     val limitN = Params.int(spark, "high_quality.limit", 100)
     val topicFilter = Params.strOpt(spark, "high_quality.topic", topicDefault)
-    val overlap = round(propsK / 100.0, 2)
+    def overlap(k: Column) = round(k / 100.0, 2)
     val adherence = when(col("event_type") === "purchase", "high")
       .when(col("event_type") === "signup", "medium")
       .otherwise("low")
     val names = array(RefVocab.taxonomy.map(t => lit(t._1)): _*)
-    val topic = element_at(names,
-      (pmod(propsK, lit(RefVocab.taxonomy.size)) + 1).cast("int"))
+    def topic(k: Column) = element_at(names,
+      (pmod(k, lit(RefVocab.taxonomy.size)) + 1).cast("int"))
+    def gate(k: Column) = overlap(k) >= minEff || adherence === "high"
+    val keep = topicFilter.fold(gate _)(t => k => gate(k) && topic(k) === t)
     val base = Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id"), topic.as("topic"),
-        overlap.as("term_overlap"), adherence.as("template_adherence"))
-      .filter(col("term_overlap") >= minEff ||
-        col("template_adherence") === "high")
-    topicFilter.fold(base.drop("topic"))(t => base.filter(col("topic") === t))
+      .filter(ofK(keep))
+      .select(col("event_id"), col("user_id"), propsK.as("k"),
+        adherence.as("template_adherence"))
+      .select(col("event_id"), col("user_id"), topic(col("k")).as("topic"),
+        overlap(col("k")).as("term_overlap"), col("template_adherence"))
+    topicFilter.fold(base.drop("topic"))(_ => base)
       .orderBy(col("event_id").desc)
       .limit(limitN)
   }

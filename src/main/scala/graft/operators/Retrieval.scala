@@ -138,7 +138,7 @@ object Retrieval {
       IndexStore.ensureBuilt(path)(
         graft.sources.Sinks.writeSortedParquet(
           bm25Ranked(spark, dir, LexTruthDepth), path, Seq("q_id", "rank")))
-      spark.read.parquet(path).filter(col("rank") <= k)
+      Tables.read(spark, path).filter(col("rank") <= k)
         .select(col("q_id"), col("doc_id"), col("score"), col("rank"))
     }
   }
@@ -294,7 +294,7 @@ object Retrieval {
       IndexStore.ensureBuilt(path)(
         graft.sources.Sinks.writeSortedParquet(
           qlRanked(spark, dir, LexTruthDepth), path, Seq("q_id", "rank")))
-      spark.read.parquet(path).filter(col("rank") <= k)
+      Tables.read(spark, path).filter(col("rank") <= k)
         .select(col("q_id"), col("doc_id"), col("score"), col("rank"))
     }
   }
@@ -589,7 +589,7 @@ object Retrieval {
     IndexStore.ensureBuilt(path)(
       graft.sources.Sinks.writeSortedParquet(
         tfidfLive(spark, dir), path, Seq("doc_id", "rank")))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
       .select(col("doc_id"), col("term"), col("tf"), col("tfidf"),
         col("rank"))
   }
@@ -821,7 +821,7 @@ object Retrieval {
     IndexStore.ensureBuilt(path)(
       graft.sources.Sinks.writeSortedParquet(
         sparseKnn(spark, dir, cap), path, Seq("q_id", "rank")))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** The cap-explicit form: `cap = Int.MaxValue` is the UNCAPPED exact
@@ -1089,7 +1089,7 @@ object Retrieval {
       graft.sources.Sinks.writeSortedParquet(
         bm25Ranked(spark, dir, LexTruthDepth, Int.MaxValue), path,
         Seq("q_id", "rank")))
-    spark.read.parquet(path).filter(col("rank") <= BmTopK)
+    Tables.read(spark, path).filter(col("rank") <= BmTopK)
   }
 
   /** The UNCAPPED exact sparse-cosine ranking (already [[SparseK]]
@@ -1102,7 +1102,7 @@ object Retrieval {
     IndexStore.ensureBuilt(path)(
       graft.sources.Sinks.writeSortedParquet(
         sparseKnn(spark, dir, Int.MaxValue), path, Seq("q_id", "rank")))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** prf_expand knobs: feedback depth (top seed docs per query),
@@ -1131,7 +1131,7 @@ object Retrieval {
       graft.sources.Sinks.writeSortedParquet(ctf, path,
         Seq("term", "doc_id"))
     }
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** prf_expand: pseudo-relevance-feedback query expansion (the RM3
@@ -1168,7 +1168,7 @@ object Retrieval {
     IndexStore.ensureBuilt(path)(
       graft.sources.Sinks.writeSortedParquet(
         prfExpandLive(spark, dir, cap), path, Seq("q_id", "rank")))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** The live PRF pipeline (the artifact build). */
@@ -1319,7 +1319,7 @@ object Retrieval {
   private def liBrutePool(spark: SparkSession, dir: String): DataFrame = {
     val path = liTruthPath(dir)
     IndexStore.ensureBuilt(path)(buildLiTruth(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
       .filter(col("pr") <= LiPoolC)
       .select(col("q_id"), col("d_id"), col("pool_sim"))
   }
@@ -1415,7 +1415,7 @@ object Retrieval {
         Embedder.hashSumRows(chunkToks, Seq("doc_id", "chunk_id")),
         path, Seq("doc_id", "chunk_id"))
     }
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   private def rerankMaxSim(spark: SparkSession, dir: String,

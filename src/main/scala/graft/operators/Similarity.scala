@@ -226,7 +226,7 @@ object Similarity {
   def denseTruth(spark: SparkSession, dir: String): DataFrame = {
     val path = denseTruthPath(dir)
     ensureBuilt(path)(buildDenseTruth(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   // --- the audit kernel (conventions in the object header) -------------
@@ -1308,8 +1308,8 @@ object Similarity {
   def ivfRebalIndex(spark: SparkSession, dir: String): IvfFlatIndex = {
     val path = ivfRebalIndexPath(dir)
     ensureBuilt(path)(buildIvfRebalIndex(spark, dir, path))
-    IvfFlatIndex(spark.read.parquet(s"$path/coarse"),
-      spark.read.parquet(s"$path/lists"))
+    IvfFlatIndex(Tables.read(spark, s"$path/coarse"),
+      Tables.read(spark, s"$path/lists"))
   }
 
   /** ivf_rebalance: the post-rebalance balance table — per final cell:
@@ -1751,8 +1751,8 @@ object Similarity {
   def ivfFlatIndex(spark: SparkSession, dir: String): IvfFlatIndex = {
     val path = ivfFlatIndexPath(dir)
     ensureBuilt(path)(buildIvfFlatIndex(spark, dir, path))
-    IvfFlatIndex(spark.read.parquet(s"$path/coarse"),
-      spark.read.parquet(s"$path/lists"))
+    IvfFlatIndex(Tables.read(spark, s"$path/coarse"),
+      Tables.read(spark, s"$path/lists"))
   }
 
   /** Incremental insert into a persisted IVF-flat index: assign each new
@@ -1771,7 +1771,7 @@ object Similarity {
     */
   def appendToIvfFlat(spark: SparkSession, path: String,
       newVecs: DataFrame): Unit = {
-    val coarse = spark.read.parquet(s"$path/coarse")
+    val coarse = Tables.read(spark, s"$path/coarse")
     assign(newVecs.select(col("vec_id"), col("embedding")), coarse)
       .select(col("vec_id"), col("embedding"), col("cid").as("ccell"))
       .write.mode("append").partitionBy("ccell")
@@ -1794,12 +1794,12 @@ object Similarity {
       newVecs: DataFrame): Unit = {
     val path = pqIndexPath(dir)
     ensureBuilt(path)(buildPqIndex(spark, dir, path))
-    val cb = spark.read.parquet(s"$path/codebooks")
+    val cb = Tables.read(spark, s"$path/codebooks")
     val codes = assignPq(
         subVectors(newVecs.select(col("vec_id"), col("embedding"))), cb)
       .select(col("vec_id"), col("m"), col("cid")).localCheckpoint()
     val ids = codes.select(col("vec_id")).distinct()
-    val existing = spark.read.parquet(s"$path/codes")
+    val existing = Tables.read(spark, s"$path/codes")
       .join(broadcast(ids), Seq("vec_id"), "left_semi")
       .select(col("vec_id"), col("m"))
     codes.join(existing, Seq("vec_id", "m"), "left_anti")
@@ -2042,8 +2042,8 @@ object Similarity {
   def pqIndex(spark: SparkSession, dir: String): PqIndex = {
     val path = pqIndexPath(dir)
     ensureBuilt(path)(buildPqIndex(spark, dir, path))
-    PqIndex(spark.read.parquet(s"$path/codebooks"),
-      spark.read.parquet(s"$path/codes"))
+    PqIndex(Tables.read(spark, s"$path/codebooks"),
+      Tables.read(spark, s"$path/codes"))
   }
 
   /** ann_pq probe: rank by ADC over a persisted PQ index — each query's
@@ -2139,11 +2139,11 @@ object Similarity {
   }
 
   def loadIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex =
-    IvfPqIndex(spark.read.parquet(s"$path/coarse"),
-      spark.read.parquet(s"$path/codebooks"),
-      spark.read.parquet(s"$path/codes"),
-      rotated = spark.read.parquet(s"$path/meta")
-        .head().getAs[Boolean]("rotated"))
+    IvfPqIndex(Tables.read(spark, s"$path/coarse"),
+      Tables.read(spark, s"$path/codebooks"),
+      Tables.read(spark, s"$path/codes"),
+      rotated = Tables.readOnce(spark, s"$path/meta")(
+        _.head().getAs[Boolean]("rotated")))
 
   def ivfPqIndex(spark: SparkSession, dir: String): IvfPqIndex = {
     val path = ivfPqIndexPath(dir)
@@ -2272,7 +2272,7 @@ object Similarity {
       graft.sources.Sinks.writeSortedParquet(capped, path,
         Seq("band", "key"))
     }
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   def lshAnn(spark: SparkSession, dir: String): DataFrame = {
@@ -2904,7 +2904,7 @@ object Similarity {
   def pcaBasis(spark: SparkSession, dir: String): DataFrame = {
     val path = pcaBasisPath(dir)
     ensureBuilt(path)(buildPcaBasis(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** pca_power read-out over the persisted basis (expressions identical
@@ -3112,7 +3112,7 @@ object Similarity {
   def bqCodes(spark: SparkSession, dir: String): DataFrame = {
     val path = bqCodesPath(dir)
     ensureBuilt(path)(buildBqCodes(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** Incremental encode-and-append into the persisted BQ code table:
@@ -3127,7 +3127,7 @@ object Similarity {
       newVecs: DataFrame): Unit = {
     val path = bqCodesPath(dir)
     ensureBuilt(path)(buildBqCodes(spark, dir, path))
-    val mu = broadcast(spark.read.parquet(bqThresholdsPath(dir)))
+    val mu = broadcast(Tables.read(spark, bqThresholdsPath(dir)))
     val codes = newVecs.select(col("vec_id"), col("embedding"))
       .crossJoin(mu)
       .select(col("vec_id"), bqBitsOf(col("embedding")).as("bits"))
@@ -3138,7 +3138,7 @@ object Similarity {
         sum(when(col("d") >= 32, col("b") * expr("shiftleft(1L, d - 32)"))
           .otherwise(0L)).as("hi"))
       .localCheckpoint()
-    val existing = spark.read.parquet(path)
+    val existing = Tables.read(spark, path)
       .join(broadcast(codes.select(col("vec_id"))), Seq("vec_id"),
         "left_semi")
       .select(col("vec_id"))
@@ -3494,7 +3494,7 @@ object Similarity {
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
     val path = knnGraphPath(dir)
     ensureBuilt(path)(buildKnnGraph(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   // --- append staleness receipt (r14): the kNN graph accepts
@@ -3530,7 +3530,7 @@ object Similarity {
   def appendedKnnGraph(spark: SparkSession, dir: String): DataFrame = {
     val path = appendedKnnGraphPath(dir)
     ensureBuilt(path)(buildAppendedKnnGraph(spark, dir, path))
-    spark.read.parquet(path)
+    Tables.read(spark, path)
   }
 
   /** Top-3 (q_id, neighbor_id) of a beam walk over an arbitrary edge
@@ -3670,7 +3670,7 @@ object Similarity {
       edges: DataFrame): Unit = {
     val fresh = edges.localCheckpoint() // node-set prune + anti probe
     val nodes = fresh.select(col("src")).distinct()
-    val existing = spark.read.parquet(path)
+    val existing = Tables.read(spark, path)
       .join(broadcast(nodes), Seq("src"), "left_semi")
     fresh.join(existing, Seq("src", "dst"), "left_anti")
       .write.mode("append").option("compression", "zstd").parquet(path)
@@ -3941,7 +3941,7 @@ object Similarity {
   def matryoshkaRecall(spark: SparkSession, dir: String): DataFrame = {
     val path = mrlTruthPath(dir)
     ensureBuilt(path)(buildMrlTruth(spark, dir, path))
-    val arm = spark.read.parquet(path)
+    val arm = Tables.read(spark, path)
       .filter(col("rank") <= BqK) // the artifact holds the full pool
     val exact = truthSample(spark, dir, BqK)
     MrlDims.map(d => recallMicro(exact, arm.filter(col("d") === d), BqK)
@@ -3968,7 +3968,7 @@ object Similarity {
       .localCheckpoint(false) // feeds every depth arm
     val path = mrlTruthPath(dir)
     ensureBuilt(path)(buildMrlTruth(spark, dir, path))
-    val cands = spark.read.parquet(path)
+    val cands = Tables.read(spark, path)
       .filter(col("d") === MrlServeDim)
       .select(col("q_id"), col("neighbor_id"), col("rank").as("prank"))
     val e = Tables.embeddings(spark, dir)

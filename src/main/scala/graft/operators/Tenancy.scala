@@ -49,7 +49,7 @@ object Tenancy {
     */
   def tenantView(spark: SparkSession, path: String,
       userId: Long): DataFrame =
-    spark.read.parquet(path)
+    Tables.read(spark, path)
       .filter(col("tenant_shard") === shardOf(userId) &&
         col("user_id") === userId)
 
@@ -185,7 +185,7 @@ object Tenancy {
     val shards = userIds.map(shardOf).distinct.sorted
     import spark.implicits._
     val del = broadcast(userIds.toDF("del_uid"))
-    val remaining = spark.read.parquet(path)
+    val remaining = Tables.read(spark, path)
       .filter(col("tenant_shard").isin(shards: _*))
       .join(del, col("user_id") === col("del_uid"), "left_anti")
       .repartition(col("tenant_shard"))
@@ -273,7 +273,7 @@ object Tenancy {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return
-    val withF = spark.read.parquet(path)
+    val withF = Tables.read(spark, path)
       .withColumn("_file", input_file_name())
     val touched = withF.filter(hit).select(col("_file")).distinct()
       .collect().map(_.getString(0))

@@ -15,7 +15,77 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
+
+  /** The one parquet read of the engine: `spark.read.parquet(path)`
+    * without the schema-inference job. Spark infers a parquet schema
+    * with a job (footer reads via `mergeSchemasInParallel`) on every
+    * read, even of one file. Here the schema inference returned is kept
+    * per path under a key of the path's recursive file listing (name,
+    * length, mtime) and the session settings that change inference; a
+    * read whose key matches passes it as `.schema(...)` and runs no job.
+    * An append, overwrite or rewrite changes the listing, so the next
+    * read infers again, exactly once. Only the schema is kept, never a
+    * DataFrame (whose file index would go stale).
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemas(spark, path)(
+      spark.read.parquet(path).schema)).parquet(path)
+
+  /** `derive(read(spark, path))`, computed once per version of the files
+    * under `path`: small metadata an artifact stores beside its data,
+    * read without a job while it is unchanged. One derivation per path.
+    */
+  def readOnce[T](spark: SparkSession, path: String)(
+      derive: DataFrame => T): T =
+    derived(spark, path)(derive(read(spark, path))).asInstanceOf[T]
+
+  /** Session settings that change what parquet inference returns. */
+  private val InferenceConf = Seq(NanosFlag,
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema", "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive")
+
+  /** One value per path, kept while the path's files and the inference
+    * settings stay as they were. One entry per path (a new version
+    * replaces the old), safe for `Par.build` threads; two threads that
+    * miss together both derive, which is correct, only wasted.
+    */
+  private final class PerVersion[T] {
+    private val held =
+      new java.util.concurrent.ConcurrentHashMap[String, (Any, T)]()
+
+    def apply(spark: SparkSession, path: String)(derive: => T): T =
+      version(spark, path) match {
+        case None => derive // no listing: let Spark raise its own error
+        case Some(key) =>
+          val hit = held.get(path)
+          if (hit != null && hit._1 == key) hit._2
+          else { val v = derive; held.put(path, (key, v)); v }
+      }
+  }
+
+  private val schemas = new PerVersion[org.apache.spark.sql.types.StructType]
+  private val derived = new PerVersion[Any]
+
+  /** The files under `path` as (name, length, mtime), sorted, with the
+    * inference settings; None when the path cannot be listed.
+    */
+  private def version(spark: SparkSession, path: String): Option[Any] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = Vector.newBuilder[(String, Long, Long)]
+      def walk(f: FileStatus): Unit =
+        if (f.isDirectory) fs.listStatus(f.getPath).foreach(walk)
+        else files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      walk(fs.getFileStatus(p))
+      Some((InferenceConf.map(spark.conf.getOption), files.result().sorted))
+    } catch { case _: java.io.IOException => None }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

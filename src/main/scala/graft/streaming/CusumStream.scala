@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Sessions
+import graft.sources.Tables
 
 /** Streaming CUSUM maintenance — the streaming face of `cusum_shift`
   * ([[graft.operators.Sessions.cusumShift]]): arriving events append
@@ -45,7 +46,7 @@ object CusumStream {
     * set.
     */
   def chart(spark: SparkSession, store: String): DataFrame =
-    Sessions.cusumOfDaily(spark.read.parquet(store)
+    Sessions.cusumOfDaily(Tables.read(spark, store)
       .groupBy(col("event_type"), col("day"))
       .agg(count(lit(1)).as("n"))
       .localCheckpoint())

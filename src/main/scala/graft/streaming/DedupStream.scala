@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
+import graft.sources.Tables
 
 /** Typed rows for the incremental LSH maintenance operator (top-level:
   * Spark encoders cannot reach inner classes).
@@ -152,7 +153,7 @@ object DedupStream {
   private def readOr(batch: DataFrame, path: String, ddl: String): DataFrame = {
     val spark = batch.sparkSession
     if (StreamStore.exists(spark, path))
-      spark.read.parquet(path)
+      Tables.read(spark, path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType.fromDDL(ddl))
   }

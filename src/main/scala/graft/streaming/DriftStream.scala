@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{CorpusStats, TextAnalysis}
+import graft.sources.Tables
 
 /** Streaming quality-score drift maintenance — the streaming face of
   * `quality_psi` ([[graft.operators.CorpusStats.qualityPsi]]): arriving
@@ -51,7 +52,7 @@ object DriftStream {
     */
   def psi(spark: SparkSession, store: String): DataFrame =
     CorpusStats.qualityPsiOfCounts(spark,
-      spark.read.parquet(store)
+      Tables.read(spark, store)
         .groupBy(col("source"), col("bin"))
         .agg(count(lit(1)).as("c")))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.Sessions
+import graft.sources.Tables
 
 /** Streaming sketch maintenance — the streaming face of the
   * deterministic HLL ([[graft.operators.Sessions.approxDistinct]]).
@@ -43,7 +44,7 @@ object SketchStream {
       batch.select(col("event_type"), col("user_id")))
     val merged =
       if (StreamStore.exists(spark, store))
-        spark.read.parquet(store).unionByName(fresh)
+        Tables.read(spark, store).unionByName(fresh)
           .groupBy(col("event_type"), col("bucket"))
           .agg(max(col("r")).as("r"))
       else fresh
@@ -59,6 +60,6 @@ object SketchStream {
     */
   def estimate(spark: org.apache.spark.sql.SparkSession,
       store: String): DataFrame =
-    Sessions.hllEstimateOf(spark.read.parquet(store))
+    Sessions.hllEstimateOf(Tables.read(spark, store))
       .orderBy(col("event_type"))
 }

@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.Tables
+
 /** Shared freeze/probe store plumbing for the foreachBatch sinks
   * (ScoreStream, CurateStream; DedupStream's multi-store variant reuses
   * [[exists]]). One place for the two known quirks: the store path must
@@ -30,7 +32,7 @@ private[streaming] object StreamStore {
     val fresh = batch.dropDuplicates(keys)
     val newDocs =
       if (exists(spark, store))
-        fresh.join(spark.read.parquet(store).select(keys.head, keys.tail: _*),
+        fresh.join(Tables.read(spark, store).select(keys.head, keys.tail: _*),
           keys, "left_anti")
       else fresh
     // localCheckpoint so the emptiness probe and the write share one

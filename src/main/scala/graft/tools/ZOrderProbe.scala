@@ -46,7 +46,7 @@ object ZOrderProbe {
     /** files whose [min,max] footer span intersects [lo,hi] / total */
     def filesRead(path: String, dim: String, lo: Long, hi: Long)
         : (Long, Long) = {
-      val spans = spark.read.parquet(path)
+      val spans = Tables.read(spark, path)
         .groupBy(input_file_name().as("f"))
         .agg(min(col(dim)).as("lo"), max(col(dim)).as("hi"))
       val total = spans.count()
@@ -77,12 +77,12 @@ object ZOrderProbe {
       }
     }
     val total = parquetFiles(s"$base/tenants").size
-    val user = spark.read.parquet(s"$base/tenants")
+    val user = Tables.read(spark, s"$base/tenants")
       .select(max(col("user_id"))).head.getLong(0) / 2
     val shardDir =
       s"$base/tenants/tenant_shard=${Tenancy.shardOf(user)}"
     val shardFiles = parquetFiles(shardDir).size
-    val userFiles = spark.read.parquet(shardDir)
+    val userFiles = Tables.read(spark, shardDir)
       .groupBy(input_file_name().as("f"))
       .agg(min(col("user_id")).as("lo"), max(col("user_id")).as("hi"))
       .filter(col("lo") <= user && col("hi") >= user)

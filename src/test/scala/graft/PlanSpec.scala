@@ -707,4 +707,32 @@ class PlanSpec extends SparkSpecBase {
         s"$name KeywordRules count:\n$plan")
     }
   }
+
+  test("interaction surface: props decoded by the kernel, never twice in " +
+      "one operator") {
+    import org.apache.spark.sql.catalyst.expressions.GetJsonObject
+    import graft.functions.JsonField
+    val keys = Seq("conversation_history", "conversation_context",
+      "interaction_history", "topic_interactions", "high_quality",
+      "high_quality_topic")
+    // the harness also sends high_quality a topic
+    val withTopic = Params.Namespace + "high_quality.topic"
+    val plans = keys.map(k => k -> physical(SparkEntry.queries(k)(spark, dir))) :+ {
+      spark.conf.set(withTopic, "Anxiety")
+      try "high_quality+topic" ->
+        physical(SparkEntry.queries("high_quality")(spark, dir))
+      finally spark.conf.unset(withTopic)
+    }
+    plans.foreach { case (name, plan) =>
+      val perNode = plan.collect { case n =>
+        n.expressions.flatMap(_.collect { case e => e })
+      }
+      assert(!perNode.flatten.exists(_.isInstanceOf[GetJsonObject]),
+        s"$name still parses props with get_json_object:\n$plan")
+      perNode.foreach(es => assert(es.count(_.isInstanceOf[JsonField]) <= 1,
+        s"$name evaluates the props kernel twice in one operator:\n$plan"))
+      assert(perNode.flatten.exists(_.isInstanceOf[JsonField]) ===
+        (name != "conversation_context"), name)
+    }
+  }
 }

@@ -94,4 +94,7 @@ trait SparkSpecBase extends AnyFunSuite
 
 object SparkSpecBase {
   lazy val session: SparkSession = Session.local(4)
+
+  /** The read-only sf0.01 corpus (TESTDATA.md), the oracle's scale. */
+  val Sf001: String = "/root/testdata/sf0.01"
 }

@@ -7,7 +7,11 @@ MAIN=$1; shift
 HEAP=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
   END {print (g < 2 ? 2 : g > 16 ? 16 : g) "g"}' </proc/meminfo 2>/dev/null ||
   echo 2g)}
-CP=/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')
+# The classes of the checkout this script sits in, wherever it is run
+# from, and the Spark jars its build.sbt compiles against.
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
+JARS=$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")
+CP=$ROOT/target/scala-2.13/classes:$(ls "$JARS"/*.jar | tr '\n' ':')
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
