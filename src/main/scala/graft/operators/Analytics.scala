@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.{LeastSquares, leastSquares, money, r2, r4,
+  r6, units}
 import graft.sources.Tables
 
 /** Core analytics queries over the star schema.
@@ -24,7 +26,7 @@ object Analytics {
   // double-divide the exact decimal sum and floor-round: decimal-quotient
   // scales and round-at-tie behavior differ across engines
   private def moneyAvg(c: Column, cnt: Column): Column =
-    floor(sum(c.cast("decimal(28,6)")).cast("double") / cnt * 10000 + 0.5) / 10000
+    r4(sum(c.cast("decimal(28,6)")).cast("double") / cnt)
 
   /** TPC-H Q1-ish pricing summary: scan-heavy grouped aggregation with
     * partial (map-side) aggregation; only 7 of 11 lineitem columns read.
@@ -117,10 +119,9 @@ object Analytics {
     // integer 1e-4 units via the shared floor primitive — a double→decimal
     // cast would HALF-UP on Spark but shortest-repr-round on DuckDB, and
     // a conditional subtotal can land a cent boundary on the disagreement
-    val revU = floor((col("l_extendedprice") * (lit(1) - col("l_discount")))
-      * 10000 + lit(0.5)).cast("long")
+    val revU =
+      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
     val promoU = when(col("p_type") === "ECONOMY", revU).otherwise(lit(0L))
-    val money = (u: Column) => floor(u.cast("double") / 100 + 0.5) / 100
     val l = Tables.lineitem(spark, dir)
       .select("l_partkey", "l_shipdate", "l_extendedprice", "l_discount")
     val p = Tables.part(spark, dir).select("p_partkey", "p_type")
@@ -130,8 +131,8 @@ object Analytics {
       .select(col("ship_month"),
         money(col("pu")).as("promo_revenue"),
         money(col("tu")).as("total_revenue"),
-        (floor(col("pu").cast("double") / col("tu").cast("double")
-          * 100 * 10000 + 0.5) / 10000).as("promo_pct"))
+        r4(col("pu").cast("double") / col("tu").cast("double")
+          * 100).as("promo_pct"))
       .orderBy(col("ship_month"))
   }
 
@@ -184,8 +185,8 @@ object Analytics {
       .groupBy(col("o_custkey"))
       .agg(max(col("sec")).as("last_sec"),
         count(lit(1)).as("frequency"),
-        floor(sum(col("o_totalprice").cast("decimal(28,6)")).cast("double")
-          * 100 + 0.5).cast("long").as("cents"))
+        units(sum(col("o_totalprice").cast("decimal(28,6)")).cast("double"),
+          100).as("cents"))
     val base = per.crossJoin(broadcast(
         per.agg(max(col("last_sec")).as("ref_sec"))))
       .select(col("o_custkey").as("c_custkey"),
@@ -375,8 +376,8 @@ object Analytics {
       .crossJoin(broadcast(tot))
       .select(col("part_a"), col("part_b"), col("support"),
         col("n_a"), col("n_b"),
-        (floor((col("support") * col("n_orders")).cast("double") /
-          (col("n_a") * col("n_b")).cast("double") * 10000 + 0.5) / 10000)
+        r4((col("support") * col("n_orders")).cast("double") /
+          (col("n_a") * col("n_b")).cast("double"))
           .as("lift"))
       .orderBy(col("support").desc, col("part_a"), col("part_b"))
       .limit(CopurchaseTopK)
@@ -446,9 +447,9 @@ object Analytics {
       .agg(sum(col("rev").cast("decimal(28,6)")).as("drev"))
     val w = Window.orderBy(col("day")).rangeBetween(-6, 0)
     daily.select(col("day"),
-      (floor(col("drev").cast("double") * 100 + 0.5) / 100).as("revenue"),
-      (floor(sum(col("drev")).over(w).cast("double") /
-        count(lit(1)).over(w) * 100 + 0.5) / 100).as("ma7"))
+      r2(col("drev").cast("double")).as("revenue"),
+      r2(sum(col("drev")).over(w).cast("double") /
+        count(lit(1)).over(w)).as("ma7"))
   }
 
   /** q7_volume nation pair + shipping window. Single-sourced into the
@@ -525,9 +526,8 @@ object Analytics {
     * divides the two exact longs once in double with floor-rounding.
     */
   def q8Share(spark: SparkSession, dir: String): DataFrame = {
-    val money = (u: Column) => floor(u.cast("double") / 100 + 0.5) / 100
-    val volU = floor((col("l_extendedprice") * (lit(1) - col("l_discount")))
-      * 10000 + lit(0.5)).cast("long")
+    val volU =
+      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
     val p = Tables.part(spark, dir)
       .filter(col("p_type") === Q8Type).select("p_partkey")
     val sn = Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey")
@@ -560,8 +560,8 @@ object Analytics {
       .select(col("o_year"),
         money(col("nus")).as("nation_revenue"),
         money(col("vus")).as("total_revenue"),
-        (floor(col("nus").cast("double") / col("vus").cast("double")
-          * 10000 + 0.5) / 10000).as("mkt_share"))
+        r4(col("nus").cast("double") / col("vus").cast("double"))
+          .as("mkt_share"))
       .orderBy(col("o_year"))
   }
 
@@ -595,8 +595,8 @@ object Analytics {
       .agg(sum(col("q")).as("sq"), count(lit(1)).as("cnt"))
     lp.join(st, Seq("l_partkey"))
       .filter(col("q") * col("cnt") * 5 < col("sq"))
-      .agg((floor(sum(col("l_extendedprice").cast("decimal(28,6)"))
-        .cast("double") / 7 * 100 + 0.5) / 100).as("avg_yearly"))
+      .agg(r2(sum(col("l_extendedprice").cast("decimal(28,6)"))
+        .cast("double") / 7).as("avg_yearly"))
   }
 
   val Q21TopN = 20
@@ -736,10 +736,10 @@ object Analytics {
 
   /** key_skew: the join-key distribution profiler over lineitem's
     * partkey — the operational query behind every salting/AQE-skew
-    * decision in this repo (SkewJoin's cap, the LSH bucket caps, the
-    * basket cap): top keys by row count with their share of the fact
-    * and their skew factor (count / mean count). A skew factor near 1
-    * means hash partitioning balances; a hot key's factor says how many
+    * decision in this repo (the LSH bucket caps, the basket cap): top
+    * keys by row count with their share of the fact and their skew
+    * factor (count / mean count). A skew factor near 1 means hash
+    * partitioning balances; a hot key's factor says how many
     * partitions' worth of rows land on one reducer.
     *
     * Plan: one partial-agg groupBy on the key, a 1-row totals
@@ -755,10 +755,8 @@ object Analytics {
       .limit(SkewTopK)
     top.crossJoin(broadcast(tot))
       .select(col("l_partkey"), col("cnt"),
-        (floor(col("cnt").cast("double") / col("total") * 1000000 + 0.5)
-          / 1000000).as("share"),
-        (floor(col("cnt").cast("double") * col("n_keys") / col("total")
-          * 10000 + 0.5) / 10000).as("skew"))
+        r6(col("cnt").cast("double") / col("total")).as("share"),
+        r4(col("cnt").cast("double") * col("n_keys") / col("total")).as("skew"))
       .withColumn("rank", row_number().over(
         Window.orderBy(col("cnt").desc, col("l_partkey"))))
   }
@@ -787,15 +785,14 @@ object Analytics {
     * primitive (the q14 rule) and surfaced as a 2dp double.
     */
   def q6Forecast(spark: SparkSession, dir: String): DataFrame = {
-    val revU = floor(col("l_extendedprice") * col("l_discount")
-      * 10000 + lit(0.5)).cast("long")
+    val revU = units(col("l_extendedprice") * col("l_discount"), 10000)
     Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") >= lit(Q6Start).cast("date") &&
         col("l_shipdate") < lit(Q6End).cast("date") &&
         col("l_discount").between(Q6DiscLo, Q6DiscHi) &&
         col("l_quantity") < Q6MaxQty)
       .agg(sum(revU).as("ru"), count(lit(1)).as("n_lines"))
-      .select((floor(col("ru").cast("double") / 100 + 0.5) / 100)
+      .select(money(col("ru"))
         .as("revenue"), col("n_lines"))
   }
 
@@ -831,8 +828,8 @@ object Analytics {
       .filter(col("l_returnflag") === "R")
       .select("l_orderkey", "l_extendedprice", "l_discount")
     val n = Tables.nation(spark, dir).select("n_nationkey", "n_name")
-    val revU = floor((col("l_extendedprice") * (lit(1) - col("l_discount")))
-      * 10000 + lit(0.5)).cast("long")
+    val revU =
+      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
@@ -840,9 +837,9 @@ object Analytics {
         col("n_name"))
       .agg(sum(revU).as("ru"))
       .select(col("c_custkey"), col("c_name"),
-        (floor(col("c_acctbal") * 100 + lit(0.5)) / 100).as("c_acctbal"),
+        r2(col("c_acctbal")).as("c_acctbal"),
         col("n_name"),
-        (floor(col("ru").cast("double") / 100 + 0.5) / 100).as("revenue"))
+        money(col("ru")).as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey"))
       .limit(Q10TopN)
   }
@@ -913,16 +910,15 @@ object Analytics {
     * join is planner-chosen over the (usually 1-row) winner set.
     */
   def q15TopSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val revU = floor((col("l_extendedprice") * (lit(1) - col("l_discount")))
-      * 10000 + lit(0.5)).cast("long")
+    val revU =
+      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
     val rev = Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") >= lit(Q15Start).cast("date") &&
         col("l_shipdate") < lit(Q15End).cast("date"))
       .groupBy(col("l_suppkey"))
       .agg(sum(revU).as("ru"))
       .select(col("l_suppkey"),
-        (floor(col("ru").cast("double") / 100 + 0.5) / 100)
-          .as("total_revenue"))
+        money(col("ru")).as("total_revenue"))
       .localCheckpoint(false) // feeds the global max AND the witness probe
     val mx = rev.agg(max(col("total_revenue")).as("max_revenue"))
     rev.crossJoin(broadcast(mx))
@@ -961,8 +957,8 @@ object Analytics {
     * total and the filter — localCheckpoint, the q17 rule.
     */
   def q11ImportantStock(spark: SparkSession, dir: String): DataFrame = {
-    val valU = floor((col("l_extendedprice") * (lit(1) - col("l_discount")))
-      * 10000 + lit(0.5)).cast("long")
+    val valU =
+      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
     val natSupp = Tables.supplier(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)
         .filter(col("n_name") === Q11Nation)),
@@ -991,8 +987,7 @@ object Analytics {
       .filter(col("vu").cast("decimal(38,0)") * col("np") >
         col("tot").cast("decimal(38,0)") * Q11MeanMult)
       .select(col("l_partkey"),
-        (floor(col("vu").cast("double") / 100 + 0.5) / 100)
-          .as("stock_value"))
+        money(col("vu")).as("stock_value"))
       .orderBy(col("stock_value").desc, col("l_partkey"))
   }
 
@@ -1090,11 +1085,11 @@ object Analytics {
     * double divide at the end.
     */
   def q9Profit(spark: SparkSession, dir: String): DataFrame = {
-    val revU = floor((col("l_extendedprice") * (lit(1) - col("l_discount")))
-      * 10000 + lit(0.5)).cast("long")
+    val revU =
+      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
     // per-unit cost in 1e-4 units (exact long), × integral quantity
-    val costU = floor(col("p_retailprice") * Q9CostFrac * 10000 + lit(0.5))
-      .cast("long") * floor(col("l_quantity") + lit(0.5)).cast("long")
+    val costU = units(col("p_retailprice") * Q9CostFrac, 10000) *
+      floor(col("l_quantity") + lit(0.5)).cast("long")
     val p = Tables.part(spark, dir)
       .filter(col("p_name").contains(Q9PartToken))
       .select("p_partkey", "p_retailprice")
@@ -1113,7 +1108,7 @@ object Analytics {
         year(col("o_orderdate")).as("o_year"))
       .agg(sum(revU - costU).as("pu"))
       .select(col("nation"), col("o_year"),
-        (floor(col("pu").cast("double") / 100 + 0.5) / 100).as("profit"))
+        money(col("pu")).as("profit"))
       .orderBy(col("nation"), col("o_year").desc)
   }
 
@@ -1172,10 +1167,9 @@ object Analytics {
     * the 100 TB design point); shares are 4dp-floored doubles.
     */
   def revenueConcentration(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val perCust = Tables.orders(spark, dir)
       .select(col("o_custkey"),
-        floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cu"))
+        units(col("o_totalprice"), 100).as("cu"))
       .groupBy(col("o_custkey"))
       .agg(sum(col("cu").cast("decimal(38,0)")).as("rc"))
       .select(col("o_custkey"), col("rc").cast("long").as("rc"))
@@ -1246,8 +1240,7 @@ object Analytics {
       .groupBy(col("priority"))
       .agg(max(col("n")).as("n_lines"),
         pAt(50).as("p50"), pAt(90).as("p90"), pAt(99).as("p99"),
-        (floor(max(col("sd")).cast("double") / max(col("n"))
-          * 10000 + 0.5) / 10000).as("avg_days"))
+        r4(max(col("sd")).cast("double") / max(col("n"))).as("avg_days"))
       .orderBy(col("priority"))
   }
 
@@ -1270,30 +1263,14 @@ object Analytics {
     * grid; everything after is ≤11 rows.
     */
   def discountElasticity(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val lvl = Tables.lineitem(spark, dir)
-      .select(floor(col("l_discount") * 100 + lit(0.5)).cast("long")
-        .as("xu"),
-        floor(col("l_quantity") * 100 + lit(0.5)).cast("long").as("qu"))
+      .select(units(col("l_discount"), 100).as("xu"),
+        units(col("l_quantity"), 100).as("qu"))
       .groupBy(col("xu"))
       .agg(count(lit(1)).as("nl"), sum(col("qu")).as("sq"))
       .select(col("xu"),
-        floor(col("sq").cast("double") / col("nl") / 100 * 1000000
-          + lit(0.5)).cast("long").as("yu"))
-    val m = lvl.agg(count(lit(1)).as("n"),
-      sum(col("xu")).as("sx"), sum(col("yu")).as("sy"),
-      sum(col("xu") * col("yu")).as("sxy"),
-      sum(col("xu") * col("xu")).as("sxx"),
-      sum(col("yu") * col("yu")).as("syy"))
-    val d = (c: Column) => c.cast("decimal(38,0)")
-    val num = (d(col("n")) * col("sxy") - d(col("sx")) * col("sy"))
-      .cast("double")
-    val dx = (d(col("n")) * col("sxx") - d(col("sx")) * col("sx"))
-      .cast("double")
-    val dy = (d(col("n")) * col("syy") - d(col("sy")) * col("sy"))
-      .cast("double")
-    val icNum = (d(col("sy")) * col("sxx") - d(col("sx")) * col("sxy"))
-      .cast("double")
+        units(col("sq").cast("double") / col("nl") / 100, 1000000).as("yu"))
+    val LeastSquares(m, num, dx, dy, icNum) = leastSquares(lvl)
     m.select(col("n").as("n_levels"),
       when(col("n") > 1, r6(num / dx / 10000)).as("slope"),
       when(col("n") > 1, r6(icNum / dx / 1000000)).as("intercept"),
@@ -1370,11 +1347,10 @@ object Analytics {
     * a 1-row rollup.
     */
   def giniRevenue(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val d38 = (c: Column) => c.cast("decimal(38,0)")
     val perCust = Tables.orders(spark, dir)
       .select(col("o_custkey"),
-        floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cu"))
+        units(col("o_totalprice"), 100).as("cu"))
       .groupBy(col("o_custkey"))
       .agg(sum(col("cu")).as("rc"))
     val grid = perCust.groupBy(col("rc")).agg(count(lit(1)).as("c"))
@@ -1404,11 +1380,10 @@ object Analytics {
     * no single-partition window) + a 10-row boundary join.
     */
   def lorenzCurve(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val d38 = (c: Column) => c.cast("decimal(38,0)")
     val grid = Tables.orders(spark, dir)
       .select(col("o_custkey"),
-        floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cu"))
+        units(col("o_totalprice"), 100).as("cu"))
       .groupBy(col("o_custkey")).agg(sum(col("cu")).as("rc"))
       .groupBy(col("rc")).agg(count(lit(1)).as("c"))
     val cum = valueGridCum(grid)
@@ -1444,10 +1419,9 @@ object Analytics {
     * join on the day key, one partial agg per lag.
     */
   def acfRevenue(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val daily = Tables.orders(spark, dir)
       .select(datediff(col("o_orderdate"), lit("1970-01-01")).as("day"),
-        floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cu"))
+        units(col("o_totalprice"), 100).as("cu"))
       .groupBy(col("day"))
       .agg(floor(sum(col("cu")).cast("double") / 100 + lit(0.5))
         .cast("long").as("xu"))
@@ -1484,8 +1458,6 @@ object Analytics {
     * Scale shape: one map pass to a 9-key partial agg.
     */
   def benfordCheck(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val observed = Tables.orders(spark, dir)
       .select(expr("floor(o_totalprice * 100 + 0.5) div 100").as("du"))
       .filter(col("du") >= 1)
@@ -1512,10 +1484,9 @@ object Analytics {
     // per-digit terms round to 1e-6 units and sum exactly (a raw
     // double Σ would be partition-order dependent — the decSum lesson)
     val chi2 = broadcast(scored
-      .select(floor(((col("n_obs") - col("exp_share") * col("n"))
+      .select(units((col("n_obs") - col("exp_share") * col("n"))
         * (col("n_obs") - col("exp_share") * col("n"))
-        / (col("exp_share") * col("n"))) * 1000000 + lit(0.5))
-        .cast("long").as("t6"))
+        / (col("exp_share") * col("n")), 1000000).as("t6"))
       .agg(r4(sum(col("t6")).cast("double") / 1000000).as("chi2"))
       .localCheckpoint(false))
     scored.crossJoin(chi2)
@@ -1544,16 +1515,13 @@ object Analytics {
     * central values).
     */
   def theilSen(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val lvl = Tables.lineitem(spark, dir)
-      .select(floor(col("l_discount") * 100 + lit(0.5)).cast("long")
-        .as("xu"),
-        floor(col("l_quantity") * 100 + lit(0.5)).cast("long").as("qu"))
+      .select(units(col("l_discount"), 100).as("xu"),
+        units(col("l_quantity"), 100).as("qu"))
       .groupBy(col("xu"))
       .agg(count(lit(1)).as("nl"), sum(col("qu")).as("sq"))
       .select(col("xu"),
-        floor(col("sq").cast("double") / col("nl") / 100 * 1000000
-          + lit(0.5)).cast("long").as("yu"))
+        units(col("sq").cast("double") / col("nl") / 100, 1000000).as("yu"))
       .localCheckpoint(false) // feeds the pair join and the residual pass
     val a = lvl.select(col("xu").as("xa"), col("yu").as("ya"))
     val b = lvl.select(col("xu").as("xb"), col("yu").as("yb"))
@@ -1614,7 +1582,7 @@ object Analytics {
 
   def paretoFront(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.part(spark, dir).select(col("p_partkey"),
-      floor(col("p_retailprice") * 100 + lit(0.5)).cast("long").as("pu"),
+      units(col("p_retailprice"), 100).as("pu"),
       col("p_size").cast("long").as("size"))
     def survivors(df: DataFrame, parts: Seq[Column]): DataFrame = {
       val wLower = Window.partitionBy(parts: _*).orderBy(col("pu"))
@@ -1660,10 +1628,9 @@ object Analytics {
     * 100 TB the grid grows like the calendar, not the data.
     */
   def changepoint(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val daily = Tables.orders(spark, dir)
       .select(datediff(col("o_orderdate"), lit("1970-01-01")).as("day"),
-        floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("cu"))
+        units(col("o_totalprice"), 100).as("cu"))
       .groupBy(col("day"))
       .agg(floor(sum(col("cu")).cast("double") / 100 + lit(0.5))
         .cast("long").as("xu"))

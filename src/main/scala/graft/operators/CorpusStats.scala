@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.{LeastSquares, leastSquares, r4, r6, units}
 import graft.sources.Tables
 
 /** Corpus-level statistics for training-mix engineering — the steps that
@@ -39,8 +40,6 @@ object CorpusStats {
     */
   val LangTargets: Seq[(String, Double)] = Seq(
     "en" -> 0.50, "de" -> 0.15, "fr" -> 0.15, "es" -> 0.10, "zh" -> 0.10)
-
-  private def rnd6(c: Column): Column = floor(c * 1000000 + 0.5) / 1000000
 
   /** The persisted per-document stats artifact (doc-stats-v1): doc_id,
     * lang, source, n_chars, the three token budgets (normalized /
@@ -96,7 +95,6 @@ object CorpusStats {
     * partial agg.
     */
   def qualityByLength(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     docStats(spark, dir)
       .select(col("toks_norm").as("toks"),
         col("quality").cast("decimal(18,4)").as("q"),
@@ -182,7 +180,6 @@ object CorpusStats {
     * 6dp after (the exp/ln precedent).
     */
   def cooccurPmi(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val sw = array(RefVocab.enStopwords.map(lit): _*)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     // filter() is a HOF: the Generate goes interpreted, so its child
@@ -246,10 +243,10 @@ object CorpusStats {
       element_at(typedlit(LangTargets.toMap), col("lang")), lit(0.0))
     per.crossJoin(broadcast(total))
       .select(col("lang"), col("n_docs"), col("tokens"),
-        rnd6(col("tokens").cast("double") / col("total_tokens"))
+        r6(col("tokens").cast("double") / col("total_tokens"))
           .as("natural_share"),
         target.as("target_share"),
-        rnd6(target * col("total_tokens").cast("double") / col("tokens"))
+        r6(target * col("total_tokens").cast("double") / col("tokens"))
           .as("sample_factor"),
         floor(target * col("total_tokens").cast("double"))
           .cast("long").as("planned_tokens"))
@@ -322,19 +319,18 @@ object CorpusStats {
     val tot = per.agg(sum(col("n_docs")).as("total"))
     val up = per.crossJoin(broadcast(tot))
       .select(col("source"), col("n_docs"),
-        rnd6(col("n_docs").cast("double") / col("total")).as("share"))
+        r6(col("n_docs").cast("double") / col("total")).as("share"))
       .select(col("source"), col("n_docs"), col("share"),
         when(col("share") > 0,
-          rnd6(exp(lit(tau) * log(col("share")))))
+          r6(exp(lit(tau) * log(col("share")))))
           .otherwise(lit(0.0)).cast("decimal(18,6)").as("u"))
       .localCheckpoint(false) // feeds the denominator AND the final select
     val denom = up.agg(sum(col("u")).as("du"))
     up.crossJoin(broadcast(denom))
       .select(col("source"), col("n_docs"), col("share"),
-        rnd6(col("u").cast("double") / col("du").cast("double"))
-          .as("t_weight"))
+        r6(col("u").cast("double") / col("du").cast("double")).as("t_weight"))
       .withColumn("boost",
-        floor(col("t_weight") / col("share") * 10000 + 0.5) / 10000)
+        r4(col("t_weight") / col("share")))
   }
 
   /** The τ grid mix_sensitivity sweeps (1.0 = natural distribution, the
@@ -390,7 +386,6 @@ object CorpusStats {
     * double expression over exact inputs (exp sanctioned).
     */
   def epochPlan(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val perSrc = docStats(spark, dir)
       .select(col("source"), col("toks_ws").as("t"))
       .groupBy(col("source")).agg(sum(col("t")).as("n_tokens"))
@@ -477,7 +472,7 @@ object CorpusStats {
       .join(corpus, "bin")
       .crossJoin(broadcast(nTot))
       .select(col("source"), col("n"),
-        rnd6((p - q) * log(p / q)).cast("decimal(18,6)").as("term"))
+        r6((p - q) * log(p / q)).cast("decimal(18,6)").as("term"))
       .groupBy(col("source"))
       .agg(max(col("n")).as("n_docs"), sum(col("term")).as("psi"))
       .select(col("source"), col("n_docs"),
@@ -725,8 +720,8 @@ object CorpusStats {
       .select(col("doc_id").as("pdid"), col("avg_nll"))
     val j = q.join(p, col("doc_id") === col("pdid"))
       .select(col("lang"),
-        floor(col("score") * 10000 + lit(0.5)).cast("long").as("xu"),
-        floor(col("avg_nll") * 10000 + lit(0.5)).cast("long").as("yu"))
+        units(col("score"), 10000).as("xu"),
+        units(col("avg_nll"), 10000).as("yu"))
     val d = (c: Column) => c.cast("decimal(38,0)")
     val m = j.groupBy(col("lang")).agg(count(lit(1)).as("n"),
       sum(d(col("xu"))).as("sx"), sum(d(col("yu"))).as("sy"),
@@ -741,7 +736,7 @@ object CorpusStats {
       .cast("double")
     m.select(col("lang"), col("n").as("n_docs"),
       when(col("n") > 1 && dx =!= 0.0 && dy =!= 0.0,
-        floor(num / sqrt(dx * dy) * 10000 + lit(0.5)) / 10000)
+        r4(num / sqrt(dx * dy)))
         .as("corr"))
       .orderBy(col("lang"))
   }
@@ -798,10 +793,9 @@ object CorpusStats {
     val cy = c.groupBy(col("signal"), col("keep"))
       .agg(sum(col("c")).as("cy"))
     val nt = c.groupBy(col("signal")).agg(sum(col("c")).as("nt"))
-    val tu = floor(col("c").cast("double") / col("nt") *
+    val tu = units(col("c").cast("double") / col("nt") *
       log(col("c").cast("double") / col("cb") *
-        (col("nt").cast("double") / col("cy"))) * 1000000 + 0.5)
-      .cast("long")
+        (col("nt").cast("double") / col("cy"))), 1000000)
     c.join(cb, Seq("signal", "bin")).join(cy, Seq("signal", "keep"))
       .join(nt, Seq("signal"))
       .select(col("signal"), col("nt"), tu.as("tu"))
@@ -989,8 +983,8 @@ object CorpusStats {
         log(col("c1w2").cast("double") / (lit(BackoffAlpha) * col("c2bo"))))
       .otherwise(log((col("nn") + col("v")).cast("double") /
         (lit(BackoffAlpha2) * (coalesce(col("c1w3"), lit(0L)) + lit(1)))))
-    val part = (col("n") * rnd6(term).cast("decimal(18,6)")).as("part")
-    val avg = rnd6(col("nll_sum").cast("double") / col("n_trigrams"))
+    val part = (col("n") * r6(term).cast("decimal(18,6)")).as("part")
+    val avg = r6(col("nll_sum").cast("double") / col("n_trigrams"))
     docTrigramsOf(docs)
       .join(t3, Seq("lang", "w1", "w2", "w3"), "left")
       .join(b2.select(col("lang"), col("w1"), col("w2"),
@@ -1009,7 +1003,7 @@ object CorpusStats {
       .withColumn("avg_nll", avg)
       .select(col("doc_id"), col("lang"), col("n_trigrams"),
         col("avg_nll"),
-        (floor(exp(col("avg_nll")) * 10000 + 0.5) / 10000).as("ppl"))
+        r4(exp(col("avg_nll"))).as("ppl"))
   }
 
   /** corpus_card short-document threshold (whitespace tokens).
@@ -1034,7 +1028,6 @@ object CorpusStats {
     * exact decimal sum once in double.
     */
   def corpusCard(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     docStats(spark, dir)
       .select(col("lang"), col("source"), col("n_chars"),
         col("toks_norm").as("toks"),
@@ -1063,7 +1056,6 @@ object CorpusStats {
     * bounded by |sources|×|langs| intermediate rows).
     */
   def sourceCard(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     docStats(spark, dir)
       .select(col("lang"), col("source"), col("n_chars"),
         col("toks_norm").as("toks"),
@@ -1096,7 +1088,6 @@ object CorpusStats {
     * floor-rounded; zero denominators emit 0.
     */
   def tokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     def ratio(num: Column, den: Column) =
       when(den > 0, r4(num.cast("double") / den)).otherwise(0.0)
     docStats(spark, dir)
@@ -1128,7 +1119,6 @@ object CorpusStats {
     * language totals re-aggregate the GRID and ride back broadcast.
     */
   def lengthHist(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val g = docStats(spark, dir)
       .select(col("lang"), col("toks_norm").as("toks"))
       .select(col("lang"), col("toks"),
@@ -1176,7 +1166,7 @@ object CorpusStats {
     val st = sb.groupBy(col("source")).agg(sum(col("c")).as("ns"))
     val cb = sb.groupBy(col("bin")).agg(sum(col("c")).as("cc"))
     val nc = sb.agg(sum(col("c")).as("n_corpus"))
-    val t = (col("c") * rnd6(
+    val t = (col("c") * r6(
       log(col("c").cast("double") * col("n_corpus").cast("double")) -
         log(col("ns").cast("double") * col("cc").cast("double")))
       .cast("decimal(18,6)")).as("t")
@@ -1187,7 +1177,7 @@ object CorpusStats {
       .groupBy(col("source"), col("ns"))
       .agg(sum(col("t")).as("ts"))
       .select(col("source"), col("ns").as("n_docs"),
-        rnd6(col("ts").cast("double") / col("ns")).as("kl_vs_corpus"))
+        r6(col("ts").cast("double") / col("ns")).as("kl_vs_corpus"))
       .orderBy(col("source"))
   }
 
@@ -1242,7 +1232,7 @@ object CorpusStats {
   private[graft] def dsirScore(docs: DataFrame, bkt: DataFrame)
       : DataFrame = {
     val tot = bkt.agg(sum(col("tc")).as("tt"), sum(col("rc")).as("rt"))
-    val lr = rnd6(
+    val lr = r6(
       log((coalesce(col("tc"), lit(0L)) + 1).cast("double") /
         (col("tt") + lit(DsirBuckets))) -
       log((coalesce(col("rc"), lit(0L)) + 1).cast("double") /
@@ -1255,8 +1245,7 @@ object CorpusStats {
       .groupBy(col("doc_id"))
       .agg(sum(col("n")).as("n_feats"), sum(col("part")).as("lw_sum"))
       .select(col("doc_id"), col("n_feats"),
-        (floor(col("lw_sum").cast("double") * 1000000 + 0.5) / 1000000)
-          .as("log_weight"))
+        r6(col("lw_sum").cast("double")).as("log_weight"))
   }
 
   /** dsir_select parameters: sample size and the Gumbel-noise seed.
@@ -1290,7 +1279,7 @@ object CorpusStats {
     val h = conv(substring(md5(concat(col("doc_id").cast("string"),
       lit(":" + DsirSelectSeed))), 1, 15), 16, 10).cast("long")
     val u = (h.cast("double") + lit(0.5)) / lit(1.152921504606846976e18)
-    val g = floor(-log(-log(u)) * 1000000 + lit(0.5)) / 1000000
+    val g = r6(-log(-log(u)))
     val top = dsirWeights(spark, dir)
       .withColumn("key", col("log_weight") + g)
       .orderBy(col("key").desc, col("doc_id"))
@@ -1298,7 +1287,7 @@ object CorpusStats {
     val wr = Window.orderBy(col("key").desc, col("doc_id"))
     top.withColumn("rank", row_number().over(wr))
       .select(col("doc_id"), col("log_weight"),
-        (floor(col("key") * 1000000 + lit(0.5)) / 1000000).as("gkey"),
+        r6(col("key")).as("gkey"),
         col("rank"))
   }
 
@@ -1543,7 +1532,6 @@ object CorpusStats {
     }
     val enc = vocab.select(col("tok").as("etok"),
       size(split(trim(seqFinal, S + E), E + S)).cast("long").as("n_sub"))
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     dt.join(enc, col("tok") === col("etok"))
       .groupBy(col("lang"))
       .agg(count_distinct(col("doc_id")).as("n_docs"),
@@ -1568,11 +1556,11 @@ object CorpusStats {
     // per-(doc, bigram) nll contribution: multiplicity × the 6dp-rounded
     // ln((c1 + V)/(c2 + 1)), exact in DECIMAL
     val part = (col("n") *
-      rnd6(log(
+      r6(log(
         (coalesce(col("c1"), lit(0L)) + col("v")).cast("double") /
           (coalesce(col("c2"), lit(0L)) + lit(1))))
         .cast("decimal(18,6)")).as("part")
-    val avg = rnd6(col("nll_sum").cast("double") / col("n_bigrams"))
+    val avg = r6(col("nll_sum").cast("double") / col("n_bigrams"))
     docBigramsOf(docs)
       .join(lm, Seq("lang", "w1", "w2"), "left")
       .join(c1, Seq("lang", "w1"), "left")
@@ -1582,7 +1570,7 @@ object CorpusStats {
       .agg(sum(col("n")).as("n_bigrams"), sum(col("part")).as("nll_sum"))
       .withColumn("avg_nll", avg)
       .select(col("doc_id"), col("lang"), col("n_bigrams"), col("avg_nll"),
-        (floor(exp(col("avg_nll")) * 10000 + 0.5) / 10000).as("ppl"))
+        r4(exp(col("avg_nll"))).as("ppl"))
   }
 
   /** token_entropy: per-language Shannon entropy of the unigram
@@ -1609,15 +1597,15 @@ object CorpusStats {
     val per = types.groupBy(col("lang"))
       .agg(sum(col("c")).as("n_tokens"),
         count(lit(1)).as("vocab"),
-        sum(col("c") * rnd6(log(col("c").cast("double")))
+        sum(col("c") * r6(log(col("c").cast("double")))
           .cast("decimal(18,6)")).as("clogc"))
     val ent = log(col("n_tokens").cast("double")) -
       col("clogc").cast("double") / col("n_tokens")
     per.select(col("lang"), col("n_tokens"), col("vocab"),
-      rnd6(ent).as("entropy"),
+      r6(ent).as("entropy"),
       // vocab=1 ⇒ H=0 and ln(V)=0: define the normalized form as 0
       // instead of 0/0 (mirrored in the oracle's CASE)
-      when(col("vocab") > 1, rnd6(ent / log(col("vocab").cast("double"))))
+      when(col("vocab") > 1, r6(ent / log(col("vocab").cast("double"))))
         .otherwise(lit(0.0)).as("entropy_norm"))
       .orderBy(col("lang"))
   }
@@ -1695,34 +1683,18 @@ object CorpusStats {
   def heapsLaw(spark: SparkSession, dir: String): DataFrame = {
     val pts = vocabGrowth(spark, dir)
       .filter(col("n_tokens") > 0 && col("vocab") > 0)
-    val xu = floor(log(col("n_tokens").cast("double")) * 1000000 + 0.5)
-      .cast("long")
-    val yu = floor(log(col("vocab").cast("double")) * 1000000 + 0.5)
-      .cast("long")
-    val m = pts.select(xu.as("xu"), yu.as("yu"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("xu")).as("sx"), sum(col("yu")).as("sy"),
-        sum(col("xu") * col("yu")).as("sxy"),
-        sum(col("xu") * col("xu")).as("sxx"),
-        sum(col("yu") * col("yu")).as("syy"))
-    val d = (c: Column) => c.cast("decimal(38,0)")
-    val num = (d(col("n")) * col("sxy") - d(col("sx")) * col("sy"))
-      .cast("double")
-    val dx = (d(col("n")) * col("sxx") - d(col("sx")) * col("sx"))
-      .cast("double")
-    val dy = (d(col("n")) * col("syy") - d(col("sy")) * col("sy"))
-      .cast("double")
-    val icNum = (d(col("sy")) * col("sxx") - d(col("sx")) * col("sxy"))
-      .cast("double")
+    val xu = units(log(col("n_tokens").cast("double")), 1000000)
+    val yu = units(log(col("vocab").cast("double")), 1000000)
+    val LeastSquares(m, num, dx, dy, icNum) =
+      leastSquares(pts.select(xu.as("xu"), yu.as("yu")))
     // distinct cumulative N make dx>0 at n>1; an all-flat V (dy=0)
     // degenerates r² alone — the zipfFit guard split, same reasons
     m.select(col("n").as("n_points"),
-      when(col("n") > 1, rnd6(num / dx)).as("beta"),
-      when(col("n") > 1, rnd6(icNum / dx / 1000000)).as("ln_k"),
+      when(col("n") > 1, r6(num / dx)).as("beta"),
+      when(col("n") > 1, r6(icNum / dx / 1000000)).as("ln_k"),
       when(col("n") > 1,
-        floor(exp(icNum / dx / 1000000) * 10000 + 0.5) / 10000).as("k"),
-      when(col("n") > 1 && dy =!= 0.0, rnd6(num * num / (dx * dy)))
-        .as("r2"))
+        r4(exp(icNum / dx / 1000000))).as("k"),
+      when(col("n") > 1 && dy =!= 0.0, r6(num * num / (dx * dy))).as("r2"))
   }
 
   /** zipf_fit regression window: the head of the rank-frequency curve.
@@ -1761,28 +1733,13 @@ object CorpusStats {
     // k rows from here on — the unpartitioned window is deliberate
     val ranked = top.withColumn("rank", row_number().over(
       Window.orderBy(col("cnt").desc, col("tok"))))
-    val xu = floor(log(col("rank").cast("double")) * 1000000 + 0.5)
-      .cast("long")
-    val yu = floor(log(col("cnt").cast("double")) * 1000000 + 0.5)
-      .cast("long")
-    val m = ranked.select(xu.as("xu"), yu.as("yu"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("xu")).as("sx"), sum(col("yu")).as("sy"),
-        sum(col("xu") * col("yu")).as("sxy"),
-        sum(col("xu") * col("xu")).as("sxx"),
-        sum(col("yu") * col("yu")).as("syy"))
-    val d = (c: Column) => c.cast("decimal(38,0)")
-    val num = (d(col("n")) * col("sxy") - d(col("sx")) * col("sy"))
-      .cast("double")
-    val dx = (d(col("n")) * col("sxx") - d(col("sx")) * col("sx"))
-      .cast("double")
-    val dy = (d(col("n")) * col("syy") - d(col("sy")) * col("sy"))
-      .cast("double")
+    val xu = units(log(col("rank").cast("double")), 1000000)
+    val yu = units(log(col("cnt").cast("double")), 1000000)
     // intercept numerator carries 1e18-scaled units over the 1e12-scaled
     // denominator, hence the extra 1e6 divide; the op ORDER is mirrored
     // verbatim in the oracle so every IEEE step is bit-identical
-    val icNum = (d(col("sy")) * col("sxx") - d(col("sx")) * col("sxy"))
-      .cast("double")
+    val LeastSquares(m, num, dx, dy, icNum) =
+      leastSquares(ranked.select(xu.as("xu"), yu.as("yu")))
     // n=1 degenerates every moment difference to 0/0 (NaN — and the two
     // engines disagree on what their floor paths make of it); a
     // single-term head has no fit, so the stats are NULL (the
@@ -1792,10 +1749,9 @@ object CorpusStats {
     // zeroes dy and r² alone degenerates to 0/0, so r² carries its own
     // guard. Slope/intercept stay well-defined there (a flat line).
     m.select(col("n").as("n_terms"),
-      when(col("n") > 1, rnd6(num / dx)).as("slope"),
-      when(col("n") > 1, rnd6(icNum / dx / 1000000)).as("intercept"),
-      when(col("n") > 1 && dy =!= 0.0, rnd6(num * num / (dx * dy)))
-        .as("r2"))
+      when(col("n") > 1, r6(num / dx)).as("slope"),
+      when(col("n") > 1, r6(icNum / dx / 1000000)).as("intercept"),
+      when(col("n") > 1 && dy =!= 0.0, r6(num * num / (dx * dy))).as("r2"))
   }
 
   /** corpus_cube: the CUBE rollup of corpus volume over (lang, source)
@@ -1817,8 +1773,7 @@ object CorpusStats {
       .cube(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("chars"),
-        (floor(sum(col("n_chars")).cast("double") / count(lit(1))
-          * 10000 + 0.5) / 10000).as("avg_chars"),
+        r4(sum(col("n_chars")).cast("double") / count(lit(1))).as("avg_chars"),
         grouping_id(col("lang"), col("source")).cast("int").as("lvl"))
       .orderBy(col("lvl"), col("lang"), col("source"))
 
@@ -1846,7 +1801,6 @@ object CorpusStats {
     * window, a ≤|langs| rollup.
     */
   def signalAuc(spark: SparkSession, dir: String): DataFrame = {
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     // merge hint: the gate side is a SMALL SCAN under an expensive
     // lambda projection — byte estimates would broadcast it and
     // evaluate the whole gate single-threaded on the build side (the
@@ -1856,7 +1810,7 @@ object CorpusStats {
       .select(col("doc_id").as("kdid"), col("keep"))
     val j = perplexityScore(spark, dir)
       .select(col("doc_id"), col("lang"),
-        floor(col("avg_nll") * 10000 + lit(0.5)).cast("long").as("yu"))
+        units(col("avg_nll"), 10000).as("yu"))
       .join(keep.hint("merge"), col("doc_id") === col("kdid"))
     val h = j.groupBy(col("lang"), col("yu"))
       .agg(sum(when(col("keep"), 1L).otherwise(0L)).as("pv"),
@@ -1874,7 +1828,7 @@ object CorpusStats {
             + col("pv") + col("nv") + 1)).as("r2"))
     g.select(col("lang"), col("np").as("n_pos"), col("nn").as("n_neg"),
       when(col("np") > 0 && col("nn") > 0,
-        rnd6((col("r2") - d(col("np")) * (col("np") + 1)).cast("double")
+        r6((col("r2") - d(col("np")) * (col("np") + 1)).cast("double")
           / 2 / col("np").cast("double") / col("nn").cast("double")))
         .as("auc"))
       .orderBy(col("lang"))
@@ -1895,7 +1849,6 @@ object CorpusStats {
     * Output is ≤|sources| rows; both shuffles key on (source, gram).
     */
   def ngramDiversity(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val toks = Tables.cpuPartition(
       Tables.documents(spark, dir)
@@ -1972,7 +1925,6 @@ object CorpusStats {
     * a per-source rollup — the burstiness cost class.
     */
   def hapaxRatio(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     Tables.cpuPartition(
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text")),
@@ -2021,7 +1973,6 @@ object CorpusStats {
     * frequency-class frame (≪ vocabulary) self-joined once.
     */
   def goodTuring(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     val fof = Tables.cpuPartition(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
@@ -2073,7 +2024,6 @@ object CorpusStats {
     * on the surviving rows.
     */
   def chi2Terms(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val docs = Tables.cpuPartition(
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text")),
@@ -2109,7 +2059,6 @@ object CorpusStats {
   }
 
   def burstiness(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val docs = Tables.cpuPartition(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       col("doc_id"))
@@ -2153,7 +2102,6 @@ object CorpusStats {
     * membership join. Source rollups are |sources|-bounded.
     */
   def oovRate(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val st = Tables.cpuPartition(
       Tables.documents(spark, dir).select(col("source"), col("text")),
       col("source"))
@@ -2202,7 +2150,6 @@ object CorpusStats {
     * against the exact corpus totals. Flat at any corpus size.
     */
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val counts = Tables.cpuPartition(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       col("doc_id"))
@@ -2280,7 +2227,6 @@ object CorpusStats {
     * |sources|×|langs|-bounded. Flat.
     */
   def sourceLangAssoc(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val obs = Tables.documents(spark, dir)
       .select(col("source"), col("lang"))
       .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("o"))
@@ -2296,8 +2242,8 @@ object CorpusStats {
       .crossJoin(tot)
       .select(coalesce(col("o"), lit(0L)).as("o"), e.as("e"),
         col("nn"), col("r"), col("c"))
-    val t6 = floor((col("o") - col("e")) * (col("o") - col("e"))
-      / col("e") * 1000000 + 0.5).cast("long")
+    val t6 = units((col("o") - col("e")) * (col("o") - col("e"))
+      / col("e"), 1000000)
     val chi = col("st6").cast("double") / 1000000
     val minrc = least(col("r"), col("c")) - 1
     grid.groupBy(col("nn"), col("r"), col("c"))
@@ -2326,7 +2272,6 @@ object CorpusStats {
     * grid. Flat.
     */
   def tokenGini(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val d38 = (c: Column) => c.cast("decimal(38,0)")
     val counts = Tables.cpuPartition(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
@@ -2389,13 +2334,11 @@ object CorpusStats {
       .withColumn("xmin", min(col("cnt")).over(Window.partitionBy(lit(0))))
     val m = ranked.filter(col("r") < col("nt"))
       .select(col("nt"), col("xmin"),
-        floor(log(col("cnt").cast("double") / col("xmin")) * 1000000
-          + 0.5).cast("long").as("t6"))
+        units(log(col("cnt").cast("double") / col("xmin")), 1000000).as("t6"))
       .groupBy(col("nt"), col("xmin"))
       .agg(count(lit(1)).as("k"), sum(col("t6")).as("st6"))
     val a = col("k").cast("double") /
       (col("st6").cast("double") / 1000000)
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     m.select(col("k").as("k_used"), col("xmin"),
       when(col("st6") > 0, r6(a)).as("alpha"),
       when(col("st6") > 0, r6(a / sqrt(col("k").cast("double"))))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.{r4, r6, units}
 import graft.sources.Tables
 
 /** Corpus-curation operators — the steps between "raw crawl" and
@@ -191,8 +192,8 @@ object Curation {
         coalesce(col("n_hit_shingles"), lit(0L)).as("n_hit_shingles"),
         coalesce(col("n_train_docs"), lit(0L)).as("n_train_docs"),
         coalesce(col("n_collisions"), lit(0L)).as("n_collisions"),
-        (floor(coalesce(col("n_hit_shingles"), lit(0L)).cast("double")
-          / col("n_shingles") * 10000 + lit(0.5)) / 10000)
+        r4(coalesce(col("n_hit_shingles"), lit(0L)).cast("double")
+          / col("n_shingles"))
           .as("contam_frac"))
       .orderBy(col("bench_id"))
   }
@@ -256,7 +257,6 @@ object Curation {
     * (graft.streaming.CurateStream).
     */
   private[graft] def qualityFilterOf(docs: DataFrame): DataFrame = {
-    def rnd4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val t = filter(split(col("text"), " "), x => x =!= "")
     val tl = filter(split(lower(col("text")), " "), x => x =!= "")
     val nWords = size(t)
@@ -267,18 +267,18 @@ object Curation {
     val g2 = zip_with(slice(t, lit(1), g2len), slice(t, lit(2), g2len),
       (a, b) => concat_ws(" ", a, b))
     val dup2 = when(size(g2) > 0,
-      floor((lit(1.0) - size(array_distinct(g2)).cast("double")
-        / size(g2)) * 10000 + 0.5) / 10000).otherwise(0.0)
+      r4(lit(1.0) - size(array_distinct(g2)).cast("double")
+        / size(g2))).otherwise(0.0)
     val toxicHits = size(filter(tl,
       x => array_contains(array(RefVocab.toxicLexicon.map(lit): _*), x)))
     val toxicScore = when(nWords >= RefVocab.toxicMinWords,
-      rnd4(least(lit(1.0), toxicHits * 10.0 / nWords))).otherwise(0.0)
+      r4(least(lit(1.0), toxicHits * 10.0 / nWords))).otherwise(0.0)
     val sig = docs
       .select(col("doc_id"),
         nWords.cast("int").as("n_words"),
         // 0-word guard: 0/0 is NaN, and Spark's floor path collapses it
         // to 0.0 while DuckDB propagates NaN — define the ratio as 0
-        when(nWords > 0, rnd4(stopHits.cast("double") / nWords))
+        when(nWords > 0, r4(stopHits.cast("double") / nWords))
           .otherwise(0.0).as("stopword_ratio"),
         dup2.as("dup_2gram_frac"),
         toxicScore.as("toxic_score"))
@@ -338,11 +338,11 @@ object Curation {
       .select(col("shard"), col("n_docs"), col("total_tokens"),
         expr(s"(greatest(total_tokens, 1) - 1) div $B + 1").as("n_bins"),
         col("straddle_docs"),
-        (floor(col("straddle_docs").cast("double") / col("n_docs")
-          * 10000 + lit(0.5)) / 10000).as("straddle_frac"),
-        (floor(col("total_tokens").cast("double")
-          / (expr(s"(greatest(total_tokens, 1) - 1) div $B + 1") * B)
-          * 10000 + lit(0.5)) / 10000).as("fill_ratio"))
+        r4(col("straddle_docs").cast("double") / col("n_docs"))
+          .as("straddle_frac"),
+        r4(col("total_tokens").cast("double")
+          / (expr(s"(greatest(total_tokens, 1) - 1) div $B + 1") * B))
+          .as("fill_ratio"))
       .orderBy(col("shard"))
   }
 
@@ -384,7 +384,6 @@ object Curation {
     * truth arm is the decontaminate join this filter would gate.
     */
   def bloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val sh = Dedup.shingleRows(spark, dir)
     val isBench = pmod(col("doc_id"), lit(ContamMod)) === ContamSlot
     val benchG = sh.filter(isBench).select(col("g")).distinct()
@@ -411,11 +410,11 @@ object Curation {
       .crossJoin(truth.agg(count(lit(1)).as("n_true")))
       .select(col("n_train_shingles"), col("n_bench_shingles"),
         col("bits_set"),
-        rnd6(col("bits_set").cast("double") / BloomBits).as("load_factor"),
+        r6(col("bits_set").cast("double") / BloomBits).as("load_factor"),
         col("n_bloom_pos"), col("n_true"),
         (col("n_bloom_pos") - col("n_true")).as("n_false_pos"),
         when(col("n_train_shingles") > col("n_true"),
-          rnd6((col("n_bloom_pos") - col("n_true")).cast("double")
+          r6((col("n_bloom_pos") - col("n_true")).cast("double")
             / (col("n_train_shingles") - col("n_true"))))
           .otherwise(0.0).as("fp_rate"))
   }
@@ -501,7 +500,6 @@ object Curation {
     val lbl = CorpusStats.ccnetBuckets(spark, dir)
       .filter(col("bucket") =!= "middle")
       .select(col("doc_id").as("ld"), (col("bucket") === "head").as("pos"))
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     arms.join(held, Seq("doc_id"), "left_semi")
       .join(lbl, col("doc_id") === col("ld"))
       .groupBy(col("gate"))
@@ -538,7 +536,7 @@ object Curation {
       .select(col("doc_id").as("ld"), (col("bucket") === "head").as("pos"))
     classifierApply(spark, dir)
       .select(col("doc_id"),
-        floor(col("score") * 1000000 + lit(0.5)).cast("long").as("su"))
+        units(col("score"), 1000000).as("su"))
       .join(held, Seq("doc_id"), "left_semi")
       .join(lbl, col("doc_id") === col("ld"))
       .select(col("doc_id"), col("su"), col("pos"))
@@ -558,7 +556,6 @@ object Curation {
     * doc_id, one 1-row agg.
     */
   def brierScore(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val d = (c: Column) => c.cast("decimal(38,0)")
     heldScored(spark, dir)
       .select(col("su"),
@@ -587,7 +584,6 @@ object Curation {
     * output.
     */
   def clfKs(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val d = (c: Column) => c.cast("decimal(38,0)")
     val g = heldScored(spark, dir)
       .groupBy(col("su"))
@@ -627,7 +623,6 @@ object Curation {
     * 9-row broadcast grid, one partial agg per threshold.
     */
   def prCurve(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val grid = broadcast(spark.range(1)
       .select(explode(array(PrThresholds.map(lit): _*)).as("tu")))
     heldScored(spark, dir)
@@ -938,7 +933,6 @@ object Curation {
     * a claim, not a gap) with bounded cumulative windows.
     */
   def curationFunnel(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val tok = CorpusStats.docStats(spark, dir)
       .select(col("doc_id"), col("toks_ws").as("t"))
     val ag = curateManifest(spark, dir)
@@ -1056,7 +1050,6 @@ object Curation {
     * with a grid-sized cumulative.
     */
   def arrivalFunnel(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val tok = CorpusStats.docStats(spark, dir)
       .select(col("doc_id"), col("toks_ws").as("t"))
     val ag = arrivalReport(spark, dir)
@@ -1160,7 +1153,6 @@ object Curation {
     * doubles order identically in the oracle).
     */
   def labelQueue(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val scored = CorpusStats.docStats(spark, dir)
       .select(col("doc_id"), col("lang"), col("quality").as("score"))
     val thr = CorpusStats.qualityThresholds(spark, dir)
@@ -1290,16 +1282,17 @@ object Curation {
     * Degenerate docs (no words) carry bias only.
     */
   private def clfUnits: Seq[Column] = {
-    def r6u(c: Column) = floor(c * 1000000 + lit(0.5)).cast("long")
     val guard = col("n_words") > 0
     Seq(
       lit(1000000L).as("xu0"),
       when(guard, least(col("n_words"), lit(1000)).cast("long") * 1000L)
         .otherwise(0L).as("xu1"),
-      when(guard, r6u(least(col("avg_word_len"), lit(10.0)) / lit(10.0)))
+      when(guard,
+        units(least(col("avg_word_len"), lit(10.0)) / lit(10.0), 1000000))
         .otherwise(0L).as("xu2"),
-      when(guard, r6u(col("stopword_ratio"))).otherwise(0L).as("xu3"),
-      when(guard, r6u(col("punct_ratio"))).otherwise(0L).as("xu4"))
+      when(guard, units(col("stopword_ratio"), 1000000)).otherwise(0L)
+        .as("xu3"),
+      when(guard, units(col("punct_ratio"), 1000000)).otherwise(0L).as("xu4"))
   }
 
   /** z = Σ wu·xu as double (exact long sum / 1e12) — shared by the
@@ -1458,7 +1451,6 @@ object Curation {
     * gateEval nullif convention).
     */
   def gateOverlap(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val h = qualityFilter(spark, dir)
       .select(col("doc_id"), col("keep").as("kh"))
     val c = classifierApply(spark, dir)
@@ -1500,7 +1492,7 @@ object Curation {
       .select(
         least(floor(col("score") * ClfCalibBins), lit(ClfCalibBins - 1))
           .cast("int").as("bin"),
-        floor(col("score") * 1000000 + 0.5).cast("long").as("su"),
+        units(col("score"), 1000000).as("su"),
         col("label"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("su")).as("susum"),
@@ -1508,11 +1500,9 @@ object Curation {
       .select(col("bin"), col("n"),
         (floor(col("susum").cast("double") / col("n") + 0.5) / 1000000)
           .as("mean_score"),
-        (floor(col("npos").cast("double") / col("n") * 10000 + 0.5)
-          / 10000).as("pos_rate"))
+        r4(col("npos").cast("double") / col("n")).as("pos_rate"))
       .withColumn("gap",
-        floor(abs(col("mean_score") - col("pos_rate")) * 10000 + 0.5)
-          / 10000)
+        r4(abs(col("mean_score") - col("pos_rate"))))
       .orderBy(col("bin"))
   }
 
@@ -1563,7 +1553,6 @@ object Curation {
     * annotation drawn from it inherits the bias.
     */
   def sampleAudit(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val docs = Tables.documents(spark, dir)
     val grid = docs
       .select(md5(col("doc_id").cast("string")).as("h"), col("doc_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.{r2, r4, r6, units}
 import graft.sources.Tables
 
 /** Corpus deduplication family for the training-data pipeline.
@@ -224,78 +225,8 @@ object Dedup {
       .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("inter"))
       .select(col("id_a"), col("id_b"),
-        (floor(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) * 10000 + 0.5) / 10000)
-          .as("jaccard"))
-  }
-
-  /** Salted twin of [[verifyJaccard]] — the skew-resilient verify for a
-    * corpus whose candidate set concentrates on hot documents (one
-    * boilerplate page near-duplicating half its crawl shard puts every
-    * one of its pairs, times its shingles, into a single shuffle
-    * partition of the plain verify). Both id joins run through
-    * [[SkewJoin.saltedJoin]]: each pair row carries a row-hash salt, the
-    * shingle side replicates per salt, so a hot doc's pair set spreads
-    * `salts` ways. Result-identical to the plain verify (spec-pinned and
-    * probe-measured — tools.SkewProbe); the cost is `salts`× shingle
-    * replication, so this is the variant to pick when key_skew flags the
-    * pair distribution, not the default.
-    */
-  private[graft] def verifyJaccardSalted(cand: DataFrame, sh: DataFrame,
-      salts: Int): DataFrame = {
-    val a = sh.select(col("doc_id").as("id_a2"), col("n").as("na"),
-      col("g").as("ga"))
-    val b = sh.select(col("doc_id").as("id_b2"), col("n").as("nb"),
-      col("g").as("gb"))
-    val j1 = SkewJoin.saltedJoin(cand.localCheckpoint(false), a, salts)(
-      (bg, sm) => bg("id_a") === sm("id_a2"))
-    val j2 = SkewJoin.saltedJoin(j1, b, salts)(
-      (bg, sm) => bg("id_b") === sm("id_b2") && bg("ga") === sm("gb"))
-    j2.groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .select(col("id_a"), col("id_b"),
-        (floor(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) * 10000 + 0.5) / 10000)
-          .as("jaccard"))
-  }
-
-  /** Skew-AWARE verify — the production arm: the inline key_skew
-    * diagnosis (per-doc pair counts) splits the candidate set into hot
-    * and cold id_a keys; cold pairs take the plain merge join, hot pairs
-    * take the salted join with the shingle side replicated ONLY for the
-    * hot docs (|hot| × ~22 × salts rows, not the whole store — the
-    * reason [[verifyJaccardSalted]]'s blanket replication loses at scale
-    * while this wins). Only the id_a join needs the split: the second
-    * join keys on (id_b, g), so a hot doc's row mass already spreads
-    * across its ~22 shingle keys there — salting it again would buy a
-    * 22×-diluted skew at the price of another union + replication.
-    * Result-identical to the plain verify; spec-pinned, measured by
-    * tools.SkewProbe.
-    */
-  private[graft] def verifyJaccardSkewAware(cand: DataFrame, sh: DataFrame,
-      salts: Int, hotThreshold: Long = 10000L): DataFrame = {
-    val a = sh.select(col("doc_id").as("id_a2"), col("n").as("na"),
-      col("g").as("ga"))
-    val b = sh.select(col("doc_id").as("id_b2"), col("n").as("nb"),
-      col("g").as("gb"))
-    val c0 = cand.localCheckpoint(false)
-    val hotA = c0.groupBy(col("id_a").as("hk"))
-      .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= hotThreshold)
-      .select(col("hk")).localCheckpoint(false)
-    val j1 = c0.join(broadcast(hotA), col("id_a") === col("hk"), "left_anti")
-      .join(a.hint("merge"), col("id_a") === col("id_a2"))
-      .unionByName(SkewJoin.saltedJoin(
-        c0.join(broadcast(hotA), col("id_a") === col("hk"), "left_semi"),
-        a.join(broadcast(hotA), col("id_a2") === col("hk"), "left_semi"),
-        salts)((bg, sm) => bg("id_a") === sm("id_a2")))
-      .drop("id_a2")
-    j1.join(b.hint("merge"),
-        col("id_b") === col("id_b2") && col("ga") === col("gb"))
-      .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .select(col("id_a"), col("id_b"),
-        (floor(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) * 10000 + 0.5) / 10000)
+        r4(col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
   }
 
@@ -328,7 +259,6 @@ object Dedup {
     * ≤log2 bins). Flat past the label pass.
     */
   def clusterSizeHist(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val g = dedupClusters(spark, dir)
       .groupBy(col("cluster")).agg(count(lit(1)).as("sz"))
       .select(col("sz"), expr(
@@ -362,7 +292,6 @@ object Dedup {
     * rollup is grid-sized.
     */
   def jaccardHist(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val sh = shingleRowsWithSize(spark, dir)
     val binned = verifyJaccard(bandCandidates(minhashBandedFrom(sh)), sh)
       .select(least(floor(col("jaccard") * 10).cast("int"), lit(9))
@@ -370,8 +299,7 @@ object Dedup {
       .groupBy(col("b")).agg(count(lit(1)).as("n"))
       .localCheckpoint(false) // <=10 rows; totals + grid both read it, or
       // the candidate-verify pass runs once per consumer
-    val grid = broadcast(spark.range(10)
-      .select(col("id").cast("int").as("b")))
+    val grid = spark.range(10).select(col("id").cast("int").as("b"))
     val tot = broadcast(binned.agg(
       coalesce(sum(col("n")), lit(0L)).as("t")).localCheckpoint(false))
     val wGe = Window.orderBy(col("b").desc)
@@ -619,7 +547,6 @@ object Dedup {
     * then 4 band rows); no windows, no value-grid risk.
     */
   def bandStoreStats(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     bandStore(spark, dir)
       .groupBy(col("band"), col("key")).agg(count(lit(1)).as("n"))
       .groupBy(col("band"))
@@ -949,8 +876,8 @@ object Dedup {
         sum(col("excess")).as("excess_tokens"))
       .crossJoin(broadcast(total))
       .select(col("cluster_size"), col("n_clusters"), col("n_tokens"),
-        (floor(col("n_tokens").cast("double") / col("corpus_tokens")
-          * 1000000 + lit(0.5)) / 1000000).as("token_share"),
+        r6(col("n_tokens").cast("double") / col("corpus_tokens"))
+          .as("token_share"),
         col("excess_tokens"))
       .orderBy(col("cluster_size"))
   }
@@ -993,7 +920,6 @@ object Dedup {
     val mid = (col("bin") + 0.5) / 10.0
     val theo = lit(1.0) -
       pow(lit(1.0) - pow(mid, LshCurveRows), LshCurveBands)
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     exact
       .withColumn("bin",
         least(floor(col("jaccard") * 10).cast("int"), lit(9)))
@@ -1057,8 +983,8 @@ object Dedup {
       .groupBy(col("source"), col("id_a"), col("id_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("inter"))
       .select(col("source"), col("id_a"), col("id_b"),
-        (floor(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) * 10000 + 0.5) / 10000)
+        r4(col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
       .filter(col("jaccard") > 0)
   }
@@ -1096,7 +1022,7 @@ object Dedup {
       .join(d.select(col("doc_id").as("id_b"), col("source").as("src_b")),
         "id_b")
       .select(srcLo.as("src_lo"), srcHi.as("src_hi"),
-        floor(col("jaccard") * 10000 + lit(0.5)).cast("long").as("j4"))
+        units(col("jaccard"), 10000).as("j4"))
       .groupBy(col("src_lo"), col("src_hi"))
       .agg(count(lit(1)).as("n_pairs"), sum(col("j4")).as("jsum"))
       .select(col("src_lo"), col("src_hi"), col("n_pairs"),
@@ -1246,8 +1172,8 @@ object Dedup {
       .groupBy(col("id_a"), col("id_b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("inter"))
       .select(col("id_a"), col("id_b"),
-        (floor(col("inter").cast("double") /
-          (col("na") + col("nb") - col("inter")) * 10000 + 0.5) / 10000)
+        r4(col("inter").cast("double") /
+          (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
       .filter(col("jaccard") >= LshCurveFloor)
     graft.sources.Sinks.writeSortedParquet(exact, path, Seq("id_a", "id_b"))
@@ -1288,7 +1214,6 @@ object Dedup {
     val lsh = dedupPairs(spark, dir)
       .select(col("id_a"), col("id_b"))
     val hit = lsh.join(exact, Seq("id_a", "id_b"), "left_semi")
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     exact.agg(count(lit(1)).as("n_exact"))
       .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))
       .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
@@ -1318,8 +1243,6 @@ object Dedup {
     * pass + a pair-key semi join and three 1-row aggregates.
     */
   def captureRecapture(spark: SparkSession, dir: String): DataFrame = {
-    def r2(c: Column) = floor(c * 100 + 0.5) / 100
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val mh = dedupPairs(spark, dir).select(col("id_a"), col("id_b"))
     val sh = dedupSimhash(spark, dir).select(col("id_a"), col("id_b"))
       .localCheckpoint(false) // feeds its count AND the overlap semi join
@@ -1406,7 +1329,6 @@ object Dedup {
     val exact = exactPairs(spark, dir)
       .filter(col("jaccard") >= JaccardThreshold)
       .select(col("id_a"), col("id_b")).localCheckpoint(false)
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     def arm(b: Int, r: Int): DataFrame = {
       val bandKeys = array((0 until b).map { i =>
         substring(md5(concat_ws("_",
@@ -1458,7 +1380,6 @@ object Dedup {
     * the pair-set artifact, so the drop lists compose without overlap.
     */
   def containmentDup(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     // run on the EXACT-DEDUP SURVIVOR set: identical copies are
     // dedup_exact's job, and keeping them here makes the inverted-index
     // fan-out quadratic in copy-group size for pairs that carry zero
@@ -1515,7 +1436,6 @@ object Dedup {
     * rollup.
     */
   def minhashError(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val sigs = minhashSigsOf(shingleRowsWithSize(spark, dir))
       .localCheckpoint(false) // feeds both pair sides
     val pairs = dedupPairs(spark, dir)
@@ -1527,7 +1447,7 @@ object Dedup {
     val matches = (0 until MINHASHES)
       .map(j => when(col(s"a$j") === col(s"b$j"), 1L).otherwise(0L))
       .reduce(_ + _)
-    val ju = floor(col("jaccard") * 10000 + 0.5).cast("long")
+    val ju = units(col("jaccard"), 10000)
     pairs.join(a, Seq("id_a")).join(b, Seq("id_b"))
       .select(matches.as("m"), ju.as("ju"))
       .agg(count(lit(1)).as("n_pairs"),

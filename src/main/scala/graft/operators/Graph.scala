@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.{r4, r6}
 import graft.sources.Tables
 
 /** Graph analytics over the co-purchase part graph (the capped basket
@@ -95,7 +96,6 @@ object Graph {
   }
 
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val e0 = prunedPairs(spark, dir)
     val edges = e0.select(col("pa").as("src"), col("pb").as("dst"))
       .union(e0.select(col("pb").as("src"), col("pa").as("dst")))
@@ -146,7 +146,6 @@ object Graph {
     * partial agg in exact integer arithmetic.
     */
   def graphStats(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val e0 = prunedPairs(spark, dir).localCheckpoint(false)
     val deg = e0.select(col("pa").as("v")).union(e0.select(col("pb")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -350,7 +349,6 @@ object Graph {
     * 4dp-rounded double expression over integer inputs.
     */
   def localClustering(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val e0 = prunedPairs(spark, dir).localCheckpoint(false)
     val deg = e0.select(col("pa").as("v")).union(e0.select(col("pb")))
       .groupBy(col("v")).agg(count(lit(1)).as("degree"))
@@ -403,7 +401,6 @@ object Graph {
     * division.
     */
   def jaccardLinks(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val e0 = prunedPairs(spark, dir).localCheckpoint(false)
     val sym = e0.select(col("pa").as("src"), col("pb").as("dst"))
       .union(e0.select(col("pb").as("src"), col("pa").as("dst")))
@@ -436,7 +433,6 @@ object Graph {
   }
 
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val e0 = prunedPairs(spark, dir)
     val edges = e0.select(col("pa").as("src"), col("pb").as("dst"))
       .union(e0.select(col("pb").as("src"), col("pa").as("dst")))

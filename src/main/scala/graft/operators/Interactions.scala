@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Params
+import graft.functions.Fixed.r4
 import graft.sources.Tables
 
 /** Interaction-log operators over the `events` table (events ≈ the
@@ -119,7 +120,6 @@ object Interactions {
     * DECIMAL, divided once in double, 4dp floor-rounded.
     */
   def effectivenessTrend(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     // the SAME runtime threshold the high_quality gate reads — a tuned
     // gate and its monitoring rollup must move together
     val minEff = Params.double(spark, "high_quality.min_effectiveness", 0.7)

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.{r4, r6, units}
 import graft.functions.VectorFunctions.cosineSim
 import graft.sources.Tables
 
@@ -188,10 +189,9 @@ object Retrieval {
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
     val idf = dft.crossJoin(broadcast(stats))
       .select(col("term"),
-        (floor(log(lit(1.0) +
+        r6(log(lit(1.0) +
           (col("n_docs").cast("double") - col("df") + lit(0.5)) /
-            (col("df").cast("double") + lit(0.5))) * 1000000 + lit(0.5))
-          / 1000000).as("idf"))
+            (col("df").cast("double") + lit(0.5)))).as("idf"))
     // (q_id, term, idf): the bounded query side of the scoring join —
     // pruned to each query's top informative terms (see BmMaxQueryTerms)
     val wQ = Window.partitionBy(col("q_id"))
@@ -201,12 +201,12 @@ object Retrieval {
       .filter(col("qr") <= BmMaxQueryTerms)
       .drop("qr")
 
-    val part = (floor(col("idf") *
+    val part = r6(col("idf") *
       ((col("tf").cast("double") * lit(BmK1Plus1)) /
         (col("tf").cast("double") + lit(BmK1) *
           (lit(1.0) - lit(BmB) +
-            lit(BmB) * (col("dl").cast("double") / col("avgdl")))))
-      * 1000000 + lit(0.5)) / 1000000).cast("decimal(18,6)")
+            lit(BmB) * (col("dl").cast("double") / col("avgdl"))))))
+      .cast("decimal(18,6)")
 
     // per-term impact cap on the scoring join's corpus side (see
     // BmImpactCap): the idf-free score factor orders each term's
@@ -337,13 +337,11 @@ object Retrieval {
           .orderBy(col("tf").desc, col("doc_id"))))
         .filter(col("ir") <= cap)
         .drop("ir")
-    val part = floor(log(lit(1.0) +
+    val part = r6(log(lit(1.0) +
       (col("tf").cast("double") * col("total_len").cast("double")) /
-        (lit(QlMu) * col("ctf").cast("double"))) * 1000000 + lit(0.5)) /
-      1000000
-    val norm6 = floor(log(lit(QlMu) /
-      (col("dl").cast("double") + lit(QlMu))) * 1000000 + lit(0.5)) /
-      1000000
+        (lit(QlMu) * col("ctf").cast("double"))))
+    val norm6 = r6(log(lit(QlMu) /
+      (col("dl").cast("double") + lit(QlMu))))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("score").desc, col("doc_id"))
     capped.join(broadcast(qt.select(col("q_id"), col("term"), col("ctf"))),
@@ -417,10 +415,8 @@ object Retrieval {
   private def rrfFuseK(lex: DataFrame, vec: DataFrame, k: Int,
       topK: Int): DataFrame = {
     // 1/(K + null rank) is null -> coalesce to 0: absent-from-ranker
-    val rrf = floor((
-      coalesce(lit(1.0) / (lit(k) + col("lrank")), lit(0.0)) +
-        coalesce(lit(1.0) / (lit(k) + col("vrank")), lit(0.0)))
-      * 1000000 + lit(0.5)) / 1000000
+    val rrf = r6(coalesce(lit(1.0) / (lit(k) + col("lrank")), lit(0.0)) +
+      coalesce(lit(1.0) / (lit(k) + col("vrank")), lit(0.0)))
     val wF = Window.partitionBy(col("q_id"))
       .orderBy(col("rrf").desc, col("doc_id"))
     lex.join(vec, Seq("q_id", "doc_id"), "full_outer")
@@ -452,7 +448,6 @@ object Retrieval {
     * accumulation), DCG/IDCG each one double divide, 6dp.
     */
   def ndcgEval(spark: SparkSession, dir: String): DataFrame = {
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     // ONE dense sweep (checkpointed): truth grades, the dense arm, the
     // ideal, AND the hybrid fusion's vector side (NdcgK = BmTopK, so
     // this frame IS hybridRetrieve's vec arm); ONE bm25 pipeline
@@ -468,7 +463,7 @@ object Retrieval {
     val rel = exact.select(col("q_id"), col("doc_id"),
       (lit(NdcgK + 1) - col("pos")).as("rel"))
     def dcgOf(name: String, ranked: DataFrame): DataFrame = {
-      val w = rnd6(lit(1.0) / log2(col("pos") + 1)).cast("decimal(18,6)")
+      val w = r6(lit(1.0) / log2(col("pos") + 1)).cast("decimal(18,6)")
       // rel is the k-bounded truth gauge (≤ |q|·k rows — the recall-
       // audit broadcast envelope): hash-join it instead of letting the
       // planner sort-merge every arm against it
@@ -491,9 +486,8 @@ object Retrieval {
       .select(col("q_id").as("iq"), col("dcgs").as("ideal"))
     arms.join(broadcast(ideal), col("q_id") === col("iq"))
       .select(col("arm"), col("q_id"),
-        rnd6(col("dcgs").cast("double")).as("dcg"),
-        rnd6(col("dcgs").cast("double") / col("ideal").cast("double"))
-          .as("ndcg"))
+        r6(col("dcgs").cast("double")).as("dcg"),
+        r6(col("dcgs").cast("double") / col("ideal").cast("double")).as("ndcg"))
       .orderBy(col("arm"), col("q_id"))
   }
 
@@ -516,8 +510,6 @@ object Retrieval {
     * partitioning).
     */
   def irMetrics(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     // dense truth and the bm25 pipeline are independent — their
     // checkpoint waves BUILD in parallel (Par.build)
     val Seq(exact, lex) = graft.operators.Par.build(Seq(
@@ -548,12 +540,12 @@ object Retrieval {
           sum(when(col("is_rel") === 1, 1L).otherwise(0L)).as("hits"),
           sum(when(col("pos") === 1 && col("is_rel") === 1, 1L)
             .otherwise(0L)).as("p1"))
-        .agg(sum(rnd6(lit(1.0) / col("frp")).cast("decimal(18,6)"))
+        .agg(sum(r6(lit(1.0) / col("frp")).cast("decimal(18,6)"))
           .as("rrsum"),
           sum(col("hits")).as("hits"), sum(col("p1")).as("p1s"))
         .crossJoin(nq)
         .select(lit(name).as("arm"), col("nq").as("n_queries"),
-          rnd6(coalesce(col("rrsum"), lit(0).cast("decimal(18,6)"))
+          r6(coalesce(col("rrsum"), lit(0).cast("decimal(18,6)"))
             .cast("double") / col("nq")).as("mrr"),
           r4(col("hits").cast("double") / (col("nq") * NdcgK))
             .as("recall"),
@@ -605,15 +597,13 @@ object Retrieval {
     val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val idf = dft.crossJoin(broadcast(stats))
       .select(col("term"),
-        (floor((log((col("n_docs").cast("double") + lit(1.0)) /
-          (col("df").cast("double") + lit(1.0))) + lit(1.0))
-          * 1000000 + lit(0.5)) / 1000000).as("idf"))
+        r6(log((col("n_docs").cast("double") + lit(1.0)) /
+          (col("df").cast("double") + lit(1.0))) + lit(1.0)).as("idf"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("tfidf").desc, col("term"))
     tf.join(idf, "term")
       .select(col("doc_id"), col("term"), col("tf"),
-        (floor(col("tf").cast("double") * col("idf") * 10000 + lit(0.5))
-          / 10000).as("tfidf"))
+        r4(col("tf").cast("double") * col("idf")).as("tfidf"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= TfidfTopTerms)
       .select(col("doc_id"), col("term"), col("tf"), col("tfidf"),
@@ -708,15 +698,13 @@ object Retrieval {
     val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nc))
       .select(col("term"),
-        (floor((log((col("n_cells").cast("double") + lit(1.0)) /
-          (col("df").cast("double") + lit(1.0))) + lit(1.0))
-          * 1000000 + lit(0.5)) / 1000000).as("idf"))
+        r6(log((col("n_cells").cast("double") + lit(1.0)) /
+          (col("df").cast("double") + lit(1.0))) + lit(1.0)).as("idf"))
     val w = Window.partitionBy(col("ccell"))
       .orderBy(col("score").desc, col("term"))
     tf.join(idf, "term")
       .select(col("ccell"), col("term"), col("tf"),
-        (floor(col("tf").cast("double") * col("idf") * 10000 + lit(0.5))
-          / 10000).as("score"))
+        r4(col("tf").cast("double") * col("idf")).as("score"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= ClusterTopTerms)
       .select(col("ccell"), col("term"), col("tf"), col("score"),
@@ -751,7 +739,6 @@ object Retrieval {
     val cellT = g.groupBy(col("ccell")).agg(sum(col("n_docs")).as("cell_n"))
     val srcT = g.groupBy(col("source")).agg(sum(col("n_docs")).as("src_n"))
     val tot = g.agg(sum(col("n_docs")).as("tot"))
-    def r4(c: Column) = floor(c * 10000 + lit(0.5)) / 10000
     g.join(broadcast(cellT), "ccell")
       .join(broadcast(srcT), "source")
       .crossJoin(broadcast(tot))
@@ -830,12 +817,11 @@ object Retrieval {
     */
   private[graft] def sparseKnn(spark: SparkSession, dir: String,
       cap: Int): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     // the persisted vectors feed norms and both join sides — each branch
     // re-reads the artifact parquet (no checkpoint needed)
     val v = tfidfVectors(spark, dir)
       .select(col("doc_id"), col("term"),
-        floor(col("tfidf") * 10000 + 0.5).cast("long").as("u"))
+        units(col("tfidf"), 10000).as("u"))
     val n2 = v.groupBy(col("doc_id"))
       .agg(sum(col("u") * col("u")).as("n2"))
     val isQ = pmod(col("doc_id"), lit(QueryMod)) === 0
@@ -889,7 +875,6 @@ object Retrieval {
     * a per-query partial agg.
     */
   def armOverlap(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val lex = bm25Topk(spark, dir)
       .select(col("q_id"), col("doc_id"), col("rank").as("lrank"))
     val vec = denseRanked(spark, dir)
@@ -940,14 +925,13 @@ object Retrieval {
     * sums of 6dp ndcgs.
     */
   def fusionSweep(spark: SparkSession, dir: String): DataFrame = {
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     def mmNorm(df: DataFrame, out: String): DataFrame = {
       val wq = Window.partitionBy(col("q_id"))
       df.withColumn("mn", min(col("s")).over(wq))
         .withColumn("mx", max(col("s")).over(wq))
         .select(col("q_id"), col("doc_id"), col("pos"),
           when(col("mx") > col("mn"),
-            rnd6((col("s") - col("mn")) / (col("mx") - col("mn"))))
+            r6((col("s") - col("mn")) / (col("mx") - col("mn"))))
             .otherwise(lit(1.0)).as(out))
     }
     val exact = mmNorm(Similarity.denseTruth(spark, dir)
@@ -962,7 +946,7 @@ object Retrieval {
       .localCheckpoint(false)
     val rel = exact.select(col("q_id"), col("doc_id"),
       (lit(NdcgK + 1) - col("pos")).as("rel"))
-    val wD = rnd6(lit(1.0) / log2(col("pos") + 1)).cast("decimal(18,6)")
+    val wD = r6(lit(1.0) / log2(col("pos") + 1)).cast("decimal(18,6)")
     def dcgOf(ranked: DataFrame): DataFrame =
       ranked.filter(col("pos") <= NdcgK)
         .join(rel, Seq("q_id", "doc_id"), "left")
@@ -980,19 +964,18 @@ object Retrieval {
       .join(exact.drop("pos"), Seq("q_id", "doc_id"), "full_outer")
       .localCheckpoint(false)
     val perA = FusionAlphas.map { a =>
-      val blend = rnd6(lit(a) * coalesce(col("ln"), lit(0.0)) +
+      val blend = r6(lit(a) * coalesce(col("ln"), lit(0.0)) +
         lit(1 - a) * coalesce(col("vn"), lit(0.0)))
       val fused = paired
         .select(col("q_id"), col("doc_id"), blend.as("blend"))
         .withColumn("pos", row_number().over(wF))
       dcgOf(fused)
         .join(ideal, col("q_id") === col("iq"))
-        .select(rnd6(col("dcgs").cast("double") / col("ideal")
+        .select(r6(col("dcgs").cast("double") / col("ideal")
           .cast("double")).cast("decimal(18,6)").as("ndcg"))
         .agg(count(lit(1)).as("n_queries"), sum(col("ndcg")).as("sn"))
         .select(lit(a).as("alpha"), col("n_queries"),
-          rnd6(col("sn").cast("double") / col("n_queries"))
-            .as("mean_ndcg"))
+          r6(col("sn").cast("double") / col("n_queries")).as("mean_ndcg"))
     }
     perA.reduce(_.unionByName(_)).orderBy(col("alpha"))
   }
@@ -1019,7 +1002,6 @@ object Retrieval {
     * |queries| × k rows.
     */
   def rankCorr(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val lex = bm25Topk(spark, dir)
       .select(col("q_id"), col("doc_id"), col("rank").as("lrank"))
     val prf = prfExpand(spark, dir)
@@ -1069,8 +1051,7 @@ object Retrieval {
           sum(col("n_m")).as("n_matched"))
         .select(lit(name).as("arm"), col("n_queries"), col("n_truth"),
           col("n_matched"),
-          (floor(col("n_matched").cast("double") / col("n_truth")
-            * 10000 + 0.5) / 10000).as("recall"))
+          r4(col("n_matched").cast("double") / col("n_truth")).as("recall"))
     armAgg("bm25", lexUncappedTruth(spark, dir), bm25Topk(spark, dir))
       .unionAll(armAgg("sparse", sparseUncappedTruth(spark, dir),
         sparseKnn(spark, dir)))
@@ -1179,8 +1160,7 @@ object Retrieval {
       .select(col("q_id"), col("doc_id"))
     val fb = p.join(broadcast(seed), "doc_id")
       .select(col("q_id"), col("term"),
-        floor(col("tf").cast("double") / col("dl") * 1000000 + 0.5)
-          .cast("long").as("wu"))
+        units(col("tf").cast("double") / col("dl"), 1000000).as("wu"))
       .groupBy(col("q_id"), col("term"))
       .agg(sum(col("wu")).as("wu"))
     val wE = Window.partitionBy(col("q_id"))
@@ -1198,10 +1178,9 @@ object Retrieval {
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(stats))
       .select(col("term"),
-        (floor(log(lit(1.0) +
+        r6(log(lit(1.0) +
           (col("n_docs").cast("double") - col("df") + lit(0.5)) /
-            (col("df").cast("double") + lit(0.5))) * 1000000 + lit(0.5))
-          / 1000000).as("idf"))
+            (col("df").cast("double") + lit(0.5)))).as("idf"))
     val pe = p.join(broadcast(evocab), "term")
       .crossJoin(broadcast(stats.select(col("avgdl"))))
     val impact = (col("tf").cast("double") * lit(BmK1Plus1)) /
@@ -1214,13 +1193,13 @@ object Retrieval {
       .filter(col("ir") <= cap)
       .drop("ir")
     val qexp = exp.join(idf, "term")
-    val part = (floor((col("wu").cast("double") / lit(1000000.0)) *
+    val part = r6((col("wu").cast("double") / lit(1000000.0)) *
       col("idf") *
       ((col("tf").cast("double") * lit(BmK1Plus1)) /
         (col("tf").cast("double") + lit(BmK1) *
           (lit(1.0) - lit(BmB) +
-            lit(BmB) * (col("dl").cast("double") / col("avgdl")))))
-      * 1000000 + lit(0.5)) / 1000000).cast("decimal(18,6)")
+            lit(BmB) * (col("dl").cast("double") / col("avgdl"))))))
+      .cast("decimal(18,6)")
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("score").desc, col("doc_id"))
     capped.join(broadcast(qexp), "term")
@@ -1359,7 +1338,6 @@ object Retrieval {
     * not as an IVF-recall measurement.
     */
   def liPoolRecall(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val b = liBrutePool(spark, dir).select(col("q_id"), col("d_id"))
     val a = liAnnPool(spark, dir).select(col("q_id"), col("d_id"))
     val hits = b.join(a, Seq("q_id", "d_id"), "left_semi")
@@ -1420,7 +1398,6 @@ object Retrieval {
 
   private def rerankMaxSim(spark: SparkSession, dir: String,
       pool: DataFrame): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     import graft.functions.VectorFunctions.dotLong
     val cv = chunkVectors(spark, dir)
       .filter(col("n2") > 0)
@@ -1442,7 +1419,7 @@ object Retrieval {
       .groupBy(col("q_id"), col("d_id"), col("qck"))
       .agg(max(col("cs")).as("mx"))
       .groupBy(col("q_id"), col("d_id"))
-      .agg(sum(floor(col("mx") * 1000000 + 0.5).cast("long")).as("smu"),
+      .agg(sum(units(col("mx"), 1000000)).as("smu"),
         count(lit(1)).as("nq"))
       .select(col("q_id"), col("d_id"),
         r6(col("smu").cast("double") / col("nq") / 1000000)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.{money, r4, r6, units}
 import graft.sources.Tables
 
 /** Event sessionization and windowed aggregation (the batch twins of
@@ -74,7 +75,6 @@ object Sessions {
     * construction (that is what makes them session BOUNDARIES).
     */
   def sessionGaps(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val wOrd = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val sess = Tables.events(spark, dir)
@@ -210,7 +210,6 @@ object Sessions {
     * integer sums with ONE final mirrored division each.
     */
   def forecastBaseline(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val daily = Tables.events(spark, dir)
       .select(col("event_type"), expr("ts div 86400000000000").as("day"))
       .groupBy(col("event_type"), col("day"))
@@ -223,8 +222,8 @@ object Sessions {
       .select(col("event_type"),
         abs(col("n") - col("np")).as("ae"),
         (col("n") - col("np")).as("e"),
-        floor(abs(col("n") - col("np")).cast("double") / col("n")
-          * 1000000 + lit(0.5)).cast("long").as("t6"))
+        units(abs(col("n") - col("np")).cast("double") / col("n"), 1000000)
+          .as("t6"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"), sum(col("ae")).as("sae"),
         sum(col("e")).as("se"), sum(col("t6")).as("st6"))
@@ -248,8 +247,6 @@ object Sessions {
     * VERSION COUNT (bounded by business cadence, the standing SCD2
     * assumption), never facts × facts; intervals partition time, so
     * each fact matches at most one version and no dedup pass exists.
-    * A pathological hot entity routes through SkewJoin.saltedJoin
-    * unchanged.
     */
   def scd2Lookup(spark: SparkSession, dir: String): DataFrame = {
     val dim = scd2Build(spark, dir)
@@ -401,7 +398,7 @@ object Sessions {
       .localCheckpoint(false) // feeds the size table AND the value join
     val sizes = first.groupBy(col("cohort_wk"))
       .agg(count(lit(1)).as("cohort_users"))
-    val vU = floor(col("value") * 10000 + lit(0.5)).cast("long")
+    val vU = units(col("value"), 10000)
     val grid = ev.filter(col("event_type") === "purchase")
       .join(first, "user_id")
       .select(col("cohort_wk"),
@@ -414,8 +411,7 @@ object Sessions {
     grid.withColumn("cu", sum(col("wu")).over(wCum))
       .join(broadcast(sizes), "cohort_wk")
       .select(col("cohort_wk"), col("week_no"), col("cohort_users"),
-        (floor(col("wu").cast("double") / 100 + 0.5) / 100)
-          .as("week_value"),
+        money(col("wu")).as("week_value"),
         (floor(col("cu").cast("double") / col("cohort_users") + 0.5)
           / 10000).as("ltv_per_user"))
       .orderBy(col("cohort_wk"), col("week_no"))
@@ -447,10 +443,8 @@ object Sessions {
         min(when(col("cum") * 100 >= col("ns") * 90, col("bin"))).as("b90"))
     tot.crossJoin(broadcast(pcts))
       .select(col("n_sessions"),
-        (floor(col("se").cast("double") / col("n_sessions") * 10000 + 0.5)
-          / 10000).as("avg_events"),
-        (floor(col("sd").cast("double") / col("n_sessions") * 10000 + 0.5)
-          / 10000).as("avg_duration"),
+        r4(col("se").cast("double") / col("n_sessions")).as("avg_events"),
+        r4(col("sd").cast("double") / col("n_sessions")).as("avg_duration"),
         (col("b50") * 60).as("p50_duration_sec"),
         (col("b90") * 60).as("p90_duration_sec"))
   }
@@ -491,10 +485,9 @@ object Sessions {
       .groupBy(col("period")).agg(count(lit(1)).as("mau"))
     dau.join(mau, Seq("period"))
       .select(col("period"), col("n_days"), col("mau"),
-        (floor(col("dau_sum").cast("double") / col("n_days") * 10000
-          + 0.5) / 10000).as("avg_dau"),
-        (floor(col("dau_sum").cast("double") / col("n_days") / col("mau")
-          * 10000 + 0.5) / 10000).as("stickiness"))
+        r4(col("dau_sum").cast("double") / col("n_days")).as("avg_dau"),
+        r4(col("dau_sum").cast("double") / col("n_days") / col("mau"))
+          .as("stickiness"))
       .orderBy(col("period"))
   }
 
@@ -522,8 +515,7 @@ object Sessions {
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("from_type"), col("to_type"), col("n"),
-        (floor(col("n").cast("double") / sum(col("n")).over(wf)
-          * 1000000 + 0.5) / 1000000).as("p"))
+        r6(col("n").cast("double") / sum(col("n")).over(wf)).as("p"))
   }
 
   val PathTopK = 20
@@ -643,10 +635,10 @@ object Sessions {
       stats: DataFrame): DataFrame =
     daily.join(broadcast(stats), Seq("event_type"))
       .select(col("event_type"), col("day"), col("n"),
-        (floor(col("mean") * 1000000 + 0.5) / 1000000).as("mean_n"),
+        r6(col("mean")).as("mean_n"),
         when(col("sigma") > 0,
-          floor((col("n") - col("mean")) / col("sigma") * 10000 + 0.5)
-            / 10000).otherwise(lit(0.0)).as("z"),
+          r4((col("n") - col("mean")) / col("sigma")))
+          .otherwise(lit(0.0)).as("z"),
         (col("n") > col("mean") + lit(3) * col("sigma")).as("is_anomaly"))
 
   /** robust_stats: outlier-resistant value statistics per event type —
@@ -662,10 +654,9 @@ object Sessions {
     * one clamp-sum partial agg.
     */
   def robustStats(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val hist = Tables.events(spark, dir)
       .select(col("event_type"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
+        units(col("value"), 100).as("cents"))
       .groupBy(col("event_type"), col("cents"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(false) // feeds the quantile grid and the clamp-sum
@@ -723,10 +714,10 @@ object Sessions {
           lit(0.0))).as("sigma"))
     daily.join(broadcast(stats), Seq("event_type", "dow"))
       .select(col("event_type"), col("day"), col("dow"), col("n"),
-        (floor(col("mean") * 1000000 + 0.5) / 1000000).as("mean_n"),
+        r6(col("mean")).as("mean_n"),
         when(col("sigma") > 0,
-          floor((col("n") - col("mean")) / col("sigma") * 10000 + 0.5)
-            / 10000).otherwise(lit(0.0)).as("z"),
+          r4((col("n") - col("mean")) / col("sigma")))
+          .otherwise(lit(0.0)).as("z"),
         (col("n") > col("mean") + lit(3) * col("sigma")).as("is_anomaly"))
       .orderBy(col("event_type"), col("day"))
   }
@@ -767,7 +758,7 @@ object Sessions {
     * query is by construction.
     */
   private[graft] def cusumOfDaily(daily: DataFrame): DataFrame = {
-    val zu = floor(col("z") * 10000 + 0.5).cast("long")
+    val zu = units(col("z"), 10000)
     val wCum = Window.partitionBy(col("event_type")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     flagDaily(daily, dayStatsOf(daily))
@@ -825,8 +816,7 @@ object Sessions {
           .as("p50_sec"),
         min(when(col("cum") * 100 >= col("n") * 90, col("bin") * 60))
           .as("p90_sec"),
-        max(floor(col("tl").cast("double") / col("n") * 10000 + 0.5)
-          / 10000).as("mean_sec"))
+        max(r4(col("tl").cast("double") / col("n"))).as("mean_sec"))
   }
 
   /** session_entropy: per-user Shannon entropy of the event-type
@@ -846,12 +836,11 @@ object Sessions {
     * rollup.
     */
   def sessionEntropy(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val perType = Tables.events(spark, dir)
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("c"))
-    val tl = floor(col("c").cast("double") * log(col("c").cast("double"))
-      * 1000000 + 0.5).cast("long")
+    val tl =
+      units(col("c").cast("double") * log(col("c").cast("double")), 1000000)
     perType
       .groupBy(col("user_id"))
       .agg(sum(col("c")).as("n_events"),
@@ -888,7 +877,6 @@ object Sessions {
     * conditional rollup — map-shaped end to end.
     */
   def conversionLift(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val h = conv(substring(md5(col("user_id").cast("string")), 1, 15),
       16, 10).cast("long")
     val per = Tables.events(spark, dir)
@@ -913,7 +901,7 @@ object Sessions {
     g.select(col("na").as("n_a"), col("ca").as("conv_a"),
       r6(pa).as("p_a"), col("nb").as("n_b"), col("cb").as("conv_b"),
       r6(pb).as("p_b"), r6(pa - pb).as("lift"),
-      when(se > 0, floor(zRaw * 10000 + 0.5) / 10000)
+      when(se > 0, r4(zRaw))
         .otherwise(lit(0.0)).as("z_score"),
       (se > 0 && abs(zRaw) > LiftZCrit).as("is_significant"))
   }
@@ -940,15 +928,14 @@ object Sessions {
     * + a 1-row broadcast of the corpus max week).
     */
   def kmRetention(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val wCum = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     survivalGrid(spark, dir)
       .withColumn("lnu",
         when(col("d") < col("n_risk"),
-          floor(log(lit(1.0) -
-            col("d").cast("double") / col("n_risk")) * 1000000 + 0.5)
-            .cast("long")).otherwise(lit(0L)))
+          units(log(lit(1.0) -
+            col("d").cast("double") / col("n_risk")), 1000000))
+          .otherwise(lit(0L)))
       .withColumn("dead",
         max((col("d") === col("n_risk")).cast("int")).over(wCum))
       .withColumn("lns", sum(col("lnu")).over(wCum))
@@ -1002,13 +989,11 @@ object Sessions {
     * ≤|weeks| grid, bounded windows).
     */
   def nelsonAalen(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val wCum = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     survivalGrid(spark, dir)
       .withColumn("hu",
-        floor(col("d").cast("double") / col("n_risk") * 1000000 + 0.5)
-          .cast("long"))
+        units(col("d").cast("double") / col("n_risk"), 1000000))
       .withColumn("hs", sum(col("hu")).over(wCum))
       .select(col("t"), col("n_risk"), col("d").as("n_churn"),
         col("c").as("n_censored"),
@@ -1083,15 +1068,15 @@ object Sessions {
     val g = grid.filter(d > 0)
       .agg(count(lit(1)).as("n_times"),
         sum(col("d_a")).as("churn_a"), sum(col("d_b")).as("churn_b"),
-        sum(floor(eA * 1000000 + 0.5).cast("long")).as("eu"),
-        sum(floor(v * 1000000 + 0.5).cast("long")).as("vu"))
+        sum(units(eA, 1000000)).as("eu"),
+        sum(units(v, 1000000)).as("vu"))
       .crossJoin(tot)
     val u = col("churn_a").cast("double") - col("eu").cast("double") / 1000000
     val chi2 = u * u / (col("vu").cast("double") / 1000000)
     g.select(col("nu_a").as("n_users_a"), col("nu_b").as("n_users_b"),
       col("n_times"), col("churn_a"), col("churn_b"),
       (col("eu").cast("double") / 1000000).as("expected_a"),
-      when(col("vu") > 0, floor(chi2 * 10000 + 0.5) / 10000)
+      when(col("vu") > 0, r4(chi2))
         .otherwise(lit(0.0)).as("chi2"),
       (col("vu") > 0 && chi2 > LogrankChi2Crit).as("is_significant"))
   }
@@ -1117,7 +1102,6 @@ object Sessions {
     * rollup — map-shaped end to end, the conversionLift cost class.
     */
   def cupedLift(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val h = conv(substring(md5(col("user_id").cast("string")), 1, 15),
       16, 10).cast("long")
     val ev = Tables.events(spark, dir)
@@ -1183,7 +1167,6 @@ object Sessions {
     * pass, the BH pass is a dashboard frame.
     */
   def fdrBh(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val p = ksDrift(spark, dir)
       .filter(col("p_value").isNotNull)
       .select(col("event_type"), col("p_value"))
@@ -1253,14 +1236,13 @@ object Sessions {
     * correction, 6dp.
     */
   private[graft] def hllEstimateOf(regs: DataFrame): DataFrame = {
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val m = HllBuckets
     val two55 = lit(36028797018963968L) // 2^55
     val s = (col("sp") + (lit(m.toLong) - col("nb")) * two55).as("s")
     val eRaw = lit(0.709) * lit(4096.0) /
       (col("s").cast("double") / two55.cast("double"))
     val v = lit(m.toLong) - col("nb")
-    val est = rnd6(when(v > 0 && eRaw <= lit(2.5 * m),
+    val est = r6(when(v > 0 && eRaw <= lit(2.5 * m),
       lit(64.0) * log(lit(64.0) / v.cast("double"))).otherwise(eRaw))
     regs.groupBy(col("event_type"))
       .agg(count(lit(1)).as("nb"),
@@ -1272,7 +1254,6 @@ object Sessions {
   }
 
   def approxDistinct(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val du = Tables.events(spark, dir)
       .select(col("event_type"), col("user_id")).distinct()
       .localCheckpoint(false) // feeds the sketch AND the exact arm
@@ -1369,7 +1350,7 @@ object Sessions {
     val e = Tables.events(spark, dir)
       .select(col("user_id"),
         expr("ts div 1000000000 div 86400").as("day"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
+        units(col("value"), 100).as("cents"))
     val ref = e.agg(max(col("day")).as("ref_day"))
     // integer halves, then the exact power-of-two weight as a shift
     // (scala shiftleft() only takes a literal count — SQL form doesn't)
@@ -1382,8 +1363,8 @@ object Sessions {
       .agg(count(lit(1)).as("n_events"), max(col("day")).as("last_day"),
         sum(col("wu")).as("su"))
       .select(col("user_id"), col("n_events"), col("last_day"),
-        (floor(col("su").cast("double") / (1L << DecayMaxHalves) / 100
-          * 10000 + 0.5) / 10000).as("decayed_value"))
+        r4(col("su").cast("double") / (1L << DecayMaxHalves) / 100)
+          .as("decayed_value"))
       .orderBy(col("user_id"))
   }
 
@@ -1405,7 +1386,6 @@ object Sessions {
     * in double with one fixed operand order, 4dp-floored.
     */
   def userOverlap(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val ut = Tables.events(spark, dir)
       .select(col("event_type"), col("user_id")).distinct()
       .localCheckpoint(false) // feeds sizes, the pair join, and the U count
@@ -1447,7 +1427,6 @@ object Sessions {
     * the share/peak window runs on the grid only.
     */
   def weeklyProfile(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val grid = Tables.events(spark, dir)
       .select(col("event_type"),
         pmod(expr("ts div 1000000000 div 86400") + 3, lit(7)).as("dow"))
@@ -1488,7 +1467,6 @@ object Sessions {
     * like the retention window, not the data.
     */
   def seasonalStrength(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val ev = Tables.events(spark, dir)
       .select(col("event_type"),
         expr("ts div 1000000000 div 86400").as("day"))
@@ -1506,8 +1484,8 @@ object Sessions {
     val sw = grid.groupBy(col("event_type"), col("dow"))
       .agg(sum(col("n")).as("sg"), count(lit(1)).as("cg"))
       .groupBy(col("event_type"))
-      .agg(sum(floor(col("sg").cast("double") * col("sg") / col("cg")
-        * 1000000 + 0.5).cast("long")).as("swu"))
+      .agg(sum(units(col("sg").cast("double") * col("sg") / col("cg"),
+        1000000)).as("swu"))
     val tot = grid.groupBy(col("event_type"))
       .agg(sum(col("n")).as("s"), count(lit(1)).as("nd"),
         sum(col("n") * col("n")).as("a"))
@@ -1534,8 +1512,7 @@ object Sessions {
       .agg(
         count(lit(1)).cast("int").as("n"),
         round(decSum("value").cast("double"), 2).as("sum_value"),
-        (floor(decSum("value").cast("double") / count(lit(1)) * 10000 + 0.5)
-          / 10000).as("avg_value"))
+        r4(decSum("value").cast("double") / count(lit(1))).as("avg_value"))
       .select(
         date_format(timestamp_seconds(col("hr") * 3600),
           "yyyy-MM-dd HH:mm:ss").as("window_start"),
@@ -1565,7 +1542,6 @@ object Sessions {
     * rounded renormalization.
     */
   def markovStationary(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val base = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         expr("ts div 1000000000").as("sec"))
@@ -1579,8 +1555,8 @@ object Sessions {
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("from_type"), col("to_type"),
-        floor(col("n").cast("double") / sum(col("n")).over(wf) * 1000000
-          + lit(0.5)).cast("long").as("pu"))
+        units(col("n").cast("double") / sum(col("n")).over(wf), 1000000)
+          .as("pu"))
       .localCheckpoint(false)
     val emp = base.groupBy(col("event_type")).agg(count(lit(1)).as("ne"))
       .localCheckpoint(false)
@@ -1605,10 +1581,10 @@ object Sessions {
         .groupBy(col("to_type"))
         .agg(sum(col("pu") * col("vu")).as("raw"))
         .select(col("to_type").as("t"),
-          floor(col("raw").cast("double") /
+          units(col("raw").cast("double") /
             sum(col("raw")).over(Window.rowsBetween(
-              Window.unboundedPreceding, Window.unboundedFollowing))
-            * 1000000 + lit(0.5)).cast("long").as("vu"))
+              Window.unboundedPreceding, Window.unboundedFollowing)),
+          1000000).as("vu"))
     }
     emp.crossJoin(k).join(pi, col("event_type") === col("t"), "left")
       .select(col("event_type"),
@@ -1644,7 +1620,7 @@ object Sessions {
   def bradleyTerry(spark: SparkSession, dir: String): DataFrame = {
     val perUT = Tables.events(spark, dir)
       .select(col("user_id"), col("event_type"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
+        units(col("value"), 100).as("cents"))
       .groupBy(col("user_id"), col("event_type"))
       .agg(sum(col("cents")).as("su"))
     val a = perUT.select(col("user_id"), col("event_type").as("ta"),
@@ -1683,19 +1659,17 @@ object Sessions {
         .join(p.select(col("t"), col("pu").as("pt")), Seq("t"))
         .join(p.select(col("t").as("o"), col("pu").as("po")), Seq("o"))
         .select(col("t"),
-          floor(col("n").cast("double") /
-            ((col("pt") + col("po")).cast("double") / 1000000) * 1000000
-            + lit(0.5)).cast("long").as("termu"))
+          units(col("n").cast("double") /
+            ((col("pt") + col("po")).cast("double") / 1000000), 1000000)
+          .as("termu"))
         .groupBy(col("t")).agg(sum(col("termu")).as("s"))
       p = terms.join(wins.select(col("t"), col("wins")), Seq("t"))
         .select(col("t"),
-          floor(col("wins").cast("double") /
-            (col("s").cast("double") / 1000000) * 1000000 + lit(0.5))
-            .cast("long").as("pr"))
+          units(col("wins").cast("double") /
+            (col("s").cast("double") / 1000000), 1000000).as("pr"))
         .select(col("t"),
-          floor(col("pr").cast("double") * count(lit(1)).over(wAll) /
-            sum(col("pr")).over(wAll) * 1000000 + lit(0.5))
-            .cast("long").as("pu"))
+          units(col("pr").cast("double") * count(lit(1)).over(wAll) /
+            sum(col("pr")).over(wAll), 1000000).as("pu"))
         .localCheckpoint(false)
     }
     wins.join(p, Seq("t"))
@@ -1722,7 +1696,6 @@ object Sessions {
     * expression, 6dp-rounded outputs.
     */
   def abPower(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val h = conv(substring(md5(col("user_id").cast("string")), 1, 15),
       16, 10).cast("long")
     val per = Tables.events(spark, dir)
@@ -1761,9 +1734,8 @@ object Sessions {
       .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n_a"),
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n_b"))
       .select(col("n_a"), col("n_b"),
-        (floor((col("n_a") - col("n_b")) * (col("n_a") - col("n_b"))
-          .cast("double") / (col("n_a") + col("n_b")) * 10000 + 0.5)
-          / 10000).as("chi2"))
+        r4((col("n_a") - col("n_b")) * (col("n_a") - col("n_b"))
+          .cast("double") / (col("n_a") + col("n_b"))).as("chi2"))
       .withColumn("srm_flag", col("chi2") > SrmChi2Crit)
   }
 
@@ -1803,7 +1775,7 @@ object Sessions {
     val conv = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("sec").as("csec"),
         col("event_id").as("cid"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
+        units(col("value"), 100).as("cents"))
     val touch = ev.filter(col("event_type") =!= "purchase")
       .select(col("user_id"), col("sec").as("tsec"),
         col("event_id").as("tid"), col("event_type").as("ttype"))
@@ -1873,7 +1845,6 @@ object Sessions {
     * groupBy — linear in the day grid, independent of event volume.
     */
   def ewmaChart(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val daily = dailyCounts(Tables.events(spark, dir))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("event_type")).orderBy(col("day"))))
@@ -1882,7 +1853,7 @@ object Sessions {
       col("n")))
     val wts = broadcast(daily.sparkSession.createDataFrame(EwmaWeights)
       .toDF("i", "ui", "ti"))
-    val meanu = floor(col("mean") * 1000000 + 0.5).cast("long")
+    val meanu = units(col("mean"), 1000000)
     // z_t = Σ_{i<k} u_i·x_{t-i} + t_k·μ, k = min(t, lags): the offset
     // join pairs day t with its ≤40 predecessors BY OBSERVED INDEX —
     // an equi-join on (type, rn−i) after the tiny weight-table fan-out
@@ -1934,11 +1905,10 @@ object Sessions {
     * Scale shape: ksDrift's grid + one cumulative window + one rollup.
     */
   def mannWhitney(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val d38 = (c: Column) => c.cast("decimal(38,0)")
     val ev = Tables.events(spark, dir)
       .select(col("event_type"), expr("ts div 1000000000").as("sec"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long").as("vu"))
+        units(col("value"), 1000000).as("vu"))
     val mid = broadcast(ev.agg(
       expr("(min(sec) + max(sec)) div 2").as("mid")).localCheckpoint(false))
     val grid = ev.crossJoin(mid)
@@ -1997,10 +1967,9 @@ object Sessions {
     * the 1-row midpoint broadcast.
     */
   def ksDrift(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val ev = Tables.events(spark, dir)
       .select(col("event_type"), expr("ts div 1000000000").as("sec"),
-        floor(col("value") * 1000000 + lit(0.5)).cast("long").as("vu"))
+        units(col("value"), 1000000).as("vu"))
     val mid = broadcast(ev.agg(
       expr("(min(sec) + max(sec)) div 2").as("mid")).localCheckpoint(false))
     val grid = ev.crossJoin(mid)
@@ -2138,7 +2107,6 @@ object Sessions {
     * broadcast. At 100 TB the grid grows like the calendar.
     */
   def sesBacktest(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val ev = Tables.events(spark, dir)
       .select(col("event_type"), expr("ts div 86400000000000").as("day"))
     val span = broadcast(ev.agg(min(col("day")).as("d0"),
@@ -2168,7 +2136,7 @@ object Sessions {
           col("ld") === col("day") - col("lag"))
     val perDay = probes
       .groupBy(col("event_type"), col("day"), col("yt"))
-      .agg(sum(floor(col("w") * col("yl") * 1000000 + 0.5).cast("long"))
+      .agg(sum(units(col("w") * col("yl"), 1000000))
         .as("yhat6"),
         sum(when(col("lag") === 7, col("yl"))).as("y7"))
     perDay
@@ -2207,7 +2175,6 @@ object Sessions {
     * partial agg; every margin and join after is k-bounded. Flat.
     */
   def markovOrder(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("sec"), col("event_id"))
     val tri = Tables.events(spark, dir)
@@ -2227,10 +2194,9 @@ object Sessions {
       .join(nab, Seq("a", "b")).join(nbc, Seq("b", "c"))
       .join(nb, Seq("b"))
       .select(col("n3"),
-        floor(col("n3").cast("double") *
+        units(col("n3").cast("double") *
           log(col("n3").cast("double") * col("n1") /
-            (col("n2f").cast("double") * col("n2s"))) * 1000000 + 0.5)
-          .cast("long").as("t6"))
+            (col("n2f").cast("double") * col("n2s"))), 1000000).as("t6"))
     val kf = broadcast(tri.agg(
       countDistinct(col("b")).as("k")).localCheckpoint(false))
     val dfn = col("k") * (col("k") - 1) * (col("k") - 1)
@@ -2256,7 +2222,6 @@ object Sessions {
     * depth) bin partial agg. Flat past the sessionize pass.
     */
   def sessionLengthHist(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val g = sessionize(spark, dir)
       .select(col("n_events").cast("long").as("ne"))
       .select(col("ne"), expr(
@@ -2293,7 +2258,6 @@ object Sessions {
     * constant output.
     */
   def overdispersion(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val m = Tables.events(spark, dir)
       .groupBy(col("user_id")).agg(count(lit(1)).as("x"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
@@ -2360,7 +2324,6 @@ object Sessions {
     * partition, not users.
     */
   def bootstrapCi(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val perUser = Tables.events(spark, dir)
       .groupBy(col("user_id")).agg(count(lit(1)).as("x"))
       .localCheckpoint(false) // feeds the point estimate and the replicas
@@ -2381,8 +2344,7 @@ object Sessions {
       .groupBy(col("b"))
       .agg(sum(col("w")).as("sw"), sum(col("w") * col("x")).as("swx"))
       .filter(col("sw") > 0)
-      .select(floor(col("swx").cast("double") / col("sw") * 1000000
-        + 0.5).cast("long").as("mu6"))
+      .select(units(col("swx").cast("double") / col("sw"), 1000000).as("mu6"))
     // <= B rows from here — the unpartitioned windows are deliberate
     val ranked = perRep.withColumn("r",
         row_number().over(Window.orderBy(col("mu6"))))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.{r2, r4, r6, units}
 import graft.functions.VectorFunctions.{cosineSim, dot}
 import graft.sources.Tables
 
@@ -41,7 +42,8 @@ import graft.sources.Tables
   *  - per-query recall is n_matched / k for each sampled query
   *    ([[recallPerQuery]]); micro recall, one row per arm, is
   *    Σ n_matched / (n_queries · k) ([[recallMicro]]);
-  *  - every ratio is floored to 4dp as floor(x · 10⁴ + ½) / 10⁴ ([[r4]]),
+  *  - every ratio is floored to 4dp as floor(x · 10⁴ + ½) / 10⁴
+  *    ([[graft.functions.Fixed.r4]]),
   *    the primitive the DuckDB oracle mirrors exactly (round() disagrees
   *    with it at ties).
   */
@@ -238,8 +240,6 @@ object Similarity {
       .filter(col("q_id") % 100 === 0 && col("rank_all") <= k)
       .select((Seq("q_id", "neighbor_id") ++ keep).map(col): _*)
 
-  private def r4(c: Column): Column = floor(c * 10000 + 0.5) / 10000
-
   /** `truth` LEFT JOIN the broadcast probe answers: `an` is null on a
     * truth edge the probe missed. `approx` carries (q_id, neighbor_id);
     * the broadcast is bounded by the probe's own top-k per query.
@@ -286,8 +286,7 @@ object Similarity {
   /** The 1-row 2dp mean of a per-query cost column. */
   private def meanPerQuery(perQuery: DataFrame, c: String,
       as: String): DataFrame =
-    perQuery.agg((floor(sum(col(c)).cast("double") / count(lit(1)) * 100
-      + 0.5) / 100).as(as))
+    perQuery.agg(r2(sum(col(c)).cast("double") / count(lit(1))).as(as))
 
   /** Coarse routing: each query's `maxNp` nearest cells by centroid
     * cosine, ties to the smaller cid, as (q_id, qe, cid, pcs, pr) with
@@ -354,7 +353,7 @@ object Similarity {
     * by the ann_pq gate, a latent flake in every centroid mean).
     */
   private def mean6f(v: Column): Column =
-    (floor(sum(floor(v.cast("double") * 10000000 + lit(0.5)).cast("long"))
+    (floor(sum(units(v.cast("double"), 10000000))
       .cast("double") / (count(lit(1)) * 10) + lit(0.5)) / 1000000)
       .cast("float")
 
@@ -704,7 +703,7 @@ object Similarity {
     val a = lit(1.0) - col("cown")
     val b = lit(1.0) - col("cother")
     val sil = when(greatest(a, b) > 0,
-      floor((b - a) / greatest(a, b) * 1000000 + 0.5) / 1000000)
+      r6((b - a) / greatest(a, b)))
       .otherwise(lit(0.0))
     per.select(col("ccell"), sil.cast("decimal(18,6)").as("sil"))
       .groupBy(col("ccell"))
@@ -756,7 +755,7 @@ object Similarity {
     // the top-AvgK cosines, one mirrored double division
     val avgk = t.filter(col("rank_all") <= BitextAvgK)
       .select(col("q_id"),
-        floor(col("s") * 1000000 + 0.5).cast("long").as("su"))
+        units(col("s"), 1000000).as("su"))
       .groupBy(col("q_id"))
       .agg((floor(sum(col("su")).cast("double") / BitextAvgK + 0.5)
         / 1000000).as("avgk"))
@@ -774,8 +773,8 @@ object Similarity {
       .join(avgk.select(col("q_id").as("y"), col("avgk").as("ay")), "y")
       .filter((col("ax") + col("ay")) / lit(2.0) > 0)
       .select(col("x"), col("y"),
-        (floor(col("s") * 1000000 + 0.5) / 1000000).as("cos"),
-        r4((floor(col("s") * 1000000 + 0.5) / 1000000) /
+        r6(col("s")).as("cos"),
+        r4(r6(col("s")) /
           ((col("ax") + col("ay")) / lit(2.0))).as("margin"))
     scored.orderBy(col("margin").desc, col("x"), col("y"))
       .limit(BitextTopN)
@@ -919,13 +918,12 @@ object Similarity {
       .select(posexplode(col("embedding")).as(Seq("i", "v")))
       .join(broadcast(st), "i")
       .select(col("i"),
-        (floor(err * err * 1000000 + 0.5) / 1000000)
+        r6(err * err)
           .cast("decimal(18,6)").as("e2"))
       .groupBy(col("i"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("e2")).as("se"))
       .select(col("i"), col("n_vecs"),
-        (floor(col("se").cast("double") / col("n_vecs") * 1000000 + 0.5)
-          / 1000000).as("mse"))
+        r6(col("se").cast("double") / col("n_vecs")).as("mse"))
       .orderBy(col("i"))
   }
 
@@ -1026,8 +1024,7 @@ object Similarity {
   private def sqRefitBounds(spark: SparkSession, dir: String): DataFrame = {
     val g = Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("i", "v")))
-      .select(col("i"), floor(col("v").cast("double") * 10000000
-        + lit(0.5)).cast("long").as("vu"))
+      .select(col("i"), units(col("v").cast("double"), 10000000).as("vu"))
       .groupBy(col("i"), col("vu")).agg(count(lit(1)).as("c"))
     val wIn = Window.partitionBy(col("i")).orderBy(col("vu"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -1077,8 +1074,7 @@ object Similarity {
     val st = sqStats(spark, dir)
     Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("i", "v")))
-      .select(col("i"), floor(col("v").cast("double") * 10000000
-        + lit(0.5)).cast("long").as("vu"))
+      .select(col("i"), units(col("v").cast("double"), 10000000).as("vu"))
       .join(broadcast(b), Seq("i"))
       .groupBy(col("i"), col("n"), col("lo"), col("hi"),
         col("vlo"), col("vhi"))
@@ -1114,7 +1110,7 @@ object Similarity {
     val st = sqStats(spark, dir)
     val b = sqRefitBounds(spark, dir)
     def e2(err: Column): Column =
-      (floor(err * err * 1000000 + 0.5) / 1000000).cast("decimal(18,6)")
+      r6(err * err).cast("decimal(18,6)")
     val joined = Tables
       .cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("i", "v")))
@@ -1127,8 +1123,8 @@ object Similarity {
         e2(col("v").cast("double") -
           sqDequantClip(col("v"), col("lo"), col("hi")).cast("double"))
           .as("er"),
-        (floor(col("v").cast("double") * 10000000 + lit(0.5)).cast("long")
-          .between(col("vlo"), col("vhi"))).as("inr"))
+        units(col("v").cast("double"), 10000000)
+          .between(col("vlo"), col("vhi")).as("inr"))
     val agg = joined.groupBy(col("i"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(col("eb")).as("seb"), sum(col("er")).as("ser"),
@@ -1136,7 +1132,7 @@ object Similarity {
         sum(when(col("inr"), col("eb"))).as("sebi"),
         sum(when(col("inr"), col("er"))).as("seri"))
     def mse(se: Column, n: Column): Column =
-      floor(se.cast("double") / n * 1000000 + 0.5) / 1000000
+      r6(se.cast("double") / n)
     val base = agg.select(lit("base").as("arm"), col("i"), col("n_vecs"),
       mse(col("seb"), col("n_vecs")).as("mse"), col("n_inrange"),
       mse(col("sebi"), col("n_inrange")).as("mse_inrange"))
@@ -1219,8 +1215,7 @@ object Similarity {
       count(lit(1)).as("n_cells"))
     cnt.crossJoin(broadcast(tot))
       .select(col("ccell"), col("n_vectors"),
-        (floor(col("n_vectors").cast("double") / col("total") * 1000000
-          + 0.5) / 1000000).as("share"),
+        r6(col("n_vectors").cast("double") / col("total")).as("share"),
         r4(col("n_vectors").cast("double") * col("n_cells") / col("total"))
           .as("skew"))
       .withColumn("rank", row_number().over(
@@ -1335,8 +1330,7 @@ object Similarity {
       .select(col("ccell").cast("int").as("cell"),
         floor(col("ccell") / 2).cast("int").as("parent"),
         col("n_vectors"),
-        (floor(col("n_vectors").cast("double") / col("total") * 1000000
-          + 0.5) / 1000000).as("share"),
+        r6(col("n_vectors").cast("double") / col("total")).as("share"),
         r4(col("n_vectors").cast("double") * col("n_cells") / col("total"))
           .as("skew"),
         col("fcell").isNotNull.as("was_split"))
@@ -1401,8 +1395,8 @@ object Similarity {
           pick(1, 2).as("p50_scanned"),
           pick(19, 20).as("p95_scanned"),
           max(col("scanned")).as("max_scanned"),
-          (floor(sum(col("scanned")).cast("double") / max(col("n"))
-            * 100 + 0.5) / 100).as("mean_scanned"))
+          r2(sum(col("scanned")).cast("double") / max(col("n")))
+            .as("mean_scanned"))
         .select(lit(np).as("nprobe"), col("n_queries"),
           col("p50_scanned"), col("p95_scanned"), col("max_scanned"),
           col("mean_scanned"))
@@ -1515,9 +1509,8 @@ object Similarity {
       .select(col("bq"),
         (!(col("ni") === col("na") && col("na") === col("nb")))
           .as("changed"),
-        floor(col("ni").cast("double")
-          / (col("na") + col("nb") - col("ni")) * 10000 + 0.5)
-          .cast("long").as("ju"))
+        units(col("ni").cast("double")
+          / (col("na") + col("nb") - col("ni")), 10000).as("ju"))
     perQ.agg(count(lit(1)).as("n_queries"),
         sum(when(col("changed"), 1L).otherwise(0L)).as("n_changed"),
         sum(col("ju")).as("jus"))
@@ -1550,8 +1543,7 @@ object Similarity {
     val sims = idx.lists
       .join(broadcast(idx.coarse), col("ccell") === col("cid"))
       .select(col("ccell"), col("vec_id"),
-        floor(cosineSim(col("embedding"), col("cvec")) * 1000000 + 0.5)
-          .cast("long").as("su"))
+        units(cosineSim(col("embedding"), col("cvec")), 1000000).as("su"))
     val means = sims.groupBy(col("ccell"))
       .agg(floor(sum(col("su")).cast("double") / count(lit(1)))
         .cast("long").as("mu"))
@@ -1583,7 +1575,6 @@ object Similarity {
     * partial agg feeding a cell-bounded argmax window + entropy agg.
     */
   def cellPurity(spark: SparkSession, dir: String): DataFrame = {
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val cl = ivfFlatIndex(spark, dir).lists.select(col("vec_id"), col("ccell"))
       .join(Tables.embeddings(spark, dir).select(col("vec_id"), col("label")),
         "vec_id")
@@ -1599,13 +1590,13 @@ object Similarity {
     val agg = cl.groupBy(col("ccell"))
       .agg(sum(col("c")).as("n_vecs"),
         count(lit(1)).as("n_labels"),
-        sum(col("c") * rnd6(log(col("c").cast("double")))
+        sum(col("c") * r6(log(col("c").cast("double")))
           .cast("decimal(18,6)")).as("clogc"))
     agg.join(top, "ccell")
       .select(col("ccell"), col("n_vecs"), col("n_labels"),
         col("top_label"),
         r4(col("top_c").cast("double") / col("n_vecs")).as("top_share"),
-        rnd6(log(col("n_vecs").cast("double")) -
+        r6(log(col("n_vecs").cast("double")) -
           col("clogc").cast("double") / col("n_vecs")).as("entropy"))
       .orderBy(col("ccell"))
   }
@@ -1884,13 +1875,12 @@ object Similarity {
     sv.join(idx.codes, Seq("vec_id", "m"))
       .join(broadcast(idx.codebooks), Seq("m", "cid"))
       .select(col("m"),
-        (floor(sqDist(col("sub"), col("cvec")) * 1000000 + 0.5) / 1000000)
+        r6(sqDist(col("sub"), col("cvec")))
           .cast("decimal(18,6)").as("d2"))
       .groupBy(col("m"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("d2")).as("sd"))
       .select(col("m"), col("n_vecs"),
-        (floor(col("sd").cast("double") / col("n_vecs") * 1000000 + 0.5)
-          / 1000000).as("mse"))
+        r6(col("sd").cast("double") / col("n_vecs")).as("mse"))
       .orderBy(col("m"))
   }
 
@@ -1908,12 +1898,11 @@ object Similarity {
     sv.join(codes, Seq("vec_id", "m"))
       .join(broadcast(cb), Seq("m", "cid"))
       .select(col("m"),
-        (floor(sqDist(col("sub"), col("cvec")) * 1000000 + 0.5) / 1000000)
+        r6(sqDist(col("sub"), col("cvec")))
           .cast("decimal(18,6)").as("d2"))
       .groupBy(col("m"))
       .agg(count(lit(1)).as("n_vecs"),
-        (floor(sum(col("d2")).cast("double") / count(lit(1)) * 1000000
-          + 0.5) / 1000000).as("mse"))
+        r6(sum(col("d2")).cast("double") / count(lit(1))).as("mse"))
 
   /** The scoped-refresh PARTS: mse-before audit, the flagged worst-MSE
     * subspace (ties → smaller m; 1-row broadcast, the argmax rides an
@@ -2063,7 +2052,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("m"), col("sub").as("qsub"))
       .join(broadcast(idx.codebooks), "m")
       .select(col("q_id"), col("m"), col("cid"),
-        (floor(dot(col("qsub"), col("cvec")) * 1000000 + 0.5) / 1000000)
+        r6(dot(col("qsub"), col("cvec")))
           .cast("decimal(18,6)").as("part"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("neighbor_id"))
@@ -2181,7 +2170,7 @@ object Similarity {
         .as(Seq("m", "qsub")))
     val adc = qsubRows.join(broadcast(idx.codebooks), "m")
       .select(col("q_id"), col("pcell"), col("m"), col("cid"),
-        (floor(dot(col("qsub"), col("cvec")) * 1000000 + 0.5) / 1000000)
+        r6(dot(col("qsub"), col("cvec")))
           .cast("decimal(18,6)").as("part"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("neighbor_id"))
@@ -2377,8 +2366,8 @@ object Similarity {
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(when(col("norm") === 0, 1L).otherwise(0L)).as("zero_vecs"),
-        (floor(sum(col("norm").cast("decimal(18,6)")).cast("double")
-          / count(lit(1)) * 1000000 + lit(0.5)) / 1000000).as("mean_norm"),
+        r6(sum(col("norm").cast("decimal(18,6)")).cast("double")
+          / count(lit(1))).as("mean_norm"),
         min(col("norm")).as("min_norm"),
         max(col("norm")).as("max_norm"))
       .orderBy(col("label"))
@@ -2403,20 +2392,18 @@ object Similarity {
     * groupBy on 64 keys — map-shaped, no joins, no windows.
     */
   def dimVariance(spark: SparkSession, dir: String): DataFrame = {
-    def rnd6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val d = (c: Column) => c.cast("decimal(38,0)")
     Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("dim", "v")))
       .select(col("dim"),
-        floor(col("v").cast("double") * 10000000 + lit(0.5)).cast("long")
-          .as("vu"))
+        units(col("v").cast("double"), 10000000).as("vu"))
       .groupBy(col("dim"))
       .agg(count(lit(1)).as("n"), sum(d(col("vu"))).as("sv"),
         sum(d(col("vu") * col("vu"))).as("svv"),
         min(col("vu")).as("mn"), max(col("vu")).as("mx"))
       .select(col("dim"),
-        rnd6(col("sv").cast("double") / 10000000 / col("n")).as("mean"),
-        rnd6((d(col("n")) * col("svv") - col("sv") * col("sv"))
+        r6(col("sv").cast("double") / 10000000 / col("n")).as("mean"),
+        r6((d(col("n")) * col("svv") - col("sv") * col("sv"))
           .cast("double") / col("n").cast("double") / col("n")
           / 100000000000000L.toDouble).as("variance"),
         (col("mn").cast("double") / 10000000).as("min_v"),
@@ -2555,8 +2542,8 @@ object Similarity {
     val stats = j.select(col("source"), norm.as("nm"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_vecs"),
-        (floor(sum(col("nm").cast("decimal(18,6)")).cast("double")
-          / count(lit(1)) * 1000000 + lit(0.5)) / 1000000)
+        r6(sum(col("nm").cast("decimal(18,6)")).cast("double")
+          / count(lit(1)))
           .as("mean_norm"))
     stats.join(srcCent, Seq("source"))
       .crossJoin(broadcast(glob))
@@ -2763,7 +2750,6 @@ object Similarity {
     */
   private def mmrGreedy(spark: SparkSession, dir: String,
       pool: DataFrame): DataFrame = {
-    def r6f(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val e = Tables.embeddings(spark, dir)
     val cand = pool.localCheckpoint(false) // feeds cc + every round
     val ca = cand.select(col("q_id").as("cq"), col("doc_id").as("d1"))
@@ -2790,7 +2776,7 @@ object Similarity {
     val wPick = Window.partitionBy(col("q_id"))
       .orderBy(col("score").desc, col("doc_id"))
     var sel = cand
-      .withColumn("score", r6f(lit(mmrLam) * col("simq")))
+      .withColumn("score", r6(lit(mmrLam) * col("simq")))
       .withColumn("rn", row_number().over(wPick))
       .filter(col("rn") === 1)
       .select(col("q_id"), col("doc_id"), col("simq"), lit(1).as("pick"))
@@ -2805,7 +2791,7 @@ object Similarity {
         .groupBy(col("q_id"), col("doc_id"), col("simq"))
         .agg(max(col("cs")).as("pen"))
       val selK = sel.union(pen
-        .withColumn("score", r6f(lit(mmrLam) * col("simq") -
+        .withColumn("score", r6(lit(mmrLam) * col("simq") -
           lit(mmrGam) * col("pen")))
         .withColumn("rn", row_number().over(wPick))
         .filter(col("rn") === 1)
@@ -2841,8 +2827,7 @@ object Similarity {
   private def dimMeanRows(e: DataFrame): DataFrame =
     e.select(posexplode(col("embedding")).as(Seq("d", "x")))
       .select(col("d"),
-        floor(col("x").cast("double") * 1000000 + lit(0.5)).cast("long")
-          .as("xu"))
+        units(col("x").cast("double"), 1000000).as("xu"))
       .groupBy(col("d"))
       .agg(floor(sum(col("xu")).cast("double") / count(lit(1)) + lit(0.5))
         .cast("long").as("mu"))
@@ -2912,7 +2897,6 @@ object Similarity {
     * integers).
     */
   def pcaPower(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     pcaBasis(spark, dir)
       .select(col("dim"),
         r6(col("vu").cast("double") /
@@ -2929,8 +2913,8 @@ object Similarity {
     def norm6(df: DataFrame, v: Column, keep: Seq[Column]): DataFrame = {
       val m = broadcast(df.agg(max(abs(v)).as("mx")).localCheckpoint(false))
       df.crossJoin(m)
-        .select(keep :+ (floor(v.cast("double") / col("mx").cast("double")
-          * 1000000 + lit(0.5)).cast("long").as("v")): _*)
+        .select(keep :+ units(v.cast("double") / col("mx").cast("double"),
+          1000000).as("v"): _*)
     }
     val d38 = (c: Column) => c.cast("decimal(38,0)")
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir),
@@ -2941,7 +2925,7 @@ object Similarity {
     // re-eval trap: a deferred zip_with would re-run 64× per element)
     val centered = e.crossJoin(mu)
       .select(col("vec_id"), zip_with(col("embedding"), col("muarr"),
-        (x, m) => floor(x.cast("double") * 1000000 + lit(0.5)).cast("long")
+        (x, m) => units(x.cast("double"), 1000000)
           - m).as("carr"))
       .localCheckpoint(false)
     // upper-triangle scatter: explode dims, then pair each dim with its
@@ -2992,9 +2976,9 @@ object Similarity {
       .groupBy(col("d")).agg(sum(col("c6") * col("vu")).as("w"))
     val rm = broadcast(rw.agg(max(abs(col("w"))).as("m")).localCheckpoint(false))
     val w6 = rw.crossJoin(rm)
-      .select(col("d"), floor(col("w").cast("double") /
-        col("m").cast("double") * 1000000 + lit(0.5)).cast("long")
-        .as("w6"))
+      .select(col("d"),
+        units(col("w").cast("double") / col("m").cast("double"), 1000000)
+          .as("w6"))
     val quad = broadcast(w6.join(v, col("d") === col("e"))
       .agg(sum(col("v") * col("w6")).as("quad6")).localCheckpoint(false))
     val l2 = broadcast(v.agg(sum(col("v") * col("v")).as("l2"))
@@ -3043,7 +3027,7 @@ object Similarity {
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir),
       col("vec_id"))
     val cu = zip_with(col("embedding"), col("muarr"),
-      (x, m) => floor(x.cast("double") * 1000000 + lit(0.5)).cast("long")
+      (x, m) => units(x.cast("double"), 1000000)
         - m)
     val pu = aggregate(zip_with(cu, col("vuarr"), (a, v) => a * v),
       lit(0L), (acc, x) => acc + x)
@@ -3087,8 +3071,8 @@ object Similarity {
   def buildBqCodes(spark: SparkSession, dir: String, path: String): Unit = {
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir),
       col("vec_id"))
-    val mu = broadcast(dimMeansU6(e).localCheckpoint(false))
-    val codes = e.crossJoin(mu)
+    val mu = dimMeansU6(e).localCheckpoint(false)
+    val codes = e.crossJoin(broadcast(mu))
       .select(col("vec_id"), bqBitsOf(col("embedding")).as("bits"))
       .select(col("vec_id"), posexplode(col("bits")).as(Seq("d", "b")))
       .groupBy(col("vec_id"))
@@ -3106,8 +3090,7 @@ object Similarity {
     */
   private def bqBitsOf(v: Column): Column =
     zip_with(v, col("muarr"),
-      (x, m) => when(floor(x.cast("double") * 1000000 + lit(0.5))
-        .cast("long") > m, 1L).otherwise(0L))
+      (x, m) => when(units(x.cast("double"), 1000000) > m, 1L).otherwise(0L))
 
   def bqCodes(spark: SparkSession, dir: String): DataFrame = {
     val path = bqCodesPath(dir)
@@ -3308,8 +3291,7 @@ object Similarity {
     val g = Tables.cpuPartition(Tables.embeddings(spark, dir),
         col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("d"), floor(col("x").cast("double") * 1000000
-        + lit(0.5)).cast("long").as("xu"))
+      .select(col("d"), units(col("x").cast("double"), 1000000).as("xu"))
       .groupBy(col("d"), col("xu")).agg(count(lit(1)).as("c"))
     val wIn = Window.partitionBy(col("d")).orderBy(col("xu"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -3351,8 +3333,7 @@ object Similarity {
   def bqRethreshold(spark: SparkSession, dir: String): DataFrame = {
     Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
       .select(posexplode(col("embedding")).as(Seq("d", "x")))
-      .select(col("d"), floor(col("x").cast("double") * 1000000
-        + lit(0.5)).cast("long").as("xu"))
+      .select(col("d"), units(col("x").cast("double"), 1000000).as("xu"))
       .join(broadcast(bqThresholds(spark, dir)), Seq("d"))
       .groupBy(col("d"), col("mu"), col("new_thr"), col("flagged"))
       .agg(count(lit(1)).as("n_vecs"),
@@ -3394,8 +3375,7 @@ object Similarity {
       .select(col("vec_id"), posexplode(col("embedding"))
         .as(Seq("d", "x")))
       .select(col("vec_id"), col("d"),
-        floor(col("x").cast("double") * 1000000 + lit(0.5)).cast("long")
-          .as("xu"))
+        units(col("x").cast("double"), 1000000).as("xu"))
       .join(broadcast(bqThresholds(spark, dir)), Seq("d"))
       .select(col("vec_id"), col("d"),
         when(col("xu") > col("new_thr"), 1L).otherwise(0L).as("b"))

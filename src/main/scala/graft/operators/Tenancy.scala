@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.{r4, r6}
 import graft.sources.Tables
 
 /** Multi-tenant routing — the Spark-native analogue of the reference's
@@ -65,7 +66,6 @@ object Tenancy {
     * Parity: value sums accumulate in DECIMAL.
     */
   def tenantUsage(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: org.apache.spark.sql.Column) = floor(c * 10000 + 0.5) / 10000
     val perUser = Tables.events(spark, dir)
       .select(pmod(col("user_id"), lit(TenantShards)).cast("int")
         .as("tenant_shard"), col("user_id"), col("value"))
@@ -113,7 +113,6 @@ object Tenancy {
     * exactly one scan.
     */
   def forgetUser(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: org.apache.spark.sql.Column) = floor(c * 10000 + 0.5) / 10000
     val m = graft.Params.int(spark, "forget.mod", ForgetMod)
     require(m > 0, s"forget.mod must be positive ($m)")
     def audit(name: String, df: DataFrame, purge: org.apache.spark.sql.Column) =
@@ -339,10 +338,9 @@ object Tenancy {
       1, 8), 16, 10).cast("long")
     val u = (h.cast("double") + lit(0.5)) / lit(4294967296.0)
     val c = u - lit(0.5)
-    val noise = floor(
+    val noise = r6(
       when(c >= 0, -log(lit(1.0) - lit(2.0) * c))
-        .otherwise(log(lit(1.0) + lit(2.0) * c)) / lit(DpEpsilon)
-        * 1000000 + lit(0.5)) / 1000000
+        .otherwise(log(lit(1.0) + lit(2.0) * c)) / lit(DpEpsilon))
     Tables.documents(spark, dir)
       .groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
       .select(col("source"), col("n_docs"), noise.as("noise"))
@@ -354,7 +352,6 @@ object Tenancy {
   }
 
   def kAnonymity(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: org.apache.spark.sql.Column) = floor(c * 10000 + 0.5) / 10000
     val classes = Tables.customer(spark, dir)
       .groupBy(col("c_nationkey"), col("c_mktsegment"),
         floor(col("c_acctbal") / KAnonBalBucket).as("bal_bucket"))
@@ -392,7 +389,6 @@ object Tenancy {
     * 3-row sweep cross — the kAnonymity plan with one more level.
     */
   def lDiversity(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: org.apache.spark.sql.Column) = floor(c * 10000 + 0.5) / 10000
     val perSens = Tables.customer(spark, dir)
       .groupBy(col("c_nationkey"),
         floor(col("c_acctbal") / KAnonBalBucket).as("bal_bucket"),
@@ -450,7 +446,6 @@ object Tenancy {
     * more bounded join.
     */
   def tCloseness(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: org.apache.spark.sql.Column) = floor(c * 10000 + 0.5) / 10000
     val d = (c: org.apache.spark.sql.Column) => c.cast("decimal(38,0)")
     val cs = Tables.customer(spark, dir)
       .groupBy(col("c_nationkey"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.{r4, r6, units}
 import graft.sources.Tables
 
 /** Corpus text-analysis operators for the training-data pipeline: language
@@ -60,9 +61,9 @@ object TextAnalysis {
       x => array_contains(array(RefVocab.enStopwords.map(lit): _*), lower(x))))
     val nChars = length(col("text"))
     val punct = nChars - length(regexp_replace(col("text"), "[.,?!'\":-]", ""))
-    floor((least(lit(1.0), nWords / 100.0) * 0.4 +
+    r4(least(lit(1.0), nWords / 100.0) * 0.4 +
       stopHits.cast("double") / nWords * 0.3 +
-      (lit(1.0) - punct.cast("double") / nChars) * 0.3) * 10000 + 0.5) / 10000
+      (lit(1.0) - punct.cast("double") / nChars) * 0.3)
   }
 
   /** quality_score: length/stopword/punctuation heuristics composited into
@@ -90,13 +91,12 @@ object TextAnalysis {
     // rational-valued metrics can land exactly on a 4dp tie, where
     // engine round() implementations disagree; rnd4 is the same
     // floor-based primitive the oracle SQL uses on the same double
-    def rnd4(c: Column) = floor(c * 10000 + 0.5) / 10000
     docs
       .select(col("doc_id"),
         nWords.cast("int").as("n_words"),
-        rnd4(charSum.cast("double") / nWords).as("avg_word_len"),
-        rnd4(stopRatio).as("stopword_ratio"),
-        rnd4(punctRatio).as("punct_ratio"),
+        r4(charSum.cast("double") / nWords).as("avg_word_len"),
+        r4(stopRatio).as("stopword_ratio"),
+        r4(punctRatio).as("punct_ratio"),
         qualityScoreCol.as("score"))
   }
 
@@ -177,7 +177,6 @@ object TextAnalysis {
     * full-text re-shuffle — fingerprints are 8-char hashes.
     */
   def winnowOverlap(spark: SparkSession, dir: String): DataFrame = {
-    def rnd4(c: Column) = floor(c * 10000 + 0.5) / 10000
     // feeds the hot-fp filter, both join sides, and the per-doc sizes
     val fps = winnowFingerprints(spark, dir).localCheckpoint(false)
     val keep = fps.groupBy(col("fp"))
@@ -196,7 +195,7 @@ object TextAnalysis {
       .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"), col("shared"), col("n_a"), col("n_b"),
-        rnd4(col("shared").cast("double") / least(col("n_a"), col("n_b")))
+        r4(col("shared").cast("double") / least(col("n_a"), col("n_b")))
           .as("containment"))
   }
 
@@ -259,8 +258,7 @@ object TextAnalysis {
       .groupBy(col("lang"), col("lang_pred"))
       .agg(count(lit(1)).as("n"))
       .select(col("lang"), col("lang_pred"), col("n"),
-        (floor(col("n").cast("double") / sum(col("n")).over(wl)
-          * 1000000 + 0.5) / 1000000).as("rate"))
+        r6(col("n").cast("double") / sum(col("n")).over(wl)).as("rate"))
   }
 
   /** langid_f1: the classifier scorecard over the confusion counts —
@@ -277,7 +275,6 @@ object TextAnalysis {
     * costs recall, not a phantom row).
     */
   def langidF1(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     val p = langPredFrame(spark, dir)
       .groupBy(col("lang"), col("lang_pred"))
       .agg(count(lit(1)).as("n"))
@@ -334,10 +331,10 @@ object TextAnalysis {
     * the explode on both engines.
     */
   def readability(spark: SparkSession, dir: String): DataFrame = {
-    val fk = floor((lit(0.39) *
+    val fk = r4(lit(0.39) *
       (col("n_words").cast("double") / col("n_sentences")) +
       lit(11.8) * (col("n_syllables").cast("double") / col("n_words")) -
-      lit(15.59)) * 10000 + 0.5) / 10000
+      lit(15.59))
     Tables.cpuPartition(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       col("doc_id"))
@@ -369,8 +366,8 @@ object TextAnalysis {
       (a, b) => concat_ws(" ", a, b))
     def dupFrac(arr: Column): Column =
       when(size(arr) > 0,
-        floor((lit(1.0) - size(array_distinct(arr)).cast("double")
-          / size(arr)) * 10000 + 0.5) / 10000).otherwise(0.0)
+        r4(lit(1.0) - size(array_distinct(arr)).cast("double")
+          / size(arr))).otherwise(0.0)
     Tables.cpuPartition(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       col("doc_id"))
@@ -393,7 +390,6 @@ object TextAnalysis {
   def toxicityScreen(spark: SparkSession, dir: String): DataFrame = {
     val t = toks(lower(col("text")))
     val lex = array(RefVocab.toxicLexicon.map(lit): _*)
-    def rnd4(c: Column) = floor(c * 10000 + 0.5) / 10000
     Tables.cpuPartition(
       Tables.documents(spark, dir).select(col("doc_id"), col("text")),
       col("doc_id"))
@@ -403,7 +399,7 @@ object TextAnalysis {
           .as("toxic_hits"))
       .withColumn("toxic_score",
         when(col("n_words") >= RefVocab.toxicMinWords,
-          rnd4(least(lit(1.0),
+          r4(least(lit(1.0),
             col("toxic_hits") * 10.0 / col("n_words"))))
           .otherwise(0.0))
       .withColumn("is_toxic",
@@ -433,7 +429,6 @@ object TextAnalysis {
     * histogram agg.
     */
   def charEntropy(spark: SparkSession, dir: String): DataFrame = {
-    def r6(c: Column) = floor(c * 1000000 + 0.5) / 1000000
     val perChar = Tables.cpuPartition(
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), col("text")),
@@ -443,8 +438,8 @@ object TextAnalysis {
       .filter(col("ch") =!= "")
       .groupBy(col("doc_id"), col("source"), col("ch"))
       .agg(count(lit(1)).as("c"))
-    val tl = floor(col("c").cast("double") * log(col("c").cast("double"))
-      * 1000000 + 0.5).cast("long")
+    val tl =
+      units(col("c").cast("double") * log(col("c").cast("double")), 1000000)
     perChar
       .groupBy(col("doc_id"), col("source"))
       .agg(sum(col("c")).as("n"), sum(tl).as("stl"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fixed.r4
 import graft.functions.{CleanStep, CleanText, KeywordRules, TextFunctions}
 import graft.sources.Tables
 
@@ -193,7 +194,7 @@ object TextOps {
         when(size(col("rt")) < 20, "too_short")
           .when(size(col("rt")) > 500, "too_long")
           .otherwise("appropriate").as("length_quality"),
-        (floor(overlap * 10000 + 0.5) / 10000).as("term_overlap"),
+        r4(overlap).as("term_overlap"),
         col("template"),
         when(col("template") === "Question" && instr(col("rl"), "?") > 0, "high")
           .when(col("template") === "Empathy and Validation" &&
@@ -210,7 +211,6 @@ object TextOps {
     * frame (|templates| groups regardless of corpus size).
     */
   def templateEffect(spark: SparkSession, dir: String): DataFrame = {
-    def r4(c: Column) = floor(c * 10000 + 0.5) / 10000
     effectiveness(spark, dir)
       .groupBy(col("template"))
       .agg(count(lit(1)).as("n_pairs"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.functions.Fixed.r4
 import graft.operators.{Curation, Dedup}
 
 /** Streaming ingest gate — the arriving-document face of the batch
@@ -146,8 +147,8 @@ object CurateStream {
       .agg(count(lit(1)).as("inter"))
       // same 4dp floor primitive as the batch verify, so a boundary
       // jaccard gates identically in both worlds
-      .filter((floor(col("inter").cast("double") /
-          (col("n") + col("fn") - col("inter")) * 10000 + 0.5) / 10000)
+      .filter(r4(col("inter").cast("double") /
+          (col("n") + col("fn") - col("inter")))
         >= Dedup.JaccardThreshold)
       .select(col("doc_id")).distinct()
       .select(col("doc_id"), lit(true).as("near_dup"))
