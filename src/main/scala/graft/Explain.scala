@@ -20,8 +20,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Written plans are diffable across builds: expression ids (`#123`),
   * exchange `plan_id=`s, lambda variable suffixes, checkpoint RDD ids
   * and their creation-site line numbers are the JVM's counters and the
-  * source layout, not the plan, so they normalise to `N`. A
-  * before/after pair then differs only where the plan changed.
+  * source layout, not the plan, so they normalise to `N`. So do
+  * whole-stage `[codegen id : N]`s and a query stage's bare-integer
+  * stage id (`Arguments: N` under a `…QueryStage` node): adaptive
+  * execution numbers both in stage completion order. A before/after
+  * pair then differs only where the plan changed.
   *
   * Usage: runMain graft.Explain <sfDir> [q1,q2,...|all] [outDir]
   */
@@ -32,9 +35,12 @@ object Explain {
     "plan_id=\\d+".r -> "plan_id=N",
     "RDD\\[\\d+\\]".r -> "RDD[N]",
     "(\\.scala):\\d+".r -> "$1:N",
-    "(lambda [A-Za-z]+)_\\d+".r -> "$1_N")
+    "(lambda [A-Za-z]+)_\\d+".r -> "$1_N",
+    "\\[codegen id : \\d+\\]".r -> "[codegen id : N]",
+    ("(?m)(^\\(\\d+\\) \\w*QueryStage\n(?:(?:Output|Input) \\[\\d+\\]: .*\n)*)" +
+      "Arguments: \\d+$").r -> "$1Arguments: N")
 
-  private def normalise(plan: String): String =
+  private[graft] def normalise(plan: String): String =
     Counters.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
 
   def main(args: Array[String]): Unit = {

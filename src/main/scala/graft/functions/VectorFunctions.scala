@@ -64,17 +64,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
     extends VectorBinaryExpression {
   override def prettyName: String = "cosine_similarity"
 
-  protected def loopEval(x: ArrayData, y: ArrayData): Double = {
-    val n = x.numElements()
-    VectorBinaryExpression.requireSameDim(n, y.numElements())
-    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
-      dot += xi * yi; nx += xi * xi; ny += yi * yi; i += 1
-    }
-    dot / (math.sqrt(nx) * math.sqrt(ny))
-  }
+  protected def loopEval(x: ArrayData, y: ArrayData): Double = CosineSimilarity.of(x, y)
 
   protected def loopCode(ctx: CodegenContext, a: String, b: String, result: String): String = {
     val n = ctx.freshName("n")
@@ -99,6 +89,25 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object CosineSimilarity {
+  /** The cosine arithmetic, stated once: the interpreted expression and
+    * the graph walk's in-task scorer both call it, and `loopCode` is its
+    * generated twin (same accumulation order, so both paths agree bit
+    * for bit).
+    */
+  def of(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements()
+    VectorBinaryExpression.requireSameDim(n, y.numElements())
+    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+    while (i < n) {
+      val xi = x.getFloat(i).toDouble
+      val yi = y.getFloat(i).toDouble
+      dot += xi * yi; nx += xi * xi; ny += yi * yi; i += 1
+    }
+    dot / (math.sqrt(nx) * math.sqrt(ny))
+  }
 }
 
 case class DotProduct(left: Expression, right: Expression)

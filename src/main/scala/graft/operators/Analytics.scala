@@ -19,6 +19,10 @@ import graft.sources.Tables
   */
 object Analytics {
 
+  /** A lineitem's net price, `l_extendedprice · (1 − l_discount)`. */
+  private def netPrice: Column =
+    col("l_extendedprice") * (lit(1) - col("l_discount"))
+
   /** Exact money sum: decimal accumulation, surfaced as a rounded double. */
   private def moneySum(c: Column): Column =
     round(sum(c.cast("decimal(28,6)")).cast("double"), 2)
@@ -38,8 +42,7 @@ object Analytics {
       .agg(
         moneySum(col("l_quantity")).as("sum_qty"),
         moneySum(col("l_extendedprice")).as("sum_base_price"),
-        moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("sum_disc_price"),
+        moneySum(netPrice).as("sum_disc_price"),
         moneyAvg(col("l_quantity"), count(lit(1))).as("avg_qty"),
         moneyAvg(col("l_discount"), count(lit(1))).as("avg_disc"),
         count(lit(1)).as("count_order"))
@@ -66,8 +69,7 @@ object Analytics {
     l.join(o.join(c, o("o_custkey") === c("c_custkey")),
         l("l_orderkey") === o("o_orderkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"))
-      .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-        .as("revenue"))
+      .agg(moneySum(netPrice).as("revenue"))
       .orderBy(col("revenue").desc, col("l_orderkey"))
       .limit(10)
       .select(col("l_orderkey"),
@@ -100,8 +102,7 @@ object Analytics {
           c("c_nationkey") === s("s_nationkey"))
       .join(broadcast(n), s("s_nationkey") === n("n_nationkey"))
       .groupBy(col("n_name"))
-      .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-        .as("revenue"))
+      .agg(moneySum(netPrice).as("revenue"))
       .orderBy(col("revenue").desc, col("n_name"))
   }
 
@@ -119,8 +120,7 @@ object Analytics {
     // integer 1e-4 units via the shared floor primitive — a double→decimal
     // cast would HALF-UP on Spark but shortest-repr-round on DuckDB, and
     // a conditional subtotal can land a cent boundary on the disagreement
-    val revU =
-      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
+    val revU = units(netPrice, 10000)
     val promoU = when(col("p_type") === "ECONOMY", revU).otherwise(lit(0L))
     val l = Tables.lineitem(spark, dir)
       .select("l_partkey", "l_shipdate", "l_extendedprice", "l_discount")
@@ -442,7 +442,7 @@ object Analytics {
   def revenueTrend(spark: SparkSession, dir: String): DataFrame = {
     val daily = Tables.lineitem(spark, dir)
       .select(expr("unix_timestamp(l_shipdate) div 86400").as("day"),
-        (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
+        netPrice.as("rev"))
       .groupBy(col("day"))
       .agg(sum(col("rev").cast("decimal(28,6)")).as("drev"))
     val w = Window.orderBy(col("day")).rangeBetween(-6, 0)
@@ -498,8 +498,7 @@ object Analytics {
         (col("supp_nation") === Q7NationB && col("cust_nation") === Q7NationA))
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("l_shipdate")).as("l_year"))
-      .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-        .as("revenue"))
+      .agg(moneySum(netPrice).as("revenue"))
       .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
   }
 
@@ -526,8 +525,7 @@ object Analytics {
     * divides the two exact longs once in double with floor-rounding.
     */
   def q8Share(spark: SparkSession, dir: String): DataFrame = {
-    val volU =
-      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
+    val volU = units(netPrice, 10000)
     val p = Tables.part(spark, dir)
       .filter(col("p_type") === Q8Type).select("p_partkey")
     val sn = Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey")
@@ -702,8 +700,7 @@ object Analytics {
     }
     l.join(p, col("l_partkey") === col("p_partkey"))
       .filter(bands.reduce(_ || _))
-      .agg(moneySum(col("l_extendedprice") * (lit(1) - col("l_discount")))
-        .as("revenue"),
+      .agg(moneySum(netPrice).as("revenue"),
         count(lit(1)).as("n_lines"))
   }
 
@@ -828,8 +825,7 @@ object Analytics {
       .filter(col("l_returnflag") === "R")
       .select("l_orderkey", "l_extendedprice", "l_discount")
     val n = Tables.nation(spark, dir).select("n_nationkey", "n_name")
-    val revU =
-      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
+    val revU = units(netPrice, 10000)
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(Tables.customer(spark, dir), col("o_custkey") === col("c_custkey"))
       .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
@@ -910,8 +906,7 @@ object Analytics {
     * join is planner-chosen over the (usually 1-row) winner set.
     */
   def q15TopSupplier(spark: SparkSession, dir: String): DataFrame = {
-    val revU =
-      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
+    val revU = units(netPrice, 10000)
     val rev = Tables.lineitem(spark, dir)
       .filter(col("l_shipdate") >= lit(Q15Start).cast("date") &&
         col("l_shipdate") < lit(Q15End).cast("date"))
@@ -957,8 +952,7 @@ object Analytics {
     * total and the filter — localCheckpoint, the q17 rule.
     */
   def q11ImportantStock(spark: SparkSession, dir: String): DataFrame = {
-    val valU =
-      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
+    val valU = units(netPrice, 10000)
     val natSupp = Tables.supplier(spark, dir)
       .join(broadcast(Tables.nation(spark, dir)
         .filter(col("n_name") === Q11Nation)),
@@ -1085,8 +1079,7 @@ object Analytics {
     * double divide at the end.
     */
   def q9Profit(spark: SparkSession, dir: String): DataFrame = {
-    val revU =
-      units(col("l_extendedprice") * (lit(1) - col("l_discount")), 10000)
+    val revU = units(netPrice, 10000)
     // per-unit cost in 1e-4 units (exact long), × integral quantity
     val costU = units(col("p_retailprice") * Q9CostFrac, 10000) *
       floor(col("l_quantity") + lit(0.5)).cast("long")

@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.CosineSimilarity
 import graft.functions.Fixed.{r2, r4, r6, units}
 import graft.functions.VectorFunctions.{cosineSim, dot}
 import graft.sources.Tables
@@ -476,7 +479,8 @@ object Similarity {
     * to [[annIvfKmeansProbe]](np) by construction (same probe order,
     * same candidates, same rank tie-break). The sweep previously
     * re-probed per arm: 1+2+4 = 7 cell scans per query where the
-    * deepest arm's 4 suffice.
+    * deepest arm's 4 suffice. The query vector `qe` rides along for the
+    * graph walk's entry pool ([[graphWalk]]); other readers prune it.
     */
   private def probeCandidates(spark: SparkSession, dir: String,
       idx: IvfFlatIndex, maxNp: Int): DataFrame = {
@@ -484,7 +488,7 @@ object Similarity {
       .select(col("q_id"), col("qe"), col("cid").as("pcid"), col("pr"))
     idx.lists.join(broadcast(probes), col("ccell") === col("pcid"))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
+      .select(col("q_id"), col("qe"), col("vec_id").as("neighbor_id"),
         cosineSim(col("embedding"), col("qe")).as("s"), col("pr"))
   }
 
@@ -3513,14 +3517,6 @@ object Similarity {
     Tables.read(spark, path)
   }
 
-  /** Top-3 (q_id, neighbor_id) of a beam walk over an arbitrary edge
-    * frame — shared by the two receipt arms.
-    */
-  private def walkTop3(spark: SparkSession, dir: String,
-      g: DataFrame): DataFrame =
-    topK(graphWalkTrailOver(spark, dir, GraphRounds, g).last
-      .withColumnRenamed("vec_id", "neighbor_id"), 3)
-
   /** append_recall: the graph-append STALENESS receipt — recall@3 vs
     * the persisted dense truth for BOTH the appended graph (base build
     * + real-append absorption of the delta split) and the full
@@ -3531,21 +3527,18 @@ object Similarity {
     * ann_recall posture applied to the insert path, paired with
     * [[appendChurn]]'s rebuild trigger.
     *
-    * Plan: two artifact-read walks (k-bounded rounds each) against one
-    * checkpointed truth read; no corpus rescans.
+    * Plan: two in-task walks ([[graphWalk]], one per artifact) whose
+    * top-3 each meet one checkpointed truth read; no corpus rescans.
     */
   def appendRecall(spark: SparkSession, dir: String): DataFrame = {
-    // the truth read and the two walk arms BUILD in parallel
-    // (Par.build): each walk's per-round checkpoint waves otherwise
-    // queue back-to-back
-    val Seq(exact, appW, rebW) = Par.build(Seq(
-      () => truthSample(spark, dir, 3)
-        .localCheckpoint(false), // feeds both arms
-      () => walkTop3(spark, dir, appendedKnnGraph(spark, dir)),
-      () => walkTop3(spark, dir, knnGraph(spark, dir))))
-    def arm(name: String, a: DataFrame): DataFrame =
-      recallMicro(exact, a, 3).select(lit(name).as("arm"), col("*"))
-    arm("appended", appW).unionByName(arm("rebuilt", rebW))
+    val exact = truthSample(spark, dir, 3)
+      .localCheckpoint(false) // feeds both arms
+    def arm(name: String, g: DataFrame): DataFrame =
+      recallMicro(exact, topK(graphWalk(spark, dir, g)
+          .withColumnRenamed("vec_id", "neighbor_id"), 3), 3)
+        .select(lit(name).as("arm"), col("*"))
+    arm("appended", appendedKnnGraph(spark, dir))
+      .unionByName(arm("rebuilt", knnGraph(spark, dir)))
       .orderBy(col("arm"))
   }
 
@@ -3564,22 +3557,23 @@ object Similarity {
     * appended graph and the full rebuild, and the resulting
     * rebuild_due decision. One row; consumed by the same maintenance
     * loop that acts on ivf_rebalance/sq_refit/bq_rethreshold.
+    *
+    * Plan: an edge-mass aggregate over the appended artifact beside two
+    * in-task walks ([[graphWalk]]), whose top-3 meet in one full outer
+    * join per (q, n).
     */
   def appendChurn(spark: SparkSession, dir: String): DataFrame = {
     val app = appendedKnnGraph(spark, dir)
     val edges = app.agg(count(lit(1)).as("n_edges"),
       sum(when(Dedup.isDelta(col("src")) || Dedup.isDelta(col("dst")),
         1L).otherwise(0L)).as("n_appended"))
-    // the two walk arms BUILD in parallel (Par.build): each walk's
-    // per-round checkpoint waves otherwise queue back-to-back
-    val Seq(aW, rW) = Par.build(Seq(
-      () => walkTop3(spark, dir, app),
-      () => walkTop3(spark, dir, knnGraph(spark, dir))))
-    val aT = aW.select(col("q_id").as("q"), col("neighbor_id").as("n"),
-      lit(true).as("ia"))
-    val rT = rW.select(col("q_id").as("q"), col("neighbor_id").as("n"),
-      lit(true).as("ir"))
-    val ch = aT.join(rT, Seq("q", "n"), "full_outer")
+    def top3(g: DataFrame, in: String): DataFrame =
+      topK(graphWalk(spark, dir, g)
+          .withColumnRenamed("vec_id", "neighbor_id"), 3)
+        .select(col("q_id").as("q"), col("neighbor_id").as("n"),
+          lit(true).as(in))
+    val ch = top3(app, "ia")
+      .join(top3(knnGraph(spark, dir), "ir"), Seq("q", "n"), "full_outer")
       .groupBy(col("q"))
       .agg(max(when(col("ia").isNull || col("ir").isNull, 1L)
         .otherwise(0L)).as("chg"))
@@ -3658,7 +3652,7 @@ object Similarity {
 
   /** ann_graph: graph-refined ANN serving — entry pool = the query's
     * nprobe-1 IVF probe top-[[GraphEntries]]; then [[GraphRounds]]
-    * unrolled best-first rounds, each expanding the current
+    * best-first rounds, each expanding the current
     * top-[[GraphBeam]] of the visited set along the persisted graph
     * and rescoring; answer = top-3 of everything visited. One probed
     * cell plus three bounded expansions per query — the walk follows
@@ -3667,14 +3661,16 @@ object Similarity {
     * of ≤ [[GraphBeam]]·2·[[GraphK]] rescored rows per round instead
     * of another full cell scan.
     *
-    * Plan: pure two-artifact consumer (index + graph); every round is
-    * a k-bounded equi-join + partial-agg dedup + rank window over
-    * query-bounded frames; the corpus is never rescanned.
+    * Plan: the entry pool is a Spark frame over the index artifact
+    * (centroid broadcast, per-query windows); the rounds run in-task
+    * ([[graphWalk]]) against one capped broadcast of the graph and the
+    * vectors; a per-query rank window cuts the top-3. The corpus is
+    * read once, for that broadcast.
     */
   def annGraph(spark: SparkSession, dir: String): DataFrame = {
     val wQ = Window.partitionBy(col("q_id"))
       .orderBy(col("s").desc, col("vec_id"))
-    graphWalk(spark, dir, GraphRounds)
+    graphWalk(spark, dir, knnGraph(spark, dir))
       .withColumn("rank", row_number().over(wQ))
       .filter(col("rank") <= 3)
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
@@ -3682,75 +3678,97 @@ object Similarity {
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** The visited set (q_id, vec_id, s) of the beam walk after `rounds`
-    * expansions — shared by [[annGraph]] (the serving top-3) and
-    * [[beamCurve]] (the rounds sweep).
+  /** Cap on the walk's broadcast, in [[requireWalkFits]]' bytes: about
+    * 129k vectors with a 16-edge adjacency each. A corpus past it fails
+    * the walk loudly rather than shipping an unbounded broadcast to
+    * every executor.
     */
-  private def graphWalk(spark: SparkSession, dir: String,
-      rounds: Int): DataFrame =
-    graphWalkTrail(spark, dir, rounds).last
+  val WalkBroadcastCap: Long = 64L << 20
 
-  /** The visited set AFTER EACH round (vis1..visR), shared across
-    * [[beamCurve]]'s arms so the sweep pays for one walk, not R.
+  /** Payload bytes of a walk broadcast — a (src, dst) id pair per edge,
+    * an id plus [[DIM]] floats per vector — failing past
+    * [[WalkBroadcastCap]].
     */
-  private def graphWalkTrail(spark: SparkSession, dir: String,
-      rounds: Int): Seq[DataFrame] =
-    graphWalkTrailOver(spark, dir, rounds, knnGraph(spark, dir))
+  private[graft] def requireWalkFits(nEdges: Long, nVectors: Long): Long = {
+    val bytes = 16L * nEdges + nVectors * (8L + 4L * DIM)
+    if (bytes > WalkBroadcastCap) throw new IllegalStateException(
+      s"graph walk broadcast is $bytes bytes ($nEdges edges, $nVectors " +
+        s"vectors), over its $WalkBroadcastCap-byte cap")
+    bytes
+  }
 
-  /** The walk over an ARBITRARY edge frame — the gated chain passes the
-    * persisted graph; the append receipts pass the appended artifact.
+  /** What every walk task reads: the walked graph's out-edges and the
+    * embeddings table's vectors, by id.
     */
-  private def graphWalkTrailOver(spark: SparkSession, dir: String,
-      rounds: Int, g: DataFrame): Seq[DataFrame] = {
-    val idx = ivfFlatIndex(spark, dir)
-    val e = Tables.embeddings(spark, dir)
-    // q stays checkpointed: the %100 filter cannot push to parquet, so
-    // re-deriving q per consumer re-scanned the full embedding column
-    // 4× (A/B measured +0.5 s isolated on every walk consumer)
-    val q = probeQueries(spark, dir)
-      .localCheckpoint(false) // entry + every round rescore against it
-    val wQ = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("vec_id"))
-    // routed inline, not through probeCells: this cross join is part
-    // of ann_graph's serving plan, which stays as it is
-    val wP = Window.partitionBy(col("q_id"))
-      .orderBy(col("pcs").desc, col("cid"))
-    val p1 = q.crossJoin(broadcast(idx.coarse))
-      .select(col("q_id"), col("qe"), col("cid"),
-        cosineSim(col("qe"), col("cvec")).as("pcs"))
-      .withColumn("pr", row_number().over(wP)).filter(col("pr") === 1)
-      .select(col("q_id"), col("qe"), col("cid").as("pcid"))
-    val entry = idx.lists.join(broadcast(p1), col("ccell") === col("pcid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosineSim(col("embedding"), col("qe")).as("s"))
-      .withColumn("rk", row_number().over(wQ))
-      .filter(col("rk") <= GraphEntries).drop("rk")
-    var visited = entry.localCheckpoint(false)
-    var frontier = visited
-    val trail = scala.collection.mutable.Buffer[DataFrame]()
-    for (r <- 1 to rounds) {
-      val nbrs = frontier.alias("f")
-        .join(g.alias("gg"), col("f.vec_id") === col("gg.src"))
-        .select(col("f.q_id").as("q_id"), col("gg.dst").as("vec_id"))
-        .distinct()
-        .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-        .join(broadcast(q), Seq("q_id"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosineSim(col("embedding"), col("qe")).as("s"))
-      val vr = visited.unionByName(nbrs)
-        .groupBy(col("q_id"), col("vec_id")).agg(max(col("s")).as("s"))
-      // the LAST round's visited set has no next frontier to feed —
-      // its consumers run it inside their own sink job (one wave less);
-      // intermediate rounds stay checkpointed (each feeds the next
-      // round twice, and the plan would otherwise double per round)
-      visited = if (r < rounds) vr.localCheckpoint(false) else vr
-      frontier = visited.withColumn("rk", row_number().over(wQ))
-        .filter(col("rk") <= GraphBeam).drop("rk")
-      trail += visited
+  private[graft] final case class WalkGraph(adj: Map[Long, Array[Long]],
+      vecs: Map[Long, ArrayData])
+
+  private def floats(r: Row, i: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](i).toArray)
+
+  /** One query's rounds. The entry `pool` is round 0 and the first
+    * frontier; round r follows the frontier's out-edges, scores each
+    * neighbour the embeddings table holds (never `qId`), and the next
+    * frontier is the top [[GraphBeam]] of everything visited by
+    * (s desc, vec_id), expanded nodes included. A vector reached twice
+    * keeps its larger score and its first round. Scores order as in
+    * Spark: NaN above every number (a cosine is never -0.0).
+    */
+  private[graft] def walkRounds(wg: WalkGraph, qId: Long, qe: ArrayData,
+      pool: Seq[(Long, Double)]): Iterator[(Long, Long, Double, Int)] = {
+    val vis = scala.collection.mutable.HashMap[Long, (Double, Int)]()
+    def visit(v: Long, s: Double, r: Int): Unit =
+      vis(v) = vis.get(v).fold((s, r)) { case (s0, r0) => (s max s0, r0) }
+    pool.foreach { case (v, s) => visit(v, s, 0) }
+    var frontier: Seq[Long] = vis.keys.toSeq
+    for (r <- 1 to GraphRounds) {
+      frontier.flatMap(v => wg.adj.getOrElse(v, Array.emptyLongArray))
+        .distinct.filter(_ != qId)
+        .foreach(n => wg.vecs.get(n)
+          .foreach(e => visit(n, CosineSimilarity.of(e, qe), r)))
+      frontier = vis.toSeq.map { case (v, (s, _)) => (s, v) }
+        .sorted(Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse,
+          Ordering.Long)).take(GraphBeam).map(_._2)
     }
-    trail.toSeq
+    vis.iterator.map { case (v, (s, r)) => (qId, v, s, r) }
+  }
+
+  /** The beam walk over edge frame `g` (the persisted graph, or the
+    * appended artifact for the append receipts), as its TRAIL
+    * (q_id, vec_id, s, round): the entry pool is round 0 and each
+    * vector carries the first round that reached it, so the visited
+    * set after round r is `round <= r`.
+    *
+    * The entry pool is the query's nprobe-1 probe ([[probeCandidates]]),
+    * top-[[GraphEntries]]: entries are scored with the inverted list's
+    * own embedding, so appended vectors can enter and their out-edges
+    * are followed. The rounds then run inside one task per query group
+    * ([[walkRounds]]) against one broadcast of `g`'s adjacency and the
+    * embeddings table's vectors, capped by [[WalkBroadcastCap]]; a
+    * neighbour missing from that table is never visited.
+    */
+  private[graft] def graphWalk(spark: SparkSession, dir: String,
+      g: DataFrame): DataFrame = {
+    val entry = probeCandidates(spark, dir, ivfFlatIndex(spark, dir), 1)
+      .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("s").desc, col("neighbor_id"))))
+      .filter(col("rk") <= GraphEntries)
+    val edges = g.select(col("src"), col("dst")).collect()
+    val vecs = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding")).collect()
+    requireWalkFits(edges.length, vecs.length)
+    val wg = spark.sparkContext.broadcast(WalkGraph(
+      edges.groupMap(_.getLong(0))(_.getLong(1)),
+      vecs.map(r => r.getLong(0) -> floats(r, 1)).toMap))
+    import spark.implicits._
+    // entry is already clustered by q_id (its window), so the grouping
+    // adds no exchange
+    entry.groupBy(col("q_id"))
+      .agg(first(col("qe")).as("qe"),
+        collect_list(struct(col("neighbor_id"), col("s"))).as("pool"))
+      .flatMap(r => walkRounds(wg.value, r.getLong(0), floats(r, 1),
+        r.getSeq[Row](2).map(p => (p.getLong(0), p.getDouble(1)))))
+      .toDF("q_id", "vec_id", "s", "round")
   }
 
   /** beam_curve: the graph walk's OPERATING CURVE — per rounds r in
@@ -3759,22 +3777,21 @@ object Similarity {
     * prices the IVF knob; this prices the walk's — the two tables a
     * deployment reads side by side when splitting its latency budget
     * between probed cells and expansion rounds.
+    *
+    * Plan: one checkpointed walk trail ([[graphWalk]]); arm r reads its
+    * `round <= r` slice through one ranked frame, against one
+    * checkpointed truth read.
     */
   def beamCurve(spark: SparkSession, dir: String): DataFrame = {
-    // truth read ∥ walk build (Par.build): the exact arm's checkpoint
-    // wave is independent of the walk's sequential rounds, so its
-    // stages back-fill the cores the walk's wave chain leaves idle
-    var trail: Seq[DataFrame] = null
-    val Seq(exact, _) = Par.build(Seq(
-      () => truthSample(spark, dir, 3)
-        .localCheckpoint(false), // feeds every arm
-      () => { trail = graphWalkTrail(spark, dir, GraphRounds); trail.last }))
+    val exact = truthSample(spark, dir, 3)
+      .localCheckpoint(false) // feeds every arm
+    val trail = graphWalk(spark, dir, knnGraph(spark, dir))
+      .withColumnRenamed("vec_id", "neighbor_id")
+      .localCheckpoint(false) // feeds every arm
     def arm(r: Int): DataFrame = {
       // both reads (recall top-3, visited count) come from ONE ranked
-      // frame: the last round is not checkpointed, and two differently
-      // pruned reads of it planned its union/groupBy subtree twice; from
-      // one frame the second read reuses the first one's exchange
-      val ranked = trail(r - 1).withColumnRenamed("vec_id", "neighbor_id")
+      // frame, so the second read reuses the first one's exchange
+      val ranked = trail.filter(col("round") <= r)
         .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
           .orderBy(col("s").desc, col("neighbor_id"))))
         .withColumn("nv", count(lit(1)).over(Window.partitionBy(col("q_id"))))
@@ -3846,18 +3863,19 @@ object Similarity {
     * The read: the delta between the rows is what the graph walk buys
     * over the cell the query landed in — the boundary misses
     * recovered, priced in recall (the DiskANN acceptance read).
+    *
+    * Plan: [[annGraph]]'s in-task walk and the plain nprobe-1 probe,
+    * each against one checkpointed truth read.
     */
   def graphRecall(spark: SparkSession, dir: String): DataFrame = {
-    // the truth read, the walk arm's per-round checkpoint waves and the
-    // probe arm all BUILD in parallel (Par.build)
-    val Seq(exact, gA, pA) = Par.build(Seq(
-      () => truthSample(spark, dir, 3)
-        .localCheckpoint(false), // feeds both arms
-      () => annGraph(spark, dir),
-      () => annIvfKmeansProbe(spark, dir, ivfFlatIndex(spark, dir), 1)))
+    val exact = truthSample(spark, dir, 3)
+      .localCheckpoint(false) // feeds both arms
     def arm(name: String, a: DataFrame): DataFrame =
       recallMicro(exact, a, 3).select(lit(name).as("arm"), col("*"))
-    arm("graph", gA).unionByName(arm("ivf_probe1", pA)).orderBy(col("arm"))
+    arm("graph", annGraph(spark, dir))
+      .unionByName(arm("ivf_probe1",
+        annIvfKmeansProbe(spark, dir, ivfFlatIndex(spark, dir), 1)))
+      .orderBy(col("arm"))
   }
 
   /** Matryoshka prefix dimensions audited by [[matryoshkaRecall]]

@@ -646,20 +646,34 @@ class PlanSpec extends SparkSpecBase {
     }
   }
 
-  test("r13 graph family: the walk's expansions ride keyed joins and " +
-      "per-query windows; only the tiny centroid side nested-loops") {
+  test("r13 graph family: the walk's entry pool rides keyed joins and " +
+      "per-query windows; its rounds run in-task against a capped " +
+      "broadcast") {
+    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
     withNoAutoBroadcast {
       val df = Similarity.annGraph(spark, dir)
-      val p = planOf(df)
-      assert(!p.contains("CartesianProduct"))
+      assert(!planOf(df).contains("CartesianProduct"))
       val bad = unpartitionedWins(physical(df))
       assert(bad.isEmpty,
         s"ann_graph has unpartitioned Window(s):\n${bad.mkString("\n")}")
-      // the walk's expansions run inside per-round localCheckpoints, so
-      // the final plan is the rank tail over the materialized visited
-      // set — group-limited BEFORE the exchange, never a global sort
-      assert(p.contains("WindowGroupLimit"))
-      assert(!p.contains("BroadcastNestedLoopJoin"))
+      // one in-task walk, fed by the entry pool's own q_id window with
+      // no exchange in between
+      val walks = physical(df).collect { case m: MapPartitionsExec => m }
+      assert(walks.size === 1, s"plan:\n${physical(df)}")
+      def toWindow(n: SparkPlan): Seq[SparkPlan] = n match {
+        case _: WindowExec => Nil
+        case _ => n +: n.children.flatMap(toWindow)
+      }
+      val between = toWindow(walks.head)
+      assert(!between.exists(_.isInstanceOf[Exchange]),
+        s"exchange between the entry window and the walk:\n${walks.head}")
+      // the walk's broadcast (graph adjacency + vectors) fits its cap
+      assert(Similarity.requireWalkFits(
+        Similarity.knnGraph(spark, dir).count(),
+        graft.sources.Tables.embeddings(spark, dir).count()) <=
+        Similarity.WalkBroadcastCap)
       val dg = planOf(Similarity.graphDegree(spark, dir))
       assert(!dg.contains("CartesianProduct"))
       assert(unpartitionedWins(physical(

@@ -854,6 +854,119 @@ class SimilaritySpec extends SparkSpecBase {
     assert(out.sliding(2).forall(p => p(0)._4 <= p(1)._4))
   }
 
+  /** A hand-built walk graph over 2-d vectors: `vecs` stand for the
+    * embeddings table, `adj` for the walked graph's out-edges.
+    */
+  private def walkGraph(adj: Map[Long, Seq[Long]],
+      vecs: Map[Long, (Float, Float)]): Similarity.WalkGraph =
+    Similarity.WalkGraph(adj.map { case (s, d) => s -> d.toArray },
+      vecs.map { case (id, (x, y)) => id -> arr(x, y) })
+
+  private def arr(x: Float, y: Float)
+      : org.apache.spark.sql.catalyst.util.ArrayData =
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(Array(x, y))
+
+  /** (vec_id -> (s, round)) of one query's walk from `pool`. */
+  private def walk(wg: Similarity.WalkGraph, pool: (Long, Double)*)
+      : Map[Long, (Double, Int)] =
+    Similarity.walkRounds(wg, 0L, arr(1f, 0f), pool).map {
+      case (q, v, s, r) => assert(q === 0L); v -> ((s, r)) }.toMap
+
+  test("walk: an entry only the lists hold is expanded; a neighbour the " +
+      "embeddings lack, or the query itself, is never visited") {
+    // entry 9 has no embeddings row; 9 -> 1 -> {2, 77, 0}
+    val wg = walkGraph(Map(9L -> Seq(1L), 1L -> Seq(2L, 77L, 0L)),
+      Map(0L -> (1f, 0f), 1L -> (1f, 1f), 2L -> (0f, 1f)))
+    val t = walk(wg, 9L -> 0.5)
+    assert(t.keySet === Set(9L, 1L, 2L))
+    assert(t(9L) === ((0.5, 0)))
+    assert(t(1L)._2 === 1 && t(2L)._2 === 2)
+    assert(t(1L)._1 === 1 / math.sqrt(2))
+    assert(t(2L)._1 === 0.0)
+  }
+
+  test("walk: score ties break to the smaller vec_id in the frontier; a " +
+      "vector reached again keeps its max score and first round") {
+    // round 1 reaches 2..6, all at the same score below entry 1's;
+    // round 2's frontier is {1, 2, 3, 4}, so 4's edge is followed and
+    // 5's is not. Entry 1 is re-reached by 3 at a higher score.
+    val tie = (1f, 1f)
+    val wg = walkGraph(
+      Map(1L -> Seq(2L, 3L, 4L, 5L, 6L), 3L -> Seq(1L),
+        4L -> Seq(7L), 5L -> Seq(8L)),
+      Map(1L -> (1f, 0f), 2L -> tie, 3L -> tie, 4L -> tie, 5L -> tie,
+        6L -> tie, 7L -> (0f, 1f), 8L -> (0f, 1f)))
+    val t = walk(wg, 1L -> 0.9)
+    assert(t.keySet === Set(1L, 2L, 3L, 4L, 5L, 6L, 7L))
+    assert(t(7L)._2 === 2)
+    assert(t(1L) === ((1.0, 0)))
+    assert((2L to 6L).map(t(_)).toSet === Set((1 / math.sqrt(2), 1)))
+  }
+
+  test("walk: the trail's round <= r slices give beam_curve's " +
+      "mean_visited; ann_graph's top-3 breaks score ties by vec_id") {
+    import org.apache.spark.sql.functions.col
+    val trail = Similarity.graphWalk(spark, graphDir,
+      Similarity.knnGraph(spark, graphDir)).collect()
+      .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("round")))
+    val nq = trail.map(_._1).distinct.length
+    def r2(x: Double) = math.floor(x * 100 + 0.5) / 100
+    val curve = Similarity.beamCurve(spark, graphDir)
+      .select(col("rounds"), col("mean_visited")).collect()
+      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    assert(curve.keySet === (1 to Similarity.GraphRounds).toSet)
+    curve.foreach { case (r, mv) =>
+      assert(mv === r2(trail.count(_._2 <= r).toDouble / nq), s"round $r")
+    }
+    // q0's cell: ids 12/17 and 8/13 are equal-score pairs
+    val top = Similarity.annGraph(spark, graphDir)
+      .filter(col("q_id") === 0L).orderBy(col("rank")).collect()
+    assert(top.map(_.getLong(1)).toSeq === Seq(12L, 17L, 8L))
+    assert(top(0).getDouble(2) === top(1).getDouble(2))
+  }
+
+  test("walk: its broadcast is capped, and the check names the size") {
+    import Similarity.{WalkBroadcastCap => cap, requireWalkFits}
+    assert(requireWalkFits(3, 2) === 3 * 16 + 2 * (8 + 4 * 64))
+    assert(requireWalkFits(cap / 16, 0) === cap) // exactly at the cap
+    val e = intercept[IllegalStateException](requireWalkFits(cap / 16, 1))
+    assert(e.getMessage.contains(s"${cap + 8 + 4 * 64} bytes"), e.getMessage)
+    assert(e.getMessage.contains(s"$cap-byte cap"))
+  }
+
+  test("walk wiring: an appended list entry is expanded, an edge to an " +
+      "id the embeddings lack is not") {
+    import spark.implicits._
+    val dir = fixtureDir(embs = graphEmbs) // the append mutates the index
+    // 900 joins cell 0's list only, q0's exact twin: q0's top entry;
+    // the hand-built graph sends it to 25 (cluster 1), 999 and q0
+    Similarity.ivfFlatIndex(spark, dir)
+    Similarity.appendToIvfFlat(spark, Similarity.ivfFlatIndexPath(dir),
+      Seq(Emb(900L, graphMember(0, 0), 0)).toDF())
+    val g = Seq((900L, 25L), (900L, 999L), (900L, 0L)).toDF("src", "dst")
+    val t = Similarity.graphWalk(spark, dir, g).collect()
+      .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
+        r.getAs[Int]("round")))
+    assert(t.map(_._1).toSet === Set(0L, 100L))
+    assert(t.contains((0L, 900L, 0)) && t.contains((0L, 25L, 1)))
+    assert(!t.exists(_._2 == 999L))
+    assert(!t.exists(r => r._1 == r._2))
+  }
+
+  test("walk jobs: a warm ann_graph runs no more jobs than a warm " +
+      "ann_ivfpq") {
+    import org.apache.spark.graftspec.JobCount
+    def jobs(q: => org.apache.spark.sql.DataFrame): Int =
+      JobCount(spark.sparkContext)(
+        q.write.format("noop").mode("overwrite").save())._2
+    val graph = () => Similarity.annGraph(spark, graphDir)
+    val ivfpq = () => Similarity.annIvfPq(spark, graphDir)
+    jobs(graph()); jobs(ivfpq()) // the cold runs build the artifacts
+    val (g, p) = (jobs(graph()), jobs(ivfpq()))
+    assert(g <= p, s"warm ann_graph $g jobs, warm ann_ivfpq $p")
+  }
+
   test("appendToKnnGraph: inserts route via the frozen quantizer, gain " +
       "full out-degree incl. batch twins, keep reverses; prior files " +
       "and edges untouched") {
