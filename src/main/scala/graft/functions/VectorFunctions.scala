@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.{array_sort, col, collect_list, struct,
+  transform}
 import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -214,4 +216,11 @@ object VectorFunctions {
   /** Exact integer dot product between two `array<long>` columns. */
   def dotLong(a: Column, b: Column): Column =
     toCol(DotProductLong(toExpr(a), toExpr(b)))
+
+  /** Aggregate: the group's `value` column as an array ordered by its
+    * `key` column — a vector reassembled from its (i, v) component rows.
+    */
+  def collectSorted(key: String, value: String): Column =
+    transform(array_sort(collect_list(struct(col(key), col(value)))),
+      x => x.getField(value))
 }

@@ -504,13 +504,8 @@ object Dedup {
       shard: DataFrame): Unit = {
     val path = bandStorePath(dir)
     IndexStore.ensureBuilt(path)(buildBandStore(spark, dir, path))
-    val fresh = minhashBandedFrom(shingleRowsOf(shard)).localCheckpoint()
-    val ids = fresh.select(col("doc_id")).distinct()
-    val existing = Tables.read(spark, path)
-      .join(broadcast(ids), Seq("doc_id"), "left_semi")
-    fresh.join(existing, Seq("doc_id", "band", "key"), "left_anti")
-      .sortWithinPartitions(col("band"), col("key"))
-      .write.mode("append").option("compression", "zstd").parquet(path)
+    graft.sources.Sinks.appendNew(minhashBandedFrom(shingleRowsOf(shard)),
+      path, "doc_id", Seq("doc_id", "band", "key"), sort = Seq("band", "key"))
   }
 
   /** Absorb a shard's normalized hashes into the persisted hash store
@@ -523,16 +518,9 @@ object Dedup {
       shard: DataFrame): Unit = {
     val path = hashStorePath(dir)
     IndexStore.ensureBuilt(path)(buildHashStore(spark, dir, path))
-    val batch = exactHashOf(shard)
-      .groupBy(col("text_hash")).agg(min(col("doc_id")).as("canonical"))
-      .localCheckpoint()
-    val known = Tables.read(spark, path)
-      .join(broadcast(batch.select(col("text_hash"))),
-        Seq("text_hash"), "left_semi")
-      .select(col("text_hash"))
-    batch.join(known, Seq("text_hash"), "left_anti")
-      .sortWithinPartitions(col("text_hash"))
-      .write.mode("append").option("compression", "zstd").parquet(path)
+    graft.sources.Sinks.appendNew(exactHashOf(shard)
+        .groupBy(col("text_hash")).agg(min(col("doc_id")).as("canonical")),
+      path, "text_hash", Seq("text_hash"), sort = Seq("text_hash"))
   }
 
   /** band_store_stats: the CAPACITY audit of the persisted band store —

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.CosineSimilarity
 import graft.functions.Fixed.{r2, r4, r6, units}
-import graft.functions.VectorFunctions.{cosineSim, dot}
-import graft.sources.Tables
+import graft.functions.VectorFunctions.{collectSorted, cosineSim, dot}
+import graft.sources.{Sinks, Tables}
 
 /** Vector similarity operators over the embeddings corpus.
   *
@@ -230,7 +230,7 @@ object Similarity {
     */
   def denseTruth(spark: SparkSession, dir: String): DataFrame = {
     val path = denseTruthPath(dir)
-    ensureBuilt(path)(buildDenseTruth(spark, dir, path))
+    IndexStore.ensureBuilt(path)(buildDenseTruth(spark, dir, path))
     Tables.read(spark, path)
   }
 
@@ -277,14 +277,36 @@ object Similarity {
         r4(col("n_matched").cast("double") / (col("n_queries") * k))
           .as("recall"))
 
+  /** Each query's k best rows of a scored (q_id, `id`, s) frame by
+    * (s desc, `id`), numbered in column `rank`.
+    */
+  private def ranked(scored: DataFrame, k: Int, id: String = "neighbor_id",
+      rank: String = "rank"): DataFrame =
+    scored.withColumn(rank, row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("s").desc, col(id))))
+      .filter(col(rank) <= k)
+
+  /** The served top-k tail of a probe: (q_id, neighbor_id, `score`,
+    * `rank`) of [[ranked]].
+    */
+  private def served(scored: DataFrame, k: Int, score: Column,
+      id: String = "neighbor_id", rank: Column = col("rank")): DataFrame =
+    ranked(scored, k, id).select(col("q_id"),
+      if (id == "neighbor_id") col(id) else col(id).as("neighbor_id"),
+      score, rank)
+
   /** Each query's top-k (q_id, neighbor_id) of a scored (q_id,
     * neighbor_id, s) frame, ties to the smaller id.
     */
   private def topK(scored: DataFrame, k: Int): DataFrame =
-    scored.withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("s").desc, col("neighbor_id"))))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("neighbor_id"))
+    ranked(scored, k, rank = "rk").select(col("q_id"), col("neighbor_id"))
+
+  /** An acceptance gate: one row per named arm, keyed and ordered by
+    * `arm`.
+    */
+  private def gate(arms: (String, DataFrame)*): DataFrame =
+    arms.map { case (name, a) => a.select(lit(name).as("arm"), col("*")) }
+      .reduce(_ unionByName _).orderBy(col("arm"))
 
   /** The 1-row 2dp mean of a per-query cost column. */
   private def meanPerQuery(perQuery: DataFrame, c: String,
@@ -360,6 +382,21 @@ object Similarity {
       .cast("double") / (count(lit(1)) * 10) + lit(0.5)) / 1000000)
       .cast("float")
 
+  /** The Lloyd M-step: the component-wise [[mean6f]] of the `vec`
+    * arrays of each `keys` group, reassembled as the array column `as`
+    * (the per-component means are named `mean`). Empty groups drop out,
+    * deterministically.
+    */
+  private def meanVectors(df: DataFrame, keys: Seq[String], vec: String,
+      as: String, mean: String = "cv"): DataFrame = {
+    val k = keys.map(col)
+    df.select(k :+ posexplode(col(vec)).as(Seq("i", "v")): _*)
+      .groupBy(k :+ col("i"): _*)
+      .agg(mean6f(col("v")).as(mean))
+      .groupBy(k: _*)
+      .agg(collectSorted("i", mean).as(as))
+  }
+
   /** Per-label centroids (the IVF coarse quantizer), as array<float>.
     * Components accumulate in decimal (exact, order-independent — a
     * float-summed mean can flip its 6dp rounding under a different
@@ -367,13 +404,8 @@ object Similarity {
     * at any parallelism lands on identical bits.
     */
   def labelCentroids(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .select(col("label"), posexplode(col("embedding")).as(Seq("i", "v")))
-      .groupBy(col("label"), col("i"))
-      .agg(mean6f(col("v")).as("cv"))
-      .groupBy(col("label"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("cv")))),
-        s => s.getField("cv")).as("centroid"))
+    meanVectors(Tables.embeddings(spark, dir), Seq("label"), "embedding",
+      "centroid")
 
   /** IVF ANN: route each query to its nprobe=2 nearest centroids, then
     * rank true cosine inside those clusters only.
@@ -390,16 +422,11 @@ object Similarity {
       .withColumn("pr", row_number().over(wProbe))
       .filter(col("pr") <= 2)
       .select(col("q_id"), col("qe"), col("clabel"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("neighbor_id"))
-    e.join(broadcast(probes), e("label") === probes("clabel"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosineSim(col("embedding"), col("qe")).as("s"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("neighbor_id"), round(col("s"), 6).as("sim"),
-        col("rank"))
+    served(e.join(broadcast(probes), e("label") === probes("clabel"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("neighbor_id"),
+          cosineSim(col("embedding"), col("qe")).as("s")),
+        3, round(col("s"), 6).as("sim"))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -429,13 +456,7 @@ object Similarity {
     * as labelCentroids). Empty clusters drop out, deterministically.
     */
   private def recompute(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cid"), posexplode(col("embedding")).as(Seq("i", "v")))
-      .groupBy(col("cid"), col("i"))
-      .agg(mean6f(col("v")).as("cv"))
-      .groupBy(col("cid"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("cv")))),
-        s => s.getField("cv")).as("cvec"))
+    meanVectors(assigned, Seq("cid"), "embedding", "cvec")
 
   /** IVF with a TRAINED coarse quantizer: k-means (k=8, 2 Lloyd
     * iterations, deterministic init = the k smallest vec_ids) replaces
@@ -460,16 +481,11 @@ object Similarity {
       idx: IvfFlatIndex, nprobe: Int = 2): DataFrame = {
     val probes = probeCells(probeQueries(spark, dir), idx.coarse, nprobe)
       .select(col("q_id"), col("qe"), col("cid").as("pcid"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("neighbor_id"))
-    idx.lists.join(broadcast(probes), col("ccell") === col("pcid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosineSim(col("embedding"), col("qe")).as("s"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("neighbor_id"), round(col("s"), 6).as("sim"),
-        col("rank"))
+    served(idx.lists.join(broadcast(probes), col("ccell") === col("pcid"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("neighbor_id"),
+          cosineSim(col("embedding"), col("qe")).as("s")),
+      3, round(col("s"), 6).as("sim"))
   }
 
   /** One scored candidate pass shared by every arm of an nprobe sweep
@@ -812,13 +828,8 @@ object Similarity {
     val pool = truthSample(spark, dir, DenseTruthDepth, "rank_all")
       .localCheckpoint(false) // feeds member list, raw arm, centered arm
     // the 1-row corpus-mean array (dimension-ordered), mean6f floats
-    val mu = Tables.cpuPartition(Tables.embeddings(spark, dir),
-        col("vec_id"))
-      .select(posexplode(col("embedding")).as(Seq("i", "v")))
-      .groupBy(col("i")).agg(mean6f(col("v")).as("m"))
-      .groupBy()
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("m")))),
-        s => s.getField("m")).as("mu"))
+    val mu = meanVectors(Tables.cpuPartition(Tables.embeddings(spark, dir),
+      col("vec_id")), Nil, "embedding", "mu", mean = "m")
     // centered member vectors: (v − μ) in DOUBLE, stored back as FLOAT
     // (the sqDequant cast discipline — both engines widen, subtract,
     // narrow identically)
@@ -937,11 +948,8 @@ object Similarity {
   private def sqRanges(spark: SparkSession, dir: String): DataFrame =
     sqStats(spark, dir)
       .groupBy()
-      .agg(
-        transform(array_sort(collect_list(struct(col("i"), col("mn")))),
-          s => s.getField("mn")).as("mns"),
-        transform(array_sort(collect_list(struct(col("i"), col("mx")))),
-          s => s.getField("mx")).as("mxs"))
+      .agg(collectSorted("i", "mn").as("mns"),
+        collectSorted("i", "mx").as("mxs"))
 
   /** Element-wise midpoint dequantization of a whole vector against the
     * `mns`/`mxs` range arrays (in scope from [[sqRanges]]).
@@ -991,17 +999,12 @@ object Similarity {
     val idx = ivfFlatIndex(spark, dir)
     val probes = probeCells(probeQueries(spark, dir), idx.coarse, 2)
       .select(col("q_id"), col("qe"), col("cid").as("pcid"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("neighbor_id"))
-    idx.lists.join(broadcast(probes), col("ccell") === col("pcid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .crossJoin(broadcast(sqRanges(spark, dir)))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        cosineSim(sqDequantArr(col("embedding")), col("qe")).as("s"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("neighbor_id"), round(col("s"), 6).as("sim"),
-        col("rank"))
+    served(idx.lists.join(broadcast(probes), col("ccell") === col("pcid"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .crossJoin(broadcast(sqRanges(spark, dir)))
+        .select(col("q_id"), col("vec_id").as("neighbor_id"),
+          cosineSim(sqDequantArr(col("embedding")), col("qe")).as("s")),
+      3, round(col("s"), 6).as("sim"))
   }
 
   // --- SQ range refit (acting on sq_distortion's own diagnosis: a
@@ -1164,11 +1167,8 @@ object Similarity {
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
     val refitArrs = sqRefitBounds(spark, dir)
       .groupBy()
-      .agg(
-        transform(array_sort(collect_list(struct(col("i"), col("lo")))),
-          s => s.getField("lo")).as("los"),
-        transform(array_sort(collect_list(struct(col("i"), col("hi")))),
-          s => s.getField("hi")).as("his"))
+      .agg(collectSorted("i", "lo").as("los"),
+        collectSorted("i", "hi").as("his"))
     val dq2 = e.crossJoin(broadcast(sqRanges(spark, dir)))
       .crossJoin(broadcast(refitArrs))
       .select(col("vec_id"),
@@ -1191,11 +1191,9 @@ object Similarity {
       .withColumn("rr", row_number().over(wR))
       .filter(col("rb") <= SqTopK || col("rr") <= SqTopK)
       .localCheckpoint(false) // k-bounded survivors; feeds both arm reads
-    def arm(name: String, rk: Column): DataFrame =
+    def arm(rk: Column): DataFrame =
       recallMicro(exact, ranked.filter(rk <= SqTopK), SqTopK)
-        .select(lit(name).as("arm"), col("*"))
-    arm("base", col("rb")).unionByName(arm("refit", col("rr")))
-      .orderBy(col("arm"))
+    gate("base" -> arm(col("rb")), "refit" -> arm(col("rr")))
   }
 
   /** ivf_cell_stats: the inverted-list balance audit of the persisted
@@ -1283,13 +1281,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"),
         (col("ccell") * 2 + col("sub")).cast("int").as("ccell"))
       .localCheckpoint(false) // feeds subcell means AND the new lists
-    val subCents = asg
-      .select(col("ccell"), posexplode(col("embedding")).as(Seq("i", "v")))
-      .groupBy(col("ccell"), col("i"))
-      .agg(mean6f(col("v")).as("cv"))
-      .groupBy(col("ccell"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("cv")))),
-        s => s.getField("cv")).as("cvec"))
+    val subCents = meanVectors(asg, Seq("ccell"), "embedding", "cvec")
       .select(col("ccell").cast("int").as("cid"), col("cvec"))
     val keepCents = base.coarse
       .join(broadcast(flagged), col("cid") === col("fcell"), "left_anti")
@@ -1306,7 +1298,7 @@ object Similarity {
 
   def ivfRebalIndex(spark: SparkSession, dir: String): IvfFlatIndex = {
     val path = ivfRebalIndexPath(dir)
-    ensureBuilt(path)(buildIvfRebalIndex(spark, dir, path))
+    IndexStore.ensureBuilt(path)(buildIvfRebalIndex(spark, dir, path))
     IvfFlatIndex(Tables.read(spark, s"$path/coarse"),
       Tables.read(spark, s"$path/lists"))
   }
@@ -1356,16 +1348,14 @@ object Similarity {
     val exact = truthSample(spark, dir, 3)
       .localCheckpoint(false) // feeds both arms
     val q = evalQueries(Tables.embeddings(spark, dir))
-    def arm(name: String, idx: IvfFlatIndex): DataFrame =
+    def arm(idx: IvfFlatIndex): DataFrame =
       recallMicro(exact, annIvfKmeansProbe(spark, dir, idx), 3)
         .crossJoin(meanPerQuery(
           scanned(probeCells(q, idx.coarse, 2), cellSizes(idx), 2),
           "scanned", "mean_scanned"))
-        .select(lit(name).as("arm"), col("n_queries"), col("recall"),
-          col("mean_scanned"))
-    arm("base", ivfFlatIndex(spark, dir))
-      .unionByName(arm("rebalanced", ivfRebalIndex(spark, dir)))
-      .orderBy(col("arm"))
+        .select(col("n_queries"), col("recall"), col("mean_scanned"))
+    gate("base" -> arm(ivfFlatIndex(spark, dir)),
+      "rebalanced" -> arm(ivfRebalIndex(spark, dir)))
   }
 
   /** probe_cost_quantiles: the TAIL of the per-query scan cost per
@@ -1615,15 +1605,16 @@ object Similarity {
   private val PQ_K = 16             // codewords per subspace
   private val PQ_ITERS = 2
 
-  /** (vec_id, m, sub): one row per vector per subspace. transform-HOF
+  /** (keys…, m, `sub`): one row per vector per subspace. transform-HOF
     * generator → interpreted Generate, so the slicing runs once per row
     * (see TextOps.categoryInfo's shape notes).
     */
-  private def subVectorsOf(df: DataFrame, vec: Column): DataFrame =
-    df.select(col("vec_id"),
+  private def subVectorsOf(df: DataFrame, vec: Column,
+      keys: Seq[String] = Seq("vec_id"), sub: String = "sub"): DataFrame =
+    df.select(keys.map(col) :+
       posexplode(transform(sequence(lit(0), lit(PQ_M - 1)),
         m => slice(vec, m * PQ_SUBDIM + 1, lit(PQ_SUBDIM))))
-        .as(Seq("m", "sub")))
+        .as(Seq("m", sub)): _*)
 
   private def subVectors(e: DataFrame): DataFrame =
     subVectorsOf(e, col("embedding"))
@@ -1652,13 +1643,37 @@ object Similarity {
     * per (m, cid) — the annIvfKmeans parity scheme.
     */
   private def recomputePq(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("m"), col("cid"), posexplode(col("sub")).as(Seq("i", "v")))
-      .groupBy(col("m"), col("cid"), col("i"))
-      .agg(mean6f(col("v")).as("cv"))
-      .groupBy(col("m"), col("cid"))
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("cv")))),
-        s => s.getField("cv")).as("cvec"))
+    meanVectors(assigned, Seq("m", "cid"), "sub", "cvec")
+
+  /** The PQ codebooks (m, cid, cvec) of sub-vector rows `sv`: k-means
+    * per subspace, init = the slices of the [[PQ_K]] smallest vec_ids,
+    * [[PQ_ITERS]] Lloyd iterations. Checkpointed: the caller encodes
+    * `sv` against it and writes it.
+    */
+  private def trainPq(sv: DataFrame): DataFrame = {
+    val init = sv.filter(col("vec_id") < PQ_K)
+      .select(col("m"), col("vec_id").cast("int").as("cid"),
+        col("sub").as("cvec"))
+    (1 to PQ_ITERS).foldLeft(init) { (c, _) =>
+      recomputePq(assignPq(sv, c))
+    }.localCheckpoint(false)
+  }
+
+  /** ADC scoring (q_id, neighbor_id, s): the query sub-vector rows
+    * (keys…, m, qsub) meet the codebooks as one broadcast lookup table
+    * of 6dp DECIMAL inner-product parts per (keys…, m, cid); `scan`
+    * joins the code rows to that table, and each candidate's parts sum
+    * exactly, in any order.
+    */
+  private def adcScores(qsub: DataFrame, codebooks: DataFrame,
+      keys: String*)(scan: DataFrame => DataFrame): DataFrame = {
+    val adc = qsub.join(broadcast(codebooks), "m")
+      .select(keys.map(col) ++ Seq(col("m"), col("cid"),
+        r6(dot(col("qsub"), col("cvec"))).cast("decimal(18,6)").as("part")): _*)
+    scan(broadcast(adc))
+      .groupBy(col("q_id"), col("vec_id").as("neighbor_id"))
+      .agg(sum(col("part")).as("s"))
+  }
 
   // --- persisted ANN indexes: build once, probe many -------------------
   //
@@ -1675,48 +1690,15 @@ object Similarity {
   // — the file layout IS the inverted file. Probes are pure
   // read→route→ADC plans; no training, no checkpoint, no full vectors.
 
-  // Build-once path registry + rebuild-per-JVM policy live in
-  // [[IndexStore]] (shared with the dedup pair set).
-  private def ensureBuilt(path: String)(build: => Unit): Unit =
-    IndexStore.ensureBuilt(path)(build)
-
   final case class PqIndex(codebooks: DataFrame, codes: DataFrame)
   final case class IvfPqIndex(coarse: DataFrame, codebooks: DataFrame,
-      codes: DataFrame, rotated: Boolean = false)
+      codes: DataFrame)
   /** IVF-flat: trained coarse centroids + FULL-vector inverted lists
     * (vec_id, embedding, ccell), partitioned by cell — exact in-cell
     * distances at probe time, the pgvector-ivfflat analogue
     * (/root/reference/database.py:459 builds exactly this index shape).
     */
   final case class IvfFlatIndex(coarse: DataFrame, lists: DataFrame)
-
-  // --- OPQ-style rotation (Ge et al., "Optimized product quantization",
-  //     CVPR'13 — the random-rotation baseline of §5 there, not the
-  //     trained R: a deterministic SIGNED PERMUTATION, which is exactly
-  //     orthogonal, preserves inner products and norms bit-for-bit
-  //     (float negation and reordering are exact), and redistributes
-  //     correlated adjacent dimensions across PQ subspaces) -------------
-
-  /** Output slot i takes input slot OpqPerm(i): dimensions ordered by
-    * md5("opq_i") — a fixed pseudo-random permutation any engine with
-    * md5 can reproduce.
-    */
-  private[graft] val OpqPerm: Array[Int] =
-    (0 until DIM).sortBy(i => md5hex(s"opq_$i")).toArray
-
-  /** Sign of output slot i: -1 iff md5("opqs_i") starts >= '8'. */
-  private[graft] val OpqSigns: Array[Float] =
-    Array.tabulate(DIM)(i => if (md5hex(s"opqs_$i")(0) >= '8') -1.0f else 1.0f)
-
-  /** Rotated residual rot(a - b) as a static 64-expression projection:
-    * element i reads a[perm(i)] - b[perm(i)] directly from the source
-    * attribute arrays (codegen'd; building an intermediate residual
-    * array and extracting from it would re-evaluate the whole zip per
-    * extracted element).
-    */
-  private def opqRotatedDiff(a: Column, b: Column): Column =
-    array((0 until DIM).map(i =>
-      (a(OpqPerm(i)) - b(OpqPerm(i))) * lit(OpqSigns(i))): _*)
 
   def pqIndexPath(dir: String): String = IndexStore.path("pq-v1", dir)
 
@@ -1745,7 +1727,7 @@ object Similarity {
 
   def ivfFlatIndex(spark: SparkSession, dir: String): IvfFlatIndex = {
     val path = ivfFlatIndexPath(dir)
-    ensureBuilt(path)(buildIvfFlatIndex(spark, dir, path))
+    IndexStore.ensureBuilt(path)(buildIvfFlatIndex(spark, dir, path))
     IvfFlatIndex(Tables.read(spark, s"$path/coarse"),
       Tables.read(spark, s"$path/lists"))
   }
@@ -1788,52 +1770,35 @@ object Similarity {
   def appendToPqCodes(spark: SparkSession, dir: String,
       newVecs: DataFrame): Unit = {
     val path = pqIndexPath(dir)
-    ensureBuilt(path)(buildPqIndex(spark, dir, path))
+    IndexStore.ensureBuilt(path)(buildPqIndex(spark, dir, path))
     val cb = Tables.read(spark, s"$path/codebooks")
-    val codes = assignPq(
+    Sinks.appendNew(assignPq(
         subVectors(newVecs.select(col("vec_id"), col("embedding"))), cb)
-      .select(col("vec_id"), col("m"), col("cid")).localCheckpoint()
-    val ids = codes.select(col("vec_id")).distinct()
-    val existing = Tables.read(spark, s"$path/codes")
-      .join(broadcast(ids), Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), col("m"))
-    codes.join(existing, Seq("vec_id", "m"), "left_anti")
-      .sortWithinPartitions(col("vec_id"), col("m"))
-      .write.mode("append").option("compression", "zstd")
-      .parquet(s"$path/codes")
+      .select(col("vec_id"), col("m"), col("cid")),
+      s"$path/codes", "vec_id", Seq("vec_id", "m"), sort = Seq("vec_id", "m"))
   }
 
   /** The same frozen-quantizer append for the residual IVFADC index:
     * route via the frozen coarse centroids, encode the residual under
-    * the frozen codebooks (honoring the index's persisted rotation
-    * flag), append cell-partitioned code files — the probed cell reads
-    * the union immediately, existing partitions are never rewritten.
+    * the frozen codebooks, append cell-partitioned code files — the
+    * probed cell reads the union immediately, existing partitions are
+    * never rewritten.
     */
   def appendToIvfPqCodes(spark: SparkSession, dir: String,
       newVecs: DataFrame): Unit = {
-    val path = ivfPqIndexPath(dir)
-    ensureBuilt(path)(buildIvfPqIndex(spark, dir, path))
-    val idx = loadIvfPqIndex(spark, path)
+    val idx = ivfPqIndex(spark, dir)
     val cells = assign(
         newVecs.select(col("vec_id"), col("embedding")), idx.coarse)
       .select(col("vec_id"), col("embedding"), col("cid").as("ccell"))
       .localCheckpoint() // feeds the residual join AND the cell column
-    val resid =
-      if (idx.rotated) opqRotatedDiff(col("embedding"), col("cvec"))
-      else zip_with(col("embedding"), col("cvec"), (a, b) => a - b)
     val rv = cells.join(broadcast(idx.coarse), col("ccell") === col("cid"))
-      .select(col("vec_id"), col("ccell").as("cc"), resid.as("resid"))
-    val codes = assignPq(subVectorsOf(rv, col("resid")), idx.codebooks)
+      .select(col("vec_id"), col("ccell").as("cc"),
+        zip_with(col("embedding"), col("cvec"), (a, b) => a - b).as("resid"))
+    Sinks.appendNew(assignPq(subVectorsOf(rv, col("resid")), idx.codebooks)
       .select(col("vec_id"), col("m"), col("cid"))
-      .join(cells.select(col("vec_id"), col("ccell")), "vec_id")
-      .localCheckpoint()
-    val ids = codes.select(col("vec_id")).distinct()
-    val existing = idx.codes
-      .join(broadcast(ids), Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), col("m"))
-    codes.join(existing, Seq("vec_id", "m"), "left_anti")
-      .write.mode("append").partitionBy("ccell")
-      .option("compression", "zstd").parquet(s"$path/codes")
+      .join(cells.select(col("vec_id"), col("ccell")), "vec_id"),
+      s"${ivfPqIndexPath(dir)}/codes", "vec_id", Seq("vec_id", "m"),
+      partition = Seq("ccell"))
   }
 
   /** Train the PQ codebooks (8 subspaces × 16 codewords, k-means with
@@ -1844,12 +1809,7 @@ object Similarity {
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
     // consumed by both training iterations and the final encode
     val sv = subVectors(e).localCheckpoint(false)
-    val init = sv.filter(col("vec_id") < PQ_K)
-      .select(col("m"), col("vec_id").cast("int").as("cid"),
-        col("sub").as("cvec"))
-    val cb = (1 to PQ_ITERS).foldLeft(init) { (c, _) =>
-      recomputePq(assignPq(sv, c))
-    }.localCheckpoint(false)
+    val cb = trainPq(sv)
     val codes = assignPq(sv, cb).select(col("vec_id"), col("m"), col("cid"))
     cb.write.mode("overwrite").parquet(s"$path/codebooks")
     graft.sources.Sinks.writeSortedParquet(codes, s"$path/codes",
@@ -2025,16 +1985,14 @@ object Similarity {
     val codes2 = idx.codes
       .join(flag, col("m") === col("fm"), "left_anti")
       .unionByName(codesNew)
-    def arm(name: String, aIdx: PqIndex): DataFrame =
+    def arm(aIdx: PqIndex): DataFrame =
       recallMicro(exact, annPqProbe(spark, dir, aIdx), 3)
-        .select(lit(name).as("arm"), col("*"))
-    arm("base", idx).unionByName(arm("refreshed", PqIndex(cb2, codes2)))
-      .orderBy(col("arm"))
+    gate("base" -> arm(idx), "refreshed" -> arm(PqIndex(cb2, codes2)))
   }
 
   def pqIndex(spark: SparkSession, dir: String): PqIndex = {
     val path = pqIndexPath(dir)
-    ensureBuilt(path)(buildPqIndex(spark, dir, path))
+    IndexStore.ensureBuilt(path)(buildPqIndex(spark, dir, path))
     PqIndex(Tables.read(spark, s"$path/codebooks"),
       Tables.read(spark, s"$path/codes"))
   }
@@ -2052,96 +2010,48 @@ object Similarity {
     */
   def annPqProbe(spark: SparkSession, dir: String, idx: PqIndex): DataFrame = {
     val q = Tables.embeddings(spark, dir).filter(col("vec_id") % 100 === 0)
-    val adc = subVectors(q)
+    val qsub = subVectors(q)
       .select(col("vec_id").as("q_id"), col("m"), col("sub").as("qsub"))
-      .join(broadcast(idx.codebooks), "m")
-      .select(col("q_id"), col("m"), col("cid"),
-        r6(dot(col("qsub"), col("cvec")))
-          .cast("decimal(18,6)").as("part"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("neighbor_id"))
-    idx.codes.join(broadcast(adc), Seq("m", "cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum(col("part")).as("s"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("neighbor_id"),
-        col("s").cast("double").as("approx_dot"), col("rank"))
+    served(adcScores(qsub, idx.codebooks, "q_id")(adc =>
+        idx.codes.join(adc, Seq("m", "cid"))
+          .filter(col("vec_id") =!= col("q_id"))),
+      3, col("s").cast("double").as("approx_dot"))
   }
 
   /** ann_pq: probe over the (per-JVM memoized) persisted PQ index. */
   def annPq(spark: SparkSession, dir: String): DataFrame =
     annPqProbe(spark, dir, pqIndex(spark, dir))
 
-  /** Train and persist the residual IVFADC index (Jegou TPAMI'11):
-    * coarse k-means quantizer (k cells, 2 Lloyd iterations), PQ codebooks
-    * over RESIDUALS (x - centroid(cell(x)) — far less variance than raw
-    * vectors), and per-vector codes carrying the owning cell, partitioned
-    * by cell on disk (= the inverted lists). k defaults to the oracle-
-    * gated toy setting; tools.AnnProbe sweeps realistic cell counts.
-    *
-    * At the default k the coarse quantizer is the one the IVF-flat
-    * artifact already persisted (same init, k, iterations and
-    * arithmetic), so its centroids and cell assignment are read from
-    * there, not retrained: like [[buildKnnGraph]], the build takes the
-    * IVF-flat lists as the corpus.
+  /** Train and persist the residual IVFADC index (Jegou TPAMI'11): the
+    * IVF-flat artifact's coarse quantizer, PQ codebooks over RESIDUALS
+    * (x - centroid(cell(x)) — far less variance than raw vectors), and
+    * per-vector codes carrying the owning cell, partitioned by cell on
+    * disk (= the inverted lists). Like [[buildKnnGraph]], the build
+    * takes the IVF-flat lists as the corpus, so the centroids and cell
+    * assignment are read, not retrained.
     */
-  def buildIvfPqIndex(spark: SparkSession, dir: String, path: String,
-      k: Int = KMEANS_K, rotate: Boolean = false): Unit = {
+  def buildIvfPqIndex(spark: SparkSession, dir: String, path: String): Unit = {
+    val idx = ivfFlatIndex(spark, dir)
     // cell assignment feeds residuals AND the codes' cell column
-    val (coarse, cells) =
-      if (k == KMEANS_K) {
-        val idx = ivfFlatIndex(spark, dir)
-        (idx.coarse, idx.lists
-          .select(col("vec_id"), col("embedding"), col("ccell")))
-      } else {
-        val e = Tables.cpuPartition(Tables.embeddings(spark, dir),
-          col("vec_id"))
-        val cInit = e.filter(col("vec_id") < k)
-          .select(col("vec_id").cast("int").as("cid"),
-            col("embedding").as("cvec"))
-        val trained = (1 to KMEANS_ITERS).foldLeft(cInit) { (c, _) =>
-          recompute(assign(e, c))
-        }.localCheckpoint(false)
-        (trained, assign(e, trained)
-          .select(col("vec_id"), col("embedding"), col("cid").as("ccell"))
-          .localCheckpoint(false))
-      }
-    val resid =
-      if (rotate) opqRotatedDiff(col("embedding"), col("cvec"))
-      else zip_with(col("embedding"), col("cvec"), (a, b) => a - b)
-    val rv = cells.join(broadcast(coarse), col("ccell") === col("cid"))
-      .select(col("vec_id"), col("ccell"), resid.as("resid"))
+    val cells = idx.lists.select(col("vec_id"), col("embedding"), col("ccell"))
+    val rv = cells.join(broadcast(idx.coarse), col("ccell") === col("cid"))
+      .select(col("vec_id"), col("ccell"),
+        zip_with(col("embedding"), col("cvec"), (a, b) => a - b).as("resid"))
     val sv = subVectorsOf(rv, col("resid")).localCheckpoint(false)
-    val pqInit = sv.filter(col("vec_id") < PQ_K)
-      .select(col("m"), col("vec_id").cast("int").as("cid"),
-        col("sub").as("cvec"))
-    val cb = (1 to PQ_ITERS).foldLeft(pqInit) { (c, _) =>
-      recomputePq(assignPq(sv, c))
-    }.localCheckpoint(false)
+    val cb = trainPq(sv)
     val codes = assignPq(sv, cb).select(col("vec_id"), col("m"), col("cid"))
       .join(cells.select(col("vec_id"), col("ccell")), "vec_id")
-    coarse.write.mode("overwrite").parquet(s"$path/coarse")
+    idx.coarse.write.mode("overwrite").parquet(s"$path/coarse")
     cb.write.mode("overwrite").parquet(s"$path/codebooks")
-    graft.sources.Sinks.writePartitioned(codes, s"$path/codes", Seq("ccell"))
-    // index metadata: a probe must apply the same rotation the codes
-    // were encoded under
-    spark.range(1).select(lit(rotate).as("rotated"))
-      .write.mode("overwrite").parquet(s"$path/meta")
+    Sinks.writePartitioned(codes, s"$path/codes", Seq("ccell"))
   }
-
-  def loadIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex =
-    IvfPqIndex(Tables.read(spark, s"$path/coarse"),
-      Tables.read(spark, s"$path/codebooks"),
-      Tables.read(spark, s"$path/codes"),
-      rotated = Tables.readOnce(spark, s"$path/meta")(
-        _.head().getAs[Boolean]("rotated")))
 
   def ivfPqIndex(spark: SparkSession, dir: String): IvfPqIndex = {
     val path = ivfPqIndexPath(dir)
-    ensureBuilt(path)(buildIvfPqIndex(spark, dir, path))
-    loadIvfPqIndex(spark, path)
+    IndexStore.ensureBuilt(path)(buildIvfPqIndex(spark, dir, path))
+    IvfPqIndex(Tables.read(spark, s"$path/coarse"),
+      Tables.read(spark, s"$path/codebooks"),
+      Tables.read(spark, s"$path/codes"))
   }
 
   /** ann_ivfpq probe: pure read→route→ADC over the persisted residual
@@ -2156,38 +2066,21 @@ object Similarity {
     * reproduces every residual bit-for-bit.
     */
   def annIvfPqProbe(spark: SparkSession, dir: String,
-      idx: IvfPqIndex, nprobe: Int = 2): DataFrame = {
-    val coarse = idx.coarse
+      idx: IvfPqIndex): DataFrame = {
     val probes =
-      probeCells(evalQueries(Tables.embeddings(spark, dir)), coarse, nprobe)
+      probeCells(evalQueries(Tables.embeddings(spark, dir)), idx.coarse, 2)
         .select(col("q_id"), col("qe"), col("cid").as("pcell"))
     // per-(query, probed cell) residual -> subvector rows -> ADC table
-    // (rotated exactly as the codes were encoded, per the index meta)
-    val qresid =
-      if (idx.rotated) opqRotatedDiff(col("qe"), col("cvec"))
-      else zip_with(col("qe"), col("cvec"), (a, b) => a - b)
-    val qres = probes.join(broadcast(coarse), col("pcell") === col("cid"))
-      .select(col("q_id"), col("pcell"), qresid.as("qr"))
-    val qsubRows = qres.select(col("q_id"), col("pcell"),
-      posexplode(transform(sequence(lit(0), lit(PQ_M - 1)),
-        m => slice(col("qr"), m * PQ_SUBDIM + 1, lit(PQ_SUBDIM))))
-        .as(Seq("m", "qsub")))
-    val adc = qsubRows.join(broadcast(idx.codebooks), "m")
-      .select(col("q_id"), col("pcell"), col("m"), col("cid"),
-        r6(dot(col("qsub"), col("cvec")))
-          .cast("decimal(18,6)").as("part"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("neighbor_id"))
-    idx.codes
-      .join(broadcast(probes.select(col("q_id"), col("pcell"))),
-        col("ccell") === col("pcell") && col("vec_id") =!= col("q_id"))
-      .join(broadcast(adc), Seq("q_id", "pcell", "m", "cid"))
-      .groupBy(col("q_id"), col("vec_id").as("neighbor_id"))
-      .agg(sum(col("part")).as("s"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("neighbor_id"),
-        col("s").cast("double").as("approx_dot"), col("rank"))
+    val qres = probes.join(broadcast(idx.coarse), col("pcell") === col("cid"))
+      .select(col("q_id"), col("pcell"),
+        zip_with(col("qe"), col("cvec"), (a, b) => a - b).as("qr"))
+    val qsub = subVectorsOf(qres, col("qr"), Seq("q_id", "pcell"), "qsub")
+    served(adcScores(qsub, idx.codebooks, "q_id", "pcell")(adc =>
+        idx.codes
+          .join(broadcast(probes.select(col("q_id"), col("pcell"))),
+            col("ccell") === col("pcell") && col("vec_id") =!= col("q_id"))
+          .join(adc, Seq("q_id", "pcell", "m", "cid"))),
+      3, col("s").cast("double").as("approx_dot"))
   }
 
   /** ann_ivfpq: probe over the (per-JVM memoized) persisted index. */
@@ -2256,7 +2149,7 @@ object Similarity {
     */
   private def lshBands(spark: SparkSession, dir: String): DataFrame = {
     val path = lshBandsPath(dir)
-    ensureBuilt(path) {
+    IndexStore.ensureBuilt(path) {
       val wCap = Window.partitionBy(col("band"), col("key"))
       val capped = bandedIds(Tables.embeddings(spark, dir))
         .withColumn("bc", count(lit(1)).over(wCap))
@@ -2281,16 +2174,11 @@ object Similarity {
       .distinct()
     val ne = e.select(col("vec_id").as("n_id"), col("embedding").as("ne"))
     val qe = evalQueries(e).select(col("q_id").as("q_id2"), col("qe"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("neighbor_id"))
-    candIds.join(ne, col("neighbor_id") === col("n_id"))
-      .join(broadcast(qe), col("q_id") === col("q_id2"))
-      .select(col("q_id"), col("neighbor_id"),
-        cosineSim(col("ne"), col("qe")).as("s"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("neighbor_id"), round(col("s"), 6).as("sim"),
-        col("rank"))
+    served(candIds.join(ne, col("neighbor_id") === col("n_id"))
+        .join(broadcast(qe), col("q_id") === col("q_id2"))
+        .select(col("q_id"), col("neighbor_id"),
+          cosineSim(col("ne"), col("qe")).as("s")),
+      3, round(col("s"), 6).as("sim"))
   }
 
   // ---- mmr_rerank: diversified reranking ------------------------------
@@ -2530,18 +2418,8 @@ object Similarity {
       .join(Tables.embeddings(spark, dir), col("doc_id") === col("vec_id"))
       .select(col("source"), col("embedding"))
       .localCheckpoint(false) // feeds components (twice) AND the norm stats
-    val comp = j.select(col("source"),
-      posexplode(col("embedding")).as(Seq("i", "v")))
-    val toVec = (c: Column, v: String) =>
-      transform(array_sort(c), s => s.getField(v))
-    val srcCent = comp.groupBy(col("source"), col("i"))
-      .agg(mean6f(col("v")).as("cv"))
-      .groupBy(col("source"))
-      .agg(toVec(collect_list(struct(col("i"), col("cv"))), "cv")
-        .as("cvec"))
-    val glob = comp.groupBy(col("i")).agg(mean6f(col("v")).as("gv"))
-      .agg(toVec(collect_list(struct(col("i"), col("gv"))), "gv")
-        .as("gvec"))
+    val srcCent = meanVectors(j, Seq("source"), "embedding", "cvec")
+    val glob = meanVectors(j, Nil, "embedding", "gvec", mean = "gv")
     val norm = round(sqrt(dot(col("embedding"), col("embedding"))), 6)
     val stats = j.select(col("source"), norm.as("nm"))
       .groupBy(col("source"))
@@ -2627,17 +2505,13 @@ object Similarity {
     val keep = Tables.documents(spark, dir)
       .filter(lang.map(l => col("lang") === l).getOrElse(lit(true)))
       .select(col("doc_id").as("vec_id"))
-    val wK = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("vec_id"))
-    idx.lists.join(broadcast(probes), col("ccell") === col("pcid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(keep, Seq("vec_id"), "left_semi")
-      .select(col("q_id"), col("vec_id"),
-        cosineSim(col("embedding"), col("qe")).as("s"))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= FilteredK)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        round(col("s"), 6).as("sim"), col("rank").cast("int").as("rank"))
+    served(idx.lists.join(broadcast(probes), col("ccell") === col("pcid"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .join(keep, Seq("vec_id"), "left_semi")
+        .select(col("q_id"), col("vec_id"),
+          cosineSim(col("embedding"), col("qe")).as("s")),
+      FilteredK, round(col("s"), 6).as("sim"), id = "vec_id",
+      rank = col("rank").cast("int").as("rank"))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -2735,11 +2609,7 @@ object Similarity {
       .join(d, col("doc_id") === col("cd"))
       .groupBy(col("q_id"))
       .agg(count(lit(1)).as("n_ctx"),
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col("pick"), col("text")))),
-            x => x.getField("text")),
-          "\n").as("context"))
+        array_join(collectSorted("pick", "text"), "\n").as("context"))
       .orderBy(col("q_id"))
   }
 
@@ -2822,8 +2692,7 @@ object Similarity {
     */
   private def dimMeansU6(e: DataFrame): DataFrame =
     dimMeanRows(e)
-      .agg(transform(array_sort(collect_list(struct(col("d"), col("mu")))),
-        s => s.getField("mu")).as("muarr"))
+      .agg(collectSorted("d", "mu").as("muarr"))
 
   /** Per-dim (d, mu) rows behind [[dimMeansU6]] — the BQ maintenance
     * family joins them instead of unpacking the array.
@@ -2892,7 +2761,7 @@ object Similarity {
     */
   def pcaBasis(spark: SparkSession, dir: String): DataFrame = {
     val path = pcaBasisPath(dir)
-    ensureBuilt(path)(buildPcaBasis(spark, dir, path))
+    IndexStore.ensureBuilt(path)(buildPcaBasis(spark, dir, path))
     Tables.read(spark, path)
   }
 
@@ -3023,10 +2892,8 @@ object Similarity {
   def pcaProject(spark: SparkSession, dir: String): DataFrame = {
     val b = pcaBasis(spark, dir)
     val arrs = broadcast(b.groupBy().agg(
-      transform(array_sort(collect_list(struct(col("dim"), col("mu")))),
-        s => s.getField("mu")).as("muarr"),
-      transform(array_sort(collect_list(struct(col("dim"), col("vu")))),
-        s => s.getField("vu")).as("vuarr"),
+      collectSorted("dim", "mu").as("muarr"),
+      collectSorted("dim", "vu").as("vuarr"),
       max(col("l2")).as("l2")).localCheckpoint(false))
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir),
       col("vec_id"))
@@ -3098,7 +2965,7 @@ object Similarity {
 
   def bqCodes(spark: SparkSession, dir: String): DataFrame = {
     val path = bqCodesPath(dir)
-    ensureBuilt(path)(buildBqCodes(spark, dir, path))
+    IndexStore.ensureBuilt(path)(buildBqCodes(spark, dir, path))
     Tables.read(spark, path)
   }
 
@@ -3113,9 +2980,9 @@ object Similarity {
   def appendToBqCodes(spark: SparkSession, dir: String,
       newVecs: DataFrame): Unit = {
     val path = bqCodesPath(dir)
-    ensureBuilt(path)(buildBqCodes(spark, dir, path))
+    IndexStore.ensureBuilt(path)(buildBqCodes(spark, dir, path))
     val mu = broadcast(Tables.read(spark, bqThresholdsPath(dir)))
-    val codes = newVecs.select(col("vec_id"), col("embedding"))
+    Sinks.appendNew(newVecs.select(col("vec_id"), col("embedding"))
       .crossJoin(mu)
       .select(col("vec_id"), bqBitsOf(col("embedding")).as("bits"))
       .select(col("vec_id"), posexplode(col("bits")).as(Seq("d", "b")))
@@ -3123,15 +2990,8 @@ object Similarity {
       .agg(sum(when(col("d") < 32, col("b") * expr("shiftleft(1L, d)"))
         .otherwise(0L)).as("lo"),
         sum(when(col("d") >= 32, col("b") * expr("shiftleft(1L, d - 32)"))
-          .otherwise(0L)).as("hi"))
-      .localCheckpoint()
-    val existing = Tables.read(spark, path)
-      .join(broadcast(codes.select(col("vec_id"))), Seq("vec_id"),
-        "left_semi")
-      .select(col("vec_id"))
-    codes.join(existing, Seq("vec_id"), "left_anti")
-      .sortWithinPartitions(col("vec_id"))
-      .write.mode("append").option("compression", "zstd").parquet(path)
+          .otherwise(0L)).as("hi")),
+      path, "vec_id", Seq("vec_id"), sort = Seq("vec_id"))
   }
 
   /** The Hamming pair stream (q_id, neighbor_id, hamming) for the
@@ -3394,12 +3254,10 @@ object Similarity {
       // explode + threshold-table chain — including bqThresholds'
       // three corpus passes — re-ran per consumer
       .localCheckpoint(false)))
-    def arm(name: String, hams: DataFrame): DataFrame =
+    def arm(hams: DataFrame): DataFrame =
       recallMicro(exact, hammingTopK(hams, BqK), BqK)
-        .select(lit(name).as("arm"), col("*"))
-    arm("base", bqHams(spark, dir))
-      .unionByName(arm("refit", bqHamsOf(refitCodes)))
-      .orderBy(col("arm"))
+    gate("base" -> arm(bqHams(spark, dir)),
+      "refit" -> arm(bqHamsOf(refitCodes)))
   }
 
   // --- graph ANN (the HNSW-shaped family, declaratively: a persisted
@@ -3475,10 +3333,14 @@ object Similarity {
       knnEdges(idx, e, idx.lists, pinned = true), path, Seq("src"))
   }
 
-  def knnGraph(spark: SparkSession, dir: String): DataFrame = {
+  def knnGraph(spark: SparkSession, dir: String): DataFrame =
+    Tables.read(spark, builtKnnGraph(spark, dir))
+
+  /** [[knnGraphPath]], built on first use per JVM. */
+  private def builtKnnGraph(spark: SparkSession, dir: String): String = {
     val path = knnGraphPath(dir)
-    ensureBuilt(path)(buildKnnGraph(spark, dir, path))
-    Tables.read(spark, path)
+    IndexStore.ensureBuilt(path)(buildKnnGraph(spark, dir, path))
+    path
   }
 
   // --- append staleness receipt (r14): the kNN graph accepts
@@ -3492,7 +3354,7 @@ object Similarity {
   /** Build the APPENDED-graph artifact: the base (non-delta) corpus's
     * graph built batch-style over base members only, then the delta
     * split absorbed through the REAL append write path
-    * ([[appendKnnEdgesAt]] — frozen quantizer, batch-visible members,
+    * ([[Sinks.appendNew]] — frozen quantizer, batch-visible members,
     * dedupe against the base edges). This is the graph a standing
     * ingest actually serves between rebuilds; [[knnGraph]] is its
     * full-rebuild compaction target, and [[appendRecall]] /
@@ -3507,14 +3369,20 @@ object Similarity {
     val baseLists = idx.lists.filter(!Dedup.isDelta(col("vec_id")))
     graft.sources.Sinks.writeSortedParquet(
       knnEdges(idx, base, baseLists, pinned = true), path, Seq("src"))
-    appendKnnEdgesAt(spark, path,
-      knnEdges(idx, e.filter(Dedup.isDelta(col("vec_id"))), idx.lists))
+    Sinks.appendNew(
+      knnEdges(idx, e.filter(Dedup.isDelta(col("vec_id"))), idx.lists),
+      path, "src", Seq("src", "dst"))
   }
 
-  def appendedKnnGraph(spark: SparkSession, dir: String): DataFrame = {
+  def appendedKnnGraph(spark: SparkSession, dir: String): DataFrame =
+    Tables.read(spark, builtAppendedKnnGraph(spark, dir))
+
+  /** [[appendedKnnGraphPath]], built on first use per JVM. */
+  private def builtAppendedKnnGraph(spark: SparkSession,
+      dir: String): String = {
     val path = appendedKnnGraphPath(dir)
-    ensureBuilt(path)(buildAppendedKnnGraph(spark, dir, path))
-    Tables.read(spark, path)
+    IndexStore.ensureBuilt(path)(buildAppendedKnnGraph(spark, dir, path))
+    path
   }
 
   /** append_recall: the graph-append STALENESS receipt — recall@3 vs
@@ -3533,13 +3401,11 @@ object Similarity {
   def appendRecall(spark: SparkSession, dir: String): DataFrame = {
     val exact = truthSample(spark, dir, 3)
       .localCheckpoint(false) // feeds both arms
-    def arm(name: String, g: DataFrame): DataFrame =
-      recallMicro(exact, topK(graphWalk(spark, dir, g)
+    def arm(graph: String): DataFrame =
+      recallMicro(exact, topK(graphWalk(spark, dir, graph)
           .withColumnRenamed("vec_id", "neighbor_id"), 3), 3)
-        .select(lit(name).as("arm"), col("*"))
-    arm("appended", appendedKnnGraph(spark, dir))
-      .unionByName(arm("rebuilt", knnGraph(spark, dir)))
-      .orderBy(col("arm"))
+    gate("appended" -> arm(builtAppendedKnnGraph(spark, dir)),
+      "rebuilt" -> arm(builtKnnGraph(spark, dir)))
   }
 
   /** Rebuild triggers for [[appendChurn]]: appended-edge mass share
@@ -3563,17 +3429,17 @@ object Similarity {
     * join per (q, n).
     */
   def appendChurn(spark: SparkSession, dir: String): DataFrame = {
-    val app = appendedKnnGraph(spark, dir)
-    val edges = app.agg(count(lit(1)).as("n_edges"),
+    val app = builtAppendedKnnGraph(spark, dir)
+    val edges = Tables.read(spark, app).agg(count(lit(1)).as("n_edges"),
       sum(when(Dedup.isDelta(col("src")) || Dedup.isDelta(col("dst")),
         1L).otherwise(0L)).as("n_appended"))
-    def top3(g: DataFrame, in: String): DataFrame =
-      topK(graphWalk(spark, dir, g)
+    def top3(graph: String, in: String): DataFrame =
+      topK(graphWalk(spark, dir, graph)
           .withColumnRenamed("vec_id", "neighbor_id"), 3)
         .select(col("q_id").as("q"), col("neighbor_id").as("n"),
           lit(true).as(in))
     val ch = top3(app, "ia")
-      .join(top3(knnGraph(spark, dir), "ir"), Seq("q", "n"), "full_outer")
+      .join(top3(builtKnnGraph(spark, dir), "ir"), Seq("q", "n"), "full_outer")
       .groupBy(col("q"))
       .agg(max(when(col("ia").isNull || col("ir").isNull, 1L)
         .otherwise(0L)).as("chg"))
@@ -3624,30 +3490,15 @@ object Similarity {
   def appendToKnnGraph(spark: SparkSession, dir: String,
       newVecs: DataFrame): Unit = {
     val idx = ivfFlatIndex(spark, dir)
-    val path = knnGraphPath(dir)
-    ensureBuilt(path)(buildKnnGraph(spark, dir, path))
+    val path = builtKnnGraph(spark, dir)
     val nv = newVecs.select(col("vec_id"), col("embedding"))
       .localCheckpoint(false) // probes + batch-visibility union both read it
     val members = idx.lists
       .select(col("vec_id"), col("embedding"), col("ccell"))
       .unionByName(assign(nv, idx.coarse)
         .select(col("vec_id"), col("embedding"), col("cid").as("ccell")))
-    appendKnnEdgesAt(spark, path, knnEdges(idx, nv, members))
-  }
-
-  /** The shared append TAIL: dedupe the fresh symmetrized edges against
-    * the existing graph (store scan pruned map-side to the batch's node
-    * set) and land them as appended files. Used by [[appendToKnnGraph]]
-    * and the appended-graph artifact build.
-    */
-  private def appendKnnEdgesAt(spark: SparkSession, path: String,
-      edges: DataFrame): Unit = {
-    val fresh = edges.localCheckpoint() // node-set prune + anti probe
-    val nodes = fresh.select(col("src")).distinct()
-    val existing = Tables.read(spark, path)
-      .join(broadcast(nodes), Seq("src"), "left_semi")
-    fresh.join(existing, Seq("src", "dst"), "left_anti")
-      .write.mode("append").option("compression", "zstd").parquet(path)
+    Sinks.appendNew(knnEdges(idx, nv, members), path, "src",
+      Seq("src", "dst"))
   }
 
   /** ann_graph: graph-refined ANN serving — entry pool = the query's
@@ -3667,16 +3518,10 @@ object Similarity {
     * vectors; a per-query rank window cuts the top-3. The corpus is
     * read once, for that broadcast.
     */
-  def annGraph(spark: SparkSession, dir: String): DataFrame = {
-    val wQ = Window.partitionBy(col("q_id"))
-      .orderBy(col("s").desc, col("vec_id"))
-    graphWalk(spark, dir, knnGraph(spark, dir))
-      .withColumn("rank", row_number().over(wQ))
-      .filter(col("rank") <= 3)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        round(col("s"), 6).as("sim"), col("rank"))
+  def annGraph(spark: SparkSession, dir: String): DataFrame =
+    served(graphWalk(spark, dir, builtKnnGraph(spark, dir)), 3,
+      round(col("s"), 6).as("sim"), id = "vec_id")
       .orderBy(col("q_id"), col("rank"))
-  }
 
   /** Cap on the walk's broadcast, in [[requireWalkFits]]' bytes: about
     * 129k vectors with a 16-edge adjacency each. A corpus past it fails
@@ -3733,8 +3578,8 @@ object Similarity {
     vis.iterator.map { case (v, (s, r)) => (qId, v, s, r) }
   }
 
-  /** The beam walk over edge frame `g` (the persisted graph, or the
-    * appended artifact for the append receipts), as its TRAIL
+  /** The beam walk over the edge table at `graph` (the persisted graph,
+    * or the appended artifact for the append receipts), as its TRAIL
     * (q_id, vec_id, s, round): the entry pool is round 0 and each
     * vector carries the first round that reached it, so the visited
     * set after round r is `round <= r`.
@@ -3743,23 +3588,23 @@ object Similarity {
     * top-[[GraphEntries]]: entries are scored with the inverted list's
     * own embedding, so appended vectors can enter and their out-edges
     * are followed. The rounds then run inside one task per query group
-    * ([[walkRounds]]) against one broadcast of `g`'s adjacency and the
+    * ([[walkRounds]]) against one broadcast of the adjacency and the
     * embeddings table's vectors, capped by [[WalkBroadcastCap]]; a
-    * neighbour missing from that table is never visited.
+    * neighbour missing from that table is never visited. Both are
+    * collected once per version of their files ([[Tables.readOnce]]):
+    * an append to or a rebuild of the graph collects it again.
     */
   private[graft] def graphWalk(spark: SparkSession, dir: String,
-      g: DataFrame): DataFrame = {
-    val entry = probeCandidates(spark, dir, ivfFlatIndex(spark, dir), 1)
-      .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("s").desc, col("neighbor_id"))))
-      .filter(col("rk") <= GraphEntries)
-    val edges = g.select(col("src"), col("dst")).collect()
-    val vecs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding")).collect()
-    requireWalkFits(edges.length, vecs.length)
-    val wg = spark.sparkContext.broadcast(WalkGraph(
-      edges.groupMap(_.getLong(0))(_.getLong(1)),
-      vecs.map(r => r.getLong(0) -> floats(r, 1)).toMap))
+      graph: String): DataFrame = {
+    val entry = ranked(probeCandidates(spark, dir, ivfFlatIndex(spark, dir),
+      1), GraphEntries, rank = "rk")
+    val adj = Tables.readOnce(spark, graph)(_.select(col("src"), col("dst"))
+      .collect().groupMap(_.getLong(0))(_.getLong(1)))
+    val vecs = Tables.readOnce(spark, Tables.path(dir, "embeddings"))(
+      _.select(col("vec_id"), col("embedding")).collect()
+        .map(r => r.getLong(0) -> floats(r, 1)).toMap)
+    requireWalkFits(adj.valuesIterator.map(_.length.toLong).sum, vecs.size)
+    val wg = spark.sparkContext.broadcast(WalkGraph(adj, vecs))
     import spark.implicits._
     // entry is already clustered by q_id (its window), so the grouping
     // adds no exchange
@@ -3778,29 +3623,38 @@ object Similarity {
     * deployment reads side by side when splitting its latency budget
     * between probed cells and expansion rounds.
     *
-    * Plan: one checkpointed walk trail ([[graphWalk]]); arm r reads its
-    * `round <= r` slice through one ranked frame, against one
-    * checkpointed truth read.
+    * Plan: one checkpointed walk trail ([[graphWalk]]), sliced by a
+    * broadcast of the rounds into one frame keyed by (rounds, q_id): a
+    * rank window per key marks the top-3, a broadcast left join marks
+    * the truth edges, and one aggregate per key counts the visited set
+    * and the matches. `recall` is [[recallMicro]]'s: matches over
+    * (truth queries · 3).
     */
   def beamCurve(spark: SparkSession, dir: String): DataFrame = {
     val exact = truthSample(spark, dir, 3)
-      .localCheckpoint(false) // feeds every arm
-    val trail = graphWalk(spark, dir, knnGraph(spark, dir))
+      .localCheckpoint(false) // feeds the matches and the query count
+    val trail = graphWalk(spark, dir, builtKnnGraph(spark, dir))
       .withColumnRenamed("vec_id", "neighbor_id")
-      .localCheckpoint(false) // feeds every arm
-    def arm(r: Int): DataFrame = {
-      // both reads (recall top-3, visited count) come from ONE ranked
-      // frame, so the second read reuses the first one's exchange
-      val ranked = trail.filter(col("round") <= r)
-        .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
+      .localCheckpoint(false)
+    val rounds = spark.range(1, GraphRounds + 1)
+      .select(col("id").cast("int").as("rounds"))
+    val perQuery = trail.join(broadcast(rounds), col("round") <= col("rounds"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("rounds"), col("q_id"))
           .orderBy(col("s").desc, col("neighbor_id"))))
-        .withColumn("nv", count(lit(1)).over(Window.partitionBy(col("q_id"))))
-      recallMicro(exact, ranked.filter(col("rk") <= 3), 3)
-        .crossJoin(meanPerQuery(ranked.filter(col("rk") === 1), "nv",
-          "mean_visited"))
-        .select(lit(r).as("rounds"), col("*"))
-    }
-    (1 to GraphRounds).map(arm).reduce(_ unionByName _)
+      .join(broadcast(exact.select(col("q_id").as("tq"),
+          col("neighbor_id").as("tn"))),
+        col("q_id") === col("tq") && col("neighbor_id") === col("tn"), "left")
+      .groupBy(col("rounds"), col("q_id"))
+      .agg(count(lit(1)).as("nv"),
+        count(when(col("rk") <= 3, col("tn"))).as("n_matched"))
+    perQuery.groupBy(col("rounds"))
+      .agg(sum(col("n_matched")).as("n_matched"),
+        r2(sum(col("nv")).cast("double") / count(lit(1))).as("mean_visited"))
+      .crossJoin(exact.agg(countDistinct(col("q_id")).as("n_queries")))
+      .select(col("rounds"), col("n_queries"), col("n_matched"),
+        r4(col("n_matched").cast("double") / (col("n_queries") * 3))
+          .as("recall"), col("mean_visited"))
       .orderBy(col("rounds"))
   }
 
@@ -3870,12 +3724,9 @@ object Similarity {
   def graphRecall(spark: SparkSession, dir: String): DataFrame = {
     val exact = truthSample(spark, dir, 3)
       .localCheckpoint(false) // feeds both arms
-    def arm(name: String, a: DataFrame): DataFrame =
-      recallMicro(exact, a, 3).select(lit(name).as("arm"), col("*"))
-    arm("graph", annGraph(spark, dir))
-      .unionByName(arm("ivf_probe1",
-        annIvfKmeansProbe(spark, dir, ivfFlatIndex(spark, dir), 1)))
-      .orderBy(col("arm"))
+    gate("graph" -> recallMicro(exact, annGraph(spark, dir), 3),
+      "ivf_probe1" -> recallMicro(exact,
+        annIvfKmeansProbe(spark, dir, ivfFlatIndex(spark, dir), 1), 3))
   }
 
   /** Matryoshka prefix dimensions audited by [[matryoshkaRecall]]
@@ -3906,16 +3757,12 @@ object Similarity {
     val e = Tables.cpuPartition(Tables.embeddings(spark, dir), col("vec_id"))
     val q = evalQueries(e)
     val arms = MrlDims.map { d =>
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("s").desc, col("neighbor_id"))
-      e.join(broadcast(q))
+      ranked(e.join(broadcast(q))
         .filter(col("vec_id") =!= col("q_id"))
         .select(lit(d).as("d"), col("q_id"),
           col("vec_id").as("neighbor_id"),
           cosineSim(slice(col("embedding"), 1, d),
-            slice(col("qe"), 1, d)).as("s"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= MrlPoolDepth)
+            slice(col("qe"), 1, d)).as("s")), MrlPoolDepth)
         .drop("s")
     }.reduce(_ unionByName _)
     graft.sources.Sinks.writeSortedParquet(arms, path,
@@ -3938,7 +3785,7 @@ object Similarity {
     */
   def matryoshkaRecall(spark: SparkSession, dir: String): DataFrame = {
     val path = mrlTruthPath(dir)
-    ensureBuilt(path)(buildMrlTruth(spark, dir, path))
+    IndexStore.ensureBuilt(path)(buildMrlTruth(spark, dir, path))
     val arm = Tables.read(spark, path)
       .filter(col("rank") <= BqK) // the artifact holds the full pool
     val exact = truthSample(spark, dir, BqK)
@@ -3965,7 +3812,7 @@ object Similarity {
     val exact = truthSample(spark, dir, BqK)
       .localCheckpoint(false) // feeds every depth arm
     val path = mrlTruthPath(dir)
-    ensureBuilt(path)(buildMrlTruth(spark, dir, path))
+    IndexStore.ensureBuilt(path)(buildMrlTruth(spark, dir, path))
     val cands = Tables.read(spark, path)
       .filter(col("d") === MrlServeDim)
       .select(col("q_id"), col("neighbor_id"), col("rank").as("prank"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Fixed.r4
+import graft.functions.VectorFunctions.collectSorted
 import graft.functions.{CleanStep, CleanText, KeywordRules, TextFunctions}
 import graft.sources.Tables
 
@@ -355,9 +356,7 @@ object TextOps {
       .groupBy(col("doc_id"), col("s")).agg(min(col("pos")).as("p"))
       .groupBy(col("doc_id"))
       .agg(
-        concat_ws(" ",
-          transform(array_sort(collect_list(struct(col("p"), col("s")))),
-            x => x.getField("s"))).as("prelim"),
+        concat_ws(" ", collectSorted("p", "s")).as("prelim"),
         count(lit(1)).cast("int").as("n_sentences"))
       .select(col("doc_id"),
         trim(regexp_replace(regexp_replace(col("prelim"), "\\s+", " "),

@@ -1,8 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, lit, max, min, shiftleft,
-  shiftright}
+import org.apache.spark.sql.functions.{broadcast, col, lit, max, min,
+  shiftleft, shiftright}
 
 /** Write-side of the engine: layouts that make the NEXT read fast.
   *
@@ -44,6 +44,30 @@ object Sinks {
       .partitionBy(partitionCols: _*)
       .option("compression", "zstd")
       .parquet(path)
+
+  /** The deduping append of a persisted store: the rows of `fresh` whose
+    * `key` the store at `path` lacks land as new zstd files, sorted
+    * within themselves on `sort` or partitioned by `partition`; existing
+    * files are never rewritten, so a repeated or overlapping append is a
+    * no-op. `fresh` is checkpointed (it is read twice) and the store
+    * scan is pruned map-side to the batch's `prune` values by a
+    * batch-sized broadcast semi-join before the batch-bounded anti-join.
+    */
+  def appendNew(fresh: DataFrame, path: String, prune: String,
+      key: Seq[String], sort: Seq[String] = Nil,
+      partition: Seq[String] = Nil): Unit = {
+    val batch = fresh.localCheckpoint()
+    val existing = Tables.read(batch.sparkSession, path)
+      .join(broadcast(batch.select(col(prune)).distinct()), Seq(prune),
+        "left_semi")
+      .select(key.map(col): _*)
+    val rows = batch.join(existing, key, "left_anti")
+    val w = (if (sort.isEmpty) rows
+      else rows.sortWithinPartitions(sort.map(col): _*))
+      .write.mode("append").option("compression", "zstd")
+    // an empty partitionBy still adds a write option
+    (if (partition.isEmpty) w else w.partitionBy(partition: _*)).parquet(path)
+  }
 
   /** Hash-bucketed (optionally bucket-sorted) parquet table — the CTAS
     * that pre-pays the shuffle of every future join on `bucketCol`.

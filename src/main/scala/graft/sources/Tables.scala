@@ -15,7 +15,10 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    read(spark, s"$sfDir/$name.parquet")
+    read(spark, path(sfDir, name))
+
+  /** The parquet path of table `name` under `sfDir`. */
+  def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
   /** The one parquet read of the engine: `spark.read.parquet(path)`
     * without the schema-inference job. Spark infers a parquet schema
@@ -33,8 +36,12 @@ object Tables {
       spark.read.parquet(path).schema)).parquet(path)
 
   /** `derive(read(spark, path))`, computed once per version of the files
-    * under `path`: small metadata an artifact stores beside its data,
-    * read without a job while it is unchanged. One derivation per path.
+    * under `path` and served without a job while they are unchanged.
+    * The value is kept under the path alone, not under `derive`, so each
+    * path has exactly one derivation in the engine: a second, different
+    * `derive` for the same path would be served the first one's value.
+    * Its one client is the graph walk (a graph's adjacency, the
+    * embeddings table's vector map).
     */
   def readOnce[T](spark: SparkSession, path: String)(
       derive: DataFrame => T): T =

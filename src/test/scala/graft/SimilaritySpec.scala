@@ -265,26 +265,6 @@ class SimilaritySpec extends SparkSpecBase {
     assert(viaEntry === viaProbe)
   }
 
-  test("OPQ-style rotation: orthogonal by construction, neighbors stable") {
-    import graft.operators.Similarity
-    // signed permutation = orthogonal: perm is a bijection, signs are ±1
-    assert(Similarity.OpqPerm.sorted.toSeq === (0 until 64))
-    assert(Similarity.OpqSigns.forall(s => s == 1.0f || s == -1.0f))
-    val dir = pqDir
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-opq-idx").toString
-    Similarity.buildIvfPqIndex(spark, dir, path, rotate = true)
-    val idx = Similarity.loadIvfPqIndex(spark, path)
-    assert(idx.rotated)
-    val rot = Similarity.annIvfPqProbe(spark, dir, idx)
-      .orderBy("rank").collect()
-    // inner products are invariant under the rotation, so the clustered
-    // fixture ranks the same neighbors (rank-1 = a same-cluster twin)
-    val plain = Similarity.annIvfPq(spark, dir).orderBy("rank").collect()
-    assert(rot.length === plain.length)
-    assert(rot.head.getLong(1) === plain.head.getLong(1))
-  }
-
   test("ann_pq: PQ codes + ADC ranking, deterministic top-3") {
     // 20 vectors (16 seed the codebooks; vec 0 is the query), clustered
     // so near neighbors of the query share its codewords.
@@ -907,8 +887,9 @@ class SimilaritySpec extends SparkSpecBase {
   test("walk: the trail's round <= r slices give beam_curve's " +
       "mean_visited; ann_graph's top-3 breaks score ties by vec_id") {
     import org.apache.spark.sql.functions.col
+    Similarity.knnGraph(spark, graphDir) // builds the graph
     val trail = Similarity.graphWalk(spark, graphDir,
-      Similarity.knnGraph(spark, graphDir)).collect()
+      Similarity.knnGraphPath(graphDir)).collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Int]("round")))
     val nq = trail.map(_._1).distinct.length
     def r2(x: Double) = math.floor(x * 100 + 0.5) / 100
@@ -944,7 +925,9 @@ class SimilaritySpec extends SparkSpecBase {
     Similarity.ivfFlatIndex(spark, dir)
     Similarity.appendToIvfFlat(spark, Similarity.ivfFlatIndexPath(dir),
       Seq(Emb(900L, graphMember(0, 0), 0)).toDF())
-    val g = Seq((900L, 25L), (900L, 999L), (900L, 0L)).toDF("src", "dst")
+    val g = s"$dir/walk-graph"
+    Seq((900L, 25L), (900L, 999L), (900L, 0L)).toDF("src", "dst")
+      .write.parquet(g)
     val t = Similarity.graphWalk(spark, dir, g).collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
         r.getAs[Int]("round")))
@@ -1537,5 +1520,54 @@ class SimilaritySpec extends SparkSpecBase {
     assert(rows(Similarity.mrlRerank(spark, dir)) === Set(
       Seq[Any](10, 1L, 1.0), Seq[Any](50, 1L, 1.0),
       Seq[Any](200, 1L, 1.0)))
+  }
+
+  test("the guard finds restated reassemblies and OPQ names, not prose") {
+    val src =
+      """object X {
+        |  val a = transform(array_sort(
+        |    collect_list(struct(col("i"), col("v")))), s => s.getField("v"))
+        |  // transform(array_sort(collect_list(struct(col("i"), col("v")))), f)
+        |  val b = "transform(array_sort(collect_list(struct(x)))"
+        |  val c = transform(array_sort(col("x")), s => s)
+        |  val d = collectSorted("i", "v")
+        |  private[graft] val OpqPerm = Array(0)
+        |  def opqRotatedDiff(a: Column, b: Column) = a - b
+        |  // def OpqSigns = 1
+        |}""".stripMargin
+    assert(SimilaritySpec.restatements(src) === Seq(2 -> "reassembly",
+      8 -> "OpqPerm", 9 -> "opqRotatedDiff"))
+  }
+
+  test("src/main reassembles vectors only through collectSorted") {
+    val files = FixedSpec.scalaFiles(new java.io.File("src/main/scala"))
+    assert(files.size > 20, "no sources under src/main/scala")
+    val found = files.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+      SimilaritySpec.restatements(src).map { case (line, what) =>
+        s"${f.getName}:$line $what" }
+    }
+    // the one statement: the helper's own body
+    assert(found.map(_.replaceAll(":\\d+", "")) ===
+      Seq("VectorFunctions.scala reassembly"), found.mkString("\n"))
+  }
+}
+
+object SimilaritySpec {
+  private val Reassembly =
+    """transform\s*\(\s*array_sort\s*\(\s*collect_list\s*\(\s*struct\s*\(""".r
+  private val OpqName = """\b(?:def|val|var)\s+(OpqPerm|OpqSigns|opqRotatedDiff)\b""".r
+
+  /** (line, what) of each inline `(i, v)` → array reassembly and each
+    * definition of a deleted OPQ name in Scala source `src`, comments
+    * and literals skipped.
+    */
+  def restatements(src: String): Seq[(Int, String)] = {
+    val c = FixedSpec.code(src)
+    def line(at: Int) = c.substring(0, at).count(_ == '\n') + 1
+    (Reassembly.findAllMatchIn(c).map(m => line(m.start) -> "reassembly") ++
+      OpqName.findAllMatchIn(c).map(m => line(m.start) -> m.group(1)))
+      .toSeq.sorted
   }
 }

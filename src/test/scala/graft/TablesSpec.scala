@@ -149,18 +149,20 @@ class TablesSpec extends SparkSpecBase {
     assert(Tables.read(spark, p).as[Int].collect().sorted.toSeq === (20 until 30))
   }
 
-  test("an IVF-PQ load reads its rotation flag once per meta version") {
+  test("the graph walk collects its graph and vectors once per version") {
     val d = fixtureDir(embs = (0 until 20).map { i =>
       Emb(i.toLong, vec(if (i % 2 == 0) 1.0 else -1.0, 0.1 * (i % 5), 0.2),
         i % 2)
     })
-    val path = Similarity.ivfPqIndexPath(d)
-    Similarity.buildIvfPqIndex(spark, d, path)
-    assert(!Similarity.loadIvfPqIndex(spark, path).rotated)
-    val (idx, n) = JobCount(sc)(Similarity.loadIvfPqIndex(spark, path))
-    assert(!idx.rotated)
-    assert(n === 0)
-    Similarity.buildIvfPqIndex(spark, d, path, rotate = true)
-    assert(Similarity.loadIvfPqIndex(spark, path).rotated)
+    Similarity.annGraph(spark, d) // builds, then collects both
+    val (_, warm) = JobCount(sc)(Similarity.annGraph(spark, d))
+    assert(warm === 0)
+    Similarity.appendToKnnGraph(spark, d,
+      Seq(Emb(100L, vec(1.0, 0.05, 0.2), 0)).toDF())
+    Similarity.knnGraph(spark, d) // the new listing's schema inference
+    val (_, first) = JobCount(sc)(Similarity.annGraph(spark, d))
+    assert(first === 1) // the graph's collect; the vectors are unchanged
+    val (_, again) = JobCount(sc)(Similarity.annGraph(spark, d))
+    assert(again === 0)
   }
 }
