@@ -18,13 +18,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * subtree is computed once or twice.
   *
   * Written plans are diffable across builds: expression ids (`#123`),
-  * exchange `plan_id=`s, lambda variable suffixes, checkpoint RDD ids
-  * and their creation-site line numbers are the JVM's counters and the
-  * source layout, not the plan, so they normalise to `N`. So do
-  * whole-stage `[codegen id : N]`s and a query stage's bare-integer
-  * stage id (`Arguments: N` under a `…QueryStage` node): adaptive
-  * execution numbers both in stage completion order. A before/after
-  * pair then differs only where the plan changed.
+  * exchange `plan_id=`s, lambda variable suffixes, a JVM lambda class's
+  * identity (`$Lambda$5784/0x…@203c5f7e` in a `MapPartitions`'
+  * arguments), checkpoint RDD ids and their creation-site line numbers
+  * are the JVM's counters and the source layout, not the plan, so they
+  * normalise to `N`. So do whole-stage `[codegen id : N]`s and a query
+  * stage's bare-integer stage id (`Arguments: N` under a `…QueryStage`
+  * node): adaptive execution numbers both in stage completion order. A
+  * before/after pair then differs only where the plan changed.
   *
   * Usage: runMain graft.Explain <sfDir> [q1,q2,...|all] [outDir]
   */
@@ -36,6 +37,7 @@ object Explain {
     "RDD\\[\\d+\\]".r -> "RDD[N]",
     "(\\.scala):\\d+".r -> "$1:N",
     "(lambda [A-Za-z]+)_\\d+".r -> "$1_N",
+    "\\$Lambda(?:\\$\\d+)?/0x[0-9a-f]+@[0-9a-f]+".r -> "\\$Lambda\\$N",
     "\\[codegen id : \\d+\\]".r -> "[codegen id : N]",
     ("(?m)(^\\(\\d+\\) \\w*QueryStage\n(?:(?:Output|Input) \\[\\d+\\]: .*\n)*)" +
       "Arguments: \\d+$").r -> "$1Arguments: N")

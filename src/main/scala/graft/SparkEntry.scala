@@ -621,8 +621,7 @@ object SparkEntry {
       DuckSql.lateInteractionAnn,
     "li_pool_recall" -> (Retrieval.liPoolRecall _) oracle DuckSql.liPoolRecall,
     "arm_overlap" -> (Retrieval.armOverlap _) oracle DuckSql.armOverlap,
-    "sparse_knn" -> ((s: SparkSession, d: String) =>
-      Retrieval.sparseKnn(s, d)) oracle DuckSql.sparseKnn,
+    "sparse_knn" -> (Retrieval.sparseKnn _) oracle DuckSql.sparseKnn,
     "impact_recall" -> (Retrieval.impactRecall _) oracle DuckSql.impactRecall,
     "prf_expand" -> (Retrieval.prfExpand _) oracle DuckSql.prfExpand,
     "ir_metrics" -> (Retrieval.irMetrics _) oracle DuckSql.irMetrics,

@@ -1363,11 +1363,7 @@ object CorpusStats {
     * global top-k is TakeOrdered.
     */
   def bpePairs(spark: SparkSession, dir: String): DataFrame = {
-    val vocab = Tables.cpuPartition(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      col("doc_id"))
-      .select(explode(Dedup.normToks(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
+    val vocab = Dedup.tokenCounts(spark, dir, "freq")
     val pairs = vocab.filter(length(col("tok")) >= 2)
       .select(col("tok"), col("freq"),
         explode(sequence(lit(1), length(col("tok")) - 1)).as("i"))
@@ -1437,10 +1433,7 @@ object CorpusStats {
   private[graft] def bpeVocabLive(spark: SparkSession, dir: String): DataFrame = {
     val S = "\u0001"
     val E = "\u0002"
-    var v = Tables.cpuPartition(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      col("doc_id"))
-      .select(explode(Dedup.normToks(col("text"))).as("tok"))
+    var v = Dedup.tokenStream(spark, dir, "tok")
       .filter(!col("tok").contains(S) && !col("tok").contains(E))
       .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
       .select(regexp_replace(col("tok"), "(.)", S + "$1" + E).as("seq"),
@@ -1637,10 +1630,7 @@ object CorpusStats {
     // the (bucket, type) frame, and both growth series derive from
     // that vocabulary×buckets-sized frame (two direct consumers —
     // localCheckpoint, or the explode re-runs per consumer)
-    val bt = Tables.cpuPartition(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      col("doc_id"))
-      .select(col("doc_id"), explode(Dedup.normToks(col("text"))).as("tok"))
+    val bt = Dedup.tokenStream(spark, dir, "tok")
       .withColumn("b",
         floor(Curation.hashU(col("doc_id")) * VocabBuckets).cast("int"))
       .groupBy(col("b"), col("tok")).agg(count(lit(1)).as("c"))
@@ -1724,11 +1714,7 @@ object CorpusStats {
     * side) as doubles once, in an identical operation order.
     */
   def zipfFit(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.cpuPartition(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      col("doc_id"))
-      .select(explode(Dedup.normToks(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
+    val counts = Dedup.tokenCounts(spark, dir, "cnt")
     val top = counts.orderBy(col("cnt").desc, col("tok")).limit(ZipfTopK)
     // k rows from here on — the unpartitioned window is deliberate
     val ranked = top.withColumn("rank", row_number().over(
@@ -2150,11 +2136,7 @@ object CorpusStats {
     * against the exact corpus totals. Flat at any corpus size.
     */
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.cpuPartition(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      col("doc_id"))
-      .select(explode(Dedup.normToks(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
+    val counts = Dedup.tokenCounts(spark, dir, "cnt")
       .localCheckpoint(false) // totals AND the ranked head
     val tot = broadcast(counts.agg(sum(col("cnt")).as("nn"),
       count(lit(1)).as("v")).localCheckpoint(false))
@@ -2273,11 +2255,7 @@ object CorpusStats {
     */
   def tokenGini(spark: SparkSession, dir: String): DataFrame = {
     val d38 = (c: Column) => c.cast("decimal(38,0)")
-    val counts = Tables.cpuPartition(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      col("doc_id"))
-      .select(explode(Dedup.normToks(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
+    val counts = Dedup.tokenCounts(spark, dir, "cnt")
     val grid = counts.groupBy(col("cnt")).agg(count(lit(1)).as("c"))
     val wBelow = Window.orderBy(col("cnt"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -2319,11 +2297,7 @@ object CorpusStats {
     * a ≤k-row tail. Flat at any corpus size.
     */
   def hillTail(spark: SparkSession, dir: String): DataFrame = {
-    val counts = Tables.cpuPartition(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      col("doc_id"))
-      .select(explode(Dedup.normToks(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
+    val counts = Dedup.tokenCounts(spark, dir, "cnt")
     val top = counts.orderBy(col("cnt").desc, col("tok"))
       .limit(HillK + 1)
     // <= k+1 rows from here — the unpartitioned windows are deliberate

@@ -122,6 +122,23 @@ object Dedup {
     filter(split(lower(trim(regexp_replace(c, "\\s+", " "))), " "),
       x => x =!= "")
 
+  /** The corpus token stream `(doc_id, <as>)`: one row per [[normToks]]
+    * token of every document, compute-parallelized by doc (small corpus
+    * files are 1-2 input splits).
+    */
+  private[graft] def tokenStream(spark: SparkSession, dir: String,
+      as: String): DataFrame =
+    Tables.cpuPartition(
+      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
+      col("doc_id"))
+      .select(col("doc_id"), explode(normToks(col("text"))).as(as))
+
+  /** Corpus-wide token counts `(tok, <as>)` over [[tokenStream]]. */
+  private[graft] def tokenCounts(spark: SparkSession, dir: String,
+      as: String): DataFrame =
+    tokenStream(spark, dir, "tok")
+      .groupBy(col("tok")).agg(count(lit(1)).as(as))
+
   /** (doc_id, source, g): DISTINCT word-3-gram shingles, one row each.
     * Repartitioning by doc_id before the heavy work parallelizes the
     * compute regardless of how few input splits the corpus has, and

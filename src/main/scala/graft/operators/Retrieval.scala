@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,171 +69,193 @@ object Retrieval {
 
   /** bm25 per-term impact cap (the [[SparseImpactCap]] posture applied
     * to the lexical scoring join): each term keeps only its
-    * [[BmImpactCap]] highest-impact corpus postings — impact =
-    * tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)), the per-posting score factor
-    * with idf (constant within a term) divided out — ordered desc with
-    * doc_id tie-break (static impact-ordered index pruning, Anh &
-    * Moffat). The r9 100× probe is the reason this exists: on the
-    * degenerate ~30-term synthetic vocabulary every query keeps the
-    * same hot terms, BmMaxQueryTerms cannot bound the join, and the
-    * uncapped scoring join spilled past the probe host's disk
+    * [[BmImpactCap]] highest-impact corpus postings ([[impactCapped]]
+    * over [[bm25Sat]]). The 100× scale probe is the reason this
+    * exists: on the degenerate ~30-term synthetic vocabulary every query
+    * keeps the same hot terms, BmMaxQueryTerms cannot bound the join,
+    * and the uncapped scoring join spilled past the probe host's disk
     * (> 75 GB) — capped, the join is ≤ |queries|·32·cap rows at ANY
     * corpus size. df/idf still compute over the full postings;
-    * oracle-mirrored, runtime-tunable via
-    * `spark.graft.param.bm25_topk.impact_cap`.
+    * oracle-mirrored.
     */
   val BmImpactCap = 2000
 
   val TfidfTopTerms = 5
 
-  /** (doc_id, term): one row per token occurrence, compute-parallelized
-    * by doc (same posture as Dedup.shingleRows).
+  /** Depth of the persisted lexical rankings ([[bm25Topk]], [[qlTopk]]):
+    * covers the gated k (10) and the audit consumers with headroom; a
+    * runtime `bm25_topk.k` or `ql_topk.k` above it falls back to the
+    * live pipeline.
     */
-  private def tokenRows(spark: SparkSession, dir: String): DataFrame =
-    Tables.cpuPartition(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      col("doc_id"))
-      .select(col("doc_id"), explode(Dedup.normToks(col("text"))).as("term"))
+  val LexTruthDepth = 30
+
+  private val isQuery: Column = pmod(col("doc_id"), lit(QueryMod)) === 0
+
+  /** Persisted corpus postings `(doc_id, term, tf, dl)` of the non-query
+    * docs, sorted by (term, doc_id) — the on-disk inverted index every
+    * lexical ranker reads ([[bm25Ranked]], [[qlRanked]],
+    * [[prfExpandLive]]). Built once per corpus; dl rides along so
+    * lengths need no extra join. Each consumer branch (df, stats, the
+    * cap window, the scoring join) re-reads the parquet, so no ranker
+    * checkpoints it.
+    */
+  private def lexPostings(spark: SparkSession, dir: String): DataFrame = {
+    val path = IndexStore.path("lex-postings-v1", dir)
+    IndexStore.ensureBuilt(path)(
+      graft.sources.Sinks.writeSortedParquet(
+        Dedup.tokenStream(spark, dir, "term").filter(!isQuery)
+          .groupBy(col("doc_id"), col("term"))
+          .agg(count(lit(1)).as("tf"))
+          .withColumn("dl",
+            sum(col("tf")).over(Window.partitionBy(col("doc_id")))),
+        path, Seq("term", "doc_id")))
+    Tables.read(spark, path)
+  }
+
+  /** (q_id, term): each query doc's distinct terms. */
+  private def queryTerms(spark: SparkSession, dir: String): DataFrame =
+    Dedup.tokenStream(spark, dir, "term").filter(isQuery)
+      .select(col("doc_id").as("q_id"), col("term")).distinct()
+
+  /** Each query's first `n` terms in `order` (term breaks ties). */
+  private def queryBudget(qt: DataFrame, order: Column, n: Int): DataFrame =
+    qt.withColumn("qr", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(order, col("term"))))
+      .filter(col("qr") <= n)
+      .drop("qr")
+
+  /** Corpus stats `(n_docs, total_len, avgdl)` of postings `p`: ONE row
+    * of exact integer sums, broadcast by every consumer.
+    */
+  private def corpusStats(p: DataFrame): DataFrame =
+    p.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
+      .select(col("n_docs"), col("total_len"),
+        (col("total_len").cast("double") / col("n_docs")).as("avgdl"))
+
+  /** `(term, idf)` of the terms in `vocab`, Robertson–Spärck Jones:
+    * idf = ln(1 + (N − df + 0.5)/(df + 0.5)), df over the postings
+    * restricted to `vocab` before grouping — the idf table is
+    * |vocab| sized, never |vocabulary| sized.
+    */
+  private def bm25Idf(p: DataFrame, vocab: DataFrame): DataFrame =
+    p.join(broadcast(vocab), "term")
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
+      .crossJoin(broadcast(corpusStats(p)))
+      .select(col("term"),
+        r6(log(lit(1.0) +
+          (col("n_docs").cast("double") - col("df") + lit(0.5)) /
+            (col("df").cast("double") + lit(0.5)))).as("idf"))
+
+  /** BM25's term saturation tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)): the
+    * per-posting score factor with idf divided out, so also each term's
+    * impact order.
+    */
+  private def bm25Sat: Column =
+    (col("tf").cast("double") * lit(BmK1Plus1)) /
+      (col("tf").cast("double") + lit(BmK1) *
+        (lit(1.0) - lit(BmB) +
+          lit(BmB) * (col("dl").cast("double") / col("avgdl"))))
+
+  /** Each term's top `cap` postings by `impact` desc, doc_id asc (static
+    * impact-ordered index pruning, Anh & Moffat). `cap = Int.MaxValue`
+    * skips the window entirely: the UNCAPPED exact ranking, the truth
+    * arm of [[impactRecall]].
+    */
+  private def impactCapped(postings: DataFrame, impact: Column,
+      cap: Int): DataFrame =
+    if (cap == Int.MaxValue) postings
+    else postings
+      .withColumn("ir", row_number().over(Window.partitionBy(col("term"))
+        .orderBy(impact.desc, col("doc_id"))))
+      .filter(col("ir") <= cap)
+      .drop("ir")
+
+  /** Each query's top `depth` of `scored` `(q_id, doc_id, score)`, score
+    * desc, doc_id asc; the DECIMAL score leaves as one double.
+    */
+  private def rankCut(scored: DataFrame, depth: Int): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("score").desc, col("doc_id"))))
+      .filter(col("rank") <= depth)
+      .select(col("q_id"), col("doc_id"),
+        col("score").cast("double").as("score"), col("rank"))
+
+  /** BM25 over `postings` (all or part of `p`) against the broadcast
+    * query side `q` (q_id, term, …): each term's postings capped at
+    * `cap` by saturation, per-term parts weight·saturation rounded to
+    * 6dp and summed in DECIMAL per (query, doc), then the top `depth`.
+    */
+  private def bm25Scored(p: DataFrame, postings: DataFrame, q: DataFrame,
+      weight: Column, cap: Int, depth: Int): DataFrame =
+    rankCut(impactCapped(postings.crossJoin(
+        broadcast(corpusStats(p).select(col("avgdl")))), bm25Sat, cap)
+      .join(broadcast(q), "term")
+      .select(col("q_id"), col("doc_id"),
+        r6(weight * bm25Sat).cast("decimal(18,6)").as("part"))
+      .groupBy(col("q_id"), col("doc_id"))
+      .agg(sum(col("part")).as("score")), depth)
+
+  /** A ranking persisted once per corpus as artifact `kind`, sorted by
+    * (q_id, rank): `build` runs on first use per JVM, every later call
+    * is a parquet read.
+    */
+  private def rankingArtifact(spark: SparkSession, dir: String,
+      kind: String)(build: => DataFrame): DataFrame = {
+    val path = IndexStore.path(kind, dir)
+    IndexStore.ensureBuilt(path)(
+      graft.sources.Sinks.writeSortedParquet(build, path, Seq("q_id", "rank")))
+    Tables.read(spark, path)
+  }
+
+  /** A served lexical top-k: the runtime `param` (the reference's
+    * `limit` arg, database.py:422 posture; default `dflt`, the
+    * oracle-pinned k) cut from the ranking persisted to
+    * [[LexTruthDepth]], or the live `ranked(k)` beyond that depth.
+    */
+  private def lexTopk(spark: SparkSession, dir: String, param: String,
+      dflt: Int, kind: String)(ranked: Int => DataFrame): DataFrame = {
+    val k = graft.Params.int(spark, param, dflt)
+    if (k > LexTruthDepth) ranked(k)
+    else rankingArtifact(spark, dir, kind)(ranked(LexTruthDepth))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("doc_id"), col("score"), col("rank"))
+  }
 
   /** bm25_topk: BM25 top-k documents per query doc.
     *
     *   score(q,d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1-b + b·dl/avgdl))
     *   idf(t)     = ln(1 + (N - df + 0.5)/(df + 0.5))
     *
-    * Plan: postings (corpus tf) shuffle on (doc, term) then join the
-    * BROADCAST query-term/idf table on term; per-(query, doc) partial-agg
-    * sum; one window for the top-k. df is computed corpus-side but
-    * restricted to query vocabulary first — the idf table is
-    * |query terms| sized, never |vocabulary| sized.
+    * The denseTruth posture applied to the LEXICAL arm: the scoring join
+    * is the shared dominator of bm25_topk, hybrid_retrieve, ndcg_eval
+    * and arm_overlap — 15.6 s per invocation at the 10× probe — so the
+    * ranking is persisted once per corpus to [[LexTruthDepth]] and every
+    * consumer is a parquet read + rank filter.
     */
-  /** Depth of the persisted lexical ranking artifact ([[bm25Topk]]):
-    * covers the gated k (10) and the audit consumers with headroom; a
-    * runtime `bm25_topk.k` above it falls back to the live pipeline.
-    */
-  val LexTruthDepth = 30
-
-  /** The resolved `bm25_topk.impact_cap` is FOLDED INTO the artifact
-    * key (the chunkVecPath rule): the build ([[bm25Ranked]]) reads the
-    * cap, so a session that retunes it must get a fresh artifact — a
-    * cap-free key would silently serve rankings computed under the
-    * first caller's cap (r9 advisor finding).
-    */
-  private def lexTruthPath(spark: SparkSession, dir: String): String = {
-    val cap = graft.Params.int(spark, "bm25_topk.impact_cap", BmImpactCap)
-    IndexStore.path(s"lex-truth-c$cap-v1", dir)
-  }
-
-  def bm25Topk(spark: SparkSession, dir: String): DataFrame = {
-    // runtime k (the reference's `limit` arg, database.py:422 posture),
-    // default = the oracle-pinned BmTopK
-    val k = graft.Params.int(spark, "bm25_topk.k", BmTopK)
-    if (k > LexTruthDepth) bm25Ranked(spark, dir, k)
-    else {
-      // The denseTruth posture applied to the LEXICAL arm: the postings
-      // build (corpus tokenize + two shuffles) plus the scoring join is
-      // the shared dominator of bm25_topk, hybrid_retrieve, ndcg_eval
-      // and arm_overlap — 15.6 s per invocation at the 10× probe. The
-      // ranking is persisted once per corpus to [[LexTruthDepth]]; every
-      // consumer is a pure parquet read + rank filter.
-      val path = lexTruthPath(spark, dir)
-      IndexStore.ensureBuilt(path)(
-        graft.sources.Sinks.writeSortedParquet(
-          bm25Ranked(spark, dir, LexTruthDepth), path, Seq("q_id", "rank")))
-      Tables.read(spark, path).filter(col("rank") <= k)
-        .select(col("q_id"), col("doc_id"), col("score"), col("rank"))
-    }
-  }
+  def bm25Topk(spark: SparkSession, dir: String): DataFrame =
+    lexTopk(spark, dir, "bm25_topk.k", BmTopK,
+      s"lex-truth-c$BmImpactCap-v1")(bm25Ranked(spark, dir, _))
 
   /** The live BM25 pipeline (the artifact build; also the fallback for a
-    * runtime k beyond the persisted depth). Package-private so PlanSpec
-    * pins the BUILD's join shapes, which the gated consumer no longer
-    * carries.
+    * runtime k beyond the persisted depth). Plan: the postings artifact
+    * joins the BROADCAST query-term/idf table on term; per-(query, doc)
+    * partial-agg sum; one window for the top-k. Package-private so
+    * PlanSpec pins the BUILD's join shapes, which the gated consumer no
+    * longer carries.
     */
   private[graft] def bm25Ranked(spark: SparkSession, dir: String,
-      depth: Int): DataFrame =
-    bm25Ranked(spark, dir, depth,
-      graft.Params.int(spark, "bm25_topk.impact_cap", BmImpactCap))
-
-  /** The cap-explicit form: `cap = Int.MaxValue` is the UNCAPPED exact
-    * ranking (the per-term impact window is skipped entirely, not just
-    * filtered wide — the truth arm of [[impactRecall]]).
-    */
-  private[graft] def bm25Ranked(spark: SparkSession, dir: String,
-      depth: Int, cap: Int): DataFrame = {
-    val toks = tokenRows(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(QueryMod)) === 0
-
-    // Materialized (localCheckpoint): the postings frame feeds FOUR
-    // branches (df, stats, doc lengths, the scoring join) — left as
-    // lineage each consumer re-runs the whole tokenize+aggregate chain
-    // (the Dedup.shingleRowsWithSize lesson; measured ~2× on the 10×
-    // probe). dl rides along so lengths need no extra join.
-    val ctf = toks.filter(!isQuery)
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("dl",
-        sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
-      .localCheckpoint(false)
-    // corpus stats: ONE row (exact integer sums), broadcast everywhere
-    val stats = ctf.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
-      .select(col("n_docs"),
-        (col("total_len").cast("double") / col("n_docs")).as("avgdl"))
-
-    val qterms = toks.filter(isQuery)
-      .select(col("doc_id").as("q_id"), col("term")).distinct()
+      depth: Int, cap: Int = BmImpactCap): DataFrame = {
+    val p = lexPostings(spark, dir)
+    val qterms = queryTerms(spark, dir)
       .localCheckpoint(false) // consumed by the vocab restriction AND the join
-    val qvocab = qterms.select(col("term")).distinct()
-    // df over the corpus, restricted to query vocabulary before grouping
-    val dft = ctf.join(broadcast(qvocab), "term")
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val idf = dft.crossJoin(broadcast(stats))
-      .select(col("term"),
-        r6(log(lit(1.0) +
-          (col("n_docs").cast("double") - col("df") + lit(0.5)) /
-            (col("df").cast("double") + lit(0.5)))).as("idf"))
     // (q_id, term, idf): the bounded query side of the scoring join —
     // pruned to each query's top informative terms (see BmMaxQueryTerms)
-    val wQ = Window.partitionBy(col("q_id"))
-      .orderBy(col("idf").desc, col("term"))
-    val qt = qterms.join(idf, "term")
-      .withColumn("qr", row_number().over(wQ))
-      .filter(col("qr") <= BmMaxQueryTerms)
-      .drop("qr")
-
-    val part = r6(col("idf") *
-      ((col("tf").cast("double") * lit(BmK1Plus1)) /
-        (col("tf").cast("double") + lit(BmK1) *
-          (lit(1.0) - lit(BmB) +
-            lit(BmB) * (col("dl").cast("double") / col("avgdl"))))))
-      .cast("decimal(18,6)")
-
-    // per-term impact cap on the scoring join's corpus side (see
-    // BmImpactCap): the idf-free score factor orders each term's
-    // postings; only the top cap enter the join
-    val impact = (col("tf").cast("double") * lit(BmK1Plus1)) /
-      (col("tf").cast("double") + lit(BmK1) *
-        (lit(1.0) - lit(BmB) +
-          lit(BmB) * (col("dl").cast("double") / col("avgdl"))))
-    val withStats = ctf.crossJoin(broadcast(stats.select(col("avgdl"))))
-    val capped =
-      if (cap == Int.MaxValue) withStats
-      else withStats
-        .withColumn("ir", row_number().over(Window.partitionBy(col("term"))
-          .orderBy(impact.desc, col("doc_id"))))
-        .filter(col("ir") <= cap)
-        .drop("ir")
-
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    capped.join(broadcast(qt), "term")
-      .select(col("q_id"), col("doc_id"), part.as("part"))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(sum(col("part")).as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= depth)
-      .select(col("q_id"), col("doc_id"),
-        col("score").cast("double").as("score"), col("rank"))
+    val qt = queryBudget(
+      qterms.join(bm25Idf(p, qterms.select(col("term")).distinct()), "term"),
+      col("idf").desc, BmMaxQueryTerms)
+    bm25Scored(p, p, qt, col("idf"), cap, depth)
   }
 
   /** Dirichlet smoothing mass of the query-likelihood arm (Zhai &
@@ -256,11 +278,6 @@ object Retrieval {
     */
   val QlImpactCap = 2000
 
-  private def qlTruthPath(spark: SparkSession, dir: String): String = {
-    val cap = graft.Params.int(spark, "ql_topk.impact_cap", QlImpactCap)
-    IndexStore.path(s"ql-truth-c$cap-v1", dir)
-  }
-
   /** ql_topk: query-likelihood retrieval — the LANGUAGE-MODELING ranker
     * beside BM25 (Ponte & Croft SIGIR'98; Dirichlet-smoothed unigram
     * form, Zhai & Lafferty SIGIR'01):
@@ -276,77 +293,38 @@ object Retrieval {
     * |q| counts the kept distinct query terms.
     *
     * Plan: the bm25Ranked scaffolding with the collection LM in place
-    * of idf — postings partial-agg, ≤|q-vocab| collection-count join,
+    * of idf — the postings artifact, ≤|q-vocab| collection-count join,
     * broadcast query side, per-term impact cap, one top-k window. The
-    * ranking persists to [[LexTruthDepth]] under a cap-keyed artifact
-    * (the lex-truth rule); gated reads are pure probes.
+    * ranking persists to [[LexTruthDepth]] (the lex-truth rule); gated
+    * reads are pure probes.
     *
     * Parity: tf/ctf/dl/|C| exact integers; each matched term's part and
     * the per-doc norm round to 6dp and accumulate in DECIMAL (the norm
     * multiplied by the integer |q|), so ranking order is exact on both
     * engines; one double cast at the output.
     */
-  def qlTopk(spark: SparkSession, dir: String): DataFrame = {
-    val k = graft.Params.int(spark, "ql_topk.k", QlTopK)
-    if (k > LexTruthDepth) qlRanked(spark, dir, k)
-    else {
-      val path = qlTruthPath(spark, dir)
-      IndexStore.ensureBuilt(path)(
-        graft.sources.Sinks.writeSortedParquet(
-          qlRanked(spark, dir, LexTruthDepth), path, Seq("q_id", "rank")))
-      Tables.read(spark, path).filter(col("rank") <= k)
-        .select(col("q_id"), col("doc_id"), col("score"), col("rank"))
-    }
-  }
+  def qlTopk(spark: SparkSession, dir: String): DataFrame =
+    lexTopk(spark, dir, "ql_topk.k", QlTopK,
+      s"ql-truth-c$QlImpactCap-v1")(qlRanked(spark, dir, _))
 
   private[graft] def qlRanked(spark: SparkSession, dir: String,
-      depth: Int): DataFrame =
-    qlRanked(spark, dir, depth,
-      graft.Params.int(spark, "ql_topk.impact_cap", QlImpactCap))
-
-  private[graft] def qlRanked(spark: SparkSession, dir: String,
-      depth: Int, cap: Int): DataFrame = {
-    val toks = tokenRows(spark, dir)
-    val isQuery = pmod(col("doc_id"), lit(QueryMod)) === 0
-    // corpus postings with doc length riding along (the bm25Ranked
-    // frame); feeds the collection LM, total length, the cap window
-    val ctf = toks.filter(!isQuery)
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("dl",
-        sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
-      .localCheckpoint(false)
-    val coll = ctf.groupBy(col("term")).agg(sum(col("tf")).as("ctf"))
-    val stats = ctf.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
-      .agg(sum(col("dl")).as("total_len"))
-    val qterms = toks.filter(isQuery)
-      .select(col("doc_id").as("q_id"), col("term")).distinct()
-    val wQ = Window.partitionBy(col("q_id"))
-      .orderBy(col("ctf").asc, col("term"))
+      depth: Int, cap: Int = QlImpactCap): DataFrame = {
+    val p = lexPostings(spark, dir)
+    val coll = p.groupBy(col("term")).agg(sum(col("tf")).as("ctf"))
     // kept query terms (rarest-first budget); carries ctf into scoring
-    val qt = qterms.join(coll, "term")
-      .withColumn("qr", row_number().over(wQ))
-      .filter(col("qr") <= QlMaxQueryTerms)
-      .drop("qr")
+    val qt = queryBudget(queryTerms(spark, dir).join(coll, "term"),
+      col("ctf").asc, QlMaxQueryTerms)
       .localCheckpoint(false) // feeds |q| AND the scoring join
     val qlen = qt.groupBy(col("q_id")).agg(count(lit(1)).as("qlen"))
-    val capped =
-      if (cap == Int.MaxValue) ctf
-      else ctf
-        .withColumn("ir", row_number().over(Window.partitionBy(col("term"))
-          .orderBy(col("tf").desc, col("doc_id"))))
-        .filter(col("ir") <= cap)
-        .drop("ir")
     val part = r6(log(lit(1.0) +
       (col("tf").cast("double") * col("total_len").cast("double")) /
         (lit(QlMu) * col("ctf").cast("double"))))
     val norm6 = r6(log(lit(QlMu) /
       (col("dl").cast("double") + lit(QlMu))))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    capped.join(broadcast(qt.select(col("q_id"), col("term"), col("ctf"))),
+    rankCut(impactCapped(p, col("tf"), cap)
+      .join(broadcast(qt.select(col("q_id"), col("term"), col("ctf"))),
         "term")
-      .crossJoin(broadcast(stats))
+      .crossJoin(broadcast(corpusStats(p).select(col("total_len"))))
       .select(col("q_id"), col("doc_id"), col("dl"),
         part.cast("decimal(18,6)").as("part"))
       .groupBy(col("q_id"), col("doc_id"))
@@ -354,11 +332,7 @@ object Retrieval {
       .join(broadcast(qlen), "q_id")
       .select(col("q_id"), col("doc_id"),
         (col("psum") + norm6.cast("decimal(18,6)") * col("qlen"))
-          .as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= depth)
-      .select(col("q_id"), col("doc_id"),
-        col("score").cast("double").as("score"), col("rank"))
+          .as("score")), depth)
   }
 
   /** RRF fusion constant (Cormack, Clarke & Buettcher, SIGIR'09 use 60). */
@@ -387,18 +361,22 @@ object Retrieval {
     rrfFuse(lex, denseRanked(spark, dir))
   }
 
-  /** The dense cosine ranking `(q_id, doc_id, vrank ≤ BmTopK)` —
-    * shared by [[hybridRetrieve]], [[ndcgEval]] and [[armOverlap]].
-    * Since r9 a pure consumer of the persisted exact-truth sweep
-    * ([[Similarity.denseTruth]]): `rank_nonq` is the ranking over
-    * non-query-doc candidates only, exactly this arm's candidate
-    * universe — the brute sweep is the run-1 artifact build, not a
-    * per-audit corpus pass.
+  /** The dense exact top-[[BmTopK]] of the query docs, as the persisted
+    * exact-truth sweep's rows ([[Similarity.denseTruth]]): `rank_nonq`
+    * is the ranking over non-query-doc candidates only, exactly the
+    * lexical arms' candidate universe — the brute sweep is the run-1
+    * artifact build, not a per-audit corpus pass.
     */
-  private def denseRanked(spark: SparkSession, dir: String): DataFrame =
+  private def denseTop(spark: SparkSession, dir: String): DataFrame =
     Similarity.denseTruth(spark, dir)
       .filter(pmod(col("q_id"), lit(QueryMod)) === 0 &&
         col("rank_nonq") <= BmTopK)
+
+  /** The dense cosine ranking `(q_id, doc_id, vrank ≤ BmTopK)` —
+    * shared by [[hybridRetrieve]], [[evalArms]] and [[armOverlap]].
+    */
+  private def denseRanked(spark: SparkSession, dir: String): DataFrame =
+    denseTop(spark, dir)
       .select(col("q_id"), col("neighbor_id").as("doc_id"),
         col("rank_nonq").as("vrank"))
 
@@ -430,6 +408,41 @@ object Retrieval {
     */
   val NdcgK: Int = BmTopK
 
+  /** A ranking `(q_id, doc_id, rank)` as served `(q_id, doc_id, pos)`. */
+  private def served(ranked: DataFrame): DataFrame =
+    ranked.select(col("q_id"), col("doc_id"), col("rank").as("pos"))
+
+  /** The arms [[ndcgEval]] and [[irMetrics]] grade, each as served
+    * `(q_id, doc_id, pos)`: the dense exact top-k (the truth side
+    * too), BM25, their RRF hybrid and QL. The dense and BM25 frames
+    * are checkpointed (each feeds its arm and the fusion); the two are
+    * independent, so their checkpoint waves BUILD in parallel
+    * (Par.build).
+    */
+  private def evalArms(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val Seq(exact, lex) = graft.operators.Par.build(Seq(
+      () => denseRanked(spark, dir)
+        .withColumnRenamed("vrank", "pos")
+        .localCheckpoint(false),
+      () => served(bm25Topk(spark, dir)).localCheckpoint(false)))
+    val hyb = served(rrfFuse(lex.withColumnRenamed("pos", "lrank"),
+      exact.withColumnRenamed("pos", "vrank")))
+    (exact, lex, hyb, served(qlTopk(spark, dir)))
+  }
+
+  /** Per-query DCG `(q_id, dcgs)` of `ranked` `(q_id, doc_id, pos)` cut
+    * at [[NdcgK]], against the grades `rel` `(q_id, doc_id, rel)`:
+    * discounts rnd6(1/log2(pos+1)) as 6dp DECIMAL × integer relevance,
+    * so the sum is exact under any partitioning.
+    */
+  private def dcg(ranked: DataFrame, rel: DataFrame): DataFrame =
+    ranked.filter(col("pos") <= NdcgK)
+      .join(rel, Seq("q_id", "doc_id"), "left")
+      .select(col("q_id"), (coalesce(col("rel"), lit(0)) *
+        r6(lit(1.0) / log2(col("pos") + 1)).cast("decimal(18,6)")).as("t"))
+      .groupBy(col("q_id")).agg(sum(col("t")).as("dcgs"))
+
   /** ndcg_eval: the RANKING-quality leaderboard — nDCG@[[NdcgK]] of
     * every retrieval arm (BM25 lexical, query-likelihood, RRF hybrid,
     * and the dense exact arm itself) against graded relevance derived from the dense
@@ -448,36 +461,15 @@ object Retrieval {
     * accumulation), DCG/IDCG each one double divide, 6dp.
     */
   def ndcgEval(spark: SparkSession, dir: String): DataFrame = {
-    // ONE dense sweep (checkpointed): truth grades, the dense arm, the
-    // ideal, AND the hybrid fusion's vector side (NdcgK = BmTopK, so
-    // this frame IS hybridRetrieve's vec arm); ONE bm25 pipeline
-    // (checkpointed): the lexical arm AND the fusion. The two are
-    // independent — their checkpoint waves BUILD in parallel (Par.build)
-    val Seq(exact, lex) = graft.operators.Par.build(Seq(
-      () => denseRanked(spark, dir)
-        .withColumnRenamed("vrank", "pos")
-        .localCheckpoint(false),
-      () => bm25Topk(spark, dir)
-        .select(col("q_id"), col("doc_id"), col("rank").as("pos"))
-        .localCheckpoint(false)))
+    val (exact, lex, hyb, ql) = evalArms(spark, dir)
     val rel = exact.select(col("q_id"), col("doc_id"),
       (lit(NdcgK + 1) - col("pos")).as("rel"))
-    def dcgOf(name: String, ranked: DataFrame): DataFrame = {
-      val w = r6(lit(1.0) / log2(col("pos") + 1)).cast("decimal(18,6)")
-      // rel is the k-bounded truth gauge (≤ |q|·k rows — the recall-
-      // audit broadcast envelope): hash-join it instead of letting the
-      // planner sort-merge every arm against it
-      ranked.filter(col("pos") <= NdcgK)
-        .join(broadcast(rel), Seq("q_id", "doc_id"), "left")
-        .select(col("q_id"), (coalesce(col("rel"), lit(0)) * w).as("t"))
-        .groupBy(col("q_id")).agg(sum(col("t")).as("dcgs"))
+    // rel is the k-bounded truth gauge (≤ |q|·k rows — the recall-audit
+    // broadcast envelope): hash-join it instead of letting the planner
+    // sort-merge every arm against it
+    def dcgOf(name: String, ranked: DataFrame): DataFrame =
+      dcg(ranked, broadcast(rel))
         .select(lit(name).as("arm"), col("q_id"), col("dcgs"))
-    }
-    val hyb = rrfFuse(lex.withColumnRenamed("pos", "lrank"),
-      exact.withColumnRenamed("pos", "vrank"))
-      .select(col("q_id"), col("doc_id"), col("rank").as("pos"))
-    val ql = qlTopk(spark, dir)
-      .select(col("q_id"), col("doc_id"), col("rank").as("pos"))
     val arms = dcgOf("dense_exact", exact)
       .unionByName(dcgOf("bm25", lex))
       .unionByName(dcgOf("hybrid", hyb))
@@ -510,21 +502,10 @@ object Retrieval {
     * partitioning).
     */
   def irMetrics(spark: SparkSession, dir: String): DataFrame = {
-    // dense truth and the bm25 pipeline are independent — their
-    // checkpoint waves BUILD in parallel (Par.build)
-    val Seq(exact, lex) = graft.operators.Par.build(Seq(
-      () => denseRanked(spark, dir)
-        .withColumnRenamed("vrank", "pos").localCheckpoint(false),
-      () => bm25Topk(spark, dir)
-        .select(col("q_id"), col("doc_id"), col("rank").as("pos"))
-        .localCheckpoint(false))) // the lexical arm AND the fusion input
+    val (exact, lex, hyb, ql) = evalArms(spark, dir)
     val rel = exact.select(col("q_id"), col("doc_id"))
       .withColumn("is_rel", lit(1))
-    val hyb = rrfFuse(lex.withColumnRenamed("pos", "lrank"),
-      exact.withColumnRenamed("pos", "vrank"))
-      .select(col("q_id"), col("doc_id"), col("rank").as("pos"))
-    val prf = prfExpand(spark, dir)
-      .select(col("q_id"), col("doc_id"), col("rank").as("pos"))
+    val prf = served(prfExpand(spark, dir))
     // nq stays lineage (r15): a 1-row aggregate over the checkpointed
     // exact frame — every arm's crossJoin broadcasts it, and
     // ReuseExchange computes the identical broadcast subtree once in
@@ -550,8 +531,6 @@ object Retrieval {
           r4(col("hits").cast("double") / (col("nq") * NdcgK))
             .as("recall"),
           r4(col("p1s").cast("double") / col("nq")).as("p_at_1"))
-    val ql = qlTopk(spark, dir)
-      .select(col("q_id"), col("doc_id"), col("rank").as("pos"))
     armOf("bm25", lex)
       .unionByName(armOf("dense_exact", exact))
       .unionByName(armOf("hybrid", hyb))
@@ -567,17 +546,12 @@ object Retrieval {
     *
     * Plan: tf groupBy (doc, term); df groupBy term; tf⋈df on term (both
     * corpus-sized at scale — left to the planner, shuffles on term); one
-    * window per doc for the top terms.
-    */
-  private def tfidfPath(dir: String): String =
-    IndexStore.path("tfidf-v1", dir)
-
-  /** The persisted sparse document vectors — built once per corpus (the
-    * lex-truth posture: the tokenize + tf/df/idf chain is the cost;
-    * both this query and sparse_knn only read the vectors).
+    * window per doc for the top terms. The vectors persist once per
+    * corpus (the lex-truth posture: the tokenize + tf/df/idf chain is
+    * the cost; both this query and sparse_knn only read them).
     */
   def tfidfVectors(spark: SparkSession, dir: String): DataFrame = {
-    val path = tfidfPath(dir)
+    val path = IndexStore.path("tfidf-v1", dir)
     IndexStore.ensureBuilt(path)(
       graft.sources.Sinks.writeSortedParquet(
         tfidfLive(spark, dir), path, Seq("doc_id", "rank")))
@@ -586,9 +560,16 @@ object Retrieval {
         col("rank"))
   }
 
+  /** The smoothed idf ln((1 + n)/(1 + df)) + 1 over `n` documents or
+    * cells (scikit-learn's variant), 6dp.
+    */
+  private def smoothedIdf(n: Column): Column =
+    r6(log((n.cast("double") + lit(1.0)) /
+      (col("df").cast("double") + lit(1.0))) + lit(1.0))
+
   private def tfidfLive(spark: SparkSession, dir: String): DataFrame = {
-    val toks = tokenRows(spark, dir)
-    // materialized: feeds stats, df, and the scoring join (see bm25Topk)
+    val toks = Dedup.tokenStream(spark, dir, "term")
+    // materialized: feeds stats, df, and the scoring join
     val tf = toks.groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
       .localCheckpoint(false)
@@ -596,9 +577,7 @@ object Retrieval {
       .agg(count(lit(1)).as("n_docs"))
     val dft = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val idf = dft.crossJoin(broadcast(stats))
-      .select(col("term"),
-        r6(log((col("n_docs").cast("double") + lit(1.0)) /
-          (col("df").cast("double") + lit(1.0))) + lit(1.0)).as("idf"))
+      .select(col("term"), smoothedIdf(col("n_docs")).as("idf"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("tfidf").desc, col("term"))
     tf.join(idf, "term")
@@ -687,7 +666,7 @@ object Retrieval {
     val cells = Similarity.ivfFlatIndex(spark, dir).lists
       .select(col("vec_id"), col("ccell"))
     val sw = array(RefVocab.enStopwords.map(lit): _*)
-    val tf = tokenRows(spark, dir)
+    val tf = Dedup.tokenStream(spark, dir, "term")
       .filter(!array_contains(sw, col("term")))
       .join(cells, col("doc_id") === col("vec_id"))
       .groupBy(col("ccell"), col("term"))
@@ -697,9 +676,7 @@ object Retrieval {
       .agg(count(lit(1)).as("n_cells"))
     val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nc))
-      .select(col("term"),
-        r6(log((col("n_cells").cast("double") + lit(1.0)) /
-          (col("df").cast("double") + lit(1.0))) + lit(1.0)).as("idf"))
+      .select(col("term"), smoothedIdf(col("n_cells")).as("idf"))
     val w = Window.partitionBy(col("ccell"))
       .orderBy(col("score").desc, col("term"))
     tf.join(idf, "term")
@@ -795,28 +772,20 @@ object Retrieval {
     * terms), the same fan-out control the df-cap gives the shingle
     * joins.
     */
-  def sparseKnn(spark: SparkSession, dir: String): DataFrame = {
+  def sparseKnn(spark: SparkSession, dir: String): DataFrame =
     // The lex-truth posture applied to the sparse ranking: the live
     // pipeline (postings window + pairing join + norms) is the run-1
-    // artifact build, keyed by the resolved cap (the lexTruthPath rule);
-    // every later call — including impact_recall's capped arm — is a
-    // parquet read. The 10× probe priced the live arm at ~10 s per
-    // invocation on the degenerate vocabulary.
-    val cap = graft.Params.int(spark, "sparse_knn.impact_cap",
-      SparseImpactCap)
-    val path = IndexStore.path(s"sparse-ranked-c$cap-v1", dir)
-    IndexStore.ensureBuilt(path)(
-      graft.sources.Sinks.writeSortedParquet(
-        sparseKnn(spark, dir, cap), path, Seq("q_id", "rank")))
-    Tables.read(spark, path)
-  }
+    // artifact build; every later call — including impact_recall's
+    // capped arm — is a parquet read. The 10× probe priced the live arm
+    // at ~10 s per invocation on the degenerate vocabulary.
+    rankingArtifact(spark, dir, s"sparse-ranked-c$SparseImpactCap-v1")(
+      sparseRanked(spark, dir))
 
-  /** The cap-explicit form: `cap = Int.MaxValue` is the UNCAPPED exact
-    * ranking (no per-term impact window — the truth arm of
-    * [[impactRecall]]).
+  /** The live sparse ranking (the artifact build); `cap = Int.MaxValue`
+    * is the UNCAPPED exact ranking, the truth arm of [[impactRecall]].
     */
-  private[graft] def sparseKnn(spark: SparkSession, dir: String,
-      cap: Int): DataFrame = {
+  private[graft] def sparseRanked(spark: SparkSession, dir: String,
+      cap: Int = SparseImpactCap): DataFrame = {
     // the persisted vectors feed norms and both join sides — each branch
     // re-reads the artifact parquet (no checkpoint needed)
     val v = tfidfVectors(spark, dir)
@@ -824,24 +793,15 @@ object Retrieval {
         units(col("tfidf"), 10000).as("u"))
     val n2 = v.groupBy(col("doc_id"))
       .agg(sum(col("u") * col("u")).as("n2"))
-    val isQ = pmod(col("doc_id"), lit(QueryMod)) === 0
-    val q = v.filter(isQ)
+    val q = v.filter(isQuery)
       .select(col("doc_id").as("q_id"), col("term"), col("u").as("qu"))
     // per-term impact cap (see SparseImpactCap): the pairing join reads
-    // only each term's top postings; runtime-tunable, oracle-pinned default
-    val wImp = Window.partitionBy(col("term"))
-      .orderBy(col("du").desc, col("doc_id"))
-    val dAll = v.filter(!isQ)
-      .select(col("doc_id"), col("term"), col("u").as("du"))
-    val d =
-      if (cap == Int.MaxValue) dAll
-      else dAll
-        .withColumn("ir", row_number().over(wImp))
-        .filter(col("ir") <= cap)
-        .drop("ir")
-    val qn = n2.filter(isQ)
+    // only each term's top postings
+    val d = impactCapped(v.filter(!isQuery)
+      .select(col("doc_id"), col("term"), col("u").as("du")), col("du"), cap)
+    val qn = n2.filter(isQuery)
       .select(col("doc_id").as("q_id"), col("n2").as("qn2"))
-    val dn = n2.filter(!isQ)
+    val dn = n2.filter(!isQuery)
       .select(col("doc_id").as("dnid"), col("n2").as("dn2"))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("doc_id"))
@@ -934,9 +894,7 @@ object Retrieval {
             r6((col("s") - col("mn")) / (col("mx") - col("mn"))))
             .otherwise(lit(1.0)).as(out))
     }
-    val exact = mmNorm(Similarity.denseTruth(spark, dir)
-      .filter(pmod(col("q_id"), lit(QueryMod)) === 0 &&
-        col("rank_nonq") <= NdcgK)
+    val exact = mmNorm(denseTop(spark, dir)
       .select(col("q_id"), col("neighbor_id").as("doc_id"), col("s"),
         col("rank_nonq").as("pos")), "vn")
       .localCheckpoint(false)
@@ -946,13 +904,7 @@ object Retrieval {
       .localCheckpoint(false)
     val rel = exact.select(col("q_id"), col("doc_id"),
       (lit(NdcgK + 1) - col("pos")).as("rel"))
-    val wD = r6(lit(1.0) / log2(col("pos") + 1)).cast("decimal(18,6)")
-    def dcgOf(ranked: DataFrame): DataFrame =
-      ranked.filter(col("pos") <= NdcgK)
-        .join(rel, Seq("q_id", "doc_id"), "left")
-        .select(col("q_id"), (coalesce(col("rel"), lit(0)) * wD).as("t"))
-        .groupBy(col("q_id")).agg(sum(col("t")).as("dcgs"))
-    val ideal = dcgOf(exact)
+    val ideal = dcg(exact, rel)
       .select(col("q_id").as("iq"), col("dcgs").as("ideal"))
       .localCheckpoint(false) // reused by every grid point
     val wF = Window.partitionBy(col("q_id"))
@@ -969,7 +921,7 @@ object Retrieval {
       val fused = paired
         .select(col("q_id"), col("doc_id"), blend.as("blend"))
         .withColumn("pos", row_number().over(wF))
-      dcgOf(fused)
+      dcg(fused, rel)
         .join(ideal, col("q_id") === col("iq"))
         .select(r6(col("dcgs").cast("double") / col("ideal")
           .cast("double")).cast("decimal(18,6)").as("ndcg"))
@@ -1032,10 +984,11 @@ object Retrieval {
     *
     * Scale shape: the capped arms are the gated k-bounded plans (bm25
     * served from the persisted lex-truth artifact); the uncapped exact
-    * rankings are BUILD-ONCE IndexStore artifacts ([[lexUncappedTruth]],
-    * [[sparseUncappedTruth]]) rebuilt only when the corpus changes — the
-    * audit itself is a pure two-consumer join (the r8 VERDICT
-    * build/probe rule applied on arrival, not retrofitted). On a
+    * rankings (the `cap = Int.MaxValue` points of [[bm25Ranked]] and
+    * [[sparseRanked]], the lexical one cut to [[BmTopK]]) are
+    * BUILD-ONCE IndexStore artifacts rebuilt only when the corpus
+    * changes — the audit itself is a pure two-consumer join (the
+    * build-once/probe rule applied on arrival, not retrofitted). On a
     * natural vocabulary the caps rarely bite (recall 1.0 is the
     * expected steady state); a drop below ~0.99 is the signal to raise
     * the cap.
@@ -1052,38 +1005,15 @@ object Retrieval {
         .select(lit(name).as("arm"), col("n_queries"), col("n_truth"),
           col("n_matched"),
           r4(col("n_matched").cast("double") / col("n_truth")).as("recall"))
-    armAgg("bm25", lexUncappedTruth(spark, dir), bm25Topk(spark, dir))
-      .unionAll(armAgg("sparse", sparseUncappedTruth(spark, dir),
+    val lexTruth = rankingArtifact(spark, dir,
+      s"lex-truth-c${Int.MaxValue}-v1")(
+      bm25Ranked(spark, dir, LexTruthDepth, Int.MaxValue))
+      .filter(col("rank") <= BmTopK)
+    armAgg("bm25", lexTruth, bm25Topk(spark, dir))
+      .unionAll(armAgg("sparse", rankingArtifact(spark, dir,
+        "sparse-truth-v1")(sparseRanked(spark, dir, Int.MaxValue)),
         sparseKnn(spark, dir)))
       .orderBy(col("arm"))
-  }
-
-  /** The UNCAPPED exact lexical ranking to [[BmTopK]], served from a
-    * persisted artifact (the lex-truth path with `cap = Int.MaxValue`
-    * folded into the key — the uncapped build is just another point on
-    * the cap axis). The exact sweep runs once per corpus snapshot; the
-    * audit reads parquet.
-    */
-  private def lexUncappedTruth(spark: SparkSession, dir: String): DataFrame = {
-    val path = IndexStore.path(s"lex-truth-c${Int.MaxValue}-v1", dir)
-    IndexStore.ensureBuilt(path)(
-      graft.sources.Sinks.writeSortedParquet(
-        bm25Ranked(spark, dir, LexTruthDepth, Int.MaxValue), path,
-        Seq("q_id", "rank")))
-    Tables.read(spark, path).filter(col("rank") <= BmTopK)
-  }
-
-  /** The UNCAPPED exact sparse-cosine ranking (already [[SparseK]]
-    * bounded), persisted once per corpus — [[impactRecall]]'s sparse
-    * truth arm.
-    */
-  private def sparseUncappedTruth(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val path = IndexStore.path("sparse-truth-v1", dir)
-    IndexStore.ensureBuilt(path)(
-      graft.sources.Sinks.writeSortedParquet(
-        sparseKnn(spark, dir, Int.MaxValue), path, Seq("q_id", "rank")))
-    Tables.read(spark, path)
   }
 
   /** prf_expand knobs: feedback depth (top seed docs per query),
@@ -1092,28 +1022,6 @@ object Retrieval {
   val PrfFbDocs = 5
   val PrfFbTerms = 10
   val PrfK = 10
-
-  /** Persisted corpus postings `(doc_id, term, tf, dl)` sorted by
-    * (term, doc_id) — the on-disk inverted-index layout. Built once per
-    * corpus (the lex-truth posture applied to the index itself);
-    * [[prfExpand]]'s feedback and rescore stages are pure parquet
-    * consumers.
-    */
-  private def lexPostings(spark: SparkSession, dir: String): DataFrame = {
-    val path = IndexStore.path("lex-postings-v1", dir)
-    IndexStore.ensureBuilt(path) {
-      val toks = tokenRows(spark, dir)
-      val isQuery = pmod(col("doc_id"), lit(QueryMod)) === 0
-      val ctf = toks.filter(!isQuery)
-        .groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-        .withColumn("dl",
-          sum(col("tf")).over(Window.partitionBy(col("doc_id"))))
-      graft.sources.Sinks.writeSortedParquet(ctf, path,
-        Seq("term", "doc_id"))
-    }
-    Tables.read(spark, path)
-  }
 
   /** prf_expand: pseudo-relevance-feedback query expansion (the RM3
     * family — Lavrenko & Croft SIGIR'01 relevance models; Abdul-Jaleel
@@ -1137,24 +1045,18 @@ object Retrieval {
     * parts round to 6dp and accumulate in DECIMAL (the bm25Ranked
     * scheme).
     */
-  def prfExpand(spark: SparkSession, dir: String): DataFrame = {
-    // Persisted like every other ranking (the lex-truth posture, keyed
-    // by the resolved cap): the expansion + rescore pipeline is the
-    // run-1 build; consumers read parquet. The 10× probe priced the
-    // live pipeline at ~8.6 s per invocation (the per-term cap window
-    // processes every posting of the expansion vocabulary even though
-    // the JOIN it feeds is bounded).
-    val cap = graft.Params.int(spark, "bm25_topk.impact_cap", BmImpactCap)
-    val path = IndexStore.path(s"prf-truth-c$cap-v1", dir)
-    IndexStore.ensureBuilt(path)(
-      graft.sources.Sinks.writeSortedParquet(
-        prfExpandLive(spark, dir, cap), path, Seq("q_id", "rank")))
-    Tables.read(spark, path)
-  }
+  def prfExpand(spark: SparkSession, dir: String): DataFrame =
+    // Persisted like every other ranking (the lex-truth posture): the
+    // expansion + rescore pipeline is the run-1 build; consumers read
+    // parquet. The 10× probe priced the live pipeline at ~8.6 s per
+    // invocation (the per-term cap window processes every posting of the
+    // expansion vocabulary even though the JOIN it feeds is bounded).
+    rankingArtifact(spark, dir, s"prf-truth-c$BmImpactCap-v1")(
+      prfExpandLive(spark, dir))
 
   /** The live PRF pipeline (the artifact build). */
-  private def prfExpandLive(spark: SparkSession, dir: String,
-      cap: Int): DataFrame = {
+  private[graft] def prfExpandLive(spark: SparkSession, dir: String)
+      : DataFrame = {
     val p = lexPostings(spark, dir)
     val seed = bm25Topk(spark, dir).filter(col("rank") <= PrfFbDocs)
       .select(col("q_id"), col("doc_id"))
@@ -1169,47 +1071,11 @@ object Retrieval {
       .filter(col("er") <= PrfFbTerms)
       .select(col("q_id"), col("term"), col("wu"))
       .localCheckpoint(false) // feeds the vocab restriction AND the join
-    val stats = p.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
-      .select(col("n_docs"),
-        (col("total_len").cast("double") / col("n_docs")).as("avgdl"))
     val evocab = exp.select(col("term")).distinct()
-    val idf = p.join(broadcast(evocab), "term")
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"),
-        r6(log(lit(1.0) +
-          (col("n_docs").cast("double") - col("df") + lit(0.5)) /
-            (col("df").cast("double") + lit(0.5)))).as("idf"))
-    val pe = p.join(broadcast(evocab), "term")
-      .crossJoin(broadcast(stats.select(col("avgdl"))))
-    val impact = (col("tf").cast("double") * lit(BmK1Plus1)) /
-      (col("tf").cast("double") + lit(BmK1) *
-        (lit(1.0) - lit(BmB) +
-          lit(BmB) * (col("dl").cast("double") / col("avgdl"))))
-    val capped = pe
-      .withColumn("ir", row_number().over(Window.partitionBy(col("term"))
-        .orderBy(impact.desc, col("doc_id"))))
-      .filter(col("ir") <= cap)
-      .drop("ir")
-    val qexp = exp.join(idf, "term")
-    val part = r6((col("wu").cast("double") / lit(1000000.0)) *
-      col("idf") *
-      ((col("tf").cast("double") * lit(BmK1Plus1)) /
-        (col("tf").cast("double") + lit(BmK1) *
-          (lit(1.0) - lit(BmB) +
-            lit(BmB) * (col("dl").cast("double") / col("avgdl"))))))
-      .cast("decimal(18,6)")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    capped.join(broadcast(qexp), "term")
-      .select(col("q_id"), col("doc_id"), part.as("part"))
-      .groupBy(col("q_id"), col("doc_id"))
-      .agg(sum(col("part")).as("score"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= PrfK)
-      .select(col("q_id"), col("doc_id"),
-        col("score").cast("double").as("score"), col("rank"))
+    bm25Scored(p, p.join(broadcast(evocab), "term"),
+      exp.join(bm25Idf(p, evocab), "term"),
+      (col("wu").cast("double") / lit(1000000.0)) * col("idf"),
+      BmImpactCap, PrfK)
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -1219,30 +1085,6 @@ object Retrieval {
   val LiPoolC = 20
   val LiK = 5
 
-  /** late_interaction: ColBERT-style retrieve-then-rerank — stage 1
-    * ranks a [[LiPoolC]]-doc candidate pool per query by WHOLE-document
-    * hash-embedding cosine (the reference's find_similar_documents
-    * shape), stage 2 re-scores the pool with late interaction over
-    * CHUNK embeddings: score(q,d) = mean over q-chunks of the MAX
-    * cosine against d's chunks (MaxSim; Khattab & Zaharia, SIGIR'20).
-    * A long doc that buries one highly-relevant passage under unrelated
-    * text loses in whole-doc cosine but wins MaxSim — exactly the
-    * passage-retrieval gap a RAG context builder cares about.
-    *
-    * Exactness: both cosine stages divide EXACT INTEGERS
-    * (Embedder.hashSumRows ±1-bit sums; `dot / sqrt(n2a) / sqrt(n2b)`
-    * in one mirrored operand order) — no rounded vector components
-    * anywhere. The per-(q,d) mean over chunk maxima converts each max
-    * to 1e-6 integer units first, so the sum is order-independent.
-    *
-    * Scale shape: stage 1 is the documented brute baseline (the
-    * knn_join posture — queries ride one broadcast; the ANN indexes
-    * are the production pool source, exactly as mmr_rerank consumes
-    * them); stage 2's chunk joins are bounded by pool size × chunks
-    * per doc regardless of corpus, with the chunk-vector frame built
-    * once (semi-joined per side) and every join an equi-join on doc
-    * id. The 64 sums aggregate in one codegen'd packed-lane pass.
-    */
   /** Depth of the persisted late-interaction exact-truth pool — covers
     * [[LiPoolC]] with headroom for param sweeps.
     */
@@ -1261,10 +1103,7 @@ object Retrieval {
     */
   private def buildLiTruth(spark: SparkSession, dir: String,
       path: String): Unit = {
-    val docToks = Tables.cpuPartition(
-      Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-      col("doc_id"))
-      .select(col("doc_id"), explode(Dedup.normToks(col("text"))).as("w"))
+    val docToks = Dedup.tokenStream(spark, dir, "w")
     // checkpoint BEFORE the n2 filter: pushdown would otherwise
     // substitute the packed-lane sum tree into the predicate (the
     // curriculum_order filter-pushdown rule, at expression scale)
@@ -1272,10 +1111,10 @@ object Retrieval {
       .localCheckpoint(false) // feeds the query and candidate sides
       .filter(col("n2") > 0)
     import graft.functions.VectorFunctions.dotLong
-    val q = docVec.filter(pmod(col("doc_id"), lit(QueryMod)) === 0)
+    val q = docVec.filter(isQuery)
       .select(col("doc_id").as("q_id"), col("sv").as("qsv"),
         col("n2").as("qn2"))
-    val d = docVec.filter(pmod(col("doc_id"), lit(QueryMod)) =!= 0)
+    val d = docVec.filter(!isQuery)
       .select(col("doc_id").as("d_id"), col("sv").as("dsv"),
         col("n2").as("dn2"))
     val wPool = Window.partitionBy(col("q_id"))
@@ -1303,6 +1142,30 @@ object Retrieval {
       .select(col("q_id"), col("d_id"), col("pool_sim"))
   }
 
+  /** late_interaction: ColBERT-style retrieve-then-rerank — stage 1
+    * ranks a [[LiPoolC]]-doc candidate pool per query by WHOLE-document
+    * hash-embedding cosine (the reference's find_similar_documents
+    * shape), stage 2 re-scores the pool with late interaction over
+    * CHUNK embeddings: score(q,d) = mean over q-chunks of the MAX
+    * cosine against d's chunks (MaxSim; Khattab & Zaharia, SIGIR'20).
+    * A long doc that buries one highly-relevant passage under unrelated
+    * text loses in whole-doc cosine but wins MaxSim — exactly the
+    * passage-retrieval gap a RAG context builder cares about.
+    *
+    * Exactness: both cosine stages divide EXACT INTEGERS
+    * (Embedder.hashSumRows ±1-bit sums; `dot / sqrt(n2a) / sqrt(n2b)`
+    * in one mirrored operand order) — no rounded vector components
+    * anywhere. The per-(q,d) mean over chunk maxima converts each max
+    * to 1e-6 integer units first, so the sum is order-independent.
+    *
+    * Scale shape: stage 1 is the documented brute baseline (the
+    * knn_join posture — queries ride one broadcast; the ANN indexes
+    * are the production pool source, exactly as mmr_rerank consumes
+    * them); stage 2's chunk joins are bounded by pool size × chunks
+    * per doc regardless of corpus, with the chunk-vector frame built
+    * once (semi-joined per side) and every join an equi-join on doc
+    * id. The 64 sums aggregate in one codegen'd packed-lane pass.
+    */
   def lateInteraction(spark: SparkSession, dir: String): DataFrame =
     rerankMaxSim(spark, dir, liBrutePool(spark, dir))
 
@@ -1362,10 +1225,6 @@ object Retrieval {
   def lateInteractionAnn(spark: SparkSession, dir: String): DataFrame =
     rerankMaxSim(spark, dir, liAnnPool(spark, dir))
 
-  /** The late-interaction rerank tail: chunk vectors once, MaxSim over
-    * a (q_id, d_id, pool_sim) candidate pool — shared by the brute and
-    * IVF-probed stage-1 variants.
-    */
   /** The persisted chunk hash-sum vectors of a corpus — built once
     * (the IndexStore posture: chunk embedding is the expensive pass;
     * every late-interaction query only probes it), then a plain
@@ -1396,6 +1255,10 @@ object Retrieval {
     Tables.read(spark, path)
   }
 
+  /** The late-interaction rerank tail: chunk vectors once, MaxSim over
+    * a (q_id, d_id, pool_sim) candidate pool — shared by the brute and
+    * IVF-probed stage-1 variants.
+    */
   private def rerankMaxSim(spark: SparkSession, dir: String,
       pool: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.dotLong

@@ -54,4 +54,17 @@ class ExplainSpec extends AnyFunSuite {
         |Arguments: N
         |""".stripMargin)
   }
+
+  test("normalise: a JVM lambda class's identity becomes N") {
+    // a graph-walk MapPartitions' argument, captured in two runs
+    val runs = Seq(
+      "Arguments: org.apache.spark.sql.internal.UDFAdaptors$$$Lambda$5784/" +
+        "0x00007f193961f6b8@203c5f7e, obj#31: scala.Tuple4",
+      "Arguments: org.apache.spark.sql.internal.UDFAdaptors$$$Lambda$5790/" +
+        "0x00007f0c4c63a2d0@5a1b7c3e, obj#33: scala.Tuple4")
+    runs.foreach { run =>
+      assert(Explain.normalise(run) === "Arguments: org.apache.spark.sql." +
+        "internal.UDFAdaptors$$$Lambda$N, obj#N: scala.Tuple4")
+    }
+  }
 }

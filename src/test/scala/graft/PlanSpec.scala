@@ -345,6 +345,20 @@ class PlanSpec extends SparkSpecBase {
       s"served bm25_topk must be an artifact read, plan:\n$served")
   }
 
+  test("bm25, QL and PRF rank over the one persisted postings artifact") {
+    Seq("bm25Ranked" -> Retrieval.bm25Ranked(spark, dir, Retrieval.BmTopK),
+      "qlRanked" -> Retrieval.qlRanked(spark, dir, Retrieval.QlTopK),
+      "prfExpandLive" -> Retrieval.prfExpandLive(spark, dir)).foreach {
+      case (name, df) =>
+        val scans = physical(df).collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+            s.relation.location.rootPaths.map(_.getName)
+        }.flatten
+        assert(scans.exists(_.startsWith("lex-postings-v1-")),
+          s"$name must scan the postings artifact, scans: $scans")
+    }
+  }
+
   test("asof_join is a pure union + window: no join node of any kind") {
     withNoAutoBroadcast {
       val plan = planOf(graft.operators.Sessions.asofJoin(spark, dir))

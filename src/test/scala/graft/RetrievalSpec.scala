@@ -338,20 +338,12 @@ class RetrievalSpec extends SparkSpecBase {
       assert(nq === 1L && nt === nm && rec === 1.0)
     }
     // cap=1 keeps only each term's top posting: apple -> doc 1 (tf 3),
-    // banana -> doc 3; doc 2 vanishes from both capped arms -> 2/3
-    spark.conf.set("spark.graft.param.bm25_topk.impact_cap", "1")
-    spark.conf.set("spark.graft.param.sparse_knn.impact_cap", "1")
-    try {
-      val capped = operators.Retrieval.impactRecall(spark, d).collect()
-        .map(r => r.getAs[String]("arm") ->
-          (r.getAs[Long]("n_truth"), r.getAs[Long]("n_matched"),
-            r.getAs[Double]("recall"))).toMap
-      val exp = math.floor(2.0 / 3.0 * 1e4 + 0.5) / 1e4
-      assert(capped("bm25") === ((3L, 2L, exp)))
-      assert(capped("sparse") === ((3L, 2L, exp)))
-    } finally {
-      spark.conf.unset("spark.graft.param.bm25_topk.impact_cap")
-      spark.conf.unset("spark.graft.param.sparse_knn.impact_cap")
+    // banana -> doc 3; doc 2 vanishes from both capped rankings
+    Seq(operators.Retrieval.bm25Ranked(spark, d, operators.Retrieval.BmTopK,
+        cap = 1),
+      operators.Retrieval.sparseRanked(spark, d, 1)).foreach { r =>
+      assert(r.select("doc_id").collect().map(_.getLong(0)).toSet ===
+        Set(1L, 3L))
     }
   }
 
@@ -445,5 +437,63 @@ class RetrievalSpec extends SparkSpecBase {
       BigDecimal("0.5") * 8
     val exp = math.floor(dcg.toDouble / ideal.toDouble * 1e6 + 0.5) / 1e6
     assert(out(1.0)._2 === exp)
+  }
+
+  test("the lexical guard finds restated saturations and cap knobs, " +
+      "not prose") {
+    val src =
+      """object X {
+        |  val sat = col("tf") * lit(BmK1Plus1)
+        |  // col("tf") * lit(BmK1Plus1)
+        |  val s = "lit(BmK1Plus1)"
+        |  val k1 = lit(BmK1)
+        |  val cap = graft.Params.int(spark,
+        |    "bm25_topk.impact_cap", BmImpactCap)
+        |  val k = Params.int(spark, "bm25_topk.k", BmTopK)
+        |  // Params.int(spark, "ql_topk.impact_cap", 1)
+        |  val path = s"lex-truth-c$BmImpactCap-v1"
+        |}""".stripMargin
+    assert(RetrievalSpec.restatements(src) === Seq(2 -> "lit(BmK1Plus1)",
+      6 -> "bm25_topk.impact_cap"))
+  }
+
+  test("src/main states BM25 saturation once and reads no impact_cap") {
+    val files = FixedSpec.scalaFiles(new java.io.File("src/main/scala"))
+    assert(files.size > 20, "no sources under src/main/scala")
+    val found = files.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)
+      RetrievalSpec.restatements(src).map { case (line, what) =>
+        s"${f.getName}:$line $what" }
+    }
+    // the one statement: the saturation helper's own body
+    assert(found.map(_.replaceAll(":\\d+", "")) ===
+      Seq("Retrieval.scala lit(BmK1Plus1)"), found.mkString("\n"))
+  }
+}
+
+object RetrievalSpec {
+  private val Saturation = """\blit\s*\(\s*BmK1Plus1\s*\)""".r
+  private val ParamsRead = """\bParams\s*\.\s*\w+\s*\(""".r
+  private val CapKey = """"([\w.]*\.impact_cap)"""".r
+
+  /** (line, what) of each `lit(BmK1Plus1)` and each `Params` read of an
+    * `*.impact_cap` key in Scala source `src`. Comments and literals are
+    * skipped; only a read's own key literal is looked into.
+    */
+  def restatements(src: String): Seq[(Int, String)] = {
+    val c = FixedSpec.code(src)
+    def line(at: Int) = c.substring(0, at).count(_ == '\n') + 1
+    val reads = ParamsRead.findAllMatchIn(c).flatMap { m =>
+      var depth = 0
+      val close = (m.end - 1 until c.length).find { j =>
+        if (c(j) == '(') depth += 1 else if (c(j) == ')') depth -= 1
+        depth == 0
+      }.getOrElse(c.length)
+      CapKey.findFirstMatchIn(src.substring(m.end, close))
+        .map(k => line(m.start) -> k.group(1))
+    }
+    (Saturation.findAllMatchIn(c).map(m => line(m.start) -> "lit(BmK1Plus1)")
+      ++ reads).toSeq.sortBy(_._1)
   }
 }
